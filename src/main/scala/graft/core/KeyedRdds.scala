@@ -32,8 +32,14 @@ object KeyedRdds {
     * `HashPartitioner(n)` assigns the bare key `s` — so re-keying the
     * rows by `s` after the shuffle leaves every row where the plain
     * hash partitioner expects it.
+    *
+    * Package-private: an RDD still keyed by `(src, dst)` tuples under
+    * this partitioner must not escape [[distinctEdgesBySrc]]. It
+    * `equals` a plain `HashPartitioner(n)`, so Spark would treat a
+    * join of those tuple keys against a plainly partitioned RDD as
+    * narrow while the two place equal keys in different partitions.
     */
-  def srcHashPartitioner(n: Int): HashPartitioner =
+  private[core] def srcHashPartitioner(n: Int): HashPartitioner =
     new HashPartitioner(n) {
       override def getPartition(key: Any): Int = key match {
         case (s, _) => nonNegativeMod(s.hashCode, numPartitions)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.GraftFunctions.md5Prefix60Col
 
 import graft.llm.AtRestStore.{tableIfExists, tablePath, tombstoneAppend, tombstoneClear}
@@ -309,8 +310,10 @@ object Dedup {
     * sized, like `fitIvf`'s centroids), and a map-only kernel rewrite
     * into a `localCheckpoint` that truncates the growing lineage.
     * Rounds are inherently sequential (each alphabet depends on the
-    * last); the corpus passes are what parallelize. Blocks release
-    * via the caller's session hygiene (graft.core.Materialize).
+    * last); the corpus passes are what parallelize. Each re-pin
+    * releases the checkpoint it supersedes, and the last one is
+    * released before returning — the merge table is already on the
+    * driver, so the returned frame reads no pinned blocks.
     */
   def bpeTrain(df: DataFrame, idCol: String, textCol: String,
                rounds: Int): DataFrame = {
@@ -318,10 +321,11 @@ object Dedup {
     val spark = df.sparkSession
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
-    var toks = df
+    var pinned = df
       .select(graft.llm.TextAnalysis.tokensCol(col(textCol)).as("w"))
       .filter(size(col("w")) > 1)
       .localCheckpoint()
+    var toks = pinned
     // Round-19 (guide §1.2 "fewer passes"): the loop used to
     // localCheckpoint the WHOLE re-tokenized corpus after every merge
     // — rounds+1 full corpus materializations for a 3-round trainer.
@@ -331,7 +335,7 @@ object Dedup {
     // re-materializes, bounding the recompute chain for large round
     // counts (per-round cost stays O(chain ≤ 8 kernel passes), never
     // quadratic). Identical counts: same kernel, same inputs. Paired
-    // A/B: q203 −23%, q178 −28% (OPTIMIZATION_r19.md).
+    // A/B: q203 −23%, q178 −28%.
     var sinceCkpt = 0
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var round = 1
@@ -358,10 +362,17 @@ object Dedup {
         toks = toks
           .select(call_function("bpe_merge", col("w"), lit(l), lit(r)).as("w"))
         sinceCkpt += 1
-        if (sinceCkpt == 8) { toks = toks.localCheckpoint(); sinceCkpt = 0 }
+        if (sinceCkpt == 8) {
+          // eager: every block of the new pin exists before the old goes
+          toks = toks.localCheckpoint()
+          Materialize.release(pinned)
+          pinned = toks
+          sinceCkpt = 0
+        }
         round += 1
       }
     }
+    Materialize.release(pinned)
     merges.toSeq.toDF("round", "lhs", "rhs", "pair_count")
   }
 
@@ -1949,13 +1960,9 @@ object Dedup {
   /** Lineage-truncation strategy for the iterative CC loops:
     * executor-pinned `localCheckpoint` by default, RELIABLE
     * `checkpoint()` into `dir` when given (survives executor loss —
-    * the dynamic-allocation / spot-instance posture at cluster scale).
-    *
-    * The checkpoint directory is a GLOBAL SparkContext setting, so we
-    * only set it when unset; a concurrent caller asking for a
-    * DIFFERENT directory on the same context would otherwise race
-    * (last writer wins) and both jobs would silently share one
-    * directory. That conflict is an error here, not a silent rebind.
+    * the dynamic-allocation / spot-instance posture at cluster scale),
+    * bound by [[Materialize.bindCheckpointDir]], which refuses to
+    * rebind a context already checkpointing elsewhere.
     */
   private def checkpointed(sample: DataFrame,
                            dir: Option[String]): DataFrame => DataFrame =
@@ -1971,19 +1978,7 @@ object Dedup {
       // are written, since the RDD isn't persisted first.)
       case None => _.localCheckpoint(eager = false)
       case Some(d) =>
-        val sc = sample.sparkSession.sparkContext
-        val want = new org.apache.hadoop.fs.Path(d).toUri.getPath
-        sc.getCheckpointDir match {
-          case None => sc.setCheckpointDir(d)
-          case Some(cur) =>
-            // setCheckpointDir appends a random UUID subdir; compare on
-            // the requested prefix
-            val curPath = new org.apache.hadoop.fs.Path(cur).toUri.getPath
-            require(curPath.startsWith(want),
-              s"SparkContext checkpoint dir already set to $cur; refusing to " +
-                s"rebind it to $d mid-flight (global setting — set it once per " +
-                "application, or pass checkpointDir=None for localCheckpoint)")
-        }
+        Materialize.bindCheckpointDir(sample.sparkSession.sparkContext, d)
         _.checkpoint()
     }
 
@@ -2012,19 +2007,13 @@ object Dedup {
     * allocation (losing an executor loses the truncated lineage).
     * Pass `checkpointDir` to use RELIABLE `checkpoint()` into that
     * (HDFS/S3/DBFS) directory instead; same labels, executor-loss
-    * tolerant, one write+read of the frame per round.
+    * tolerant, one write+read of the frame per round. The returned
+    * frame reads the final pinned label RDD; the caller frees it with
+    * [[Materialize.release]] once every consumer has executed.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
                           checkpointDir: Option[String] = None,
                           compress: Boolean = false): DataFrame = {
-    def dbg[T](tag: String)(body: => T): T =
-      if (!sys.env.contains("GRAFT_CC_DEBUG")) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"CC $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
     // Round-18 rewrite (guide §2.4 "remove shuffles outright" + §1.2):
     // the former DataFrame loop re-shuffled the EDGE table and the
     // label table on every round (a lazy localCheckpoint leaves
@@ -2046,30 +2035,10 @@ object Dedup {
     // retries can only over-count "changed", never fake convergence).
     val spark = pairs.sparkSession
     import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
-    val reliableDir = checkpointDir.map { d =>
-      val sc = spark.sparkContext
-      val want = new org.apache.hadoop.fs.Path(d).toUri.getPath
-      sc.getCheckpointDir match {
-        case None => sc.setCheckpointDir(d)
-        case Some(cur) =>
-          val curPath = new org.apache.hadoop.fs.Path(cur).toUri.getPath
-          require(curPath.startsWith(want),
-            s"SparkContext checkpoint dir already set to $cur; refusing to " +
-              s"rebind it to $d mid-flight (global setting — set it once per " +
-              "application, or pass checkpointDir=None for localCheckpoint)")
-      }
-      d
-    }
-    // truncate lineage + pin blocks, reliable when a dir was given
-    // (survives executor loss — the dynamic-allocation posture); the
-    // reliable rdd.checkpoint() requires a persist first or it would
-    // recompute the plan once more for the checkpoint write
-    def pin[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
-      rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      if (reliableDir.isDefined) rdd.checkpoint() else rdd.localCheckpoint()
-      rdd
-    }
+    // lineage truncation is reliable (survives executor loss) when a
+    // dir was given
+    checkpointDir.foreach(Materialize.bindCheckpointDir(spark.sparkContext, _))
+    val reliable = checkpointDir.isDefined
     // both edge orientations from ONE pass over `pairs` (the possibly
     // expensive upstream — e.g. the full MinHash-LSH — runs once),
     // partitioned by src and globally deduped in the SAME shuffle.
@@ -2088,17 +2057,17 @@ object Dedup {
       .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
       .as[(Long, Long)].rdd
     val part = new HashPartitioner(math.max(1, prs.getNumPartitions))
-    val edges = dbg("edges")(pin(graft.core.KeyedRdds.distinctEdgesBySrc(
+    val edges = Materialize.pin(graft.core.KeyedRdds.distinctEdgesBySrc(
       prs.flatMap { case (a, b) =>
         if (a == b) Iterator.single((a, b)) else Iterator((a, b), (b, a)) },
-      part)))
+      part), reliable)
     // seed with the neighborhood min — a free first propagation round
     // (min over labels ≡ min over ids when labels are the identity);
     // reduceByKey on the already-src-partitioned edges is shuffle-free
-    var labels = dbg("seed")(pin(edges
+    var labels = Materialize.pin(edges
       .reduceByKey(part, (x: Long, y: Long) => math.min(x, y))
       .mapPartitions(_.map { case (id, mn) => (id, math.min(id, mn)) },
-        preservesPartitioning = true)))
+        preservesPartitioning = true), reliable)
     var it = 0
     // FULL materialization on purpose (count, not isEmpty): a partial
     // action (take/isEmpty) computes only some partitions before the
@@ -2106,7 +2075,7 @@ object Dedup {
     // then throw CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next full
     // consumer. Every pin() below is likewise first touched by a
     // full-scan action (the round count / the final toDF consumer).
-    var converged = dbg("empty-probe")(edges.count() == 0L)
+    var converged = edges.count() == 0L
     while (!converged && it < maxIter) {
       // graph propagation: narrow join (both sides share `part`),
       // emitting (dst, lab(src)) into the round's single shuffle
@@ -2131,16 +2100,13 @@ object Dedup {
       }
       val mins = prop.reduceByKey(part, (x: Long, y: Long) => math.min(x, y))
       val chg = spark.sparkContext.longAccumulator("cc-changed")
-      val next = pin(labels.leftOuterJoin(mins, part)
+      val next = Materialize.pin(labels.leftOuterJoin(mins, part)
         .mapPartitions(_.map { case (id, (lab, m)) =>
           val nl = m.fold(lab)(math.min(lab, _))
           if (nl < lab) chg.add(1L)
           (id, nl)
-        }, preservesPartitioning = true))
-      val t0 = if (sys.env.contains("GRAFT_CC_DEBUG")) System.nanoTime() else 0L
+        }, preservesPartitioning = true), reliable)
       next.count() // materializes the round; the accumulator is now set
-      if (t0 != 0L) System.err.println(
-        f"CC round $it job ${(System.nanoTime() - t0) / 1e9}%.3f s chg=${chg.value}")
       // labels only ever decrease, so chg == 0 ⟺ fixpoint. A task
       // retry re-adds its partition's changes — over-counting can only
       // schedule a harmless extra round, never end the loop early.
@@ -2149,7 +2115,6 @@ object Dedup {
       labels = next
       it += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"CC rounds: $it")
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     // the final labels must be MATERIALIZED before edges' blocks go
     // away (a zero-round convergence — the empty graph — leaves the

@@ -1,8 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.Materialize
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`):
   * brute-force cosine top-k as the exact baseline, and a
@@ -203,12 +205,14 @@ object Similarity {
     * UnknownPartitioning), the exact per-round tax the round-18 CC
     * rewrite measured at 0.2–0.35 s at local[32] and O(edges) shuffled
     * bytes at scale. Now the CC loop's RDD discipline: one
-    * HashPartitioner fixed up front, `pin` (persist + localCheckpoint)
-    * with FULL-SCAN first actions only (the partial-action checkpoint
+    * HashPartitioner fixed up front, [[Materialize.pin]] with
+    * FULL-SCAN first actions only (the partial-action checkpoint
     * trap — see connectedComponents), per-round integer arithmetic
     * identical to the SQL form: `div` on non-negative longs ≡ Scala
-    * `/`, and the share sum is order-independent. Returned frame is
-    * checkpoint-backed; the caller releases (Bench/Verify hygiene).
+    * `/`, and the share sum is order-independent. The loop releases
+    * its own intermediates; the returned frame reads the final pinned
+    * rank RDD, which the caller frees with [[Materialize.release]]
+    * once every consumer has executed.
     */
   def pageRank(edges: DataFrame, rounds: Int = 5,
                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
@@ -217,12 +221,7 @@ object Similarity {
     val spark = edges.sparkSession
     import spark.implicits._
     import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
-    def pin[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
-      rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      rdd.localCheckpoint()
-      rdd
-    }
+    import Materialize.pin
     val prs = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .as[(Long, Long)].rdd
@@ -898,14 +897,6 @@ object Similarity {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     maxBucket: Int = Int.MaxValue): DataFrame = {
-    def dbg[T](tag: String)(body: => T): T =
-      if (!sys.env.contains("GRAFT_CC_DEBUG")) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"semanticPrune $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
     val edges = knnGraph(emb, k, planes, idCol, vecCol, maxBucket)
       .filter(col("cosine") >= tau)
       .select(least(col("vec_id"), col("nbr_id")).as("id_a"),
@@ -924,7 +915,7 @@ object Similarity {
     // phases per round — four shuffles — outweigh its fewer rounds;
     // revisit only if tau drops enough to chain components an order
     // of magnitude deeper.
-    val labels = dbg("cc")(Dedup.connectedComponents(edges, compress = true))
+    val labels = Dedup.connectedComponents(edges, compress = true)
       .withColumnRenamed("doc_id", "vec_id")
     // cluster sizes via groupBy + join-back, not a partition-only
     // window (judge r14 item 2): a giant semantic cluster — exactly
@@ -932,12 +923,14 @@ object Similarity {
     // whole in one WindowExec task; the aggregation takes map-side
     // partials and the join-back streams, with AQE skew-split
     // available. `assigned` is doc-count-sized two-long rows; its
-    // localCheckpoint stops the CC label join re-running per consumer.
-    val assigned = dbg("assigned")(emb.select(col(idCol).cast("long").as("vec_id"))
+    // localCheckpoint stops the CC label join re-running per consumer,
+    // and once it has materialized (eager) the CC labels are dead.
+    val assigned = emb.select(col(idCol).cast("long").as("vec_id"))
       .join(labels, Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
-      .localCheckpoint())
+      .localCheckpoint()
+    Materialize.release(labels)
     val sizes = assigned.groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
     assigned.join(sizes, Seq("cluster_id"))
@@ -996,20 +989,19 @@ object Similarity {
     * behind topic balancing, cluster-based curation and IVF index
     * builds, exposed as an operator: start from the fixed formula
     * centroids (the q79 IVF quantizer family), run `rounds` full
-    * Lloyd updates, and report the final assignment histogram with
-    * exact fixed-point inertia.
+    * Lloyd updates, and report the final assignment histogram
+    * (cluster, n, inertia_fp, inertia) with exact fixed-point inertia.
     *
-    * Fully distributed — the model is a ONE-ROW DataFrame holding
-    * `array<array<double>>` centroids that rides a broadcast to the
-    * corpus scan; assignment is a per-row fold over the k candidate
-    * centroids (argmin, ties → lowest index), and the update is one
-    * (cluster, dim) aggregation whose means use 2²⁰ fixed-point sums
-    * (integer arithmetic — aggregation order cannot perturb them).
-    * Nothing is ever collected to the driver; per round the corpus
-    * is scanned twice (assign+update in one plan) and only
-    * (cluster, dim) partials shuffle. Empty clusters drop out and
-    * the survivors re-index densely by their old id order — both
-    * engines replay the same rule.
+    * This is [[pqCore]] with ONE 64-dim subspace — whose per-subspace
+    * phase sub·7 = 0 makes its init exactly the formula centroids
+    * above — plus the cluster census. Assignment is a broadcast of
+    * the model to the corpus scan (argmin over the k candidate
+    * centroids, ties → lowest index); the update is one
+    * (cluster, dim) aggregation of 2²⁰ fixed-point sums whose ≤ k·64
+    * rows are collected to build the next model on the driver.
+    * Empty clusters drop out and the survivors re-index densely by
+    * their old id order — both engines replay the same rule. Nothing
+    * is left pinned.
     *
     * Determinism: distances are the shared left fold over exact
     * float→double casts; means are exact integer sums divided twice
@@ -1019,50 +1011,8 @@ object Similarity {
     */
   def lloydRefine(emb: DataFrame, k: Int = 8, rounds: Int = 1,
                   idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    require(k > 0 && rounds >= 0, s"need k > 0, rounds >= 0; got k=$k rounds=$rounds")
-    val FP = 1048576.0 // 2^20
-    val init = (0 until k).map(c =>
-      (0 until 64).map(i => ((c * 37 + i * 13) % 41 - 20) / 10.0))
-    val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    // native codegen loop — bit-equal to the aggregate(zip_with) fold
-    def sqDist(vec: Column, cv: Column): Column =
-      call_function("vec_sqdist", vec, cv)
-    def assign(model: DataFrame): DataFrame =
-      emb.crossJoin(broadcast(model))
-        .withColumn("dists", transform(col("cents"), cv => sqDist(col(vecCol), cv)))
-        .select(col(idCol).as("id"), col(vecCol).as("vec"),
-          (array_position(col("dists"), array_min(col("dists"))) - 1)
-            .cast("int").as("c"),
-          array_min(col("dists")).as("d"))
-    def update(assigned: DataFrame): DataFrame =
-      assigned.select(col("c"), posexplode(col("vec")).as(Seq("dim", "x")))
-        .groupBy("c", "dim")
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("x").cast("double") * FP).cast("long")).as("s"))
-        .withColumn("m", col("s").cast("double") / FP / col("n"))
-        .groupBy("c")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-          s => s.getField("m")).as("cv"))
-        .agg(transform(array_sort(collect_list(struct(col("c"), col("cv")))),
-          s => s.getField("cv")).as("cents"))
-    val model0 = spark.range(1).select(
-      typedLit(init).as("cents"))
-    val finalModel = (0 until rounds).foldLeft(model0) { (m, _) =>
-      // one row; checkpoint keeps round r+1's plan from replaying
-      // round r's corpus aggregation on both assign arms. Round r's
-      // blocks die as soon as r+1 has materialized (eager checkpoint)
-      val next = update(assign(m)).localCheckpoint()
-      graft.core.Materialize.release(m)
-      next
-    }
-    assign(finalModel)
-      .groupBy(col("c").as("cluster"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("d") * FP).cast("long")).as("inertia_fp"))
-      .withColumn("inertia", col("inertia_fp").cast("double") / FP)
-  }
+                  vecCol: String = "embedding"): DataFrame =
+    pqAudit(emb, 1, k, rounds, idCol, vecCol).drop("sub")
 
   /** Product quantization (Jégou, Douze & Schmid, TPAMI 2011) — the
     * standard way a billion-vector ANN index fits in memory: split
@@ -1078,10 +1028,10 @@ object Similarity {
     * (vector × m) subvector rows ONCE, assignment is a broadcast of
     * the (m·k·subdim)-double model — model-sized, never corpus-sized
     * — and the update is one (sub, c, dim)-keyed aggregation with
-    * map-side partials. Rounds chain through localCheckpoint exactly
-    * like lloydRefine (each round's one-row model materializes; the
-    * previous round's blocks release). NOTHING here collects to the
-    * driver.
+    * map-side partials. Each round collects only those ≤ k·64
+    * (sub, c, dim) sums and builds the next one-row model on the
+    * driver — model-sized, never corpus-sized — so nothing is
+    * checkpointed between rounds.
     *
     * Determinism is the q158 contract: centroid updates snap
     * component sums to ⌊x·2²⁰⌋ fixed point (aggregation-order-proof
@@ -1160,9 +1110,10 @@ object Similarity {
         .agg(count(lit(1)).as("n"),
           sum(floor(col("x").cast("double") * FP).cast("long")).as("s"))
         .collect()
+      def num(r: Row, f: String) = r.getAs[Number](f)
       val cents: Seq[Seq[Seq[Double]]] = rows
-        .map(r => ((r.getAs[Int]("sub"), r.getAs[Int]("c"), r.getAs[Int]("dim")),
-          r.getAs[Long]("s").toDouble / FP / r.getAs[Long]("n").toDouble))
+        .map(r => ((num(r, "sub").intValue, num(r, "c").intValue, num(r, "dim").intValue),
+          num(r, "s").longValue.toDouble / FP / num(r, "n").longValue.toDouble))
         .sortBy(_._1)
         .groupBy(_._1._1).toSeq.sortBy(_._1)
         .map { case (_, subRows) =>

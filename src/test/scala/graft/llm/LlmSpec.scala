@@ -1700,6 +1700,40 @@ class LlmSpec extends SparkSpec {
     assert(r1.toSeq == r1b.toSeq)
   }
 
+  test("lloydRefine: separated clusters, dead init centroids re-index, two rounds") {
+    // clusters of 6, 10 and 14 points jittered around init centroids
+    // 1, 4 and 6 with growing spread; the other five init centroids win
+    // no point and drop out in round one, so the survivors re-index to
+    // 0..2 before round two
+    def init(c: Int, i: Int) = ((c * 37 + i * 13) % 41 - 20) / 10.0
+    val emb = (for ((c, n) <- Seq(1 -> 6, 4 -> 10, 6 -> 14); j <- 0 until n) yield {
+      (c * 100L + j, Array.tabulate(64)(i =>
+        (init(c, i) + 0.01 * n * ((j * 7 + i * 3) % 5 - 2)).toFloat))
+    }).toDF("vec_id", "embedding")
+    val got = Similarity.lloydRefine(emb, k = 8, rounds = 2)
+      .select("cluster", "n", "inertia_fp").as[(Int, Long, Long)]
+      .collect().sorted.toSeq
+    // captured from the standalone Lloyd loop this operator used to run
+    assert(got == Seq((0, 6L, 2824862L), (1, 10L, 13421766L), (2, 14L, 36685472L)))
+  }
+
+  test("bpeTrain leaves no pinned RDD behind") {
+    // 10 rounds cross the 8-round re-pin boundary
+    val d = (0 until 3).map(i =>
+      (i.toLong, (0 until 24).map(t => s"t$t").mkString(" "))).toDF("doc_id", "text")
+    val before = graft.core.Materialize.liveIds(spark)
+    assert(Dedup.bpeTrain(d, "doc_id", "text", rounds = 10).collect().length == 10)
+    assert((graft.core.Materialize.liveIds(spark) -- before).isEmpty)
+  }
+
+  test("lloydRefine leaves no pinned RDD behind") {
+    val v = Array.tabulate(64)(i => (0.1f * (i % 7 - 3)))
+    val emb = (0L until 6L).map(id => (id, v)).toDF("vec_id", "embedding")
+    val before = graft.core.Materialize.liveIds(spark)
+    assert(Similarity.lloydRefine(emb, k = 4, rounds = 2).collect().length == 1)
+    assert((graft.core.Materialize.liveIds(spark) -- before).isEmpty)
+  }
+
   test("dedupSavings: cross-source duplicate loses to the earlier source; uniques keep everything") {
     val df = Seq(
       (0L, "one two three", "srcA"),   // canonical (min id for this text)
@@ -2755,6 +2789,15 @@ class LlmSpec extends SparkSpec {
     assert(got(0L) > got(2L) && got(0L) > got(1L))
     // spokes with no inbound sit at the damped base
     assert(got(2L) == 157286L && got(3L) == 157286L)
+  }
+
+  test("pageRank: releasing the returned frame frees every RDD the call pinned") {
+    val edges = Seq((1L, 0L), (2L, 0L), (0L, 1L), (2L, 1L)).toDF("src", "dst")
+    val before = graft.core.Materialize.liveIds(spark)
+    val pr = Similarity.pageRank(edges, rounds = 3)
+    assert(pr.collect().length == 3)
+    graft.core.Materialize.release(pr)
+    assert((graft.core.Materialize.liveIds(spark) -- before).isEmpty)
   }
 
   test("pqRecall: duplicates are always recalled; counts bounded and consistent") {
