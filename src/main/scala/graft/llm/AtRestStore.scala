@@ -435,11 +435,12 @@ private[graft] object AtRestStore {
       }
     }
 
+    /** Whether `table`'s resolved dir exists. */
+    def exists(table: String): Boolean = fs.exists(new Path(path(table)))
+
     /** Read `table` as parquet iff its resolved dir exists. */
-    def ifExists(table: String): Option[DataFrame] = {
-      val p = path(table)
-      if (fs.exists(new Path(p))) Some(spark.read.parquet(p)) else None
-    }
+    def ifExists(table: String): Option[DataFrame] =
+      if (exists(table)) Some(spark.read.parquet(path(table))) else None
 
     private[AtRestStore] def entryMap: Map[String, String] = entries
   }

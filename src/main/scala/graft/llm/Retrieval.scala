@@ -1,8 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.GraftFunctions.md5Prefix60Col
 
@@ -252,14 +255,20 @@ object Retrieval {
   // Compaction here is purely physical (purge tombstoned postings,
   // fold stats/doclens), never semantic.
   //
-  // Layout under `dir`:
-  //   postings/pbucket=N/batch=B/  (s, id, tf, dl) — dl denormalized
-  //     onto the posting row (impact-style) so scoring never joins
-  //     the corpus-sized doc-length table
-  //   doclens/batch=B/     (id, dl)         — delete-time dl lookup
-  //   stats/batch=B/       (n_docs, tot_tokens) — one delta row per batch
-  //   tombstones/          (id, dl)         — logical deletes
-  //   params/              (n_buckets)
+  // Layout under `dir` (column types as declared in [[bm25Schemas]];
+  // partition columns pbucket INT, batch BIGINT):
+  //   postings/pbucket=N/batch=B/  (s STRING, id BIGINT, tf BIGINT,
+  //     dl BIGINT) — dl denormalized onto the posting row
+  //     (impact-style) so scoring never joins the corpus-sized
+  //     doc-length table
+  //   doclens/batch=B/  (id BIGINT, dl BIGINT) — delete-time dl lookup
+  //   stats/batch=B/    (n_docs BIGINT, tot_tokens BIGINT) — one delta
+  //     row per batch
+  //   tombstones/       (id BIGINT, dl BIGINT) — logical deletes
+  //   params/           (n_buckets INT)
+  //
+  // Document ids are stored as BIGINT whatever the caller's id type
+  // (the writer casts), so every table keeps the declared layout.
   //
   // The `batch` partition dimension is physical provenance, never
   // semantics: no probe reads it (scores aggregate across batches),
@@ -276,6 +285,23 @@ object Retrieval {
   // (gdalos_selector.py:11-65) and reuses at-rest overviews rather than
   // rebuilding (gdalos_trans.py:632-656) — pay layout once at ingest,
   // serve every probe from it.
+
+  /** Declared schema of each store table, partition columns last. */
+  private val bm25Schemas: Map[String, String] = Map(
+    "postings" ->
+      "s STRING, id BIGINT, tf BIGINT, dl BIGINT, pbucket INT, batch BIGINT",
+    "doclens" -> "id BIGINT, dl BIGINT, batch BIGINT",
+    "stats" -> "n_docs BIGINT, tot_tokens BIGINT, batch BIGINT",
+    "tombstones" -> "id BIGINT, dl BIGINT",
+    "params" -> "n_buckets INT")
+
+  /** Read store table `t` as resolved by `snap`, on its declared schema:
+    * inferring a parquet schema costs one Spark job per read. A missing
+    * table still fails the read (path not found).
+    */
+  private def bm25Read(spark: org.apache.spark.sql.SparkSession,
+                       snap: AtRestStore.Snapshot, t: String): DataFrame =
+    spark.read.schema(bm25Schemas(t)).parquet(snap.path(t))
 
   /** Term→bucket route for the at-rest layout: first 15 hex chars of
     * md5 mod `nBuckets` — the [[Sampling.hashUniformCol]] integer core,
@@ -309,7 +335,8 @@ object Retrieval {
     }
     // tf feeds two consumers (dl, postings) — materialize once; the
     // frame is ingest-batch-sized and released with the job
-    val tf = termFrequencies(docs, idCol, textCol).localCheckpoint()
+    val tf = termFrequencies(docs.withColumn(idCol, col(idCol).cast("bigint")),
+      idCol, textCol).localCheckpoint()
     AtRestStore.fence(docs.sparkSession, dir) // review r18 pre-write fence
     val dl = tf.groupBy("id").agg(sum("tf").as("dl"))
     out(tf.join(dl, "id")
@@ -367,16 +394,25 @@ object Retrieval {
       .parquet(AtRestStore.tablePath(spark, dir, "tombstones"))
   }
 
-  /** Loud parameter gate (the lshParamsCheck pattern): a write or
-    * probe under a different bucket count would route terms to the
-    * wrong partitions — appended postings would land where no probe
-    * looks (silent recall loss). Returns the stored bucket count so
-    * callers adopt it.
+  /** The store's bucket count, read from its params table (one job).
+    * Writers and probes adopt it instead of taking one: terms routed
+    * under a different count would land in, or be looked up in, the
+    * wrong partitions (silent recall loss). Throws when the store has
+    * no params table.
     */
-  private def bm25ParamsCheck(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): Int =
-    spark.read.parquet(AtRestStore.tablePath(spark, dir, "params"))
+  private def bm25Buckets(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): Int =
+    bm25Read(spark, AtRestStore.snapshot(spark, dir), "params")
       .head().getAs[Int]("n_buckets")
+
+  /** Whether any batch has landed in the store: its stats table holds
+    * a row (each ingest, append and micro-batch writes one).
+    */
+  private[graft] def bm25HasBatches(spark: org.apache.spark.sql.SparkSession,
+                                    dir: String): Boolean = {
+    val snap = AtRestStore.snapshot(spark, dir)
+    snap.exists("stats") && !bm25Read(spark, snap, "stats").isEmpty
+  }
 
   /** APPEND a document batch — signed once, bucketed under the STORED
     * bucket count, dynamic-partition-appended (only touched buckets
@@ -388,11 +424,10 @@ object Retrieval {
                        dir: String): Unit =
     AtRestStore.withLease(newDocs.sparkSession, dir, "bm25Append") {
     val spark = newDocs.sparkSession
-    val nB = bm25ParamsCheck(spark, dir)
+    val nB = bm25Buckets(spark, dir)
     // next ledger slot: one read of the batch-count-sized stats table
-    val nextBatch = spark.read
-      .parquet(AtRestStore.tablePath(spark, dir, "stats"))
-      .agg(coalesce(max(col("batch").cast("long")), lit(-1L)))
+    val nextBatch = bm25Read(spark, AtRestStore.snapshot(spark, dir), "stats")
+      .agg(coalesce(max(col("batch")), lit(-1L)))
       .head().getLong(0) + 1L
     bm25WriteAtRest(newDocs, idCol, textCol, dir, nB,
       overwrite = false, batchId = nextBatch)
@@ -410,7 +445,7 @@ object Retrieval {
                                      textCol: String, dir: String,
                                      batchId: Long): Unit =
     AtRestStore.withLease(newDocs.sparkSession, dir, "bm25AppendBatch") {
-    val nB = bm25ParamsCheck(newDocs.sparkSession, dir)
+    val nB = bm25Buckets(newDocs.sparkSession, dir)
     bm25WriteAtRest(newDocs, idCol, textCol, dir, nB,
       overwrite = false, batchId = batchId, replaySafe = true)
   }
@@ -432,9 +467,9 @@ object Retrieval {
     // checkpoint materializes the result BEFORE the append touches the
     // same path (a plan may not write into its own input)
     val snap = AtRestStore.snapshot(spark, dir)
-    val fresh = spark.read.parquet(snap.path("doclens"))
+    val fresh = bm25Read(spark, snap, "doclens")
       .join(ids.select(col(idCol).as("id")).distinct(), "id")
-      .join(spark.read.parquet(snap.path("tombstones")).select("id"),
+      .join(bm25Read(spark, snap, "tombstones").select("id"),
         Seq("id"), "left_anti")
       .select("id", "dl")
       .localCheckpoint()
@@ -460,9 +495,9 @@ object Retrieval {
   def bm25CompactAtRest(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Unit =
     AtRestStore.withLease(spark, dir, "bm25Compact") {
-    bm25ParamsCheck(spark, dir) // loud missing-index failure
+    bm25Buckets(spark, dir) // loud missing-index failure
     val snap = AtRestStore.snapshot(spark, dir)
-    val tomb = spark.read.parquet(snap.path("tombstones")).localCheckpoint()
+    val tomb = bm25Read(spark, snap, "tombstones").localCheckpoint()
     val tombIds = broadcast(tomb.select("id"))
     // history folds to batch=0 — the batch dimension is ingest
     // provenance, and compaction is the provenance horizon. The
@@ -470,13 +505,13 @@ object Retrieval {
     // (they are two views of one fact and must change together).
     AtRestStore.swapMany(spark, dir, Seq(
       "postings" -> ((out: String) =>
-        spark.read.parquet(snap.path("postings"))
+        bm25Read(spark, snap, "postings")
           .join(tombIds, Seq("id"), "left_anti")
           .select("pbucket", "s", "id", "tf", "dl")
           .withColumn("batch", lit(0L))
           .write.mode("overwrite").partitionBy("pbucket", "batch").parquet(out)),
       "doclens" -> ((out: String) =>
-        spark.read.parquet(snap.path("doclens"))
+        bm25Read(spark, snap, "doclens")
           .join(tombIds, Seq("id"), "left_anti")
           .select("id", "dl")
           .withColumn("batch", lit(0L))
@@ -485,7 +520,7 @@ object Retrieval {
         val t = tomb.agg(
           coalesce(count(lit(1)), lit(0L)).as("t_docs"),
           coalesce(sum("dl"), lit(0L)).as("t_tok"))
-        spark.read.parquet(snap.path("stats"))
+        bm25Read(spark, snap, "stats")
           .agg(sum("n_docs").as("n_docs"), sum("tot_tokens").as("tot_tokens"))
           .crossJoin(broadcast(t))
           .select((col("n_docs") - col("t_docs")).as("n_docs"),
@@ -500,51 +535,72 @@ object Retrieval {
   /** Probe the at-rest index with a query BATCH (`qid`, `term` rows) —
     * identical ranking arithmetic to [[bm25TopKBatch]] (rational idf,
     * floor-2²⁰ fixed-point contribution sums), but the corpus is never
-    * tokenized: the probe joins the persisted postings on
-    * (pbucket, term), so I/O prunes to the buckets the batch's terms
-    * hash into (partition pruning / DPP — the probed fraction shrinks
-    * as nBuckets grows), document frequency is counted exactly from
-    * the matched rows, and the global denominators are two tiny
-    * aggregates (stats deltas minus tombstones). Probe cost scales
-    * with the BATCH's term postings, not the corpus.
+    * tokenized: the probe reads the persisted postings of the batch's
+    * terms only, so I/O prunes to the buckets those terms hash into
+    * (the probed fraction shrinks as nBuckets grows), document
+    * frequency is counted exactly from the matched rows, and the
+    * global denominators are the stats deltas minus the tombstones.
+    * Probe cost scales with the BATCH's term postings, not the corpus.
+    *
+    * Collected to the driver, each once and each bounded by contract:
+    *  - params: one row, the bucket count;
+    *  - stats: one delta row per batch, folded to one by compaction;
+    *    their sums net of the tombstones enter the plan as the
+    *    literals n_docs and tot_tokens;
+    *  - tombstones: one read serves both the denominators and the
+    *    mask, so the two cannot disagree; the store keeps them under
+    *    broadcast size (compact once they outgrow it);
+    *  - the query batch, deduplicated: it is broadcast to the scan
+    *    anyway, and its terms and buckets become literal filters.
+    * The postings scan, the df aggregate, the (qid, id) aggregation and
+    * the rank window stay distributed: nothing whose size grows with
+    * the corpus reaches the driver.
+    *
+    * Spark jobs per call: 10 on a store that holds tombstones, 9 on one
+    * that holds none (as after compaction) — the params, tombstones and
+    * stats reads, then the plan's own: the tombstone and batch
+    * broadcasts, the df aggregate's shuffle and broadcast, the
+    * (qid, id) aggregate's and the rank window's shuffles, the result.
     */
   def bm25ProbeAtRest(spark: org.apache.spark.sql.SparkSession, dir: String,
                       queries: DataFrame, k: Int,
                       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val nB = bm25ParamsCheck(spark, dir)
-    val qt = queries.select(col("qid"), col("term").as("s")).distinct()
-    val qterms = qt.select("s").distinct()
-      .withColumn("pbucket", pbucketCol(col("s"), nB))
-    // ONE snapshot for all four tables: the mask set, the stats
+    val nB = bm25Buckets(spark, dir)
+    // ONE snapshot for the three tables: the mask set, the stats
     // deltas, and the postings must belong to the same store
     // generation or a concurrent compaction flip could be
     // double-counted (see bm25CompactAtRest)
     val snap = AtRestStore.snapshot(spark, dir)
-    val tomb = spark.read.parquet(snap.path("tombstones")).localCheckpoint()
-    val g = spark.read.parquet(snap.path("stats"))
-      .agg(sum("n_docs").as("b_docs"), sum("tot_tokens").as("b_tok"))
-      .crossJoin(broadcast(tomb.agg(
-        coalesce(count(lit(1)), lit(0L)).as("t_docs"),
-        coalesce(sum("dl"), lit(0L)).as("t_tok"))))
-      .select((col("b_docs") - col("t_docs")).as("n_docs"),
-        (col("b_tok") - col("t_tok")).as("tot_tokens"))
-    // STATIC partition pruning: the probe batch's distinct terms are
-    // model-sized by contract (a retrieval batch, not a corpus), so
-    // their bucket set is collected and pushed as a LITERAL partition
-    // filter — planning-time pruning, visible as `pbucket IN (…)` in
-    // PartitionFilters. (A join-only formulation was tried first: the
-    // broadcast side is a local relation with no selective predicate,
-    // so Catalyst's dynamic-partition-pruning heuristic declines it
-    // and the scan read every bucket.)
-    val buckets = qterms.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
+    val tombRead = bm25Read(spark, snap, "tombstones")
+    val tomb = tombRead.collect()
+    val stats = bm25Read(spark, snap, "stats").select("n_docs", "tot_tokens")
+      .collect()
+    // skips nulls as SQL sum does: an empty batch's delta row carries
+    // a null tot_tokens
+    def total(rows: Array[Row], i: Int): Long =
+      rows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).sum
+    val nDocs = total(stats, 0) - tomb.length
+    val totTokens = total(stats, 1) - total(tomb, 1)
+    def local(rows: Seq[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+    val qIn = queries.select(col("qid"), col("term").as("s"))
+    val qt = local(qIn.collect().distinct.toSeq, qIn.schema)
+    // STATIC partition pruning: the batch's terms and their bucket set
+    // are pushed as LITERAL filters — planning-time pruning, visible as
+    // `pbucket IN (…)` in PartitionFilters (a term's postings all sit
+    // in its own bucket, so the term filter alone decides the match)
+    val routed = qt.select(col("s"), pbucketCol(col("s"), nB)).collect()
+    val terms = routed.map(_.getString(0)).distinct
+    val buckets = routed.map(_.getInt(1)).distinct.sorted
     // one postings row per matched (term, doc) — distinct terms only,
     // so df below is a plain count; the qid fan-out joins afterwards
-    val post = spark.read.parquet(snap.path("postings"))
-      .filter(col("pbucket").isin(buckets.map(Int.box): _*))
-      .join(broadcast(qterms), Seq("pbucket", "s"))
-      .join(broadcast(tomb.select("id")), Seq("id"), "left_anti")
+    val scan = bm25Read(spark, snap, "postings")
+      .filter(col("pbucket").isin(buckets.map(Int.box): _*) &&
+        col("s").isin(terms: _*))
+    val post = if (tomb.isEmpty) scan
+      else scan.join(broadcast(local(tomb.toSeq, tombRead.schema).select("id")),
+        Seq("id"), "left_anti")
     val dft = post.groupBy("s").agg(count(lit(1)).as("df"))
     val denom = col("tf") + lit(k1) *
       (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))
@@ -553,10 +609,9 @@ object Retrieval {
     post
       .join(broadcast(qt), "s")
       .join(broadcast(dft), "s")
-      .crossJoin(broadcast(g))
-      .withColumn("avgdl", col("tot_tokens").cast("double") / col("n_docs"))
+      .withColumn("avgdl", lit(totTokens).cast("double") / lit(nDocs))
       .withColumn("idf",
-        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+        (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
       .withColumn("fp", floor(contrib * lit(1048576.0)).cast("long"))
       .groupBy("qid", "id")
       .agg(sum("fp").as("score_fp"), count(lit(1)).as("n_terms_hit"))

@@ -454,14 +454,25 @@ object EventStream {
     * can never double-count a shard. Caller seeds with
     * [[graft.llm.Retrieval.bm25InitAtRest]] (params only, no corpus)
     * so Spark's batch ids have nothing to collide with.
+    *
+    * Throws `IllegalStateException` before starting when the store
+    * already holds a batch (a `bm25IngestAtRest` ingest, an append, or
+    * an earlier run of this stream): the query keeps no checkpoint, so
+    * its micro-batch 0 would overwrite the store's `batch=0` postings,
+    * doclens and stats.
     */
   def bm25IngestStream(stream: DataFrame, idCol: String, textCol: String,
                        dir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    if (graft.llm.Retrieval.bm25HasBatches(stream.sparkSession, dir))
+      throw new IllegalStateException(s"bm25IngestStream: the store at $dir " +
+        "already holds batches, which micro-batch 0 would overwrite; " +
+        "start the stream on a store seeded with Retrieval.bm25InitAtRest")
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       graft.llm.Retrieval.bm25AppendBatch(batch, idCol, textCol, dir, batchId)
       ()
     }.start()
+  }
 
   /** Streaming face of the at-rest IVF-PQ vector index — the
     * crawl-shard pattern for EMBEDDINGS (index vectors on arrival),

@@ -1038,6 +1038,51 @@ class LlmSpec extends SparkSpec {
     assert(params.map(_.getAs[Int]("n_buckets")).toSeq == Seq(4))
   }
 
+  test("bm25ProbeAtRest: at most 11 Spark jobs after an append and a delete, " +
+    "equal to bm25TopKBatch over the surviving docs") {
+    val docs = (0L until 40L).map { i =>
+      (i, s"spark join w${i % 7} w${i % 5} merge ${"scan " * (1 + i % 3).toInt}")
+    }.toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("bm25_probe_jobs").toString
+    Retrieval.bm25IngestAtRest(docs.filter($"doc_id" < 30), "doc_id", "text",
+      dir, nBuckets = 4)
+    Retrieval.bm25AppendAtRest(docs.filter($"doc_id" >= 30), "doc_id", "text", dir)
+    Retrieval.bm25DeleteAtRest(Seq(2L, 31L).toDF("doc_id"), "doc_id", dir)
+    val batch = Seq((0L, "spark"), (0L, "w3"), (1L, "scan"), (1L, "w4"))
+      .toDF("qid", "term")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(counter)
+    val got = try {
+      val r = Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 10).collect()
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      r
+    } finally sc.removeSparkListener(counter)
+    assert(jobs.get <= 11, s"probe ran ${jobs.get} Spark jobs")
+    val want = Retrieval.bm25TopKBatch(docs.filter(!$"doc_id".isin(2L, 31L)),
+      "doc_id", "text", batch, k = 10).collect()
+    def byRank(rs: Array[org.apache.spark.sql.Row]) =
+      rs.sortBy(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"))).toSeq
+    assert(got.length == 20 && byRank(got) == byRank(want))
+  }
+
+  test("bm25ProbeAtRest fails loud on an initialized store before its first batch") {
+    val dir = java.nio.file.Files.createTempDirectory("bm25_probe_init").toString
+    Retrieval.bm25InitAtRest(spark, dir, nBuckets = 4)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Retrieval.bm25ProbeAtRest(spark, dir,
+        Seq((0L, "spark")).toDF("qid", "term"), k = 10).collect()
+    }
+    assert(e.getMessage.contains("does not exist"), e.getMessage)
+  }
+
   test("rrfFuse: hand-computed fixed-point fusion, both-list docs outrank singles") {
     // qid 0: sparse ranks a=1, b=2; dense ranks b=1, c=2
     val sparse = Seq((0L, 10L, 1), (0L, 11L, 2)).toDF("qid", "id", "rank")

@@ -390,6 +390,28 @@ class EventStreamSpec extends SparkSpec {
     assert(stats == 4L, s"stats double-counted after replay: $stats docs")
   }
 
+  test("bm25IngestStream refuses a store that already holds batches; the store is untouched") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("bm25_stream_refuse").toString
+    graft.llm.Retrieval.bm25IngestAtRest(Seq(
+      (1L, "spark merge engine with spark joins"),
+      (2L, "vector index layouts for retrieval")).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    val queries = Seq((1L, "spark"), (2L, "index")).toDF("qid", "term")
+    def probe() = graft.llm.Retrieval.bm25ProbeAtRest(spark, dir, queries, k = 5)
+      .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
+    val before = probe()
+    val stream = MemoryStream[(Long, String)]
+    stream.addData(Seq((3L, "merge rules and data movement")))
+    val e = intercept[IllegalStateException] {
+      EventStream.bm25IngestStream(
+        stream.toDF().toDF("doc_id", "text"), "doc_id", "text", dir).stop()
+    }
+    assert(e.getMessage.contains("bm25InitAtRest"), e.getMessage)
+    assert(before.nonEmpty && probe() == before)
+  }
+
   test("ivfPqIngestStream: stream-built index answers ≡ batch-built; replay changes nothing") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
