@@ -59,25 +59,7 @@ object Bench {
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "360").toDouble
     val wallT0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - wallT0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Releasing a localCheckpoint'd RDD (Materialize.releaseAll, run
-    // after EVERY timed query) logs a WARN per RDD ("was locally
-    // checkpointed, its lineage has been truncated …"). Across 183
-    // queries × up to 6 runs that is thousands of lines flooding the
-    // tail of the process output — the round-1..12 BENCH artifacts all
-    // show `parsed: null` because the harness's log scrape found WARN
-    // spam where the summary line should be. The release is
-    // intentional (the blocks are dead by contract), so the warning
-    // carries no information here: drop that one logger to ERROR.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.protocol(cpus.toInt)
     // fixture-schema contract check (see Tables.fixtureDrift): surfaces
     // a driver-side fixture regeneration as readable lines up front
     Tables.fixtureDrift(spark, sfDir)

@@ -51,12 +51,7 @@ object Main {
       |  [-t_srs srs[,srs…]] [-partition n] [-ovr n] [-overwrite] [-quiet] filename…""".stripMargin
 
   def main(argv: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.protocol(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val rc = run(argv, spark)
     spark.stop()
     if (rc != 0) sys.exit(rc)

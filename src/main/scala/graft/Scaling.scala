@@ -197,16 +197,7 @@ object Scaling {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.protocol(cpus.toInt)
 
     val doLlm = sys.env.getOrElse("SPARK_GRAFT_SCALING_LLM", "1") != "0"
     val doDeep = sys.env.getOrElse("SPARK_GRAFT_SCALING_DEEP", "1") != "0"

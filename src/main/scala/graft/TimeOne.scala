@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time one named query from [[SparkEntry.queries]] without paying
   * for the full bench sweep: `graft.TimeOne <name> [sfDir] [iters]`.
   * Same session config and noop-write action as [[Bench]], so numbers
@@ -13,24 +11,13 @@ object TimeOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.protocol(cpus.toInt)
     val fn = SparkEntry.queries(name)
     // Same snapshot-and-release hygiene as Bench.runOnce: without it,
     // checkpoint-pinning operators accumulate block-manager blocks
     // across iterations (Bench frees them after every run, outside the
     // timed window), so TimeOne would systematically penalize exactly
-    // the changes it is used to A/B. Same WARN suppression too —
-    // releaseAll logs one "lineage has been truncated" WARN per
-    // released RDD (see Bench's note).
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    // the changes it is used to A/B.
     def once(): Double = {
       val keep = graft.core.Materialize.liveIds(spark)
       val t0 = System.nanoTime()

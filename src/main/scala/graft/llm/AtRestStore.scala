@@ -2,16 +2,37 @@ package graft.llm
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.core.Materialize
 
 /** Shared plumbing for the at-rest index lifecycles (MinHash-LSH and
   * winnowing in [[Dedup]], BM25 in [[Retrieval]], CDC chunk store in
   * [[Dedup]], IVF-PQ in [[Similarity]]): manifest-resolved table
   * paths, existence-gated table reads, the crash-safe versioned
   * multi-table swap, the establish-or-append streaming replay guard,
-  * and the tombstone mask set every takedown face shares.
+  * and the takedown protocol every tombstoned store shares.
+  *
+  * == Takedown protocol (BM25, MinHash-LSH, winnowing, IVF-PQ) ==
+  *
+  * A logical delete lands ids in the store's `tombstones` table,
+  * which only the helpers here read, mask or truncate:
+  *  - absent ≡ empty: ingests drop the table ([[tombstoneClear]]),
+  *    the first delete creates it.
+  *  - read once, collected: each face reads the set through its
+  *    snapshot ([[Snapshot.tombstones]]) on a declared schema and
+  *    collects it. The set stays under broadcast size by contract (it
+  *    rides broadcast anti-joins, [[Tombstones.mask]]; compact once
+  *    it outgrows that), so nothing corpus-sized reaches the driver.
+  *  - deduped append: [[tombstoneAppend]] masks the new rows with the
+  *    collected set, so a re-delete is a no-op.
+  *  - truncation rides the purge's flip ([[purgeFlip]]): no reader
+  *    sees unpurged tables with an emptied set.
   *
   * == Versioned tables + one atomically-renamed store manifest
   * (round 17 — closes the r16 judge's momentary-absence window and
@@ -442,6 +463,15 @@ private[graft] object AtRestStore {
     def ifExists(table: String): Option[DataFrame] =
       if (exists(table)) Some(spark.read.parquet(path(table))) else None
 
+    /** This generation's tombstone set, read on `schema` and collected. */
+    def tombstones(schema: StructType = TombstoneIds): Tombstones = {
+      val rows =
+        if (exists("tombstones"))
+          spark.read.schema(schema).parquet(path("tombstones")).collect()
+        else Array.empty[Row]
+      new Tombstones(spark, rows, schema)
+    }
+
     private[AtRestStore] def entryMap: Map[String, String] = entries
   }
 
@@ -518,8 +548,8 @@ private[graft] object AtRestStore {
     snapshot(spark, dir).path(table)
 
   /** Read `table` under `dir` as parquet iff its resolved dir exists —
-    * the existence gate every optional at-rest table (tombstones,
-    * prior stats, prior chunks) goes through.
+    * the existence gate of the optional at-rest tables (prior stats,
+    * prior chunks); tombstones go through [[Snapshot.tombstones]].
     */
   def tableIfExists(spark: SparkSession, dir: String,
                     table: String): Option[DataFrame] =
@@ -719,34 +749,65 @@ private[graft] object AtRestStore {
           t.select(col(gateIdCol).cast("long").as(batchIdCol)).distinct(),
           Seq(batchIdCol), "left_anti").localCheckpoint()
         if (fresh.head(1).nonEmpty) append(fresh)
+        Materialize.release(fresh)
     }
     }
   }
 
-  /** Shared tombstone APPEND for the at-rest takedown faces: dedupe
-    * against the existing set (re-delete is a no-op, never a
-    * double-mask), materialize before appending into the read path.
-    * `gatePath` must exist — a takedown against a mistyped or
-    * un-ingested dir must fail LOUD, not write tombstones nowhere
-    * useful.
+  /** Schema of the id-only tombstone tables (LSH, winnowing, IVF-PQ). */
+  private val TombstoneIds: StructType = StructType.fromDDL("id BIGINT")
+
+  /** One snapshot's collected tombstone rows (`id` plus any payload
+    * column), from [[Snapshot.tombstones]].
     */
-  def tombstoneAppend(ids: DataFrame, idCol: String,
-                      dir: String, gatePath: String): Unit = {
-    val spark = ids.sparkSession
+  final class Tombstones private[AtRestStore] (
+      spark: SparkSession, val rows: Array[Row], schema: StructType) {
+    def isEmpty: Boolean = rows.isEmpty
+
+    /** The set as a driver-local frame: a plan over it never reads
+      * the table's files.
+      */
+    def frame: DataFrame = spark.createDataFrame(rows.toSeq.asJava, schema)
+
+    /** `df` without its tombstoned rows — a broadcast `left_anti` on
+      * `id`, skipped when the set is empty.
+      */
+    def mask(df: DataFrame): DataFrame =
+      if (isEmpty) df
+      else df.join(broadcast(frame.select("id")), Seq("id"), "left_anti")
+  }
+
+  /** Tombstone `rows` (`id BIGINT` plus any payload column, in the
+    * table's column order), deduped against the collected set. The
+    * plan never reads the path it appends to, so nothing is
+    * materialized first. `gateTable` must exist — a takedown against
+    * a mistyped or un-ingested dir must fail LOUD.
+    */
+  def tombstoneAppend(rows: DataFrame, dir: String, gateTable: String): Unit = {
+    val spark = rows.sparkSession
     withLease(spark, dir, "tombstoneAppend") {
     val snap = snapshot(spark, dir)
-    require(snap.ifExists(gatePath).isDefined,
-      s"takedown against $dir: no $gatePath found — not an ingested " +
+    require(snap.exists(gateTable),
+      s"takedown against $dir: no $gateTable found — not an ingested " +
         "index (mistyped dir, or delete called before ingest)")
-    val existing = snap.ifExists("tombstones")
-    val base = ids.select(col(idCol).cast("long").as("id")).distinct()
-    val fresh = existing.map(t => base.join(t, Seq("id"), "left_anti"))
-      .getOrElse(base)
-      .localCheckpoint() // materialize before appending into the read path
+    val fresh = snap.tombstones(rows.schema).mask(rows.distinct())
     fence(spark, dir) // die loudly if the lease was taken over mid-compute
     fresh.write.mode("append").parquet(snap.path("tombstones"))
     }
   }
+
+  /** Publish a compaction's table `rewrites` (purged with `tomb`):
+    * with a non-empty set an empty tombstone version rides the same
+    * [[swapMany]] flip; with an empty one the rewrites (if any) flip
+    * alone and an empty tombstone table is dropped.
+    */
+  def purgeFlip(spark: SparkSession, dir: String, tomb: Tombstones,
+                rewrites: Seq[(String, String => Unit)]): Unit =
+    if (tomb.isEmpty) {
+      if (rewrites.nonEmpty) swapMany(spark, dir, rewrites)
+      tombstoneClear(spark, dir)
+    } else swapMany(spark, dir, rewrites :+ ("tombstones" -> ((out: String) =>
+      tomb.frame.limit(0).write.mode("overwrite").parquet(out))))
 
   /** Clear a stale tombstone set at (re-)ingest — without this, a
     * re-ingest after a takedown (the recovery path every delete face

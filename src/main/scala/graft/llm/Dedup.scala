@@ -1474,6 +1474,7 @@ object Dedup {
       .parquet(tablePath(spark, dir, "buckets"))
     agg.select(col("id"), col("sh"))
       .write.mode(mode).parquet(tablePath(spark, dir, "shingles"))
+    Materialize.release(agg)
   }
 
   /** Loud parameter gate for the at-rest LSH artifacts. Hash-family
@@ -1562,18 +1563,14 @@ object Dedup {
     val banded = bandedOf(agg, bands, numHashes / bands)
     // takedown mask ([[lshDeleteAtRest]]): tombstoned base ids are
     // invisible to probes — both the bucket rows and the shingle
-    // store anti-join the (small, broadcastable) tombstone set
-    // ONE snapshot: mask set, buckets, and shingles must belong to
-    // the same store generation (a compaction flip between reads
-    // would otherwise resurface purged docs or verify against a
-    // mixed-generation shingle store)
+    // store are masked. ONE snapshot: mask set, buckets, and shingles
+    // must belong to the same store generation (a compaction flip
+    // between reads would otherwise resurface purged docs or verify
+    // against a mixed-generation shingle store)
     val snap = AtRestStore.snapshot(spark, dir)
-    val tombIds = snap.ifExists("tombstones")
-      .map(t => broadcast(t.select("id")))
-    def mask(df: DataFrame): DataFrame =
-      tombIds.map(t => df.join(t, Seq("id"), "left_anti")).getOrElse(df)
-    val idx = mask(spark.read.parquet(snap.path("buckets")))
-    val baseSh = mask(spark.read.parquet(snap.path("shingles")))
+    val tomb = snap.tombstones()
+    val idx = tomb.mask(spark.read.parquet(snap.path("buckets")))
+    val baseSh = tomb.mask(spark.read.parquet(snap.path("shingles")))
     val cand = banded.select(col("band"), col("bkey"), col("id").as("new_id"))
       .join(idx.select(col("band"), col("bkey"), col("id").as("base_id")),
         Seq("band", "bkey"))
@@ -1597,20 +1594,19 @@ object Dedup {
 
   /** Logical DELETE from the at-rest LSH index — the takedown path
     * (the [[graft.llm.Retrieval.bm25DeleteAtRest]] contract for the
-    * near-dup family): ids land in a tombstone set that
-    * [[lshProbeAtRest]] masks out of both the bucket and shingle
-    * reads; [[lshCompactAtRest]] physically purges them. Honest
+    * near-dup family, under the [[AtRestStore]] takedown protocol):
+    * [[lshProbeAtRest]] masks tombstoned ids out of both the bucket
+    * and shingle reads; [[lshCompactAtRest]] physically purges them. Honest
     * recall caveat, mirrored by the oracle: a tombstoned doc that
     * was serving as a hot bucket's HUB leaves that bucket without
     * its stored representative, so probes lose the hub-capped
     * candidates it carried until the next compact-after-append or
     * re-ingest — deletion under hub reduction trades a sliver of
-    * recall, exactly like every LSH face here. Re-deleting an id is
-    * a no-op; deleting against a dir with no shingle store fails
-    * loud.
+    * recall, exactly like every LSH face here.
     */
   def lshDeleteAtRest(ids: DataFrame, idCol: String, dir: String): Unit =
-    tombstoneAppend(ids, idCol, dir, gatePath = "shingles")
+    tombstoneAppend(ids.select(col(idCol).cast("long").as("id")), dir,
+      gateTable = "shingles")
 
   /** COMPACT an at-rest LSH index — the maintenance op that closes
     * [[lshAppendAtRest]]'s documented drift-until-reingest gap
@@ -1648,18 +1644,11 @@ object Dedup {
     AtRestStore.withLease(spark, dir, "lshCompact") {
     val mb = lshParamsCheck(spark, dir, numHashes, bands, shingleLen)
     // physical takedown purge: compaction drops tombstoned rows from
-    // BOTH tables (the only face that rewrites them) and truncates
-    // the tombstone set — all in ONE atomic manifest flip
-    // ([[AtRestStore.swapMany]]), so a concurrent probe can never
-    // see purged buckets with live tombstones (harmless) or — the
-    // dangerous mix — unpurged tables with a truncated mask
+    // BOTH tables (the only face that rewrites them); the truncation
+    // of the set rides the same flip ([[AtRestStore.purgeFlip]])
     val snap = AtRestStore.snapshot(spark, dir)
-    val tomb = snap.ifExists("tombstones")
-      .map(_.select("id").localCheckpoint())
-    val hasTomb = tomb.exists(_.head(1).nonEmpty)
-    def purged(df: DataFrame): DataFrame =
-      tomb.map(t => df.join(broadcast(t), Seq("id"), "left_anti")).getOrElse(df)
-    val buckets = purged(spark.read.parquet(snap.path("buckets")))
+    val tomb = snap.tombstones()
+    val buckets = tomb.mask(spark.read.parquet(snap.path("buckets")))
     val hot = buckets.groupBy("band", "bkey")
       .agg(count(lit(1)).as("bn"), min(col("id")).as("hub"))
       .filter(col("bn") > mb)
@@ -1674,21 +1663,11 @@ object Dedup {
     val bucketsWrite = "buckets" -> ((out: String) =>
       cool.unionByName(reps)
         .write.mode("overwrite").partitionBy("band").parquet(out))
-    if (hasTomb) {
-      AtRestStore.swapMany(spark, dir, Seq(
-        "shingles" -> ((out: String) =>
-          purged(spark.read.parquet(snap.path("shingles")))
-            .write.mode("overwrite").parquet(out)),
-        bucketsWrite,
-        // the mask set is spent — an EMPTY tombstone version rides
-        // the same flip (empty ≡ absent for every probe)
-        "tombstones" -> ((out: String) =>
-          tomb.get.limit(0).write.mode("overwrite").parquet(out))))
-    } else {
-      AtRestStore.swapMany(spark, dir, Seq(bucketsWrite))
-      // a zero-row tombstone table carries no mask — drop it outright
-      tomb.foreach(_ => tombstoneClear(spark, dir))
-    }
+    val shinglesWrite = "shingles" -> ((out: String) =>
+      tomb.mask(spark.read.parquet(snap.path("shingles")))
+        .write.mode("overwrite").parquet(out))
+    AtRestStore.purgeFlip(spark, dir, tomb,
+      (if (tomb.isEmpty) Nil else Seq(shinglesWrite)) :+ bucketsWrite)
   }
 
   /** Paragraph-level duplication stats — the RefinedWeb/Dolma
@@ -2462,37 +2441,30 @@ object Dedup {
     fps.write.mode("append").parquet(tablePath(newDf.sparkSession, dir, "fps"))
   }
 
-  /** Logical DELETE — the takedown face (shared
-    * [[tombstoneAppend]] contract): tombstoned ids are masked out of
-    * every probe; [[winnowPurgeAtRest]] physically removes them.
+  /** Logical DELETE — the takedown face (the [[AtRestStore]]
+    * takedown protocol): tombstoned ids are masked out of every probe;
+    * [[winnowPurgeAtRest]] physically removes them.
     */
   def winnowDeleteAtRest(ids: DataFrame, idCol: String, dir: String): Unit =
-    tombstoneAppend(ids, idCol, dir, gatePath = "fps")
+    tombstoneAppend(ids.select(col(idCol).cast("long").as("id")), dir,
+      gateTable = "fps")
 
   /** Physical purge of tombstoned fingerprints (one columnar
-    * anti-join pass, sibling-dir swap), then the tombstone set is
-    * cleared. Probe results identical before and after.
+    * anti-join pass, sibling-dir swap) and truncation of the tombstone
+    * set, in one flip ([[AtRestStore.purgeFlip]]). Probe results
+    * identical before and after.
     */
   def winnowPurgeAtRest(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Unit =
     AtRestStore.withLease(spark, dir, "winnowPurge") {
     winnowParamsCheck(spark, dir) // loud missing-index failure
     val snap = AtRestStore.snapshot(spark, dir)
-    snap.ifExists("tombstones").foreach { t =>
-      val tomb = t.select("id").localCheckpoint()
-      if (tomb.head(1).nonEmpty) {
-        // purge + mask truncation in ONE atomic flip (the
-        // lshCompactAtRest contract): a probe never sees the
-        // unpurged store with an emptied mask
-        AtRestStore.swapMany(spark, dir, Seq(
-          "fps" -> ((out: String) =>
-            spark.read.parquet(snap.path("fps"))
-              .join(broadcast(tomb), Seq("id"), "left_anti")
-              .write.mode("overwrite").parquet(out)),
-          "tombstones" -> ((out: String) =>
-            tomb.limit(0).write.mode("overwrite").parquet(out))))
-      } else tombstoneClear(spark, dir)
-    }
+    val tomb = snap.tombstones()
+    AtRestStore.purgeFlip(spark, dir, tomb,
+      if (tomb.isEmpty) Nil
+      else Seq("fps" -> ((out: String) =>
+        tomb.mask(spark.read.parquet(snap.path("fps")))
+          .write.mode("overwrite").parquet(out))))
   }
 
   /** Probe a NEW batch for shared passages against the stored index:
@@ -2511,11 +2483,7 @@ object Dedup {
                         textCol: String, minShared: Int = 5): DataFrame = {
     val (k, w, maxDf) = winnowParamsCheck(spark, dir)
     val snap = AtRestStore.snapshot(spark, dir)
-    val tombIds = snap.ifExists("tombstones")
-      .map(t => broadcast(t.select("id")))
-    val store0 = spark.read.parquet(snap.path("fps"))
-    val store = tombIds.map(t => store0.join(t, Seq("id"), "left_anti"))
-      .getOrElse(store0)
+    val store = snap.tombstones().mask(spark.read.parquet(snap.path("fps")))
     val batch = winnowFingerprints(newDf, idCol, textCol, k, w)
       .select(col("fp"), col("id").as("new_id"))
       .localCheckpoint() // feeds the semi-join AND the pair join

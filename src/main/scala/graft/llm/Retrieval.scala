@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Materialize
 import graft.functions.GraftFunctions.md5Prefix60Col
 
 /** Lexical (keyword) retrieval over a document corpus — the BM25-family
@@ -264,7 +265,8 @@ object Retrieval {
   //   doclens/batch=B/  (id BIGINT, dl BIGINT) — delete-time dl lookup
   //   stats/batch=B/    (n_docs BIGINT, tot_tokens BIGINT) — one delta
   //     row per batch
-  //   tombstones/       (id BIGINT, dl BIGINT) — logical deletes
+  //   tombstones/       (id BIGINT, dl BIGINT) — logical deletes, absent
+  //     until the first delete (the AtRestStore takedown protocol)
   //   params/           (n_buckets INT)
   //
   // Document ids are stored as BIGINT whatever the caller's id type
@@ -303,6 +305,15 @@ object Retrieval {
                        snap: AtRestStore.Snapshot, t: String): DataFrame =
     spark.read.schema(bm25Schemas(t)).parquet(snap.path(t))
 
+  private val bm25TombSchema = StructType.fromDDL(bm25Schemas("tombstones"))
+
+  /** Column `i` of collected stats or tombstone rows, summed; skips
+    * nulls as SQL sum does (an empty batch's delta row carries a null
+    * tot_tokens).
+    */
+  private def total(rows: Array[Row], i: Int): Long =
+    rows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).sum
+
   /** Term→bucket route for the at-rest layout: first 15 hex chars of
     * md5 mod `nBuckets` — the [[Sampling.hashUniformCol]] integer core,
     * replayable on a probe's term list so bucket pruning needs no
@@ -334,7 +345,7 @@ object Retrieval {
       w.parquet(path)
     }
     // tf feeds two consumers (dl, postings) — materialize once; the
-    // frame is ingest-batch-sized and released with the job
+    // frame is ingest-batch-sized and released once the writes are done
     val tf = termFrequencies(docs.withColumn(idCol, col(idCol).cast("bigint")),
       idCol, textCol).localCheckpoint()
     AtRestStore.fence(docs.sparkSession, dir) // review r18 pre-write fence
@@ -347,6 +358,7 @@ object Retrieval {
     out(dl.withColumn("batch", lit(batchId)), Seq("batch"), tp("doclens"))
     out(dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("tot_tokens"))
       .withColumn("batch", lit(batchId)), Seq("batch"), tp("stats"))
+    Materialize.release(tf)
   }
 
   /** Build the at-rest index from scratch (overwrite). `nBuckets`
@@ -364,8 +376,8 @@ object Retrieval {
     bm25WriteParams(docs.sparkSession, dir, nBuckets)
   }
 
-  /** Initialize an EMPTY store — params + tombstone schema only, no
-    * corpus pass. The seed face for [[graft.streaming.EventStream
+  /** Initialize an EMPTY store — params only, no corpus pass. The
+    * seed face for [[graft.streaming.EventStream
     * .bm25IngestStream]] (the [[graft.llm.Dedup.cdcInitAtRest]]
     * pattern): documents then arrive exclusively as micro-batches,
     * whose Spark-assigned ids (0, 1, …) become the store's batch
@@ -387,11 +399,7 @@ object Retrieval {
     Seq(nBuckets).toDF("n_buckets")
       .write.mode("overwrite")
       .parquet(AtRestStore.tablePath(spark, dir, "params"))
-    // empty tombstone set — schema established up front so probes
-    // read unconditionally
-    Seq.empty[(Long, Long)].toDF("id", "dl")
-      .write.mode("overwrite")
-      .parquet(AtRestStore.tablePath(spark, dir, "tombstones"))
+    AtRestStore.tombstoneClear(spark, dir) // a re-ingest voids old takedowns
   }
 
   /** The store's bucket count, read from its params table (one job).
@@ -452,28 +460,22 @@ object Retrieval {
 
   /** Logical DELETE — the takedown path (copyright removal,
     * post-hoc contamination): ids join the slim doclens table for
-    * their lengths and append to the tombstone set; nothing
-    * corpus-sized is rewritten. Probes mask tombstoned postings and
-    * subtract tombstoned (docs, tokens) from the global denominators,
-    * so BM25 idf and avgdl reflect the post-delete corpus EXACTLY.
-    * Tombstones ride broadcast anti-joins at probe time — compact
-    * once they grow past broadcast size.
+    * their lengths and append to the tombstone set
+    * ([[AtRestStore.tombstoneAppend]]: a re-deleted id cannot
+    * double-subtract from the denominators); nothing corpus-sized is
+    * rewritten. Probes mask tombstoned postings and subtract
+    * tombstoned (docs, tokens) from the global denominators, so BM25
+    * idf and avgdl reflect the post-delete corpus EXACTLY.
     */
   def bm25DeleteAtRest(ids: DataFrame, idCol: String, dir: String): Unit =
     AtRestStore.withLease(ids.sparkSession, dir, "bm25Delete") {
     val spark = ids.sparkSession
-    // anti-join the EXISTING tombstones so a re-deleted id can't land
-    // twice and double-subtract from the stats denominators; the
-    // checkpoint materializes the result BEFORE the append touches the
-    // same path (a plan may not write into its own input)
     val snap = AtRestStore.snapshot(spark, dir)
-    val fresh = bm25Read(spark, snap, "doclens")
-      .join(ids.select(col(idCol).as("id")).distinct(), "id")
-      .join(bm25Read(spark, snap, "tombstones").select("id"),
-        Seq("id"), "left_anti")
-      .select("id", "dl")
-      .localCheckpoint()
-    fresh.write.mode("append").parquet(snap.path("tombstones"))
+    AtRestStore.tombstoneAppend(
+      bm25Read(spark, snap, "doclens")
+        .join(ids.select(col(idCol).cast("long").as("id")), "id")
+        .select("id", "dl"),
+      dir, gateTable = "doclens")
   }
 
   /** Physical COMPACTION — purge tombstoned rows from postings and
@@ -497,39 +499,30 @@ object Retrieval {
     AtRestStore.withLease(spark, dir, "bm25Compact") {
     bm25Buckets(spark, dir) // loud missing-index failure
     val snap = AtRestStore.snapshot(spark, dir)
-    val tomb = bm25Read(spark, snap, "tombstones").localCheckpoint()
-    val tombIds = broadcast(tomb.select("id"))
+    val tomb = snap.tombstones(bm25TombSchema)
+    // the probe's arithmetic: the set's totals enter as literals
+    val (tDocs, tTok) = (tomb.rows.length.toLong, total(tomb.rows, 1))
     // history folds to batch=0 — the batch dimension is ingest
     // provenance, and compaction is the provenance horizon. The
     // tombstone truncation rides the SAME flip as the net stats fold
     // (they are two views of one fact and must change together).
-    AtRestStore.swapMany(spark, dir, Seq(
+    AtRestStore.purgeFlip(spark, dir, tomb, Seq(
       "postings" -> ((out: String) =>
-        bm25Read(spark, snap, "postings")
-          .join(tombIds, Seq("id"), "left_anti")
+        tomb.mask(bm25Read(spark, snap, "postings"))
           .select("pbucket", "s", "id", "tf", "dl")
           .withColumn("batch", lit(0L))
           .write.mode("overwrite").partitionBy("pbucket", "batch").parquet(out)),
       "doclens" -> ((out: String) =>
-        bm25Read(spark, snap, "doclens")
-          .join(tombIds, Seq("id"), "left_anti")
+        tomb.mask(bm25Read(spark, snap, "doclens"))
           .select("id", "dl")
           .withColumn("batch", lit(0L))
           .write.mode("overwrite").partitionBy("batch").parquet(out)),
-      "stats" -> ((out: String) => {
-        val t = tomb.agg(
-          coalesce(count(lit(1)), lit(0L)).as("t_docs"),
-          coalesce(sum("dl"), lit(0L)).as("t_tok"))
+      "stats" -> ((out: String) =>
         bm25Read(spark, snap, "stats")
-          .agg(sum("n_docs").as("n_docs"), sum("tot_tokens").as("tot_tokens"))
-          .crossJoin(broadcast(t))
-          .select((col("n_docs") - col("t_docs")).as("n_docs"),
-            (col("tot_tokens") - col("t_tok")).as("tot_tokens"))
+          .agg((sum("n_docs") - lit(tDocs)).as("n_docs"),
+            (sum("tot_tokens") - lit(tTok)).as("tot_tokens"))
           .withColumn("batch", lit(0L))
-          .write.mode("overwrite").partitionBy("batch").parquet(out)
-      }),
-      "tombstones" -> ((out: String) =>
-        tomb.limit(0).write.mode("overwrite").parquet(out))))
+          .write.mode("overwrite").partitionBy("batch").parquet(out))))
   }
 
   /** Probe the at-rest index with a query BATCH (`qid`, `term` rows) —
@@ -548,8 +541,8 @@ object Retrieval {
     *    their sums net of the tombstones enter the plan as the
     *    literals n_docs and tot_tokens;
     *  - tombstones: one read serves both the denominators and the
-    *    mask, so the two cannot disagree; the store keeps them under
-    *    broadcast size (compact once they outgrow it);
+    *    mask, so the two cannot disagree (the takedown protocol of
+    *    [[AtRestStore]]);
     *  - the query batch, deduplicated: it is broadcast to the scan
     *    anyway, and its terms and buckets become literal filters.
     * The postings scan, the df aggregate, the (qid, id) aggregation and
@@ -557,10 +550,11 @@ object Retrieval {
     * the corpus reaches the driver.
     *
     * Spark jobs per call: 10 on a store that holds tombstones, 9 on one
-    * that holds none (as after compaction) — the params, tombstones and
-    * stats reads, then the plan's own: the tombstone and batch
-    * broadcasts, the df aggregate's shuffle and broadcast, the
-    * (qid, id) aggregate's and the rank window's shuffles, the result.
+    * whose tombstone table is empty (as after compaction), 8 on one
+    * without it — the params, tombstones and stats reads, then the
+    * plan's own: the tombstone and batch broadcasts, the df
+    * aggregate's shuffle and broadcast, the (qid, id) aggregate's and
+    * the rank window's shuffles, the result.
     */
   def bm25ProbeAtRest(spark: org.apache.spark.sql.SparkSession, dir: String,
                       queries: DataFrame, k: Int,
@@ -572,20 +566,13 @@ object Retrieval {
     // generation or a concurrent compaction flip could be
     // double-counted (see bm25CompactAtRest)
     val snap = AtRestStore.snapshot(spark, dir)
-    val tombRead = bm25Read(spark, snap, "tombstones")
-    val tomb = tombRead.collect()
+    val tomb = snap.tombstones(bm25TombSchema)
     val stats = bm25Read(spark, snap, "stats").select("n_docs", "tot_tokens")
       .collect()
-    // skips nulls as SQL sum does: an empty batch's delta row carries
-    // a null tot_tokens
-    def total(rows: Array[Row], i: Int): Long =
-      rows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).sum
-    val nDocs = total(stats, 0) - tomb.length
-    val totTokens = total(stats, 1) - total(tomb, 1)
-    def local(rows: Seq[Row], schema: StructType): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
+    val nDocs = total(stats, 0) - tomb.rows.length
+    val totTokens = total(stats, 1) - total(tomb.rows, 1)
     val qIn = queries.select(col("qid"), col("term").as("s"))
-    val qt = local(qIn.collect().distinct.toSeq, qIn.schema)
+    val qt = spark.createDataFrame(qIn.collect().distinct.toSeq.asJava, qIn.schema)
     // STATIC partition pruning: the batch's terms and their bucket set
     // are pushed as LITERAL filters — planning-time pruning, visible as
     // `pbucket IN (…)` in PartitionFilters (a term's postings all sit
@@ -598,9 +585,7 @@ object Retrieval {
     val scan = bm25Read(spark, snap, "postings")
       .filter(col("pbucket").isin(buckets.map(Int.box): _*) &&
         col("s").isin(terms: _*))
-    val post = if (tomb.isEmpty) scan
-      else scan.join(broadcast(local(tomb.toSeq, tombRead.schema).select("id")),
-        Seq("id"), "left_anti")
+    val post = tomb.mask(scan)
     val dft = post.groupBy("s").agg(count(lit(1)).as("df"))
     val denom = col("tf") + lit(k1) *
       (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))

@@ -1437,13 +1437,12 @@ object Similarity {
     graft.llm.AtRestStore.tombstoneClear(emb.sparkSession, dir)
     val (cModel, cAssign) = pqCore(emb, 1, coarseK, rounds, idCol, vecCol)
     val (pModel, pAssign) = pqCore(emb, m, k, rounds, idCol, vecCol)
-    def tp(t: String): String =
-      graft.llm.AtRestStore.tablePath(emb.sparkSession, dir, t)
-    cModel.write.mode("overwrite").parquet(tp("coarse_model"))
-    pModel.write.mode("overwrite").parquet(tp("pq_model"))
+    val snap = graft.llm.AtRestStore.snapshot(emb.sparkSession, dir)
+    cModel.write.mode("overwrite").parquet(snap.path("coarse_model"))
+    pModel.write.mode("overwrite").parquet(snap.path("pq_model"))
     val cells = cAssign.select(col("id"), col("c").as("cell"))
     pAssign.select("id", "sub", "c").join(cells, "id")
-      .write.mode("overwrite").partitionBy("cell").parquet(tp("codes"))
+      .write.mode("overwrite").partitionBy("cell").parquet(snap.path("codes"))
   }
 
   /** THE codebook assignment step — argmin over the broadcast
@@ -1490,9 +1489,9 @@ object Similarity {
     graft.llm.AtRestStore.withLease(newEmb.sparkSession, dir, "ivfPqAppend") {
     val spark = newEmb.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    def tp(t: String): String = graft.llm.AtRestStore.tablePath(spark, dir, t)
-    val cModel = spark.read.parquet(tp("coarse_model"))
-    val pModel = spark.read.parquet(tp("pq_model"))
+    val snap = graft.llm.AtRestStore.snapshot(spark, dir)
+    val cModel = spark.read.parquet(snap.path("coarse_model"))
+    val pModel = spark.read.parquet(snap.path("pq_model"))
     // loud structural gate (the lshParamsCheck pattern): encoding
     // with an m that disagrees with the stored codebooks would either
     // crash mid-job (m too large) or silently write PARTIAL code rows
@@ -1506,7 +1505,7 @@ object Similarity {
     val coded = pqAssignWithModel(newEmb, pModel, m, idCol, vecCol)
       .join(cells, "id")
     graft.llm.AtRestStore.fence(spark, dir) // review r18 pre-write fence
-    coded.write.mode("append").partitionBy("cell").parquet(tp("codes"))
+    coded.write.mode("append").partitionBy("cell").parquet(snap.path("codes"))
   }
 
   /** Cell-occupancy census of an at-rest IVF-PQ index — the DRIFT
@@ -1523,10 +1522,10 @@ object Similarity {
     // m comes from the stored model, never the caller (ADVICE-style
     // gate: a mismatched m would silently SCALE every count — the
     // sibling append/rebalance faces validate theirs the same way)
-    def tp(t: String): String = graft.llm.AtRestStore.tablePath(spark, dir, t)
-    val m = spark.read.parquet(tp("pq_model"))
+    val snap = graft.llm.AtRestStore.snapshot(spark, dir)
+    val m = spark.read.parquet(snap.path("pq_model"))
       .select(size(col("centsBySub"))).head().getInt(0)
-    spark.read.parquet(tp("codes"))
+    spark.read.parquet(snap.path("codes"))
       .groupBy("cell")
       .agg((count(lit(1)) / m).cast("long").as("n_vecs"))
   }
@@ -1601,8 +1600,8 @@ object Similarity {
     def centsOf(row: org.apache.spark.sql.Row): Seq[Seq[Seq[Double]]] =
       row.getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](0)
         .map(_.map(_.toIndexedSeq).toIndexedSeq).toIndexedSeq
-    def tp(t: String): String = graft.llm.AtRestStore.tablePath(spark, dir, t)
-    val pCents = centsOf(spark.read.parquet(tp("pq_model")).head())
+    val snap = graft.llm.AtRestStore.snapshot(spark, dir)
+    val pCents = centsOf(spark.read.parquet(snap.path("pq_model")).head())
     require(m == pCents.size,
       s"at-rest IVF-PQ index $dir was built with m=${pCents.size} but the " +
         s"caller passed m=$m")
@@ -1624,14 +1623,14 @@ object Similarity {
     }
     import spark.implicits._
     val ctabDf = broadcast(ctab.toDF("sub", "c1", "c2", "pd_fp"))
-    val codes = spark.read.parquet(tp("codes"))
+    val codes = spark.read.parquet(snap.path("codes"))
     val hot = codes.groupBy("cell")
       .agg((count(lit(1)) / m).cast("long").as("n"))
       .filter(col("n") > maxCell)
       .select("cell").orderBy("cell")
       .collect().map(_.getInt(0)).toSeq // model-sized: ≤ #cells rows
     if (hot.isEmpty) return
-    val coarseRow = spark.read.parquet(tp("coarse_model")).head()
+    val coarseRow = spark.read.parquet(snap.path("coarse_model")).head()
     var coarse = centsOf(coarseRow).head // m=1: one list of k_c full-dim centroids
     val sl = 64 / m
     var rewritten: Seq[DataFrame] = Nil
@@ -1744,10 +1743,10 @@ object Similarity {
       rewritten.reduce(_ unionByName _)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell").parquet(tp("codes"))
+        .partitionBy("cell").parquet(snap.path("codes"))
       spark.range(1)
         .select(typedLit(Seq(coarse)).as("centsBySub"))
-        .write.mode("overwrite").parquet(tp("coarse_model"))
+        .write.mode("overwrite").parquet(snap.path("coarse_model"))
     }
   }
 
@@ -1770,16 +1769,14 @@ object Similarity {
                       m: Int = 4): DataFrame = {
     require(topK > 0 && nprobe > 0, s"need topK > 0, nprobe > 0; got $topK, $nprobe")
     val FP = 1048576.0
-    def tp(t: String): String = graft.llm.AtRestStore.tablePath(spark, dir, t)
-    val cModel = spark.read.parquet(tp("coarse_model"))
-    val pModel = spark.read.parquet(tp("pq_model"))
+    // ONE snapshot: models, codes and the mask set of one generation
+    val snap = graft.llm.AtRestStore.snapshot(spark, dir)
+    val cModel = spark.read.parquet(snap.path("coarse_model"))
+    val pModel = spark.read.parquet(snap.path("pq_model"))
     // takedown mask ([[ivfPqDeleteAtRest]]): tombstoned vector ids
     // are invisible to searches until [[ivfPqPurgeAtRest]] rewrites
     // their partitions
-    val codes0 = spark.read.parquet(tp("codes"))
-    val codes = graft.llm.AtRestStore.tableIfExists(spark, dir, "tombstones")
-      .map(t => codes0.join(broadcast(t.select("id")), Seq("id"), "left_anti"))
-      .getOrElse(codes0)
+    val codes = snap.tombstones().mask(spark.read.parquet(snap.path("codes")))
     val qCellDist = pqLut(queries, cModel, 1)
       .select(col("qid"), col("c").as("cell"), col("d_fp").as("cd_fp"))
     val wR = Window.partitionBy("qid").orderBy(col("cd_fp"), col("cell"))
@@ -1807,19 +1804,18 @@ object Similarity {
 
   /** Logical DELETE from the at-rest IVF-PQ index — the vector
     * takedown path, completing right-to-be-forgotten across the
-    * at-rest family (BM25 [[graft.llm.Retrieval.bm25DeleteAtRest]],
-    * LSH [[graft.llm.Dedup.lshDeleteAtRest]]): ids land in a
-    * tombstone set that [[ivfPqTopKAtRest]] masks out of the code
-    * scan (one broadcast anti-join — n_cand and every ranking see
-    * only survivors); [[ivfPqPurgeAtRest]] physically rewrites the
-    * affected cell partitions. Coarse centroids are NOT recomputed —
-    * routing is an approximation trained on history, exactly the
-    * frozen-codebook drift contract of [[ivfPqAppend]]. Re-deleting
-    * an id is a no-op.
+    * at-rest family (the [[graft.llm.AtRestStore]] takedown protocol):
+    * [[ivfPqTopKAtRest]] masks tombstoned ids out of the code scan
+    * (n_cand and every ranking see only survivors);
+    * [[ivfPqPurgeAtRest]] physically rewrites the affected cell
+    * partitions. Coarse centroids are NOT recomputed — routing is an
+    * approximation trained on history, exactly the frozen-codebook
+    * drift contract of [[ivfPqAppend]].
     */
   def ivfPqDeleteAtRest(ids: DataFrame, dir: String,
                         idCol: String = "vec_id"): Unit =
-    graft.llm.AtRestStore.tombstoneAppend(ids, idCol, dir, gatePath = "pq_model")
+    graft.llm.AtRestStore.tombstoneAppend(
+      ids.select(col(idCol).cast("long").as("id")), dir, gateTable = "pq_model")
 
   /** Physical PURGE of tombstoned vectors: only the cell partitions
     * that actually hold tombstoned ids are rewritten (dynamic
@@ -1844,50 +1840,49 @@ object Similarity {
   def ivfPqPurgeAtRest(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Unit =
     graft.llm.AtRestStore.withLease(spark, dir, "ivfPqPurge") {
-    def tp(t: String): String = graft.llm.AtRestStore.tablePath(spark, dir, t)
-    graft.llm.AtRestStore.tableIfExists(spark, dir, "tombstones").foreach { t =>
-      val tomb = t.select("id").localCheckpoint()
-      if (tomb.head(1).nonEmpty) {
-        val codes = spark.read.parquet(tp("codes"))
-        val touched = codes.join(broadcast(tomb), Seq("id"))
-          .select("cell").distinct().localCheckpoint()
-        val survivors = codes.join(touched, Seq("cell")) // affected partitions only
-          .join(broadcast(tomb), Seq("id"), "left_anti")
-          .select("id", "sub", "c", "cell")
-          .localCheckpoint() // materialize BEFORE overwriting the source
-        survivors.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell").parquet(tp("codes"))
-        // a cell whose EVERY member was tombstoned contributes no
-        // surviving rows, so dynamic overwrite never touches its
-        // partition — drop those directories explicitly. A failed
-        // delete would RESURRECT the tombstoned vectors after the
-        // tombstone set is cleared below, so every delete is checked.
-        val emptied = touched.join(survivors.select("cell").distinct(),
-            Seq("cell"), "left_anti")
-          .collect().map(_.getInt(0)) // ≤ #cells — model-sized
-        if (emptied.nonEmpty) {
-          // refuse to purge the index down to ZERO partitions: an
-          // empty codes dir has no schema to read and every later
-          // search would crash obscurely — forgetting the last
-          // vector means dropping or re-ingesting the index, say so
-          val nLive = spark.read.parquet(tp("codes"))
-            .select("cell").distinct().count()
-          require(emptied.length < nLive || survivors.head(1).nonEmpty,
-            s"ivfPqPurgeAtRest: purging $dir would empty the entire " +
-              "codes table — drop the index directory or re-ingest " +
-              "instead of serving an unreadable empty store")
-          val root = new org.apache.hadoop.fs.Path(tp("codes"))
-          val cfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          emptied.foreach { c =>
-            require(cfs.delete(new org.apache.hadoop.fs.Path(root, s"cell=$c"), true),
-              s"ivfPqPurgeAtRest: could not drop emptied partition cell=$c " +
-                "— aborting before the tombstone set is cleared")
-          }
+    val snap = graft.llm.AtRestStore.snapshot(spark, dir)
+    val tomb = snap.tombstones()
+    if (!tomb.isEmpty) {
+      val codes = spark.read.parquet(snap.path("codes"))
+      val touched = codes.join(broadcast(tomb.frame.select("id")), Seq("id"))
+        .select("cell").distinct().localCheckpoint()
+      val survivors = tomb.mask(codes.join(touched, Seq("cell"))) // affected partitions only
+        .select("id", "sub", "c", "cell")
+        .localCheckpoint() // materialize BEFORE overwriting the source
+      survivors.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell").parquet(snap.path("codes"))
+      // a cell whose EVERY member was tombstoned contributes no
+      // surviving rows, so dynamic overwrite never touches its
+      // partition — drop those directories explicitly. A failed
+      // delete would RESURRECT the tombstoned vectors after the
+      // tombstone set is cleared below, so every delete is checked.
+      val emptied = touched.join(survivors.select("cell").distinct(),
+          Seq("cell"), "left_anti")
+        .collect().map(_.getInt(0)) // ≤ #cells — model-sized
+      if (emptied.nonEmpty) {
+        // refuse to purge the index down to ZERO partitions: an
+        // empty codes dir has no schema to read and every later
+        // search would crash obscurely — forgetting the last
+        // vector means dropping or re-ingesting the index, say so
+        val nLive = spark.read.parquet(snap.path("codes"))
+          .select("cell").distinct().count()
+        require(emptied.length < nLive || survivors.head(1).nonEmpty,
+          s"ivfPqPurgeAtRest: purging $dir would empty the entire " +
+            "codes table — drop the index directory or re-ingest " +
+            "instead of serving an unreadable empty store")
+        val root = new org.apache.hadoop.fs.Path(snap.path("codes"))
+        val cfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        emptied.foreach { c =>
+          require(cfs.delete(new org.apache.hadoop.fs.Path(root, s"cell=$c"), true),
+            s"ivfPqPurgeAtRest: could not drop emptied partition cell=$c " +
+              "— aborting before the tombstone set is cleared")
         }
       }
-      graft.llm.AtRestStore.tombstoneClear(spark, dir)
+      Materialize.release(touched)
+      Materialize.release(survivors)
     }
+    graft.llm.AtRestStore.tombstoneClear(spark, dir)
   }
 
   /** Contrastive triplet mining — per anchor vector, the HARDEST

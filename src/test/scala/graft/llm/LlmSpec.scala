@@ -1047,30 +1047,82 @@ class LlmSpec extends SparkSpec {
     Retrieval.bm25IngestAtRest(docs.filter($"doc_id" < 30), "doc_id", "text",
       dir, nBuckets = 4)
     Retrieval.bm25AppendAtRest(docs.filter($"doc_id" >= 30), "doc_id", "text", dir)
-    Retrieval.bm25DeleteAtRest(Seq(2L, 31L).toDF("doc_id"), "doc_id", dir)
     val batch = Seq((0L, "spark"), (0L, "w3"), (1L, "scan"), (1L, "w4"))
       .toDF("qid", "term")
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+    def jobsOf[T](body: => T): (T, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
       }
-    }
-    org.apache.spark.graft.ListenerBus.drain(sc)
-    sc.addSparkListener(counter)
-    val got = try {
-      val r = Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 10).collect()
       org.apache.spark.graft.ListenerBus.drain(sc)
-      r
-    } finally sc.removeSparkListener(counter)
-    assert(jobs.get <= 11, s"probe ran ${jobs.get} Spark jobs")
+      sc.addSparkListener(counter)
+      try {
+        val r = body
+        org.apache.spark.graft.ListenerBus.drain(sc)
+        (r, jobs.get)
+      } finally sc.removeSparkListener(counter)
+    }
+    // delete and compact run in every index update; the bounds are
+    // their counts before the takedown protocol moved into AtRestStore
+    val (_, deleteJobs) = jobsOf(
+      Retrieval.bm25DeleteAtRest(Seq(2L, 31L).toDF("doc_id"), "doc_id", dir))
+    assert(deleteJobs <= 5, s"delete ran $deleteJobs Spark jobs")
+    val (got, probeJobs) = jobsOf(
+      Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 10).collect())
+    assert(probeJobs <= 11, s"probe ran $probeJobs Spark jobs")
     val want = Retrieval.bm25TopKBatch(docs.filter(!$"doc_id".isin(2L, 31L)),
       "doc_id", "text", batch, k = 10).collect()
     def byRank(rs: Array[org.apache.spark.sql.Row]) =
       rs.sortBy(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"))).toSeq
     assert(got.length == 20 && byRank(got) == byRank(want))
+    val (_, compactJobs) = jobsOf(Retrieval.bm25CompactAtRest(spark, dir))
+    assert(compactJobs <= 11, s"compact ran $compactJobs Spark jobs")
+    assert(byRank(Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 10).collect())
+      == byRank(want), "compaction changed the probe result")
+  }
+
+  test("takedown faces leave no pinned RDD: ingest, delete and " +
+    "compact/purge of the BM25, LSH, winnowing and IVF-PQ stores") {
+    val docs = (0L until 24L).map { i =>
+      (i, s"a shared passage about raster tiles and overview pyramids " +
+        s"number ${i % 4} with tail words ${i % 3} and a closing remark")
+    }.toDF("doc_id", "text")
+    val del = Seq(3L, 7L, 11L).toDF("doc_id")
+    val emb = (0L until 24L).map { i =>
+      (i, Array.tabulate(64)(d =>
+        ((i % 4) * 0.25 + (if (d % 4 == i % 4) 1.0 else 0.0) + d * 0.001).toFloat))
+    }.toDF("vec_id", "embedding")
+    val stores: Seq[(String, Seq[(String, String => Unit)])] = Seq(
+      "bm25" -> Seq(
+        "ingest" -> (d => Retrieval.bm25IngestAtRest(docs, "doc_id", "text", d)),
+        "delete" -> (d => Retrieval.bm25DeleteAtRest(del, "doc_id", d)),
+        "compact" -> (d => Retrieval.bm25CompactAtRest(spark, d))),
+      "lsh" -> Seq(
+        "ingest" -> (d => Dedup.lshIngestAtRest(docs, "doc_id", "text", d)),
+        "delete" -> (d => Dedup.lshDeleteAtRest(del, "doc_id", d)),
+        "compact" -> (d => Dedup.lshCompactAtRest(spark, d))),
+      "winnow" -> Seq(
+        "ingest" -> (d => Dedup.winnowIngestAtRest(docs, "doc_id", "text", d)),
+        "delete" -> (d => Dedup.winnowDeleteAtRest(del, "doc_id", d)),
+        "purge" -> (d => Dedup.winnowPurgeAtRest(spark, d))),
+      "ivfPq" -> Seq(
+        "ingest" -> (d => Similarity.ivfPqIngest(emb, d)),
+        "delete" -> (d => Similarity.ivfPqDeleteAtRest(
+          del.select($"doc_id".as("vec_id")), d)),
+        "purge" -> (d => Similarity.ivfPqPurgeAtRest(spark, d))))
+    for ((store, faces) <- stores) {
+      val dir = java.nio.file.Files.createTempDirectory(s"leak_$store").toString
+      for ((face, run) <- faces) {
+        val before = graft.core.Materialize.liveIds(spark)
+        run(dir)
+        val left = graft.core.Materialize.liveIds(spark) -- before
+        assert(left.isEmpty, s"$store $face left pinned RDDs $left")
+      }
+    }
   }
 
   test("bm25ProbeAtRest fails loud on an initialized store before its first batch") {
