@@ -4,11 +4,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Benchmark main: one warmup + `SPARK_GRAFT_BENCH_ITERS` (default 3)
-  * timed runs per query (min-of-5 when the query is sub-second —
-  * extra runs are cheap there and one-sided outliers dominate the
-  * small denominators; never fewer than 2 timed runs even under
-  * budget pressure), MINIMUM reported. The JSON line is emitted
+/** Benchmark main: one warmup + two timed runs per query, MINIMUM
+  * reported (two is the cheapest count where a one-sided burst must
+  * hit twice in a row to survive into the record). The JSON line is emitted
   * twice — once right after measurement (timeout insurance) and once
   * as the very last stdout line after spark.stop() (tail-scrape
   * insurance) — and also written to `bench_last.json` so a truncated
@@ -45,17 +43,16 @@ object Bench {
     // half mix 4-thread (builder local passes) and 32-thread (driver
     // rounds) numbers — see BASELINE.md's round-10 re-anchor note.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    // Wall-clock budget for the whole measurement phase (seconds).
-    // The round-8 driver run produced its full JSON line yet ended
-    // rc 124: the REST stub's non-daemon HTTP dispatcher kept the JVM
-    // alive until the harness timeout (fixed at the stub + sys.exit
-    // below). The budget is the second line of defense as the query
-    // count grows: it degrades ITERATIONS, never coverage — when the
-    // remaining per-query allowance shrinks, late queries drop from
-    // warmup+3(+pad-to-5) to warmup+2, then warmup+1, so every query
-    // still gets at least one warm timed run and the sweep lands
-    // well inside any plausible harness limit.
+    // Timed runs per query after the warmup. A constant: on a full
+    // suite the budget never afforded more (every r18/r19 record shows
+    // warmup + 2 runs per query, or a retry multiple of that).
+    val iters = 2
+    // Wall-clock budget (seconds) that gates the post-pass machinery
+    // (canary remediation re-run, dump slice). The round-8 driver run
+    // produced its full JSON line yet ended rc 124: the REST stub's
+    // non-daemon HTTP dispatcher kept the JVM alive until the harness
+    // timeout (fixed at the stub + sys.exit below); the budget keeps
+    // the optional passes inside any plausible harness limit.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "360").toDouble
     val wallT0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - wallT0) / 1e9
@@ -157,37 +154,6 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
     var queriesDone = 0
 
-    // Per-query run allowance from the remaining budget: seconds left
-    // per remaining query decides the tier. >2.5 s/query affords the
-    // full warmup+3+pad-to-5 protocol; the floor is warmup+2 —
-    // NEVER warmup+1. Round-12 lesson: the sweep ran the budget to
-    // the wire (wall 358.8 s / 360), late-alphabet queries dropped to
-    // a single timed run, and min-of-1 made one noisy run the
-    // round's recorded number (the q127/q164 >2× "spikes" carried
-    // gc_ms=0 — not memory pressure, just an unabsorbed outlier).
-    // Two timed runs is the cheapest configuration where a one-sided
-    // burst must hit twice in a row to survive into the record.
-    def timedRunsAllowed(): Int = {
-      val remQ = math.max(names.size - queriesDone, 1)
-      // Reserve ~18% of the budget for the post-pass machinery (canary
-      // remediation + the two deferred-retry waves). Round-15 lesson:
-      // the main pass was allowed to spend up to the full budget, so
-      // the `elapsed() < budgetSec*1.1` gates on the retry waves were
-      // already exhausted exactly where the spikes clustered — 8 of
-      // the 11 >2×-floor outliers in BENCH_r15 were retry-eligible yet
-      // never re-timed. Degrading late-query ITERATIONS slightly
-      // earlier is the cheaper trade: min-of-2 with a working retry
-      // wave beats min-of-5 with no retry safety net.
-      val perQ = (budgetSec * 0.82 - elapsed()) / remQ
-      if (perQ > 2.5) iters.max(2)        // full protocol, padding allowed
-      // under budget pressure: exactly two timed runs regardless of
-      // the requested iters (round-13 advice — the former middle tier
-      // collapsed to the full tier at the default iters=3, and
-      // iters.min(2).max(2) is just the constant 2 anyway). Two runs
-      // also disables padding via the `allowed >= iters` gate below.
-      else 2
-    }
-
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val runsByQuery = scala.collection.mutable.LinkedHashMap[String, Int]()
     val loadByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -201,19 +167,12 @@ object Bench {
 
     def timeQuery(name: String): Double = {
       val fn = SparkEntry.queries(name)
-      val allowed = timedRunsAllowed()
       heapPools.foreach(_.resetPeakUsage())
       val gc0 = gcNowMs()
       var runs = 0
       try {
         runOnce(fn); runs += 1 // warmup: JIT + codegen + file-listing caches
-        var times = (1 to allowed).map { _ => runs += 1; runOnce(fn) }
-        // sub-second queries get min-of-5: cheap to re-run, and at
-        // that scale a single one-sided multi-second outlier (GC,
-        // co-tenant) can otherwise double or triple a recorded min —
-        // but only while the budget affords the full protocol
-        if (allowed >= iters && times.min < 1.0 && times.size < 5)
-          times = times ++ (times.size until 5).map { _ => runs += 1; runOnce(fn) }
+        val times = (1 to iters).map { _ => runs += 1; runOnce(fn) }
         timesByQuery(name) =
           timesByQuery.getOrElse(name, Vector.empty) ++ times
         times.min // min — see scaladoc
@@ -229,7 +188,7 @@ object Bench {
         heapMbByQuery(name) =
           heapPools.map(p => math.max(p.getPeakUsage.getUsed, 0L)).sum >> 20
         // adjudication telemetry: how many total runs produced this
-        // record (a min-of-2 row is more outlier-prone than min-of-5)
+        // record (deferred retries add warmup + 2 each)
         // and the 1-minute system load when it finished (co-tenant
         // CPU shows here; this JVM alone at local[32] contributes
         // up to ~32)

@@ -13,14 +13,16 @@ import graft.operators.{EventQueries, LlmQueries, PlannerQueries, Relational, Ra
   *    selector, LOS (incl. P.526 knife-edge diffraction q82 and
   *    Okumura-Hata loss q87), viewshed (sweep + exact + sector crops,
   *    single/multi-observer/3×3 grid fan-out q83), GeoTIFF
-  *    round-trip, warp, rasterize, Horn slope stencil q97 + hillshade q101 + TRI/TPI/roughness q115, observers-as-table viewshed grid q102, REST path-loss backend vs in-process stub q104, catalog-routed spherical-aeqd geographic lifecycle q105, GPKG tile-container read q106, WMS remote-raster read vs in-process TMS stub q131, binary tile payloads
+  *    round-trip, warp, rasterize, Horn slope stencil q97 + hillshade q101 + TRI/TPI/roughness q115, observers-as-table viewshed grid q102, REST path-loss backend vs in-process stub q104, catalog-routed spherical-aeqd geographic lifecycle q105, GPKG tile-container read q106, WMS remote-raster read vs in-process TMS stub q131, binary tile payloads,
+  *    tile scan q216, sharded COG export q232/q243 + verify q244,
+  *    grid export q245, viewshed r2 q246
   *    (RasterQueries)
-  *  - q42–q52, q64, q69, q70, q75–q77, q79, q84–q86, q88–q91, q93–q96, q98–q100, q103, q107–q114, q116–q130
-  *    LLM-pipeline:
+  *  - q42–q52, q64, q69, q70, q75–q77, q79, q84–q86, q88–q91, q93–q96, q98–q100, q103, q107–q114, q116–q130,
+  *    q132–q162, q165, q166, q168–q215, q217–q231 LLM-pipeline:
   *    text analysis + repetition + quality verdict, dedup (exact/
   *    prefix/minhash/simhash/ngram/embedding + cluster closure), ANN
-  *    (brute/LSH/IVF, single-query and batched many-query forms,
-  *    IVF at-rest partition pruning q103),
+  *    (brute/LSH/IVF, one batched many-query form each — a single
+  *    query is a one-row batch; IVF at-rest partition pruning q103),
   *    multimodal, deterministic sampling, benchmark decontamination
   *    q89, PII scrub q90, per-source mixing table q91, int8
   *    embedding quantization q93, substring-dup stats q94, sequence
@@ -58,7 +60,20 @@ import graft.operators.{EventQueries, LlmQueries, PlannerQueries, Relational, Ra
   *    classifier calibration buckets q159, chunk-stitch boundary
   *    reconstruction q160, quality-canonical dedup selection q161,
   *    Hamming-banded binary near-dup q162, distribution-drift PSI
-  *    audit q165, encoding-health audit q166, tokenizer fertility q168, sorted-neighborhood pairs q169, edit-distance verified pairs q170, dedup family-overlap matrix q171, curation survival funnel q172, salted skew join/agg q173, exact-substring dup spans q174, batched BM25 q175, hybrid RRF fusion q176, directional containment pairs q177, BPE merge-table trainer q178, lang-ID confusion matrix q179, ANN nDCG audit q180, RAG chunk spans q181, bottom-k quantile sketch q182, boilerplate strip q183
+  *    audit q165, encoding-health audit q166, tokenizer fertility q168, sorted-neighborhood pairs q169, edit-distance verified pairs q170, dedup family-overlap matrix q171, curation survival funnel q172, salted skew join/agg q173, exact-substring dup spans q174, batched BM25 q175, hybrid RRF fusion q176, directional containment pairs q177, BPE merge-table trainer q178, lang-ID confusion matrix q179, ANN nDCG audit q180, RAG chunk spans q181, bottom-k quantile sketch q182, boilerplate strip q183,
+  *    lexicon tagging q184/q185, Zipf fit q186, classifier kappa q187,
+  *    product quantization (encode q188, audit q189, ADC q190, IVF-PQ
+  *    q192, recall q193, residual q195, at-rest q196, append q201,
+  *    rotated q204), PMI collocations q191, kNN PageRank q194, BPE
+  *    sampled/encode/at-rest q197/q203/q223, LSH hot star q198,
+  *    Matryoshka q199, SQ8 q200, margin mining q202, JL distortion
+  *    q205, soft-dedup weights q206, farthest-first q207, at-rest LSH
+  *    q208–q210, IVF-PQ rebalance q211, stream dedup q212, viral
+  *    substrings q213/q215, giant cluster q214, at-rest BM25
+  *    q217/q218, weighted take q219, k-anonymity q220, trigram
+  *    backoff q221, CDC chunks q222/q226/q227, banding S-curve q224,
+  *    robust stats q225, LSH/IVF-PQ takedown q228/q229, at-rest
+  *    winnowing q230, stream BM25 q231
   *    (LlmQueries)
   *  - q233–q237 driver-side planning + sidecar sinks (PlannerQueries):
   *    file-list expansion q233, job fan-out/ordering/slice/cap q234,

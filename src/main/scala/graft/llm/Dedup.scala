@@ -1936,31 +1936,6 @@ object Dedup {
       .filter(col("n_docs") > 1)
   }
 
-  /** Lineage-truncation strategy for the iterative CC loops:
-    * executor-pinned `localCheckpoint` by default, RELIABLE
-    * `checkpoint()` into `dir` when given (survives executor loss —
-    * the dynamic-allocation / spot-instance posture at cluster scale),
-    * bound by [[Materialize.bindCheckpointDir]], which refuses to
-    * rebind a context already checkpointing elsewhere.
-    */
-  private def checkpointed(sample: DataFrame,
-                           dir: Option[String]): DataFrame => DataFrame =
-    dir match {
-      // LAZY on purpose: an eager checkpoint is one extra Spark job
-      // per call, and the CC loops checkpoint 2-3 frames per round.
-      // Every checkpointed frame here is materialized immediately
-      // afterwards anyway (the convergence probe or the next round's
-      // join), which caches the blocks then — same truncation, no
-      // dedicated job. Measured ~25% off q70's wall on shallow graphs.
-      // (The RELIABLE branch below stays eager: a lazy checkpoint()
-      // recomputes the plan a second time when the checkpoint files
-      // are written, since the RDD isn't persisted first.)
-      case None => _.localCheckpoint(eager = false)
-      case Some(d) =>
-        Materialize.bindCheckpointDir(sample.sparkSession.sparkContext, d)
-        _.checkpoint()
-    }
-
   /** Connected components over a near-dup pair graph — the closure of
     * the fuzzy-dedup pipeline: LSH emits PAIRS, but the removal
     * decision needs CLUSTERS (a∼b, b∼c ⇒ {a,b,c} keep one doc).
@@ -1975,10 +1950,9 @@ object Dedup {
     * shuffle-join + hash-aggregate per round, `localCheckpoint` per
     * round to truncate lineage, converges in O(graph diameter)
     * rounds. Near-dup graphs are dense clusters with tiny diameters
-    * (a few rounds); for adversarial long-chain graphs the
-    * large-star/small-star variant (O(log n) rounds) would replace
-    * the loop body — same per-round shuffle shape, so the 100 TB cost
-    * model is unchanged. The per-round `count` action is the
+    * (a few rounds); for long-chain graphs `compress = true` adds
+    * path compression — one more O(nodes) join per round, rounds drop
+    * to O(log diameter). The per-round `count` action is the
     * convergence check, standard for iterative Spark.
     *
     * Checkpointing: `localCheckpoint` (default) pins blocks to
@@ -2101,76 +2075,6 @@ object Dedup {
     if (it == 0) labels.count()
     edges.unpersist(blocking = false)
     labels.toDF("doc_id", "cluster_id")
-  }
-
-  /** Connected components by large-star/small-star alternation (the
-    * "Connected Components in MapReduce and Beyond" algorithm) —
-    * O(log n) rounds on ANY graph, vs [[connectedComponents]]'s
-    * O(diameter). Same output contract (nodes of `pairs` labeled by
-    * their component minimum); use this when the pair graph may
-    * contain long chains (transitive near-dup runs), the plain
-    * min-propagation when components are dense and shallow (the
-    * common LSH case — fewer rounds in practice there). Per round:
-    * two neighborhood aggregations + joins, edges localCheckpointed;
-    * converged when the edge set reaches its star fixpoint.
-    *
-    *  - large-star: every node u connects its LARGER neighbors to
-    *    m = min(Γ(u) ∪ {u}) — halves long tails without breaking
-    *    connectivity;
-    *  - small-star: every node c connects its smaller neighbors and
-    *    itself to their minimum — collapses toward the root.
-    */
-  def connectedComponentsAlternating(pairs: DataFrame, maxIter: Int = 30,
-                                     checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = checkpointed(pairs, checkpointDir)
-    def canon(df: DataFrame): DataFrame =
-      df.select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    var edges = ckpt(canon(pairs.select(col("id_a").cast("long").as("x"),
-      col("id_b").cast("long").as("y"))))
-    var it = 0
-    var done = edges.isEmpty
-    while (!done && it < maxIter) {
-      // large-star over both orientations
-      val nbrs = edges.select(col("u").as("c"), col("v").as("n"))
-        .unionByName(edges.select(col("v").as("c"), col("u").as("n")))
-      val lsMin = nbrs.groupBy("c").agg(min(col("n")).as("mn"))
-        .select(col("c"), least(col("mn"), col("c")).as("m"))
-      val ls = canon(nbrs.join(lsMin, "c")
-        .filter(col("n") > col("c"))
-        .select(col("n").as("x"), col("m").as("y")))
-      // small-star: center every node on its larger endpoint
-      val sNbrs = ls.select(col("v").as("c"), col("u").as("n")) // n < c by canon
-      val ssMin = sNbrs.groupBy("c").agg(min(col("n")).as("m"))
-      val next = ckpt(canon(
-        sNbrs.join(ssMin, "c").select(col("n").as("x"), col("m").as("y"))
-          .unionByName(ssMin.select(col("c").as("x"), col("m").as("y")))))
-      // Convergence in two tiers (round 13 — this check used to be
-      // TWO exceptAll set-differences per round, the per-round cost
-      // that made this algorithm lose every A/B): (1) a cheap
-      // order-free fingerprint of each edge set — count + XOR-fold
-      // of xxhash64 row hashes (XOR: order-free AND overflow-free
-      // under ANSI, and canon()'s distinct guarantees no
-      // self-cancelling duplicate rows) — ONE aggregation per side;
-      // only if the fingerprints MATCH, (2) the exact exceptAll
-      // confirmation runs, i.e. once at the true fixpoint instead of
-      // every round (a 64-bit collision making unequal sets
-      // fingerprint-equal is caught by the exact tier — the probe
-      // can only save work, never change the answer).
-      def fp(df: DataFrame) = df.agg(
-        count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      done = fp(next) == fp(edges) &&
-        next.exceptAll(edges).unionByName(edges.exceptAll(next)).isEmpty
-      edges = next
-      it += 1
-    }
-    require(done, s"connectedComponentsAlternating did not converge in $maxIter rounds")
-    // fixpoint is a star forest rooted at component minima
-    val nonRoots = edges.select(col("v").as("doc_id"), col("u").as("cluster_id"))
-    val roots = edges.select(col("u")).distinct()
-      .join(edges.select(col("v").as("u")).distinct(), Seq("u"), "left_anti")
-      .select(col("u").as("doc_id"), col("u").as("cluster_id"))
-    nonRoots.unionByName(roots)
   }
 
   /** n-gram Jaccard near-dup with prefix blocking: candidates share a

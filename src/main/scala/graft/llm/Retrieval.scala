@@ -127,15 +127,26 @@ object Retrieval {
       .select("id_a", "id_b", "cosine")
   }
 
-  /** BM25-style top-k: score every doc containing at least one query
-    * term, return the k best (score desc, id asc — total order).
-    * `k1`/`b` are the standard BM25 knobs; both appear in the score
-    * as plain literal arithmetic so an oracle reproduces bit-for-bit.
+  /** BM25-style top-k — queries as DATA (`qid`, `term` rows): score
+    * every doc containing at least one of a query's terms and keep its
+    * k best (score desc, id asc — a total order). A retrieval pipeline
+    * issues probes by the thousand, and the plan must not grow a
+    * branch per query; a single query is a one-qid batch. One corpus
+    * tf pass; the deduplicated query-term table ([[localQueryTerms]])
+    * rides a broadcast hash join to it (only matching term rows survive
+    * the probe), document frequency is computed once per DISTINCT term
+    * (query-independent, the terms a literal filter) and rejoined, and
+    * each query's candidates rank inside a window keyed on the query
+    * id — parallelism scales with the batch. `k1`/`b` are the standard
+    * BM25 knobs; both appear in the score as plain literal arithmetic,
+    * and per-term contributions are floored to 2²⁰ fixed point and
+    * summed as integers, so any engine replays the ranking
+    * bit-for-bit.
     */
-  def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               queryTerms: Seq[String], k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(queryTerms.nonEmpty, "queryTerms must be non-empty")
+  def bm25TopKBatch(docs: DataFrame, idCol: String, textCol: String,
+                    queries: DataFrame, k: Int,
+                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
     // the tf table feeds THREE consumers (doc lengths, query-term dfs,
     // the scoring join), so the plan scans the corpus once per branch.
     // Deliberately NOT cached: materializing the exploded token rows
@@ -147,49 +158,9 @@ object Retrieval {
     val tf = termFrequencies(docs, idCol, textCol)
     val dl = tf.groupBy("id").agg(sum("tf").as("dl"))
     val g = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("tot_tokens"))
-    val dft = tf.filter(col("s").isin(queryTerms: _*))
-      .groupBy("s").agg(count(lit(1)).as("df"))
-    val denom = col("tf") + lit(k1) *
-      (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))
-    val contrib = col("idf") * (col("tf") * (lit(k1) + lit(1.0))) / denom
-    tf.filter(col("s").isin(queryTerms: _*))
-      .join(dl, "id")
-      .join(broadcast(dft), "s")
-      .crossJoin(broadcast(g))
-      .withColumn("avgdl", col("tot_tokens").cast("double") / col("n_docs"))
-      .withColumn("idf",
-        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-      .withColumn("fp", floor(contrib * lit(1048576.0)).cast("long"))
-      .groupBy("id")
-      .agg(sum("fp").as("score_fp"), count(lit(1)).as("n_terms_hit"))
-      .orderBy(col("score_fp").desc, col("id"))
-      .limit(k)
-      .select(col("id"), (col("score_fp").cast("double") / lit(1048576.0)).as("score"),
-        col("n_terms_hit"))
-  }
-
-  /** Batched BM25 top-k — queries as DATA (`qid`, `term` rows), the
-    * scale twin of [[bm25TopK]] the way `bruteTopKBatch` twins
-    * `bruteTopK`: a retrieval pipeline issues probes by the thousand,
-    * and the plan must not grow a branch per query. One corpus tf
-    * pass; the query-term table rides a broadcast hash join to it
-    * (only matching term rows survive the probe), document frequency
-    * is computed once per DISTINCT term (query-independent) and
-    * rejoined, and each query's candidates rank inside a window keyed
-    * on the query id — parallelism scales with the batch. Identical
-    * fixed-point score arithmetic to [[bm25TopK]] (floor-2²⁰ per-term
-    * contributions, summed as integers), so any engine replays the
-    * ranking bit-for-bit.
-    */
-  def bm25TopKBatch(docs: DataFrame, idCol: String, textCol: String,
-                    queries: DataFrame, k: Int,
-                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val tf = termFrequencies(docs, idCol, textCol)
-    val dl = tf.groupBy("id").agg(sum("tf").as("dl"))
-    val g = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("tot_tokens"))
-    val qterms = queries.select(col("qid"), col("term").as("s")).distinct()
-    val dft = tf.join(broadcast(qterms.select("s").distinct()), "s")
+    val qterms = localQueryTerms(queries)
+    val terms = qterms.collect().map(_.getString(1)).distinct.toSeq
+    val dft = tf.filter(col("s").isin(terms: _*))
       .groupBy("s").agg(count(lit(1)).as("df"))
     val denom = col("tf") + lit(k1) *
       (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))
@@ -210,6 +181,16 @@ object Retrieval {
       .select(col("qid"), col("id"),
         (col("score_fp").cast("double") / lit(1048576.0)).as("score"),
         col("n_terms_hit"), col("rank"))
+  }
+
+  /** A BM25 query batch's distinct (qid, s) rows as a local table. The
+    * batch is request-sized and broadcast to the scan anyway, so it is
+    * collected once: the query side then runs no shuffle stage (a
+    * distributed distinct would cost two jobs per call).
+    */
+  private def localQueryTerms(queries: DataFrame): DataFrame = {
+    val q = queries.select(col("qid"), col("term").as("s"))
+    queries.sparkSession.createDataFrame(q.collect().distinct.toSeq.asJava, q.schema)
   }
 
   /** Reciprocal-rank fusion — the standard hybrid-retrieval merge
@@ -571,8 +552,7 @@ object Retrieval {
       .collect()
     val nDocs = total(stats, 0) - tomb.rows.length
     val totTokens = total(stats, 1) - total(tomb.rows, 1)
-    val qIn = queries.select(col("qid"), col("term").as("s"))
-    val qt = spark.createDataFrame(qIn.collect().distinct.toSeq.asJava, qIn.schema)
+    val qt = localQueryTerms(queries)
     // STATIC partition pruning: the batch's terms and their bucket set
     // are pushed as LITERAL filters — planning-time pruning, visible as
     // `pbucket IN (…)` in PartitionFilters (a term's postings all sit

@@ -41,23 +41,6 @@ object Similarity {
   def cosineCol(a: Column, b: Column): Column =
     dotCol(a, b) / (normCol(a) * normCol(b))
 
-  /** Exact brute-force top-k cosine neighbors of one query vector.
-    * O(N) scan + top-k — correct at any scale, linear cost; the
-    * baseline the bucketed variant is measured against.
-    */
-  def bruteTopK(emb: DataFrame, queryId: Long, k: Int,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val q = emb.filter(col(idCol) === queryId)
-      .select(col(vecCol).as("qvec"))
-    emb.filter(col(idCol) =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", cosineCol(col(vecCol), col("qvec")))
-      .select(col(idCol), col("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Batched exact top-k: every query row (`qidCol`, `qvecCol`) ranked
     * against the corpus in ONE plan — a training-data pipeline issues
     * probes by the million, not one at a time. The query batch rides a
@@ -67,7 +50,8 @@ object Similarity {
     * rows partitioned BY QUERY — parallelism scales with the batch.
     * The broadcast bounds the batch to driver-plannable size; probe
     * sets beyond that belong in [[ivfTopKBatch]], which routes by
-    * cluster key instead of broadcasting.
+    * cluster key instead of broadcasting. A single query is a one-row
+    * batch.
     */
   def bruteTopKBatch(emb: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
@@ -93,7 +77,7 @@ object Similarity {
     * itself (`size(vec)`), so short/long vectors project correctly
     * instead of null-padding to a fixed width (which would NULL the
     * fold and silently send every vector to bucket 0 — i.e. degrade
-    * lshTopK/cosineNearDupPairs to all-pairs with no error).
+    * lshTopKBatch/cosineNearDupPairs to all-pairs with no error).
     */
   def bucketCol(vec: Column, planes: Int): Column =
     call_function("vec_lsh_bucket", vec, lit(planes))
@@ -110,25 +94,6 @@ object Similarity {
       when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** ANN top-k: candidates restricted to the query's hyperplane
-    * bucket, then exact cosine rank. At scale the bucket column is a
-    * partition/cluster key, so a query touches 1/2^planes of the data;
-    * recall is tunable via `planes` (fewer planes → bigger buckets).
-    */
-  def lshTopK(emb: DataFrame, queryId: Long, k: Int, planes: Int = 8,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val bucketed = emb.withColumn("bucket", bucketCol(col(vecCol), planes))
-    val q = bucketed.filter(col(idCol) === queryId)
-      .select(col(vecCol).as("qvec"), col("bucket").as("qbucket"))
-    bucketed.join(broadcast(q), col("bucket") === col("qbucket"))
-      .filter(col(idCol) =!= queryId)
-      .withColumn("cosine", cosineCol(col(vecCol), col("qvec")))
-      .select(col(idCol), col("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Batched LSH ANN — the hyperplane twin of [[ivfTopKBatch]]:
     * queries are DATA (never broadcast or collected); both sides
     * compute the same deterministic bucket expression and candidates
@@ -136,7 +101,8 @@ object Similarity {
     * 1/2^planes of the corpus and the shuffle keys on the bucket —
     * the partitioning the corpus would already be clustered by at
     * rest. Exact cosine rank per query inside a (query id)-keyed
-    * window. Recall semantics identical to [[lshTopK]].
+    * window. Recall is tunable via `planes` (fewer planes → bigger
+    * buckets); [[annRecall]] measures it against [[bruteTopKBatch]].
     */
   def lshTopKBatch(emb: DataFrame, queries: DataFrame, k: Int, planes: Int = 8,
                    idCol: String = "vec_id", vecCol: String = "embedding",
@@ -289,18 +255,10 @@ object Similarity {
       .select("qid", "vec_id")
     val (pModel, pAssign) = pqCore(emb, m, codeK, rounds, "vec_id", "embedding")
     val (cModel, cAssign) = pqCore(emb, 1, coarseK, rounds, "vec_id", "embedding")
-    val lut = pqLut(queries, pModel, m)
-    val wA = Window.partitionBy("qid").orderBy(col("adc_fp"), col("id"))
-    val pq = pAssign.select(col("id"), col("sub"), col("c"))
-      .join(broadcast(lut), Seq("sub", "c"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("d_fp")).as("adc_fp"))
-      .withColumn("rank", row_number().over(wA))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("id").as("vec_id"), lit(1L).as("hit_pq"))
-    val ivf = ivfAdcFrom(cModel, cAssign, pModel, pAssign, queries,
-        k, nprobe, m)
+    val pq = pqAdcFrom(pModel, pAssign, queries, k, m)
+      .select(col("qid"), col("vec_id"), lit(1L).as("hit_pq"))
+    val ivf = ivfAdcSearch(ivfCodes(cAssign, pAssign),
+        ivfRoutes(queries, cModel, nprobe), pqLut(queries, pModel, m), k, m)
       .select(col("qid"), col("vec_id"), lit(1L).as("hit_ivf"))
     truth.join(pq, Seq("qid", "vec_id"), "left")
       .join(ivf, Seq("qid", "vec_id"), "left")
@@ -602,32 +560,6 @@ object Similarity {
     model
   }
 
-  /** IVF ANN top-k: rank centroids by distance to the query
-    * (driver-side, k rows), search exactly within the `nprobe`
-    * nearest clusters. At scale the assignment column is the
-    * partition/cluster key, so a query touches nprobe/k of the data;
-    * `nprobe = k` degrades gracefully to exact brute force.
-    */
-  def ivfTopK(emb: DataFrame, model: IvfModel, queryId: Long, topK: Int,
-              nprobe: Int, idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val q = emb.filter(col(idCol) === queryId).select(col(vecCol)).head()
-      .getSeq[Float](0).map(_.toDouble).toArray
-    val probeClusters = model.centroids.zipWithIndex
-      .sortBy { case (c, i) =>
-        (c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum, i) }
-      .take(nprobe).map(_._2)
-    val qdf = emb.filter(col(idCol) === queryId).select(col(vecCol).as("qvec"))
-    emb.filter(col(idCol) =!= queryId)
-      .filter(assignCol(col(vecCol), model).isin(probeClusters: _*))
-      .crossJoin(broadcast(qdf))
-      .withColumn("cosine", cosineCol(col(vecCol), col("qvec")))
-      .select(col(idCol), col("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(topK)
-  }
-
   /** The query's `nprobe` nearest centroid indices as an array column:
     * (distance, index) structs sorted ascending — `array_sort` on
     * structs orders by distance then index, the same tie-break as
@@ -904,17 +836,7 @@ object Similarity {
       .distinct()
     // kNN graphs chain through embedding space (12 rounds of
     // compressed min-propagation measured at sf0.1), so turn on path
-    // compression: rounds drop to O(log diameter). Routing through
-    // [[Dedup.connectedComponentsAlternating]] was A/B'd TWICE: with
-    // its original exceptAll-per-round convergence check it lost 2×;
-    // after that check became fingerprint-probe + one final exact
-    // confirm (round 13) it STILL lost — back-to-back same-box
-    // minima at sf0.1, q123 route: min-prop 3.440/3.535 s vs
-    // alternating 3.654/4.451 s (min of 4 and of 2). At this edge
-    // volume (O(n·k) kNN edges) the alternating form's two star
-    // phases per round — four shuffles — outweigh its fewer rounds;
-    // revisit only if tau drops enough to chain components an order
-    // of magnitude deeper.
+    // compression: rounds drop to O(log diameter).
     val labels = Dedup.connectedComponents(edges, compress = true)
       .withColumnRenamed("doc_id", "vec_id")
     // cluster sizes via groupBy + join-back, not a partition-only
@@ -1165,18 +1087,33 @@ object Similarity {
                 vecCol: String = "embedding"): DataFrame = {
     require(topK > 0, s"topK must be positive, got $topK")
     val (model, assigned) = pqCore(emb, m, k, rounds, idCol, vecCol)
-    val lut = pqLut(queries, model, m)
-    val w = Window.partitionBy("qid").orderBy(col("adc_fp"), col("id"))
-    assigned.select(col("id"), col("sub"), col("c"))
-      .join(broadcast(lut), Seq("sub", "c"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy(col("qid"), col("id"))
+    pqAdcFrom(model, assigned, queries, topK, m)
+  }
+
+  /** The flat ADC scan over TRAINED codes: every code row looks up the
+    * broadcast query LUT on (sub, c), self matches drop, then the
+    * [[adcRank]] tail. Shared by [[pqAdcTopK]] and [[pqRecall]], which
+    * trains once for both of its searchers.
+    */
+  private def pqAdcFrom(model: DataFrame, assigned: DataFrame,
+                        queries: DataFrame, topK: Int, m: Int): DataFrame =
+    adcRank(assigned.select(col("id"), col("sub"), col("c"))
+      .join(broadcast(pqLut(queries, model, m)), Seq("sub", "c"))
+      .filter(col("id") =!= col("qid")), topK)
+
+  /** The ADC rank tail of every PQ searcher: per (qid, id) the exact
+    * integer sum of the looked-up fixed-point distances `d_fp` (each
+    * candidate contributes its m code rows), ranked per query by
+    * (adc_fp, id) — ties break on id — and cut at `topK`.
+    */
+  private def adcRank(scored: DataFrame, topK: Int): DataFrame =
+    scored.groupBy(col("qid"), col("id"))
       .agg(sum(col("d_fp")).as("adc_fp"))
-      .withColumn("rank", row_number().over(w))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("qid").orderBy(col("adc_fp"), col("id"))))
       .filter(col("rank") <= topK)
       .select(col("qid"), col("id").as("vec_id"), col("adc_fp"),
         (col("adc_fp").cast("double") / 1048576.0).as("adc"), col("rank"))
-  }
 
   /** Query-side ADC lookup table against a trained [[pqCore]] model:
     * (qid, sub, c, d_fp) — the exact fixed-point distance of every
@@ -1245,10 +1182,12 @@ object Similarity {
     * picks the `nprobe` cells with the smallest exact fixed-point
     * centroid distances (ties to the lower cell id).
     *
-    * Scale shape: both models are broadcast (model-sized); the cell
-    * table joins the broadcast route list, so the candidate frame IS
-    * the pruned corpus fraction — the ADC join and the (qid, id)
-    * aggregation run over candidates only, never the full corpus.
+    * Scale shape: both models are broadcast (model-sized); the code
+    * rows keyed by cell (the table [[ivfPqIngest]] writes) join the
+    * broadcast route list, so the candidate frame IS the pruned corpus
+    * fraction — the ADC join and the (qid, id) aggregation run over
+    * candidates only, never the full corpus. The search body is
+    * [[ivfAdcSearch]], shared with [[ivfPqTopKAtRest]].
     * `n_cand` rides the output so recall/cost trades are auditable
     * per query.
     */
@@ -1261,7 +1200,8 @@ object Similarity {
       s"need 0 < nprobe <= coarseK, got nprobe=$nprobe coarseK=$coarseK")
     val (cModel, cAssign) = pqCore(emb, 1, coarseK, rounds, idCol, vecCol)
     val (pModel, pAssign) = pqCore(emb, m, k, rounds, idCol, vecCol)
-    ivfAdcFrom(cModel, cAssign, pModel, pAssign, queries, topK, nprobe, m)
+    ivfAdcSearch(ivfCodes(cAssign, pAssign), ivfRoutes(queries, cModel, nprobe),
+      pqLut(queries, pModel, m), topK, m)
   }
 
   /** RESIDUAL IVF-PQ top-k search — the full FAISS `IVFx,PQy`
@@ -1326,17 +1266,13 @@ object Similarity {
     // two-column projection trades one corpus-sized materialization
     // (MEMORY_AND_DISK, ~0.5 KB/row) for a whole corpus join pass —
     // paired A/Bs kept it (see OPTIMIZATION_r18.md). The same pruned
-    // checkpoint was A/B'd at ivfAdcFrom.cells and pqRecall's code rows
+    // checkpoint was A/B'd at ivfPqTopK's cells and pqRecall's code rows
     // (two cheap consumers each) and was a WASH — only this path, with
     // three coarse consumers, clears the materialization cost.
     val (pModel, pAssign) = pqCore(
       resid.localCheckpoint(), m, k, rounds, "vec_id", "embedding")
     // routing on raw-vector coarse distances (same as ivfPqTopK)
-    val qCellDist = pqLut(queries, cModel, 1)
-      .select(col("qid"), col("c").as("cell"), col("d_fp").as("cd_fp"))
-    val wR = Window.partitionBy("qid").orderBy(col("cd_fp"), col("cell"))
-    val routes = qCellDist.withColumn("r", row_number().over(wR))
-      .filter(col("r") <= nprobe).select("qid", "cell")
+    val routes = ivfRoutes(queries, cModel, nprobe)
     // per-(query, probed cell) residual LUT
     val qResid = queries.select(col("qid").cast("long").as("qid"), col("qvec"))
       .join(broadcast(routes), Seq("qid"))
@@ -1358,60 +1294,51 @@ object Similarity {
         posexplode(transform(col("cents"),
           cv => floor(pqSqDist(col("sv"), cv) * FP).cast("long")))
           .as(Seq("c", "d_fp")))
-    val cand = cells.join(broadcast(routes), Seq("cell"))
-      .filter(col("id") =!= col("qid"))
-      .select("qid", "id", "cell")
-    val nCand = cand.groupBy("qid").agg(count(lit(1)).as("n_cand"))
-    val w = Window.partitionBy("qid").orderBy(col("adc_fp"), col("id"))
-    pAssign.select(col("id"), col("sub"), col("c"))
-      .join(cand, Seq("id"))
-      .join(broadcast(lutKeyed), Seq("qid", "cell", "sub", "c"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("d_fp")).as("adc_fp"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .join(broadcast(nCand), Seq("qid"))
-      .select(col("qid"), col("id").as("vec_id"), col("adc_fp"),
-        (col("adc_fp").cast("double") / FP).as("adc"), col("rank"),
-        col("n_cand"))
+    ivfAdcSearch(pAssign.select("id", "sub", "c").join(cells, "id"),
+      routes, lutKeyed, topK, m)
   }
 
-  /** The IVF-ADC query path over ALREADY-TRAINED coarse and PQ
-    * models: routing, candidate pruning, in-list ADC, ranking.
-    * Factored so [[pqRecall]] can train each model ONCE and feed
-    * both searchers (identical results — training is deterministic —
-    * at two fewer Lloyd fits).
+  /** IVF-PQ routing: each query's `nprobe` nearest coarse cells
+    * (qid, cell) by exact fixed-point centroid distance, ties to the
+    * lower cell id. Model-sized (|queries|·nprobe rows), broadcast by
+    * [[ivfAdcSearch]].
     */
-  private def ivfAdcFrom(cModel: DataFrame, cAssign: DataFrame,
-                         pModel: DataFrame, pAssign: DataFrame,
-                         queries: DataFrame, topK: Int, nprobe: Int,
-                         m: Int): DataFrame = {
-    val FP = 1048576.0
-    val cells = cAssign.select(col("id"), col("c").as("cell"))
-    val qCellDist = pqLut(queries, cModel, 1)
+  private def ivfRoutes(queries: DataFrame, cModel: DataFrame,
+                        nprobe: Int): DataFrame =
+    pqLut(queries, cModel, 1)
       .select(col("qid"), col("c").as("cell"), col("d_fp").as("cd_fp"))
-    val wR = Window.partitionBy("qid").orderBy(col("cd_fp"), col("cell"))
-    val routes = qCellDist.withColumn("r", row_number().over(wR))
+      .withColumn("r", row_number().over(
+        Window.partitionBy("qid").orderBy(col("cd_fp"), col("cell"))))
       .filter(col("r") <= nprobe).select("qid", "cell")
-    // candidates = the probed fraction of the corpus, self excluded
-    val cand = cells.join(broadcast(routes), Seq("cell"))
+
+  /** The one IVF-ADC search body of [[ivfPqTopK]], [[ivfPqTopKAtRest]]
+    * and [[ivfPqResidualTopK]]: code rows (id, sub, c, cell) meet the
+    * broadcast route list on `cell` (at rest the partition column, so
+    * the scan is dynamically pruned to the probed cells), self matches
+    * drop, and each candidate's code rows look up the broadcast LUT on
+    * every LUT key — (qid, sub, c), plus `cell` for the residual
+    * per-cell tables — before the [[adcRank]] tail. Each candidate
+    * carries exactly m code rows, so count/m is the per-query census
+    * `n_cand` without a second (distinct) aggregation.
+    */
+  private def ivfAdcSearch(codes: DataFrame, routes: DataFrame,
+                           lut: DataFrame, topK: Int, m: Int): DataFrame = {
+    val candCodes = codes.join(broadcast(routes), Seq("cell"))
       .filter(col("id") =!= col("qid"))
-      .select("qid", "id")
-    val nCand = cand.groupBy("qid").agg(count(lit(1)).as("n_cand"))
-    val lut = pqLut(queries, pModel, m)
-    val w = Window.partitionBy("qid").orderBy(col("adc_fp"), col("id"))
-    pAssign.select(col("id"), col("sub"), col("c"))
-      .join(cand, Seq("id"))
-      .join(broadcast(lut), Seq("qid", "sub", "c"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("d_fp")).as("adc_fp"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    val nCand = candCodes.groupBy("qid")
+      .agg((count(lit(1)) / m).cast("long").as("n_cand"))
+    adcRank(candCodes.join(broadcast(lut), lut.columns.toSeq.filter(_ != "d_fp")),
+        topK)
       .join(broadcast(nCand), Seq("qid"))
-      .select(col("qid"), col("id").as("vec_id"), col("adc_fp"),
-        (col("adc_fp").cast("double") / FP).as("adc"), col("rank"),
-        col("n_cand"))
   }
+
+  /** IVF-PQ code rows (id, sub, c, cell): the fine codes keyed by their
+    * coarse cell — the table [[ivfPqIngest]] writes and the in-memory
+    * searchers scan.
+    */
+  private def ivfCodes(cAssign: DataFrame, pAssign: DataFrame): DataFrame =
+    pAssign.select("id", "sub", "c")
+      .join(cAssign.select(col("id"), col("c").as("cell")), "id")
 
   /** One-time IVF-PQ INGEST: train the coarse quantizer and the PQ
     * codebooks (the deterministic [[pqCore]] recipes [[ivfPqTopK]]
@@ -1440,8 +1367,7 @@ object Similarity {
     val snap = graft.llm.AtRestStore.snapshot(emb.sparkSession, dir)
     cModel.write.mode("overwrite").parquet(snap.path("coarse_model"))
     pModel.write.mode("overwrite").parquet(snap.path("pq_model"))
-    val cells = cAssign.select(col("id"), col("c").as("cell"))
-    pAssign.select("id", "sub", "c").join(cells, "id")
+    ivfCodes(cAssign, pAssign)
       .write.mode("overwrite").partitionBy("cell").parquet(snap.path("codes"))
   }
 
@@ -1759,16 +1685,15 @@ object Similarity {
     * cells — a query touches nprobe/coarseK of the index at rest,
     * never the full corpus. ADC scoring then joins the pruned code
     * rows map-side to the broadcast query LUT and reduces per
-    * (qid, id), exactly [[ivfPqTopKAtRest]]'s trained-in-memory twin
-    * [[ivfPqTopK]] — results are bit-equal (training is
-    * deterministic; parquet round-trips doubles exactly), so one
-    * oracle gates both.
+    * (qid, id) — the [[ivfAdcSearch]] body its trained-in-memory twin
+    * [[ivfPqTopK]] runs on the same code rows, so results are bit-equal
+    * (training is deterministic; parquet round-trips doubles exactly)
+    * and one oracle gates both.
     */
   def ivfPqTopKAtRest(spark: org.apache.spark.sql.SparkSession, dir: String,
                       queries: DataFrame, topK: Int = 5, nprobe: Int = 2,
                       m: Int = 4): DataFrame = {
     require(topK > 0 && nprobe > 0, s"need topK > 0, nprobe > 0; got $topK, $nprobe")
-    val FP = 1048576.0
     // ONE snapshot: models, codes and the mask set of one generation
     val snap = graft.llm.AtRestStore.snapshot(spark, dir)
     val cModel = spark.read.parquet(snap.path("coarse_model"))
@@ -1777,29 +1702,8 @@ object Similarity {
     // are invisible to searches until [[ivfPqPurgeAtRest]] rewrites
     // their partitions
     val codes = snap.tombstones().mask(spark.read.parquet(snap.path("codes")))
-    val qCellDist = pqLut(queries, cModel, 1)
-      .select(col("qid"), col("c").as("cell"), col("d_fp").as("cd_fp"))
-    val wR = Window.partitionBy("qid").orderBy(col("cd_fp"), col("cell"))
-    val routes = qCellDist.withColumn("r", row_number().over(wR))
-      .filter(col("r") <= nprobe).select("qid", "cell")
-    // route join on the partition column → DPP prunes unprobed cells
-    val candCodes = codes.join(broadcast(routes), Seq("cell"))
-      .filter(col("id") =!= col("qid"))
-    // each candidate id carries exactly m code rows — count/m is the
-    // candidate census without a second (distinct) aggregation
-    val nCand = candCodes.groupBy("qid")
-      .agg((count(lit(1)) / m).cast("long").as("n_cand"))
-    val lut = pqLut(queries, pModel, m)
-    val w = Window.partitionBy("qid").orderBy(col("adc_fp"), col("id"))
-    candCodes.join(broadcast(lut), Seq("qid", "sub", "c"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("d_fp")).as("adc_fp"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .join(broadcast(nCand), Seq("qid"))
-      .select(col("qid"), col("id").as("vec_id"), col("adc_fp"),
-        (col("adc_fp").cast("double") / FP).as("adc"), col("rank"),
-        col("n_cand"))
+    ivfAdcSearch(codes, ivfRoutes(queries, cModel, nprobe),
+      pqLut(queries, pModel, m), topK, m)
   }
 
   /** Logical DELETE from the at-rest IVF-PQ index — the vector

@@ -341,14 +341,15 @@ object LlmQueries {
   }
 
   /** q96 BM25-style lexical retrieval: top-10 docs for a 3-term query
-    * — the keyword complement of the embedding-ANN queries. Rational
-    * idf + fixed-point contribution sums keep every score bit-equal
-    * across engines (see Retrieval scaladoc); the oracle rebuilds the
+    * (qid 0 of the shared retrieval batch, run alone) — the keyword
+    * complement of the embedding-ANN queries. Rational idf +
+    * fixed-point contribution sums keep every score bit-equal across
+    * engines (see Retrieval scaladoc); the oracle rebuilds the
     * inverted index and the identical score arithmetic.
     */
   def q96(s: SparkSession, d: String): DataFrame =
-    Retrieval.bm25TopK(Tables.documents(s, d), "doc_id", "text",
-        Seq("spark", "merge", "vector"), k = 10)
+    Retrieval.bm25TopKBatch(Tables.documents(s, d), "doc_id", "text",
+        retrievalQueryBatch(s).filter(col("qid") === 0L), k = 10).coalesce(1)
       .select(col("id").as("doc_id"), col("score"), col("n_terms_hit"))
       .orderBy(col("score").desc, col("doc_id"))
 
@@ -407,17 +408,29 @@ object LlmQueries {
     Dedup.simhashBuckets(Tables.documents(s, d), "doc_id", "text")
       .orderBy("simhash")
 
-  /** q49 brute-force cosine top-10 of vec 0 (exact ANN baseline). */
-  def q49(s: SparkSession, d: String): DataFrame =
-    Similarity.bruteTopK(Tables.embeddings(s, d), queryId = 0L, k = 10)
+  /** q49 brute-force cosine top-10 of vec 0 (exact ANN baseline), a
+    * one-row batch. One query yields ≤ k rows, so `coalesce(1)` lets
+    * the final sort read them in one partition instead of paying a
+    * range exchange and its sampling job (q50, q79 and q96 likewise).
+    */
+  def q49(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
+    val qs = emb.filter(col("vec_id") === 0L)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    Similarity.bruteTopKBatch(emb, qs, k = 10).coalesce(1)
       .select(col("vec_id"), round(col("cosine"), 6).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
+  }
 
   /** q50 LSH-bucketed ANN top-10 of vec 0 (4 hyperplanes). */
-  def q50(s: SparkSession, d: String): DataFrame =
-    Similarity.lshTopK(Tables.embeddings(s, d), queryId = 0L, k = 10, planes = 4)
+  def q50(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
+    val qs = emb.filter(col("vec_id") === 0L)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    Similarity.lshTopKBatch(emb, qs, k = 10, planes = 4).coalesce(1)
       .select(col("vec_id"), round(col("cosine"), 6).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
+  }
 
   /** q51 hyperplane bucket histogram (LSH partition balance). */
   def q51(s: SparkSession, d: String): DataFrame =
@@ -476,14 +489,16 @@ object LlmQueries {
   private def ivfFixedCentroids: Seq[Array[Double]] =
     (0 until 4).map(c => Array.tabulate(64)(i => ((c * 37 + i * 13) % 41 - 20) / 10.0))
 
-  /** q79 IVF ANN with the fixed quantizer: rank centroids by distance
-    * to vec 0 (driver-side, k rows), search exactly within the nprobe
-    * nearest clusters, cosine top-10.
+  /** q79 IVF ANN with the fixed quantizer: vec 0 expands to its
+    * nprobe nearest clusters (per-row expression over the centroid
+    * literals) and is searched exactly within them, cosine top-10.
     */
   def q79(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-    Similarity.ivfTopK(emb, Similarity.IvfModel(ivfFixedCentroids),
-        queryId = 0L, topK = 10, nprobe = 2)
+    val qs = emb.filter(col("vec_id") === 0L)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    Similarity.ivfTopKBatch(emb, Similarity.IvfModel(ivfFixedCentroids), qs,
+        topK = 10, nprobe = 2).coalesce(1)
       .select(col("vec_id"), round(col("cosine"), 6).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
   }
@@ -1232,9 +1247,9 @@ object LlmQueries {
 
   /** q175 batched BM25 ([[graft.llm.Retrieval.bm25TopKBatch]]):
     * queries-as-data sparse retrieval — one corpus tf pass and one
-    * qid-keyed ranking window regardless of batch size; qid 0 carries
-    * q96's exact term set so the two plans cross-check. Oracle replays
-    * the identical fixed-point BM25 arithmetic per (qid, doc).
+    * qid-keyed ranking window regardless of batch size; qid 0 is q96's
+    * query, so its five rows are q96's first five. Oracle replays the
+    * identical fixed-point BM25 arithmetic per (qid, doc).
     */
   def q175(s: SparkSession, d: String): DataFrame =
     Retrieval.bm25TopKBatch(Tables.documents(s, d), "doc_id", "text",

@@ -1,11 +1,24 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 
 class LlmSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Query frame (qid, qvec) of the given vectors of `emb` — a single
+    * query is a one-row batch. */
+  private def queriesOf(emb: DataFrame, ids: Long*): DataFrame =
+    emb.filter($"vec_id".isin(ids: _*))
+      .select($"vec_id".as("qid"), $"embedding".as("qvec"))
+
+  /** Per-qid ranked (vec_id, cosine) lists of a batched ANN result. */
+  private def annLists(df: DataFrame): Map[Long, Seq[(Long, Double)]] =
+    df.select("qid", "vec_id", "cosine", "rank")
+      .as[(Long, Long, Double, Int)].collect()
+      .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(r => (r._2, r._3)).toSeq).toMap
 
   private def docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -115,9 +128,8 @@ class LlmSpec extends SparkSpec {
       (2L, Array(0.0f, 1.0f, 0.0f) ++ Array.fill(61)(0.0f)), // orthogonal
       (3L, Array(1.0f, 1.0f, 0.0f) ++ Array.fill(61)(0.0f))) // cosine √2/2
       .toDF("vec_id", "embedding")
-    val top = Similarity.bruteTopK(emb, queryId = 0L, k = 2)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(top == Seq(1L, 3L))
+    val top = annLists(Similarity.bruteTopKBatch(emb, queriesOf(emb, 0L), k = 2))
+    assert(top(0L).map(_._1) == Seq(1L, 3L))
   }
 
   test("LSH bucket keeps scalar multiples together; lshTopK finds them") {
@@ -129,9 +141,8 @@ class LlmSpec extends SparkSpec {
     val buckets = emb.select($"vec_id", Similarity.bucketCol($"embedding", 8).as("b"))
       .as[(Long, Long)].collect().toMap
     assert(buckets(0L) == buckets(1L) && buckets(0L) != buckets(2L))
-    val near = Similarity.lshTopK(emb, 0L, k = 5)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(near == Seq(1L))
+    val near = annLists(Similarity.lshTopKBatch(emb, queriesOf(emb, 0L), k = 5))
+    assert(near(0L).map(_._1) == Seq(1L))
   }
 
   test("IVF: nprobe=k is exactly brute force; small nprobe is a correct subset") {
@@ -139,18 +150,15 @@ class LlmSpec extends SparkSpec {
     val model = Similarity.fitIvf(emb, k = 8, iters = 2)
     assert(model.centroids.length == 8 && model.centroids.head.length == 64)
 
-    val brute = Similarity.bruteTopK(emb, 0L, 10)
-      .select("vec_id", "cosine").as[(Long, Double)].collect().toSeq
-    val full = Similarity.ivfTopK(emb, model, 0L, 10, nprobe = 8)
-      .select("vec_id", "cosine").as[(Long, Double)].collect().toSeq
+    val q0 = queriesOf(emb, 0L)
+    val brute = annLists(Similarity.bruteTopKBatch(emb, q0, 10))(0L)
+    val full = annLists(Similarity.ivfTopKBatch(emb, model, q0, 10, nprobe = 8))(0L)
     assert(full == brute) // full probe ≡ exact search
 
-    val narrow = Similarity.ivfTopK(emb, model, 0L, 10, nprobe = 2)
-      .select("vec_id", "cosine").as[(Long, Double)].collect().toSeq
+    val narrow = annLists(Similarity.ivfTopKBatch(emb, model, q0, 10, nprobe = 2))(0L)
     // subset property: every narrow result appears in the full ranking
     // with the identical score
-    val bruteAll = Similarity.bruteTopK(emb, 0L, 1000)
-      .select("vec_id", "cosine").as[(Long, Double)].collect().toMap
+    val bruteAll = annLists(Similarity.bruteTopKBatch(emb, q0, 1000))(0L).toMap
     assert(narrow.nonEmpty && narrow.forall { case (id, c) => bruteAll(id) == c })
   }
 
@@ -158,49 +166,53 @@ class LlmSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select("vec_id", "embedding")
     val qids = Seq(0L, 3L, 7L)
-    val qs = emb.filter($"vec_id".isin(qids: _*))
-      .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-    // brute batch: each query's slice equals its single-query ranking
-    val batch = Similarity.bruteTopKBatch(emb, qs, k = 5)
-      .select("qid", "vec_id", "cosine", "rank")
-      .as[(Long, Long, Double, Int)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(r => (r._2, r._3)).toSeq).toMap
-    for (q <- qids) {
-      val single = Similarity.bruteTopK(emb, q, 5)
-        .select("vec_id", "cosine").as[(Long, Double)].collect().toSeq
-      assert(batch(q) == single, s"brute batch mismatch for query $q")
-    }
-    // IVF batch: same equivalence under the same fixed model
+    val qs = queriesOf(emb, qids: _*)
     val model = Similarity.IvfModel(
       (0 until 4).map(c => Array.tabulate(64)(i => ((c * 37 + i * 13) % 41 - 20) / 10.0)))
-    val ivfBatch = Similarity.ivfTopKBatch(emb, model, qs, topK = 5, nprobe = 2)
-      .select("qid", "vec_id", "cosine", "rank")
-      .as[(Long, Long, Double, Int)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(r => (r._2, r._3)).toSeq).toMap
-    for (q <- qids) {
-      val single = Similarity.ivfTopK(emb, model, q, 5, nprobe = 2)
-        .select("vec_id", "cosine").as[(Long, Double)].collect().toSeq
-      assert(ivfBatch(q) == single, s"ivf batch mismatch for query $q")
+    val forms: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "brute" -> (q => Similarity.bruteTopKBatch(emb, q, k = 5)),
+      "ivf" -> (q => Similarity.ivfTopKBatch(emb, model, q, topK = 5, nprobe = 2)),
+      "lsh" -> (q => Similarity.lshTopKBatch(emb, q, k = 5, planes = 4)))
+    // driver-side exact ranking over the collected fixture: cosine in
+    // vec_dot's left-to-right order, each form's candidate rule, rank
+    // by (cosine desc, id); LSH buckets come from the bucket kernel
+    // (its fold parity is tested on its own)
+    val rows = emb.select($"vec_id", $"embedding",
+        Similarity.bucketCol($"embedding", 4).as("b"))
+      .as[(Long, Seq[Float], Long)].collect()
+    def dot(a: Seq[Float], b: Seq[Float]) =
+      a.indices.foldLeft(0.0)((s, i) => s + a(i).toDouble * b(i).toDouble)
+    def sqDist(a: Seq[Float], c: Array[Double]) =
+      a.indices.foldLeft(0.0) { (s, i) => val d = a(i).toDouble - c(i); s + d * d }
+    def cells(v: Seq[Float]) = model.centroids.indices
+      .sortBy(c => (sqDist(v, model.centroids(c)), c))
+    def exact(form: String, q: Long): Seq[(Long, Double)] = {
+      val (_, qv, qb) = rows.find(_._1 == q).get
+      val probed = cells(qv).take(2).toSet
+      rows.filter { case (id, v, b) => id != q && (form match {
+          case "brute" => true
+          case "ivf"   => probed(cells(v).head)
+          case "lsh"   => b == qb
+        }) }
+        .map { case (id, v, _) =>
+          (id, dot(v, qv) / (math.sqrt(dot(v, v)) * math.sqrt(dot(qv, qv)))) }
+        .sortBy { case (id, c) => (-c, id) }.take(5).toSeq
+    }
+    for ((form, search) <- forms) {
+      val batch = annLists(search(qs))
+      for (q <- qids) {
+        val alone = annLists(search(queriesOf(emb, q))).getOrElse(q, Nil)
+        assert(batch.getOrElse(q, Nil) == alone, s"$form: batch ≠ one-query batch for $q")
+        assert(alone == exact(form, q), s"$form: ≠ driver-side ranking for $q")
+      }
     }
     // pre-materialized assignment (the at-rest index shape) gives the
     // identical result as inline assignment
+    val ivfBatch = annLists(Similarity.ivfTopKBatch(emb, model, qs, topK = 5, nprobe = 2))
     val indexed = Similarity.assignIvf(emb, model)
-    val viaIndex = Similarity.ivfTopKBatch(indexed, model, qs, topK = 5, nprobe = 2,
-        assignedCol = Some("ivf_c"))
-      .select("qid", "vec_id", "cosine", "rank")
-      .as[(Long, Long, Double, Int)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(r => (r._2, r._3)).toSeq).toMap
+    val viaIndex = annLists(Similarity.ivfTopKBatch(indexed, model, qs, topK = 5,
+      nprobe = 2, assignedCol = Some("ivf_c")))
     for (q <- qids) assert(viaIndex(q) == ivfBatch(q), s"indexed path mismatch for $q")
-    // LSH batch: bucket-join candidates equal each single query's
-    val lshBatch = Similarity.lshTopKBatch(emb, qs, k = 5, planes = 4)
-      .select("qid", "vec_id", "cosine", "rank")
-      .as[(Long, Long, Double, Int)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(r => (r._2, r._3)).toSeq).toMap
-    for (q <- qids) {
-      val single = Similarity.lshTopK(emb, q, 5, planes = 4)
-        .select("vec_id", "cosine").as[(Long, Double)].collect().toSeq
-      assert(lshBatch.getOrElse(q, Nil) == single, s"lsh batch mismatch for query $q")
-    }
   }
 
   test("IVF at-rest: partitioned corpus prunes via DPP and matches the inline plan") {
@@ -233,8 +245,10 @@ class LlmSpec extends SparkSpec {
 
   test("LSH recall vs brute force on the embeddings fixture") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val brute = Similarity.bruteTopK(emb, 0L, 10).select("vec_id").as[Long].collect().toSet
-    val lsh = Similarity.lshTopK(emb, 0L, 10, planes = 4).select("vec_id").as[Long].collect().toSet
+    val q0 = queriesOf(emb, 0L)
+    val brute = Similarity.bruteTopKBatch(emb, q0, 10).select("vec_id").as[Long].collect().toSet
+    val lsh = Similarity.lshTopKBatch(emb, q0, 10, planes = 4)
+      .select("vec_id").as[Long].collect().toSet
     // 4 planes → 16 buckets; expect meaningful overlap, not exactness
     assert(lsh.nonEmpty && brute.nonEmpty)
   }
@@ -506,9 +520,9 @@ class LlmSpec extends SparkSpec {
       .select($"vec_id", $"embedding")
     val deq = Similarity.quantizeInt8(emb).select($"vec_id",
       Similarity.dequantizeCol($"q_codes", $"q_scale").as("embedding"))
-    val exact = Similarity.bruteTopK(emb, queryId = 0L, k = 10)
+    val exact = Similarity.bruteTopKBatch(emb, queriesOf(emb, 0L), k = 10)
       .select("vec_id").as[Long].collect().toSet
-    val quant = Similarity.bruteTopK(deq, queryId = 0L, k = 10)
+    val quant = Similarity.bruteTopKBatch(deq, queriesOf(deq, 0L), k = 10)
       .select("vec_id").as[Long].collect().toSet
     // int8 keeps ~99.9% of the vector's direction: top-10 overlap ≥ 8
     assert(exact.intersect(quant).size >= 8, s"recall too low: $exact vs $quant")
@@ -569,18 +583,20 @@ class LlmSpec extends SparkSpec {
       (2L, "join merge filter scan batch"),  // no query term
       (3L, "spark spark join merge filter scan batch row column value")) // tf=2, long
       .toDF("doc_id", "text")
-    val top = Retrieval.bm25TopK(docs, "doc_id", "text", Seq("spark"), k = 10)
-      .collect()
+    def query(terms: String*) = terms.map(t => (0L, t)).toDF("qid", "term")
+    val top = Retrieval.bm25TopKBatch(docs, "doc_id", "text", query("spark"), k = 10)
+      .orderBy("rank").collect()
     // only docs containing the term appear; highest tf/shortest doc first
     assert(top.map(_.getAs[Long]("id")).toSeq == Seq(0L, 3L, 1L))
     assert(top.head.getAs[Double]("score") > top.last.getAs[Double]("score"))
     // multi-term query counts distinct terms hit
-    val multi = Retrieval.bm25TopK(docs, "doc_id", "text", Seq("spark", "merge"), k = 10)
+    val multi = Retrieval.bm25TopKBatch(docs, "doc_id", "text",
+        query("spark", "merge"), k = 10)
       .collect()
     assert(multi.find(_.getAs[Long]("id") == 1L).get.getAs[Long]("n_terms_hit") == 2)
   }
 
-  test("bm25TopKBatch: per-qid lists ≡ independent bm25TopK runs") {
+  test("bm25TopKBatch: per-qid lists ≡ one-query batches") {
     val docs = Seq(
       (0L, "spark spark spark join"),
       (1L, "spark join merge filter scan"),
@@ -590,16 +606,14 @@ class LlmSpec extends SparkSpec {
     val batch = Seq((0L, "spark"), (1L, "spark"), (1L, "merge"), (2L, "batch"))
       .toDF("qid", "term")
     val got = Retrieval.bm25TopKBatch(docs, "doc_id", "text", batch, k = 10)
-    for ((qid, terms) <- Seq((0L, Seq("spark")), (1L, Seq("spark", "merge")),
-        (2L, Seq("batch")))) {
-      val single = Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 10)
-        .withColumn("rank", monotonically_increasing_id()) // order check below
-        .select(col("id"), col("score"), col("n_terms_hit"))
-        .collect().toSeq
-      val mine = got.filter(col("qid") === qid).orderBy("rank")
-        .select(col("id"), col("score"), col("n_terms_hit"))
-        .collect().toSeq
-      assert(mine == single, s"qid $qid diverged from the single-query form")
+    def list(df: DataFrame, qid: Long) = df.filter(col("qid") === qid).orderBy("rank")
+      .select(col("id"), col("score"), col("n_terms_hit"), col("rank"))
+      .collect().toSeq
+    for (qid <- Seq(0L, 1L, 2L)) {
+      val alone = Retrieval.bm25TopKBatch(docs, "doc_id", "text",
+        batch.filter(col("qid") === qid), k = 10)
+      assert(list(alone, qid).nonEmpty)
+      assert(list(got, qid) == list(alone, qid), s"qid $qid diverged from its one-query batch")
     }
     // duplicated (qid, term) rows must not double-count (distinct guard)
     val dup = Retrieval.bm25TopKBatch(docs, "doc_id", "text",
@@ -1814,21 +1828,27 @@ class LlmSpec extends SparkSpec {
     assert(got == Seq((0, 6L, 2824862L), (1, 10L, 13421766L), (2, 14L, 36685472L)))
   }
 
-  test("bpeTrain leaves no pinned RDD behind") {
-    // 10 rounds cross the 8-round re-pin boundary
+  test("iterative loops leave no pinned RDD behind") {
     val d = (0 until 3).map(i =>
       (i.toLong, (0 until 24).map(t => s"t$t").mkString(" "))).toDF("doc_id", "text")
-    val before = graft.core.Materialize.liveIds(spark)
-    assert(Dedup.bpeTrain(d, "doc_id", "text", rounds = 10).collect().length == 10)
-    assert((graft.core.Materialize.liveIds(spark) -- before).isEmpty)
-  }
-
-  test("lloydRefine leaves no pinned RDD behind") {
     val v = Array.tabulate(64)(i => (0.1f * (i % 7 - 3)))
     val emb = (0L until 6L).map(id => (id, v)).toDF("vec_id", "embedding")
-    val before = graft.core.Materialize.liveIds(spark)
-    assert(Similarity.lloydRefine(emb, k = 4, rounds = 2).collect().length == 1)
-    assert((graft.core.Materialize.liveIds(spark) -- before).isEmpty)
+    val loops: Seq[(String, () => Unit)] = Seq(
+      // 10 rounds cross the 8-round re-pin boundary
+      "bpeTrain" -> (() =>
+        assert(Dedup.bpeTrain(d, "doc_id", "text", rounds = 10).collect().length == 10)),
+      "lloydRefine" -> (() =>
+        assert(Similarity.lloydRefine(emb, k = 4, rounds = 2).collect().length == 1)),
+      "fitIvf" -> (() =>
+        assert(Similarity.fitIvf(emb, k = 2, iters = 2).centroids.length == 2)),
+      "farthestFirst" -> (() =>
+        assert(Similarity.farthestFirst(emb, k = 3).collect().length == 3)))
+    for ((name, run) <- loops) {
+      val before = graft.core.Materialize.liveIds(spark)
+      run()
+      assert((graft.core.Materialize.liveIds(spark) -- before).isEmpty,
+        s"$name left a pinned RDD")
+    }
   }
 
   test("dedupSavings: cross-source duplicate loses to the earlier source; uniques keep everything") {

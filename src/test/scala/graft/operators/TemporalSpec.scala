@@ -105,12 +105,6 @@ class TemporalSpec extends SparkSpec {
     // the reliable path actually materialized checkpoint files
     assert(new java.io.File(
       new org.apache.hadoop.fs.Path(dir).toUri.getPath).listFiles().nonEmpty)
-    val chain = (0L until 19L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val altLocal = Dedup.connectedComponentsAlternating(chain)
-      .as[(Long, Long)].collect().toMap
-    val altReliable = Dedup.connectedComponentsAlternating(chain, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(altReliable == altLocal)
   }
 
   test("connectedComponents: hot-star graph with heavy pair duplication (spill-safe dedup)") {
@@ -164,7 +158,21 @@ class TemporalSpec extends SparkSpec {
     assert(ccz.length == 20 && ccz.forall(_._2 == 0L))
   }
 
-  test("alternating (large-star/small-star) CC equals min propagation on random graphs") {
+  test("connectedComponents equals a driver-side union-find on random graphs") {
+    // reference: union-find over the same pairs, each node labeled by
+    // its component minimum
+    def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 8) {
       val n = 8 + rnd.nextInt(20)
@@ -173,20 +181,21 @@ class TemporalSpec extends SparkSpec {
         .filter { case (a, b) => a != b }
       if (raw.nonEmpty) {
         val pairs = raw.toDF("id_a", "id_b")
-        val a = Dedup.connectedComponentsAlternating(pairs).as[(Long, Long)].collect().toMap
-        val b = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-        assert(a == b, s"trial $trial: $raw")
-        val c = Dedup.connectedComponents(pairs, compress = true)
-          .as[(Long, Long)].collect().toMap
-        assert(c == b, s"trial $trial (compress): $raw")
+        val want = unionFind(raw)
+        for (compress <- Seq(false, true)) {
+          val got = Dedup.connectedComponents(pairs, compress = compress)
+            .as[(Long, Long)].collect().toMap
+          assert(got == want, s"trial $trial (compress = $compress): $raw")
+        }
       }
     }
-    // worst case for min-prop, logarithmic for alternation
+    // a 40-edge chain: worst case for plain min propagation
     val chain = (0L until 40L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponentsAlternating(chain).as[(Long, Long)].collect()
+    val cc = Dedup.connectedComponents(chain, compress = true)
+      .as[(Long, Long)].collect()
     assert(cc.length == 41 && cc.forall(_._2 == 0L))
-    assert(Dedup.connectedComponentsAlternating(
-      Seq.empty[(Long, Long)].toDF("id_a", "id_b")).count() == 0)
+    assert(Dedup.connectedComponents(
+      Seq.empty[(Long, Long)].toDF("id_a", "id_b"), compress = true).count() == 0)
   }
 
   test("burstCells: dense axis counts silent cells as zero; burst fires only with a full baseline") {

@@ -155,7 +155,7 @@ class PlanShapeSpec extends SparkSpec {
       "q171_family_matrix"   -> (13, 2, 1),
       "q198_lsh_hot_star"    -> (12, 1, 0),
       "q116_tfidf_pairs"     -> (4, 1, 0),
-      "q195_ivf_pq_residual" -> (8, 11, 4),
+      "q195_ivf_pq_residual" -> (7, 9, 4),
       "q105_geo_lifecycle"   -> (16, 7, 2),
       "q193_pq_recall"       -> (13, 14, 5),
       // round-16: q94's de-skewed plan (floor re-seeded to its real
