@@ -1828,22 +1828,25 @@ class LlmSpec extends SparkSpec {
     assert(got == Seq((0, 6L, 2824862L), (1, 10L, 13421766L), (2, 14L, 36685472L)))
   }
 
-  test("iterative loops leave no pinned RDD behind") {
-    val d = (0 until 3).map(i =>
-      (i.toLong, (0 until 24).map(t => s"t$t").mkString(" "))).toDF("doc_id", "text")
+  // one leak test per iterative loop, named "<loop> leaves no pinned RDD behind"
+  private def leakDocs = (0 until 3).map(i =>
+    (i.toLong, (0 until 24).map(t => s"t$t").mkString(" "))).toDF("doc_id", "text")
+  private def leakEmb = {
     val v = Array.tabulate(64)(i => (0.1f * (i % 7 - 3)))
-    val emb = (0L until 6L).map(id => (id, v)).toDF("vec_id", "embedding")
-    val loops: Seq[(String, () => Unit)] = Seq(
-      // 10 rounds cross the 8-round re-pin boundary
-      "bpeTrain" -> (() =>
-        assert(Dedup.bpeTrain(d, "doc_id", "text", rounds = 10).collect().length == 10)),
-      "lloydRefine" -> (() =>
-        assert(Similarity.lloydRefine(emb, k = 4, rounds = 2).collect().length == 1)),
-      "fitIvf" -> (() =>
-        assert(Similarity.fitIvf(emb, k = 2, iters = 2).centroids.length == 2)),
-      "farthestFirst" -> (() =>
-        assert(Similarity.farthestFirst(emb, k = 3).collect().length == 3)))
-    for ((name, run) <- loops) {
+    (0L until 6L).map(id => (id, v)).toDF("vec_id", "embedding")
+  }
+  Seq[(String, () => Unit)](
+    // 10 rounds cross the 8-round re-pin boundary
+    "bpeTrain" -> (() =>
+      assert(Dedup.bpeTrain(leakDocs, "doc_id", "text", rounds = 10).collect().length == 10)),
+    "lloydRefine" -> (() =>
+      assert(Similarity.lloydRefine(leakEmb, k = 4, rounds = 2).collect().length == 1)),
+    "fitIvf" -> (() =>
+      assert(Similarity.fitIvf(leakEmb, k = 2, iters = 2).centroids.length == 2)),
+    "farthestFirst" -> (() =>
+      assert(Similarity.farthestFirst(leakEmb, k = 3).collect().length == 3))
+  ).foreach { case (name, run) =>
+    test(s"$name leaves no pinned RDD behind") {
       val before = graft.core.Materialize.liveIds(spark)
       run()
       assert((graft.core.Materialize.liveIds(spark) -- before).isEmpty,
