@@ -7,17 +7,27 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.core.GeoTransform
 
-/** GeoTIFF codec + DSv2 integration. Ground truth for the reference's
-  * own SRTM fixture (`data/maps/srtm1_x35_y32.tif`) was computed by an
-  * independent decoder (python struct+zlib): 361×361 Int16, 256×256
-  * DEFLATE tiles, EPSG:4326, sum 38341369, min 79, max 550.
+/** GeoTIFF codec + DSv2 integration.
+  *
+  * The SRTM-shaped checks (header, decoded pixels, DSv2 scan and
+  * pruning, CLI runs in TransSpec) read the committed [[SrtmFixture]]:
+  * the layout of the reference's SRTM tile (`data/maps/srtm1_x35_y32.tif`:
+  * 361×361 Int16, 256×256 DEFLATE tiles, EPSG:4326) with pixels from a
+  * closed-form formula, so the expected values are computed here, not
+  * read back from the codec.
+  *
+  * The real tile's ground truth was computed by an independent decoder
+  * (python struct+zlib): sum 38341369, min 79, max 550. One test
+  * asserts it, and runs only where the reference checkout's tile
+  * ([[Srtm]]) is present.
   */
 class GeoTiffSpec extends SparkSpec {
 
   val Srtm = "/root/reference/data/maps/srtm1_x35_y32.tif"
+  val Fixture: String = SrtmFixture.path
 
-  test("readInfo parses the SRTM fixture header (A1, gdalos_trans.py:318-320)") {
-    val info = GeoTiff.readInfo(Srtm)
+  private def checkSrtmHeader(path: String): Unit = {
+    val info = GeoTiff.readInfo(path)
     assert(info.width == 361 && info.height == 361)
     assert(info.bands == 1 && info.dtypeName == "Int16")
     assert(info.compression == 8 && !info.bigEndian)
@@ -30,18 +40,62 @@ class GeoTiffSpec extends SparkSpec {
     assert(math.abs(gt.c3 - 32.100138888888885) < 1e-9)
   }
 
-  test("decodeSegment reproduces known SRTM pixels and full-raster stats") {
-    val info = GeoTiff.readInfo(Srtm)
-    // assemble the full raster driver-side (361² = small fixture)
+  /** The full raster assembled driver-side from its segments (361² is small). */
+  private def decodeAll(path: String): Array[Double] = {
+    val info = GeoTiff.readInfo(path)
     val pix = Array.ofDim[Double](info.width * info.height)
     for (seg <- info.segments) {
-      val d = GeoTiff.decodeSegment(Srtm, info, seg)
+      val d = GeoTiff.decodeSegment(path, info, seg)
       for (y <- 0 until seg.h; x <- 0 until seg.w) {
         val (gx, gy) = (seg.x0 + x, seg.y0 + y)
         if (gx < info.width && gy < info.height)
           pix(gy * info.width + gx) = d(y * seg.w + x)
       }
     }
+    pix
+  }
+
+  private def scan(path: String) =
+    spark.read.format("graft.sources.RasterSource").option("path", path).load()
+
+  /** A crop inside tile (0,0) only: pushdown must prune to 1 partition. */
+  private def tileZeroCrop(path: String) = {
+    val crop = scan(path).filter(col("px") >= 100 && col("px") < 200 &&
+      col("py") >= 100 && col("py") < 200)
+    assert(crop.rdd.getNumPartitions == 1)
+    crop.agg(sum("v"), min("v"), max("v")).head()
+  }
+
+  test("readInfo parses the SRTM fixture header (A1, gdalos_trans.py:318-320)") {
+    checkSrtmHeader(Fixture)
+    assert(GeoTiff.readInfo(Fixture).nodata.contains(-32768.0))
+  }
+
+  test("decodeSegment reproduces known SRTM pixels and full-raster stats") {
+    val pix = decodeAll(Fixture)
+    val expect = SrtmFixture.window(0, 0, SrtmFixture.W, SrtmFixture.H)
+    assert(pix.sameElements(expect))
+    assert(pix.min == expect.min && pix.max == expect.max)
+    assert(pix.sum == expect.sum)
+  }
+
+  test("DSv2 scan of the SRTM fixture: full stats + segment-pruned crop") {
+    val full = scan(Fixture).agg(count(lit(1)), sum("v"), min("v"), max("v")).head()
+    val all = SrtmFixture.window(0, 0, SrtmFixture.W, SrtmFixture.H)
+    assert(full.getLong(0) == 130321L)
+    assert(full.getDouble(1) == all.sum)
+    assert(full.getDouble(2) == all.min && full.getDouble(3) == all.max)
+
+    val cs = tileZeroCrop(Fixture)
+    val win = SrtmFixture.window(100, 100, 200, 200)
+    assert(cs.getDouble(0) == win.sum)
+    assert(cs.getDouble(1) == win.min && cs.getDouble(2) == win.max)
+  }
+
+  test("real SRTM tile: header, known pixels, full stats and pruned crop stats") {
+    assume(Files.exists(Paths.get(Srtm)), s"reference SRTM tile $Srtm not present")
+    checkSrtmHeader(Srtm)
+    val pix = decodeAll(Srtm)
     assert(pix(0) == 144.0)
     assert(pix(100 * 361 + 100) == 253.0)
     assert(pix(180 * 361 + 180) == 186.0)
@@ -49,21 +103,12 @@ class GeoTiffSpec extends SparkSpec {
     assert(pix(50 * 361 + 200) == 351.0)
     assert(pix.min == 79.0 && pix.max == 550.0)
     assert(pix.sum == 38341369.0)
-  }
 
-  test("DSv2 scan of the SRTM fixture: full stats + segment-pruned crop") {
-    val df = spark.read.format("graft.sources.RasterSource")
-      .option("path", Srtm).load()
-    val full = df.agg(count(lit(1)), sum("v"), min("v"), max("v")).head()
+    val full = scan(Srtm).agg(count(lit(1)), sum("v"), min("v"), max("v")).head()
     assert(full.getLong(0) == 130321L)
     assert(full.getDouble(1) == 38341369.0)
     assert(full.getDouble(2) == 79.0 && full.getDouble(3) == 550.0)
-
-    // crop inside tile (0,0) only → pushdown must prune to 1 partition
-    val crop = df.filter(col("px") >= 100 && col("px") < 200 &&
-      col("py") >= 100 && col("py") < 200)
-    assert(crop.rdd.getNumPartitions == 1)
-    val cs = crop.agg(sum("v"), min("v"), max("v")).head()
+    val cs = tileZeroCrop(Srtm)
     assert(cs.getDouble(0) == 2666854.0)
     assert(cs.getDouble(1) == 144.0 && cs.getDouble(2) == 408.0)
   }
@@ -204,8 +249,8 @@ class GeoTiffSpec extends SparkSpec {
       .option("path", f.toString).option("ovr", 1).load()
       .agg(sum("v")).head().getDouble(0)
     assert(o1 == level(base, w, h, 1).sum)
-    // the SRTM fixture remains a single-page file
-    assert(GeoTiff.readInfos(Srtm).length == 1)
+    // the SRTM-shaped fixture remains a single-page file
+    assert(GeoTiff.readInfos(Fixture).length == 1)
   }
   test("tiled write (COG layout): round-trip, edge padding, predictor, pyramid") {
     val w = 70; val h = 41 // deliberately not multiples of the tile size

@@ -258,9 +258,12 @@ class TransSpec extends SparkSpec {
     assert(o2.count() == 12 * 9)
   }
 
+  // The CLI tests below read the committed SRTM-shaped fixture
+  // (graft.sources.SrtmFixture). Each compares the output with its
+  // input, so none depends on the terrain.
   test("CLI front-end drives srcwin crop + GTIFF export end-to-end on the SRTM fixture (§3.1)") {
     import graft.sources.GeoTiff
-    val srtm = "/root/reference/data/maps/srtm1_x35_y32.tif"
+    val srtm = graft.sources.SrtmFixture.path
     val out = java.nio.file.Files.createTempDirectory("graft_cli")
       .resolve("crop.tif").toString
     val rc = graft.Main.run(Array(
@@ -284,7 +287,7 @@ class TransSpec extends SparkSpec {
   }
 
   test("CLI sequence fan-out: multiple inputs expand to suffixed COG jobs (I3)") {
-    val srtm = "/root/reference/data/maps/srtm1_x35_y32.tif"
+    val srtm = graft.sources.SrtmFixture.path
     val base = java.nio.file.Files.createTempDirectory("graft_cli_seq")
       .resolve("out").toString
     val rc = graft.Main.run(Array(
@@ -325,7 +328,7 @@ class TransSpec extends SparkSpec {
 
   test("CLI -t_srs warps through the planner to a projected-CRS GeoTIFF") {
     import graft.sources.GeoTiff
-    val srtm = "/root/reference/data/maps/srtm1_x35_y32.tif"
+    val srtm = graft.sources.SrtmFixture.path
     val out = java.nio.file.Files.createTempDirectory("graft_cli_warp")
       .resolve("utm.tif").toString
     val rc = graft.Main.run(Array(
@@ -344,7 +347,7 @@ class TransSpec extends SparkSpec {
 
   test("CLI -partition splits the extent into grid-cell jobs (R5 + I3)") {
     import graft.sources.GeoTiff
-    val srtm = "/root/reference/data/maps/srtm1_x35_y32.tif"
+    val srtm = graft.sources.SrtmFixture.path
     val base = java.nio.file.Files.createTempDirectory("graft_cli_part")
       .resolve("part.tif").toString
     val rc = graft.Main.run(Array(
