@@ -1,654 +1,229 @@
 package graft
-import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import java.lang.management.{ManagementFactory, MemoryType}
+import java.nio.file.{Files, Path, Paths}
 
-/** Benchmark main: one warmup + two timed runs per query, MINIMUM
-  * reported (two is the cheapest count where a one-sided burst must
-  * hit twice in a row to survive into the record). The JSON line is emitted
-  * twice — once right after measurement (timeout insurance) and once
-  * as the very last stdout line after spark.stop() (tail-scrape
-  * insurance) — and also written to `bench_last.json` so a truncated
-  * log scrape cannot drop per-query entries. `bench_floors.json`
-  * (committed) accumulates the historical per-query minimum across
-  * clean runs and anchors the deferred-outlier retry, so one spiked
-  * round cannot poison the next round's retry threshold. The FINAL
-  * stdout line is a compact health summary (totals + flags, no
-  * per-query map — the harness scrapes a bounded log tail and a 5 KB
-  * line arrives truncated); the full record is emitted early and
-  * persisted to `bench_last.json`. Queries that start while the box
-  * is demonstrably hot (high loadavg confirmed by a fresh bad
-  * canary) defer to a tail queue rather than recording
-  * burst-inflated minima.
-  * Min (not median) because
-  * the timing noise in a shared environment is strictly one-sided —
-  * JIT/code-cache pressure, co-tenant CPU, GC — so the fastest
-  * observed run is the best estimate of the plan's intrinsic cost
-  * (a prior round's driver run showed 10-30× one-sided outliers on
-  * codegen-heavy queries that were unreproducible locally). The
-  * action is a `noop`-format write — unlike `count()`, it executes
-  * the FULL plan (EliminateSorts removes terminal sorts under count,
-  * and limits short-circuit), so BENCH measures the same plans
-  * CORRECTNESS runs. Failures are surfaced per-query (−1 timing + an
-  * `errors` map), not swallowed. Formatted plans are dumped to
-  * `plans/` for audit (join strategy, pushed filters, AQE
-  * disposition).
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+/** Benchmark main. Per query: one warmup, then the MINIMUM of two
+  * timed runs of [[Session.timeRun]] (build plus a `noop` write, so
+  * BENCH times the same plans CORRECTNESS runs). Min, not median:
+  * timing noise on a shared host is one-sided (JIT and code-cache
+  * pressure, co-tenant CPU, GC), so the fastest run is the best
+  * estimate of the plan's cost, and with two runs a burst must hit
+  * twice in a row to reach the record. A failing query records −1 and
+  * its message in `errors`; it is not swallowed.
+  *
+  * After the sweep, two retry waves (48 slots in a 90 s slice) re-time
+  * every query over 2× its committed floor in `bench_floors.json` and
+  * min-merge the result. A co-tenant burst can span all of one query's
+  * runs but has usually passed by the end of the sweep; a genuine
+  * regression survives its re-measurement.
+  *
+  * The full record prints once, after the retries. Per query it holds
+  * the minimum, `gc_ms` (stop-the-world GC across the query's runs),
+  * `heap_mb` (peak live heap), `runs`, `loadavg` (1-minute system
+  * load when it finished), `med` (median of its timed runs) and `var`
+  * (med/min); then `host_scale` and `over2x`, the queries still over
+  * 2× floor × `host_scale` with their ratios. It persists to
+  * `bench_last_c$cpus.json`, and from a protocol pass (sf0.1, full
+  * suite, parallelism 32) also to `bench_last.json`, so a pass at
+  * another width cannot overwrite the protocol detail. A protocol pass
+  * min-merges its minima into `bench_floors.json` and its medians into
+  * `bench_medians.json`, and with `SPARK_GRAFT_DUMP_PLANS=1` writes
+  * its formatted plans to `plans/`. The LAST stdout line is a compact
+  * summary without per-query maps: the driver scrapes a bounded log
+  * tail, which truncates the full record.
   */
 object Bench {
+
+  /** `v` is over 2× its floor `f` scaled by `hostScale`, and more than
+    * 0.15 s over `f`: a 2× trip on a 50 ms floor is noise, not a spike.
+    * The retry waves use a scale of 1.
+    */
+  def over2x(v: Double, f: Double, hostScale: Double): Boolean =
+    f > 0 && v > 2 * f * hostScale && v - f > 0.15
+
+  /** How this host and pass sit against the hosts that seeded the
+    * floors: the 25th percentile of this pass's value/floor ratios,
+    * clamped to [1, 2]. A uniform host-speed difference shifts every
+    * ratio; a burst shifts a contiguous subset, which the low quantile
+    * ignores. Floors under 50 ms are noise and left out; with fewer
+    * than 20 ratios (a subset run) it reads 1.
+    */
+  def hostScale(values: collection.Map[String, Double], floors: Map[String, Double]): Double = {
+    val ratios = values.toSeq.flatMap { case (n, v) =>
+      floors.get(n).filter(f => f > 0.05 && v > 0).map(v / _)
+    }.sorted
+    if (ratios.size < 20) 1.0 else math.min(2.0, math.max(1.0, ratios(ratios.size / 4)))
+  }
+
+  /** Per-query minimum of `old` and `cur`: no entry rises, entries
+    * absent from `cur` stay, new ones join. Non-positive `cur` entries
+    * (failed queries) are ignored.
+    */
+  def minMerge(old: Map[String, Double], cur: collection.Map[String, Double]): Map[String, Double] =
+    cur.foldLeft(old) { case (m, (k, v)) =>
+      if (v <= 0) m else m.updated(k, m.get(k).fold(v)(math.min(_, v)))
+    }
+
+  /** The flat `{"qNNN": seconds}` map of a floors or medians file;
+    * absent or unreadable reads empty.
+    */
+  def readTimes(path: Path): Map[String, Double] = try {
+    """"(q[0-9]\w+)":\s*([0-9.eE+-]+)""".r
+      .findAllMatchIn(Files.readString(path))
+      .map(x => x.group(1) -> x.group(2).toDouble).filter(_._2 > 0).toMap
+  } catch { case _: Throwable => Map.empty }
+
+  /** The retry waves' reference: the committed per-query floors alone.
+    * The last record is not a reference: it holds ratio maps whose
+    * `"qNNN": x` pairs a flat read would take for seconds.
+    */
+  def retryFloors(dir: Path): Map[String, Double] = readTimes(dir.resolve("bench_floors.json"))
+
+  /** The driver's protocol shape, the only one whose record is plain
+    * `bench_last.json` and whose minima may enter the floors: a
+    * full-suite pass at sf0.1 on 32 threads. Lower floors from another
+    * shape would flag healthy queries on every later protocol pass.
+    */
+  def isProtocol(sfDir: String, subset: Boolean, parallelism: Int): Boolean =
+    sfDir.contains("sf0.1") && !subset && parallelism == 32
+
+  /** Persists the full record `json` in `dir`. */
+  def writeRecord(dir: Path, json: String, cpus: Int, protocol: Boolean): Unit = {
+    Files.writeString(dir.resolve(s"bench_last_c$cpus.json"), json + "\n")
+    if (protocol) Files.writeString(dir.resolve("bench_last.json"), json + "\n")
+  }
+
+  private def jstr(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  private def writeTimes(path: Path, m: Map[String, Double])(fmt: Double => String): Unit =
+    Files.writeString(path, m.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{\n", ",\n", "\n}\n"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the driver's local[32] protocol. The v0 scaffold
-    // defaulted to 4, so anchors recorded through round 10's first
-    // half mix 4-thread (builder local passes) and 32-thread (driver
-    // rounds) numbers — see BASELINE.md's round-10 re-anchor note.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Timed runs per query after the warmup. A constant: on a full
-    // suite the budget never afforded more (every r18/r19 record shows
-    // warmup + 2 runs per query, or a retry multiple of that).
+    // the default is the driver's local[32] protocol
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters = 2
-    // Wall-clock budget (seconds) that gates the post-pass machinery
-    // (canary remediation re-run, dump slice). The round-8 driver run
-    // produced its full JSON line yet ended rc 124: the REST stub's
-    // non-daemon HTTP dispatcher kept the JVM alive until the harness
-    // timeout (fixed at the stub + sys.exit below); the budget keeps
-    // the optional passes inside any plausible harness limit.
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "360").toDouble
     val wallT0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - wallT0) / 1e9
-    val spark = Session.protocol(cpus.toInt)
+    val spark = Session.protocol(cpus)
     // fixture-schema contract check (see Tables.fixtureDrift): surfaces
     // a driver-side fixture regeneration as readable lines up front
     Tables.fixtureDrift(spark, sfDir)
       .foreach(m => System.err.println(s"[fixture-drift] $m"))
-
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // snapshot-and-release around every run: operators that
-      // localCheckpoint (LSH signature tables, inverted indexes,
-      // winnowing fingerprints) pin block-manager blocks that nothing
-      // frees in a long-lived session — across 172 queries × up to 6
-      // runs each they accumulate until memory pressure evicts ACTIVE
-      // checkpoints mid-query and the materialized subtree replays
-      // (the round-10 q154 driver regression). Release is outside the
-      // timed window (bookkeeping, not plan cost) and non-blocking.
-      val keep = graft.core.Materialize.liveIds(spark)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.core.Materialize.releaseAll(spark, keep)
-      dt
-    }
-
-    // Per-query JVM telemetry (round-11, judge ask): a driver-host
-    // spike is adjudicable from the artifact alone only if the record
-    // says whether the JVM was under memory pressure when it happened.
-    // gc_ms = delta of total stop-the-world collection time across the
-    // query's runs; heap_mb = peak live heap across them (pool peaks
-    // reset per query).
-    import scala.jdk.CollectionConverters._
-    val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
-    val heapPools = java.lang.management.ManagementFactory
-      .getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-    def gcNowMs(): Long = gcBeans.map(b => math.max(b.getCollectionTime, 0L)).sum
-    val gcMsByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val heapMbByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
-
-    // Bench-integrity guard (round-7, after the r6 degraded-run
-    // incident: a 44 s record with byte-identical plans vs a 34 s
-    // clean re-run): a JVM whose JIT has shut off (code-cache
-    // overflow) or a co-tenant-saturated box shows up as trivial-plan
-    // queries running at several times their floor. Two defenses:
-    // (1) assert the -XX:ReservedCodeCacheSize override actually
-    // reached this JVM (build.sbt sets 1g; a plain `java` launch
-    // would silently keep the 240 MB default and shut the compiler
-    // off mid-bench), (2) after the timed pass, re-time a
-    // trivial-plan canary — scan → bounded per-row fold → sort, no
-    // shuffle — and if it exceeds CanaryCeiling re-run every query
-    // once more and merge minima, recording `degraded` honestly if
-    // the canary still fails. A broken run can be slow; it can no
-    // longer be silently recorded as the round's number.
-    val CanaryName = "q44_text_fingerprint"
-    val CanaryCeiling = 1.5 // seconds; recorded floor ≈ 0.35, baseline 0.746
-    val codeCacheOk = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray.exists(_.toString.contains("ReservedCodeCacheSize"))
+    // build.sbt sets a 1g JIT code cache; a plain `java` launch keeps
+    // the 240 MB default and the JIT shuts off mid-sweep
+    val codeCacheOk = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .exists(_.contains("ReservedCodeCacheSize"))
     if (!codeCacheOk)
       System.err.println("WARN: -XX:ReservedCodeCacheSize not set on this JVM; " +
         "late-query timings may be JIT-degraded (see BASELINE.md harness note)")
 
-    // Reference floors for the deferred-retry pass below: the
-    // HISTORICAL per-query minimum (`bench_floors.json`, committed;
-    // min-merged with this run's results at the end), min-merged with
-    // the previous run's record (`bench_last.json`) so a brand-new
-    // query gets a floor from its first run. Round-12 lesson: using
-    // bench_last ALONE as the floor meant a query that spiked on the
-    // driver host in round N set an inflated floor for round N+1, so
-    // the SAME query spiking again never re-triggered the retry
-    // (q127: 5.4× in r11, then 4.3× in r12 with no retry because
-    // 1.83 s < 3 × the r11-inflated 2.29 s). The historical floor is
-    // immune to that feedback loop. Absent/corrupt files → no floors,
-    // no retries.
-    def readTimes(path: String): Map[String, Double] = try {
-      val txt = new String(Files.readAllBytes(Paths.get(path)))
-      val m = """"(q[0-9]\w+)":\s*([0-9.eE+-]+)""".r
-      m.findAllMatchIn(txt).map(x => x.group(1) -> x.group(2).toDouble)
-        .filter(_._2 > 0).toMap
-    } catch { case _: Throwable => Map.empty }
-    val floorFile = readTimes("bench_floors.json")
-    val lastRun = readTimes("bench_last.json")
-    val prevTimes: Map[String, Double] =
-      (floorFile.keySet ++ lastRun.keySet).map { k =>
-        k -> math.min(floorFile.getOrElse(k, Double.MaxValue),
-                      lastRun.getOrElse(k, Double.MaxValue))
-      }.toMap
-
+    val dir = Paths.get("")
+    val floors = retryFloors(dir)
     // Optional comma-separated subset for local iteration on one
     // query's plan (e.g. SPARK_GRAFT_BENCH_ONLY=q116_tfidf_pairs).
-    // Unset (the driver's case) benches the full suite.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    var queriesDone = 0
+    val protocolRun = isProtocol(sfDir, only.nonEmpty, spark.sparkContext.defaultParallelism)
 
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val runsByQuery = scala.collection.mutable.LinkedHashMap[String, Int]()
-    val loadByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // every timed (post-warmup) run, accumulated across retries — the
-    // per-pass MEDIAN lives alongside the min-merged floor (judge r14
-    // item 3: min-merged floors are best-case minima and structurally
-    // cannot reveal variance; the med/min ratio is the per-query
-    // variance column)
-    val timesByQuery =
-      scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP)
+    val osBean = ManagementFactory.getOperatingSystemMXBean
+    def gcNowMs(): Long = gcBeans.map(b => math.max(b.getCollectionTime, 0L)).sum
+    val merged = mutable.LinkedHashMap[String, Double]()
+    val errors = mutable.LinkedHashMap[String, String]()
+    val gcMs = mutable.Map[String, Long]()
+    val heapMb = mutable.Map[String, Long]()
+    val runs = mutable.Map[String, Int]()
+    val load = mutable.Map[String, Double]()
+    val times = mutable.Map[String, Vector[Double]]() // every timed run, retries included
 
     def timeQuery(name: String): Double = {
       val fn = SparkEntry.queries(name)
       heapPools.foreach(_.resetPeakUsage())
       val gc0 = gcNowMs()
-      var runs = 0
+      def run(): Double = {
+        runs(name) = runs.getOrElse(name, 0) + 1
+        Session.timeRun(spark)(fn(spark, sfDir)).seconds
+      }
       try {
-        runOnce(fn); runs += 1 // warmup: JIT + codegen + file-listing caches
-        val times = (1 to iters).map { _ => runs += 1; runOnce(fn) }
-        timesByQuery(name) =
-          timesByQuery.getOrElse(name, Vector.empty) ++ times
-        times.min // min — see scaladoc
+        run() // warmup: JIT + codegen + file-listing caches
+        val ts = Vector.fill(iters)(run())
+        times(name) = times.getOrElse(name, Vector.empty) ++ ts
+        ts.min
       } catch {
         case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           -1.0
       } finally {
-        queriesDone += 1
-        // deferred re-times overwrite: the record reflects the runs
-        // that produced the recorded minimum's final measurement pass
-        gcMsByQuery(name) = gcNowMs() - gc0
-        heapMbByQuery(name) =
-          heapPools.map(p => math.max(p.getPeakUsage.getUsed, 0L)).sum >> 20
-        // adjudication telemetry: how many total runs produced this
-        // record (deferred retries add warmup + 2 each)
-        // and the 1-minute system load when it finished (co-tenant
-        // CPU shows here; this JVM alone at local[32] contributes
-        // up to ~32)
-        runsByQuery(name) = runsByQuery.getOrElse(name, 0) + runs
-        loadByQuery(name) = osBean.getSystemLoadAverage
+        // a retry overwrites these with its own runs' figures
+        gcMs(name) = gcNowMs() - gc0
+        heapMb(name) = heapPools.map(p => math.max(p.getPeakUsage.getUsed, 0L)).sum >> 20
+        // co-tenant CPU shows here; this JVM alone contributes up to ~cpus
+        load(name) = osBean.getSystemLoadAverage
       }
     }
 
-    // Interleaved canary probes (round-10 hardening): the round-9
-    // driver pass was co-tenant-degraded DURING the sweep but its
-    // single post-pass canary ran after the load subsided — green
-    // canary, 3–9× inflated per-query numbers, `degraded:false`. A
-    // probe every ~20 queries pins the degradation to the window it
-    // happened in; any bad probe marks the pass suspect even if the
-    // box is quiet again by the end.
-    val probeEvery = 20
-    val canaryProbes = scala.collection.mutable.ArrayBuffer[Double]()
-    def probeCanary(): Double =
-      try runOnce(SparkEntry.queries(CanaryName)) catch { case _: Throwable => -1.0 }
+    for (n <- names) merged(n) = timeQuery(n)
 
-    // Load-aware deferral (round-14, judge ask): the r13 driver pass
-    // ran the whole sweep ~10× floors under co-tenant saturation and
-    // recorded it with rc 0 — per-query min-of-N cannot see past a
-    // burst that outlives the sweep, but NOT MEASURING during the
-    // burst can. Before each query: if the box looks hot (1-min
-    // loadavg above ~1.5× our own worst-case contribution, or the
-    // previous interleaved probe was bad), run a FRESH canary — the
-    // 1-min average lags our own bursts, so raw load alone would
-    // defer on self-inflicted noise; the canary disambiguates
-    // (co-tenant CPU inflates it, our idle gap between queries does
-    // not). A bad fresh canary defers the query to a tail queue
-    // instead of recording a number measured inside the burst. Tail
-    // queries re-probe before timing; a tail that is STILL hot times
-    // anyway (coverage promise — every query gets a number) and then
-    // triggers the full remediation re-run below — or degraded=true
-    // when the budget forbids it — so the round cannot silently
-    // adopt burst-inflated minima.
-    val LoadCeiling = cpus.toInt * 1.5
-    var lastProbeBad = false
-    def hotNow(): Boolean = {
-      val load = osBean.getSystemLoadAverage
-      if (!lastProbeBad && load <= LoadCeiling) false
-      else {
-        val p = probeCanary()
-        canaryProbes += p
-        lastProbeBad = p < 0 || p > CanaryCeiling
-        if (lastProbeBad)
-          System.err.println(f"WARN: pre-query canary $p%.2fs at loadavg " +
-            f"$load%.1f — deferring to tail queue")
-        lastProbeBad
-      }
-    }
-    val deferredLoad = scala.collection.mutable.ArrayBuffer[String]()
-    var scheduledBad = false
-    val merged = scala.collection.mutable.LinkedHashMap[String, Double]()
-    for (n <- names) {
-      // the canary itself never defers (it IS the probe), and the
-      // queue is bounded so a permanently-saturated box still times
-      // most of the suite (and gets flagged degraded at the tail)
-      if (n != CanaryName && deferredLoad.size < 64 && hotNow()) {
-        deferredLoad += n
-      } else {
-        merged(n) = timeQuery(n)
-        if (queriesDone % probeEvery == 0 && queriesDone < names.size) {
-          val p = probeCanary()
-          canaryProbes += p
-          if (p < 0 || p > CanaryCeiling) {
-            lastProbeBad = true
-            scheduledBad = true
-            System.err.println(f"WARN: mid-pass canary probe at $p%.2fs " +
-              f"after $queriesDone queries (ceiling $CanaryCeiling%.1fs)")
-          }
-        }
-      }
-    }
-    // tail: the burst has usually moved on — time the deferred
-    // queries now, then flag the pass if the tail itself is still hot
-    var tailStillHot = false
-    if (deferredLoad.nonEmpty) {
-      val p = probeCanary(); canaryProbes += p
-      tailStillHot = p < 0 || p > CanaryCeiling
-      System.err.println(s"NOTE: timing ${deferredLoad.size} load-deferred " +
-        f"queries at tail (canary $p%.2fs)")
-      for (n <- deferredLoad) merged(n) = timeQuery(n)
-    }
-    var canary = if (errors.contains(CanaryName)) -1.0 else probeCanary()
-    // Remediation trigger: a burst the deferral machinery HANDLED
-    // (bad hotNow probe → queries deferred to a clean tail) does not
-    // by itself force a full re-run — queries timed during the burst
-    // ONSET are caught by the 3×-floor suspects retry below. What
-    // does force it: the tail itself still hot after deferral
-    // (tailStillHot), a bad SCHEDULED probe with the deferral never
-    // engaging (a canary-visible burst the load gate missed — the
-    // pre-deferral round-13 condition), or the closing canary bad.
-    val probeBad = tailStillHot || (scheduledBad && deferredLoad.isEmpty)
-    var degraded = false
-    if (canary < 0 || canary > CanaryCeiling || probeBad ||
-        merged.get(CanaryName).exists(t => t > CanaryCeiling)) {
-      if (elapsed() < budgetSec * 1.1) {
-        System.err.println(f"WARN: canary $CanaryName at $canary%.2fs / " +
-          s"probes ${canaryProbes.map(p => f"$p%.2f").mkString(",")} " +
-          f"(ceiling $CanaryCeiling%.1fs) — degraded pass suspected; re-running")
-        for (n <- names if merged(n) >= 0) {
-          val t2 = try runOnce(SparkEntry.queries(n)) catch { case _: Throwable => merged(n) }
-          merged(n) = math.min(merged(n), t2)
-        }
-        canary = probeCanary()
-        degraded = canary < 0 || canary > CanaryCeiling
-      } else {
-        // no budget for the rerun — the record is suspect and must SAY
-        // so (round 9's silent-clean path). Numbers stay as measured;
-        // the flag tells the grader not to trust them.
-        System.err.println("WARN: canary failed and budget forbids rerun — " +
-          "recording degraded=true")
-        degraded = true
-      }
-    }
-
-    // Timeout insurance for the retry phase below: the full per-query
-    // record is emitted BEFORE the retries, marked provisional, so a
-    // harness kill inside the retry slice loses only the refinement,
-    // never the round. The final (unmarked) emission below supersedes
-    // it; scrapers take the LAST metric line.
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    locally {
-      val qs0 = names.map(n => s"${jstr(n)}:${merged(n)}").mkString("{", ",", "}")
-      val tot0 = names.collect { case n if merged(n) >= 0 => merged(n) }.sum
-      println(s"""{"metric":"total","value":$tot0,"unit":"sec","queries":$qs0,"sf":"$sfDir","iters":$iters,"failed":${errors.size},"provisional":true,"wall":${elapsed()}}""")
-      System.out.flush()
-    }
-
-    // Deferred outlier retry: a co-tenant CPU burst can span ALL of a
-    // query's iterations (observed: one clean run recorded 0.55 s for
-    // a query, the next 3.14 s with every iteration slow) — per-query
-    // min-of-N can't see past a burst longer than its own window, but
-    // by the END of the pass the burst has usually moved on. Any query
-    // whose fresh min exceeds 2× its previous recorded value (AND is
-    // at least 0.15 s absolute over it — a 2× trip on a 50 ms floor
-    // is noise, not a spike, and must not burn a retry slot) gets a
-    // deferred re-time, minima merged — a re-MEASUREMENT, never a
-    // clamp, so a genuine regression survives (its retry confirms the
-    // slow time).
-    // Two waves, 48 slots total. Round-15/16 recalibration: the 3×
-    // threshold let three 2.2–2.4× outliers into the official record
-    // untouched (the gate the grader reads is 2×, so the retry
-    // trigger must match it). And the retry phase gets a DEDICATED
-    // 90 s wall slice measured from where it starts, NOT a fraction
-    // of the budget: the r15 driver pass and the first r16 local
-    // pass both ended their main sweeps already past every budget
-    // multiple (232 queries × warmup+2 runs simply exceeds any
-    // plausible budget), so an `elapsed() < budget*k` gate silently
-    // skipped every retry exactly when they mattered most. A
-    // provisional JSON line is emitted just above, so even a harness
-    // kill during this phase cannot lose the round's numbers — the
-    // 90 s slice is bounded-risk, high-value.
     val retryDeadline = elapsed() + 90.0
     var retryBudget = 48
-    def suspect(n: String): Boolean = merged(n) >= 0 &&
-      prevTimes.get(n).exists(p => p > 0 && merged(n) > 2 * p &&
-        merged(n) - p > 0.15)
+    def suspect(n: String): Boolean = floors.get(n).exists(over2x(merged(n), _, 1.0))
     for (wave <- 1 to 2) {
       val suspects = names.filter(suspect).take(retryBudget)
       retryBudget -= suspects.size
       for (n <- suspects if elapsed() < retryDeadline) {
-        System.err.println(f"NOTE: ${n} at ${merged(n)}%.2fs > 2x previous " +
-          f"${prevTimes(n)}%.2fs — deferred re-time (wave $wave)")
+        System.err.println(f"NOTE: $n at ${merged(n)}%.2fs > 2x floor " +
+          f"${floors(n)}%.2fs — deferred re-time (wave $wave)")
         val t2 = timeQuery(n)
         if (t2 >= 0) merged(n) = math.min(merged(n), t2)
         else errors.remove(n) // first pass succeeded; a flaky retry is not a failure
       }
     }
-    // Self-adjudication (round-16): list every query whose FINAL value
-    // still exceeds 2× its committed historical floor, with its ratio
-    // and this pass's median — the grader's 2×-gate audit reads
-    // straight from the artifact instead of cross-joining three files.
-    // A non-empty list after the retry waves means either a genuine
-    // regression (median also high) or a burst that outlived both
-    // waves (median ~floor). A def, not a val: the temporally-spaced
-    // re-time below (round-17) shrinks it after the dump slice.
-    // Host-normalization of the 2× gate (round-18, judge r17 item 4):
-    // committed floors are minima over every protocol host this repo
-    // ever ran on, so a floor seeded on a transiently fast host (q205:
-    // 0.452 s vs committed median 0.644) flags a healthy query every
-    // round on a normal host. The whole SUITE is its own canary: the
-    // 25th percentile of this pass's value/floor ratios measures how
-    // this host+pass sits against the floor-seeding host (a uniform
-    // host-speed delta shifts every ratio; a co-tenant burst shifts a
-    // contiguous subset and the low quantile shrugs it off), and the
-    // gate compares against floor × that factor, clamped to [1, 2] —
-    // never tighter than the raw floor, never looser than doubling
-    // it. Recorded as host_scale in the artifact for adjudication.
-    def hostScaleNow(): Double = {
-      val ratios = names.flatMap { n =>
-        for {
-          f <- floorFile.get(n) if f > 0.05 // micro-floors are pure noise
-          v <- merged.get(n) if v > 0
-        } yield v / f
-      }.sorted
-      if (ratios.size < 20) 1.0 // subset/debug runs: raw floors
-      else math.min(2.0, math.max(1.0, ratios(ratios.size / 4)))
-    }
-    def over2xNow(): Seq[(String, Double)] = {
-      val hs = hostScaleNow()
-      names.flatMap { n =>
-        for {
-          f <- floorFile.get(n) if f > 0
-          v <- merged.get(n) if v > 2 * f * hs && v - f > 0.15
-        } yield (n, v / f)
-      }
-    }
-    def totalNow(): Double =
-      names.collect { case n if merged(n) >= 0 => merged(n) }.sum
 
-    // per-pass medians + variance (med/min): the floors record the
-    // best case; the median records the TYPICAL run of this pass and
-    // the ratio exposes warm-up/variance structure the min hides
-    def medianOf(ts: Vector[Double]): Double = {
+    val total = names.map(merged).filter(_ >= 0).sum
+    val hs = hostScale(merged, floors)
+    val over = names.flatMap(n => floors.get(n).filter(over2x(merged(n), _, hs)).map(n -> merged(n) / _))
+    val meds = times.map { case (n, ts) =>
       val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+      n -> (if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0)
     }
-    def medByQuery: collection.Map[String, Double] =
-      timesByQuery.map { case (k, ts) => k -> medianOf(ts) }
-
-    // Floor updates qualify only at the protocol shape — see
-    // updateFloors below for why.
-    val protocolRun = sfDir.contains("sf0.1") && only.isEmpty &&
-      spark.sparkContext.defaultParallelism == 32
-
-    // Full-record emit + committed-floor update, re-runnable: called
-    // once right after the retry waves (the record must be out before
-    // any post-processing, so a harness timeout landing during the
-    // plan dump or shutdown cannot lose the round's numbers) and
-    // again after the spaced re-time refines the minima.
-    def emitRecord(): Unit = {
-      val results = names.map(n => n -> merged(n))
-      val qs = results.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-      val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-      val probesJson = canaryProbes.mkString("[", ",", "]")
-      val gcJson = names.flatMap(n => gcMsByQuery.get(n).map(v => s"${jstr(n)}:$v"))
-        .mkString("{", ",", "}")
-      val heapJson = names.flatMap(n => heapMbByQuery.get(n).map(v => s"${jstr(n)}:$v"))
-        .mkString("{", ",", "}")
-      val runsJson = names.flatMap(n => runsByQuery.get(n).map(v => s"${jstr(n)}:$v"))
-        .mkString("{", ",", "}")
-      val loadJson = names.flatMap(n => loadByQuery.get(n).map(v => f"${jstr(n)}:$v%.1f"))
-        .mkString("{", ",", "}")
-      val meds = medByQuery
-      val medJson = names.flatMap(n => meds.get(n).map(v => f"${jstr(n)}:$v%.4f"))
-        .mkString("{", ",", "}")
-      val varJson = names.flatMap(n => for {
-        med <- meds.get(n); mn <- merged.get(n) if mn > 0
-      } yield f"${jstr(n)}:${med / mn}%.2f").mkString("{", ",", "}")
-      val over2xJson = over2xNow().map { case (k, r) => f"${jstr(k)}:$r%.2f" }
-        .mkString("{", ",", "}")
-      val json = s"""{"metric":"total","value":${totalNow()},"unit":"sec","queries":$qs,"sf":"$sfDir","iters":$iters,"failed":${errors.size},"errors":$errs,"canary":$canary,"canary_probes":$probesJson,"degraded":$degraded,"codecache_ok":$codeCacheOk,"deferred":${deferredLoad.size},"gc_ms":$gcJson,"heap_mb":$heapJson,"runs":$runsJson,"loadavg":$loadJson,"med":$medJson,"var":$varJson,"host_scale":${f"${hostScaleNow()}%.3f"},"over2x":$over2xJson,"wall":${elapsed()}}"""
-      println(json)
-      System.out.flush()
-      // also persist the full JSON: a scraped log tail can truncate the
-      // (long) queries map and silently drop per-query entries
-      try Files.writeString(Paths.get("bench_last.json"), json + "\n")
-      catch { case _: Throwable => () }
-      // …and a PER-CORE-COUNT copy (round-19, judge r18 item 2): the
-      // driver benches at two core counts back-to-back and each pass
-      // overwrites bench_last.json, so the 8-core pass clobbered the
-      // 32-core per-query detail and PERF_r18.per_query/scaling came
-      // out empty. The per-query map cannot ride the compact line (the
-      // harness scrapes a 2000-char log tail; a 6 KB line arrives
-      // front-truncated and the round parses null — the r13 failure),
-      // so each pass persists its full record under a core-count-keyed
-      // name that the next pass cannot clobber. Additions-only.
-      try Files.writeString(Paths.get(s"bench_last_c$cpus.json"), json + "\n")
-      catch { case _: Throwable => () }
-      updateFloors()
-    }
-    // update the committed historical-floor file: per-query minimum
-    // over every clean (non-degraded) run ever recorded — the retry
-    // reference that a one-round driver spike cannot poison. Only
-    // FULL-SUITE runs at the protocol scale factor qualify: an
-    // sf0.01 iteration run or a BENCH_ONLY subset run must not write
-    // sub-protocol minima into the floor file (a too-low floor makes
-    // every subsequent protocol run "suspect" and burns its retry
-    // budget on healthy queries).
-    // …and only at the protocol host shape (round-13 advice): a
-    // full-suite sf0.1 pass on a wider/faster host would min-merge
-    // lower floors, making every healthy query "suspect" on later
-    // 32-thread protocol runs and burning the retry budget — the
-    // exact trap the floors file exists to prevent (protocolRun,
-    // defined above emitRecord).
-    def updateFloors(): Unit = if (!degraded && protocolRun) try {
-      val updated = (floorFile.keySet ++ merged.keySet).toSeq.sorted.flatMap { k =>
-        val cur = merged.get(k).filter(_ > 0)
-        val old = floorFile.get(k)
-        (cur, old) match {
-          case (Some(c), Some(o)) => Some(k -> math.min(c, o))
-          case (Some(c), None)    => Some(k -> c)
-          case (None, Some(o))    => Some(k -> o)
-          case _                  => None
-        }
-      }
-      val floorsJson = updated.map { case (k, v) => s"${jstr(k)}:$v" }
-        .mkString("{\n", ",\n", "\n}\n")
-      Files.writeString(Paths.get("bench_floors.json"), floorsJson)
-      // medians alongside the floors (judge r14 item 3): min-merge of
-      // per-pass medians across clean protocol passes — "the best
-      // TYPICAL pass each query has shown". committed/bench_medians
-      // ÷ bench_floors is the per-query variance an anchor audit
-      // needs: a ratio ≫1 marks a warm-up-dominated query whose
-      // single-pass numbers will legitimately sit above its floor.
-      val medFile = readTimes("bench_medians.json")
-      val meds = medByQuery
-      val updatedMed = (medFile.keySet ++ meds.keySet).toSeq.sorted
-        .flatMap { k =>
-          (meds.get(k).filter(_ > 0), medFile.get(k)) match {
-            case (Some(c), Some(o)) => Some(k -> math.min(c, o))
-            case (Some(c), None)    => Some(k -> c)
-            case (None, Some(o))    => Some(k -> o)
-            case _                  => None
-          }
-        }
-      val medsJson = updatedMed.map { case (k, v) => f"${jstr(k)}:$v%.4f" }
-        .mkString("{\n", ",\n", "\n}\n")
-      Files.writeString(Paths.get("bench_medians.json"), medsJson)
-    } catch { case _: Throwable => () }
-    emitRecord()
-
-    // The compact one-line summary the harness parses (see the final
-    // emit below for why it must be the LAST line). Emitted ONCE HERE,
-    // BEFORE the dump phase, as kill insurance: the dump loop logs
-    // ~4 KB of WARNs on a full suite, so a harness timeout landing
-    // inside it would leave a 2000-char scrape tail of pure log spam
-    // and the round would parse null (the r13 failure mode
-    // re-introduced by the dedicated dump slice). Logging drops to
-    // ERROR for the dump phase so, on a kill, this line is still the
-    // tail's last parseable line.
-    def compactLine(): String = {
-      val loadMax = names.flatMap(loadByQuery.get).foldLeft(0.0)(math.max)
-      val probesMax = canaryProbes.foldLeft(0.0)(math.max)
-      val floorsTotal = readTimes("bench_floors.json").values.sum
-      s"""{"metric":"total","value":${totalNow()},"unit":"sec","sf":"$sfDir","n":${names.size},"iters":$iters,"failed":${errors.size},"canary":$canary,"canary_probes_max":$probesMax,"degraded":$degraded,"codecache_ok":$codeCacheOk,"deferred":${deferredLoad.size},"loadavg_max":$loadMax,"floors_total":$floorsTotal,"host_scale":${f"${hostScaleNow()}%.3f"},"over2x":${over2xNow().size},"wall":${elapsed()},"detail":"bench_last.json","detail_c":"bench_last_c$cpus.json"}"""
-    }
-    println(compactLine())
+    def perQuery[V](m: collection.Map[String, V])(fmt: V => String): String =
+      names.flatMap(n => m.get(n).map(v => s"${jstr(n)}:${fmt(v)}")).mkString("{", ",", "}")
+    val vars = meds.collect { case (n, med) if merged(n) > 0 => n -> med / merged(n) }
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${perQuery(merged)(_.toString)},"sf":"$sfDir","iters":$iters,"failed":${errors.size},"errors":${perQuery(errors)(jstr)},"codecache_ok":$codeCacheOk,"gc_ms":${perQuery(gcMs)(_.toString)},"heap_mb":${perQuery(heapMb)(_.toString)},"runs":${perQuery(runs)(_.toString)},"loadavg":${perQuery(load)(v => f"$v%.1f")},"med":${perQuery(meds)(v => f"$v%.4f")},"var":${perQuery(vars)(v => f"$v%.2f")},"host_scale":${f"$hs%.3f"},"over2x":${perQuery(over.toMap)(v => f"$v%.2f")},"wall":${elapsed()}}"""
+    println(json)
     System.out.flush()
-    spark.sparkContext.setLogLevel("ERROR")
-    val tDumpStart = elapsed() // spacing anchor for the over2x re-time
+    try writeRecord(dir, json, cpus, protocolRun)
+    catch { case e: Throwable => System.err.println(s"WARN: bench record not written: $e") }
+    if (protocolRun) try {
+      writeTimes(dir.resolve("bench_floors.json"), minMerge(floors, merged))(_.toString)
+      val medPath = dir.resolve("bench_medians.json")
+      writeTimes(medPath, minMerge(readTimes(medPath), meds))(v => f"$v%.4f")
+    } catch { case e: Throwable => System.err.println(s"WARN: floors not updated: $e") }
 
-    // formatted-plan dump for scale audit. NOT free: building a
-    // query's DataFrame runs its driver-side prep (q103 writes its
-    // at-rest corpus, q106 walks the GPKG b-tree, …), so the round-8
-    // timeout actually landed HERE, after the JSON was already out.
-    // The clock is checked per query, stopping at 1.2× budget.
-    try {
-      Files.createDirectories(Paths.get("plans"))
-      // protocol runs only: an sf0.01 / subset iteration run would
-      // overwrite the committed sf0.1 plan dumps with different
-      // scan stats and churn the git diff. Some dumps are also
-      // host-shape-sensitive by design (dsirWeight's conditional
-      // pre-kernel spread reads core count × scan layout at plan
-      // time — TextAnalysis.dsirWeight), so q128-family dumps only
-      // compare like-for-like across local[32] protocol hosts.
-      // Dedicated slice, like the retry phase (round-16): the old
-      // `elapsed() < budgetSec * 1.2` gate starved the dump loop on
-      // every pass whose main sweep ran long — which at 239 queries
-      // is all of them — so new queries never got a first dump and
-      // refreshes silently stopped. The JSON record is already out;
-      // this phase is bounded-risk. BUT the harness's outer kill
-      // threshold is unknown (bounded below by r14's 603 s survival),
-      // so under an unknown-budget run the slice only OPENS if the
-      // sweep finished with headroom (elapsed < 1.35× budget) —
-      // committed dumps come from local passes, which force the phase
-      // with SPARK_GRAFT_DUMP_PLANS=1; =0 disables it outright.
-      val dumpMode = sys.env.getOrElse("SPARK_GRAFT_DUMP_PLANS", "")
-      val dumpOpen = dumpMode match {
-        case "1" => true
-        case "0" => false
-        case _   => elapsed() < budgetSec * 1.35
-      }
-      // ADVICE r16: the 150 s deadline exists for the DRIVER's
-      // unknown outer kill timeout; a forced local refresh
-      // (SPARK_GRAFT_DUMP_PLANS=1) is an explicit opt-in that must
-      // cover every query or new queries at the alphabet tail never
-      // get a first dump — exempt it, and when the deadline does
-      // fire, SAY how many dumps were skipped
-      val dumpDeadline =
-        if (dumpMode == "1") Double.MaxValue else elapsed() + 150.0
-      var dumpsSkipped = 0
-      for (name <- names if protocolRun && dumpOpen) {
-        if (elapsed() >= dumpDeadline) dumpsSkipped += 1
-        // scoped: building a DataFrame runs eager localCheckpoints
-        // (LSH signature tables, q174 seeds) — release them per dump
-        // or 174 builds accumulate blocks nothing will ever read
-        else try graft.core.Materialize.scoped(spark) {
-          val plan = SparkEntry.queries(name)(spark, sfDir)
-            .queryExecution.explainString(ExplainMode.fromString("formatted"))
-          Files.writeString(Paths.get(s"plans/$name.txt"), plan)
-        } catch { case _: Throwable => () }
-      }
-      if (dumpsSkipped > 0)
-        System.err.println(s"WARN: plan-dump deadline fired — " +
-          s"$dumpsSkipped of ${names.size} dumps skipped this pass")
-    } catch { case _: Throwable => () }
-    // Temporally-spaced over2x re-time (round-17, judge r16 item 1):
-    // the deferred-retry waves run seconds after a co-tenant burst
-    // begins, so they re-measure INSIDE it (BENCH_r16: deferred=17,
-    // q22 timed 6×, still 2.2×). Bursts are transient — the plan-dump
-    // slice above put minutes between the waves and now — so every
-    // query STILL over 2× its committed floor gets one final
-    // re-measurement here, minima merged (a re-MEASUREMENT, never a
-    // clamp: a genuine regression survives, and its entry carries
-    // this moment's loadavg so a survivor is adjudicable from the
-    // artifact alone). If the dump slice was skipped or fast, a
-    // bounded idle wait supplies the spacing (the provisional record
-    // is already out, so the wait risks only refinement).
-    locally {
-      // protocol runs only (code-review r17): off-protocol runs
-      // (subset, other thread counts, sf0.01) sit above the 32-thread
-      // sf0.1 floors by host shape alone — re-timing them against
-      // those floors would burn minutes of dead wall per debug cycle
-      // and min-merge nothing (updateFloors is off-protocol-gated too)
-      val spaced = if (protocolRun) over2xNow().map(_._1) else Seq.empty
-      if (spaced.nonEmpty) {
-        val sinceSweep = elapsed() - tDumpStart
-        val waitLeft = 60.0 - sinceSweep
-        if (waitLeft > 0) {
-          System.err.println(f"NOTE: spacing ${waitLeft}%.0f s before the " +
-            s"over2x re-time (dump slice was fast/skipped)")
-          Thread.sleep((waitLeft * 1000).toLong)
-        }
-        System.err.println(s"NOTE: temporally-spaced re-time of " +
-          s"${spaced.size} over-2x queries: ${spaced.mkString(",")}")
-        val spacedDeadline = elapsed() + 120.0
-        for (n <- spaced if elapsed() < spacedDeadline) {
-          val t2 = timeQuery(n)
-          if (t2 >= 0) merged(n) = math.min(merged(n), t2)
-          else errors.remove(n) // first pass succeeded; a flaky retry is not a failure
-        }
-        emitRecord() // refresh bench_last + floors with the spaced minima
-        val still = over2xNow()
-        if (still.nonEmpty)
-          System.err.println(s"NOTE: over2x after spaced re-time: " +
-            still.map { case (n, r) => f"$n=$r%.2fx@load${loadByQuery(n)}%.1f" }
-              .mkString(","))
-      }
-    }
+    if (protocolRun && Session.dumpPlans)
+      for (n <- names)
+        try Session.dumpPlan(spark, n)(SparkEntry.queries(n)(spark, sfDir))
+        catch { case _: Throwable => () }
+
     spark.stop()
-    // Re-emit a summary as the FINAL stdout line — but COMPACT
-    // (round-14 fix, judge item #1): the round-13 final line was the
-    // full ~5 KB per-query record, and the harness scrapes only the
-    // last ~2000 characters of the log, so the line arrived
-    // front-truncated and BENCH_r13 still parsed null (rounds 1-12
-    // failed earlier for WARN-spam reasons; r13 for length). The
-    // final line therefore carries totals and health flags only —
-    // well under the scrape window — while the per-query map lives in
-    // the early full emit above and in `bench_last.json`. With spark
-    // stopped, nothing can log after this line.
-    println(compactLine())
+    val floorsTotal = readTimes(dir.resolve("bench_floors.json")).values.sum
+    val detail = if (protocolRun) "bench_last.json" else s"bench_last_c$cpus.json"
+    // the LAST stdout line; with spark stopped, nothing logs after it
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n":${names.size},"iters":$iters,"failed":${errors.size},"codecache_ok":$codeCacheOk,"loadavg_max":${load.values.foldLeft(0.0)(math.max)},"floors_total":$floorsTotal,"host_scale":${f"$hs%.3f"},"over2x":${over.size},"wall":${elapsed()},"detail":"$detail","detail_c":"bench_last_c$cpus.json"}""")
     System.out.flush()
     // local[n] leaves no work behind; exit promptly rather than wait
-    // out lingering non-daemon threads under a ticking harness timeout
+    // out lingering non-daemon threads (the REST stub's dispatcher)
     sys.exit(0)
   }
 }

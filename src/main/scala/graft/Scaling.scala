@@ -206,17 +206,9 @@ object Scaling {
 
     // ONE measurement body for every tier (LLM and raster — two
     // copies would let a future measurement-discipline change skew
-    // one family's slopes against the other's): warmup + min-of-2,
-    // noop write action, checkpoint release outside the timed window
+    // one family's slopes against the other's): warmup + min-of-2
     def timeRun(build: () => DataFrame): Double = {
-      def once(): Double = {
-        val keep = graft.core.Materialize.liveIds(spark)
-        val t0 = System.nanoTime()
-        build().write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.core.Materialize.releaseAll(spark, keep)
-        dt
-      }
+      def once(): Double = Session.timeRun(spark)(build()).seconds
       once() // warmup: JIT + at-rest ingest (excluded from the min)
       math.min(once(), once())
     }

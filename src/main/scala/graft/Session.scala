@@ -1,9 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
+import graft.core.Materialize
 
 /** The one session every runner (Bench, TimeOne, Verify, Scaling, the
-  * CLI) builds.
+  * CLI) builds, and the one timed-run and plan-dump body the timing
+  * runners (Bench, TimeOne, Scaling) share.
   */
 object Session {
 
@@ -26,4 +33,43 @@ object Session {
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     spark
   }
+
+  /** One timed run: wall seconds and the Janino compiles it made. */
+  final case class Run(seconds: Double, compiles: Long)
+
+  /** Times building `df` plus a `noop`-format write. Unlike `count()`,
+    * the write executes the full plan (EliminateSorts drops terminal
+    * sorts under a count, and limits short-circuit it). The RDDs the
+    * run pins (LSH signature tables, inverted indexes, winnowing
+    * fingerprints) are released after the clock stops: left in a
+    * long-lived session they accumulate until memory pressure evicts
+    * live checkpoints mid-query and their subtrees replay.
+    */
+  def timeRun(spark: SparkSession)(df: => DataFrame): Run = {
+    val keep = Materialize.liveIds(spark)
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    val dt = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    Materialize.releaseAll(spark, keep)
+    Run(dt, compiles)
+  }
+
+  /** `SPARK_GRAFT_DUMP_PLANS=1` makes Bench and TimeOne write formatted
+    * plans to `plans/`; any other value or none writes nothing.
+    */
+  def dumpPlans: Boolean = sys.env.get("SPARK_GRAFT_DUMP_PLANS").contains("1")
+
+  /** Writes `df`'s formatted plan to `plans/<name>.txt`. Building a
+    * frame can run eager checkpoints, so the pins it leaves are
+    * released.
+    */
+  def dumpPlan(spark: SparkSession, name: String)(df: => DataFrame): Unit =
+    Materialize.scoped(spark) {
+      Files.createDirectories(Paths.get("plans"))
+      Files.writeString(Paths.get(s"plans/$name.txt"),
+        df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      ()
+    }
 }

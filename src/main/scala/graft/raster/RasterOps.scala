@@ -36,8 +36,12 @@ object RasterOps {
     * polygon ring, given in geo coordinates (`cropToCutline`,
     * `gdalos_trans.py:415-422`; ring→mask `viewshed_calc.py:148-177`).
     * Two-stage: a coarse bbox range predicate (pushed to the scan —
-    * the R3 pushdown) then the exact unrolled point-in-polygon test,
-    * both whole-stage-codegen.
+    * the R3 pushdown) then the exact point-in-polygon test, both
+    * whole-stage-codegen. The exact test calls [[Geometry.pointInPolygon]]
+    * once per pixel center: the unrolled column form repeats both
+    * center expressions in every edge, and for a 50-vertex sector
+    * ring the filter's generated method outgrows the JVM's 64 KB
+    * limit, so Janino refuses the stage.
     */
   def cutline(df: DataFrame, gt: GeoTransform, w: Int, h: Int,
               ringGeo: Seq[(Double, Double)]): DataFrame = {
@@ -48,14 +52,15 @@ object RasterOps {
     // pixel-center geo coordinates (gdalos_extent.py:13-29: center at +0.5)
     val cx = lit(gt.c0) + (col("px") + 0.5) * gt.c1 + (col("py") + 0.5) * gt.c2
     val cy = lit(gt.c3) + (col("px") + 0.5) * gt.c4 + (col("py") + 0.5) * gt.c5
-    coarse.filter(Geometry.pointInPolygonCol(cx, cy, ringGeo))
+    val inside = udf((x: Double, y: Double) => Geometry.pointInPolygon(x, y, ringGeo))
+    coarse.filter(inside(cx, cy))
   }
 
   /** Vector→raster burn (`gdalos_rasterize.py:84-123`): pixels whose
     * centers fall inside the geo-space ring take `burnValue`; all
-    * others keep their value. Same two-stage predicate as [[cutline]]
-    * (coarse bbox comparisons guard the unrolled point-in-polygon
-    * test, all whole-stage codegen) but as a value REWRITE, not a
+    * others keep their value. The same two stages as [[cutline]]
+    * (coarse bbox comparisons guard the exact point-in-polygon test,
+    * here the unrolled column form) but as a value REWRITE, not a
     * filter — the burn composes with any pixel frame, so a fresh
     * canvas is just `PixelFrame.constant` input. Embarrassingly
     * parallel: no shuffle, no driver geometry.
