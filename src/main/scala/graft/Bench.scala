@@ -16,10 +16,10 @@ import scala.jdk.CollectionConverters._
   * its message in `errors`; it is not swallowed.
   *
   * After the sweep, two retry waves (48 slots in a 90 s slice) re-time
-  * every query over 2× its committed floor in `bench_floors.json` and
-  * min-merge the result. A co-tenant burst can span all of one query's
-  * runs but has usually passed by the end of the sweep; a genuine
-  * regression survives its re-measurement.
+  * the queries the gate would flag, worst ratio to their floor first,
+  * and min-merge the result. A co-tenant burst can span all of one
+  * query's runs but has usually passed by the end of the sweep; a
+  * genuine regression survives its re-measurement.
   *
   * The full record prints once, after the retries. Per query it holds
   * the minimum, `gc_ms` (stop-the-world GC across the query's runs),
@@ -40,7 +40,6 @@ object Bench {
 
   /** `v` is over 2× its floor `f` scaled by `hostScale`, and more than
     * 0.15 s over `f`: a 2× trip on a 50 ms floor is noise, not a spike.
-    * The retry waves use a scale of 1.
     */
   def over2x(v: Double, f: Double, hostScale: Double): Boolean =
     f > 0 && v > 2 * f * hostScale && v - f > 0.15
@@ -58,6 +57,15 @@ object Bench {
     }.sorted
     if (ratios.size < 20) 1.0 else math.min(2.0, math.max(1.0, ratios(ratios.size / 4)))
   }
+
+  /** The queries [[over2x]] their floor at `hostScale`, the gate's own
+    * threshold, worst value/floor ratio first: what a retry wave re-times.
+    */
+  def retrySuspects(values: collection.Map[String, Double], floors: Map[String, Double],
+                    hostScale: Double): Seq[String] =
+    values.toSeq.flatMap { case (n, v) =>
+      floors.get(n).filter(over2x(v, _, hostScale)).map(f => (n, v / f))
+    }.sortBy { case (n, r) => (-r, n) }.map(_._1)
 
   /** Per-query minimum of `old` and `cur`: no entry rises, entries
     * absent from `cur` stay, new ones join. Non-positive `cur` entries
@@ -177,13 +185,13 @@ object Bench {
 
     val retryDeadline = elapsed() + 90.0
     var retryBudget = 48
-    def suspect(n: String): Boolean = floors.get(n).exists(over2x(merged(n), _, 1.0))
+    val sweepScale = hostScale(merged, floors)
     for (wave <- 1 to 2) {
-      val suspects = names.filter(suspect).take(retryBudget)
+      val suspects = retrySuspects(merged, floors, sweepScale).take(retryBudget)
       retryBudget -= suspects.size
       for (n <- suspects if elapsed() < retryDeadline) {
         System.err.println(f"NOTE: $n at ${merged(n)}%.2fs > 2x floor " +
-          f"${floors(n)}%.2fs — deferred re-time (wave $wave)")
+          f"${floors(n)}%.2fs x host_scale $sweepScale%.3f — deferred re-time (wave $wave)")
         val t2 = timeQuery(n)
         if (t2 >= 0) merged(n) = math.min(merged(n), t2)
         else errors.remove(n) // first pass succeeded; a flaky retry is not a failure

@@ -1,8 +1,9 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.TopK
 
 /** Catalog / mosaic / routing operators (SURVEY §2 A4/A5, C5, C8, F1,
   * G2/G3) over a raster-catalog DataFrame
@@ -84,11 +85,9 @@ object Catalog {
         .cast("double"))
       .withColumn("center", col("zone") * 6 - 183)
       .select(col("rid"), col("path"), col("center"))
-    val w = Window.partitionBy("point_id")
-      .orderBy(abs(col("x") - col("center")), col("rid"))
     points.crossJoin(broadcast(centers))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+      .transform(TopK.per(Seq("point_id"), Seq(abs(col("x") - col("center")), col("rid")),
+        1, "rn"))
       .drop("rn")
   }
 

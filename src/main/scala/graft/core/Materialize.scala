@@ -38,7 +38,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Materialize {
 
-  /** Ids of every RDD currently holding block-manager state. */
+  /** Ids of the persisted RDDs the driver still references: an
+    * undercount, as `getPersistentRDDs` holds RDDs weakly and a pin the
+    * GC dropped goes unlisted (an exact count is ROADMAP item 5a).
+    */
   def liveIds(spark: SparkSession): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 

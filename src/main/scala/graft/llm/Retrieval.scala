@@ -3,11 +3,10 @@ package graft.llm
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.core.Materialize
+import graft.core.{Materialize, TopK}
 import graft.functions.GraftFunctions.md5Prefix60Col
 
 /** Lexical (keyword) retrieval over a document corpus — the BM25-family
@@ -162,22 +161,31 @@ object Retrieval {
     val terms = qterms.collect().map(_.getString(1)).distinct.toSeq
     val dft = tf.filter(col("s").isin(terms: _*))
       .groupBy("s").agg(count(lit(1)).as("df"))
-    val denom = col("tf") + lit(k1) *
-      (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))
-    val contrib = col("idf") * (col("tf") * (lit(k1) + lit(1.0))) / denom
-    val w = Window.partitionBy("qid").orderBy(col("score_fp").desc, col("id"))
-    tf.join(broadcast(qterms), "s")
+    val matched = tf.join(broadcast(qterms), "s")
       .join(dl, "id")
       .join(broadcast(dft), "s")
       .crossJoin(broadcast(g))
-      .withColumn("avgdl", col("tot_tokens").cast("double") / col("n_docs"))
-      .withColumn("idf",
-        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+    bm25Rank(matched, col("n_docs"), col("tot_tokens").cast("double") / col("n_docs"),
+      k, k1, b)
+  }
+
+  /** The BM25 score-and-rank tail of [[bm25TopKBatch]] and
+    * [[bm25ProbeAtRest]] over matched (qid, s, id, tf, dl, df) rows.
+    * The corpus statistics are columns of a joined aggregate in the
+    * batch form and literals at rest.
+    */
+  private def bm25Rank(matched: DataFrame, nDocs: Column, avgdl: Column,
+                       k: Int, k1: Double, b: Double): DataFrame = {
+    val denom = col("tf") + lit(k1) *
+      (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))
+    val contrib = col("idf") * (col("tf") * (lit(k1) + lit(1.0))) / denom
+    matched
+      .withColumn("avgdl", avgdl)
+      .withColumn("idf", (nDocs - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
       .withColumn("fp", floor(contrib * lit(1048576.0)).cast("long"))
       .groupBy("qid", "id")
       .agg(sum("fp").as("score_fp"), count(lit(1)).as("n_terms_hit"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(TopK.per(Seq("qid"), Seq(col("score_fp").desc, col("id")), k))
       .select(col("qid"), col("id"),
         (col("score_fp").cast("double") / lit(1048576.0)).as("score"),
         col("n_terms_hit"), col("rank"))
@@ -214,12 +222,10 @@ object Retrieval {
     require(k > 0 && k0 >= 0, s"need k > 0, k0 >= 0; got k=$k k0=$k0")
     val u = a.select(col("qid"), col("id"), col("rank"))
       .unionByName(b.select(col("qid"), col("id"), col("rank")))
-    val w = Window.partitionBy("qid").orderBy(col("rrf_fp").desc, col("id"))
     u.withColumn("fp", expr(s"1048576L div (cast(rank as bigint) + ${k0}L)"))
       .groupBy("qid", "id")
       .agg(sum("fp").as("rrf_fp"), count(lit(1)).as("n_lists"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(TopK.per(Seq("qid"), Seq(col("rrf_fp").desc, col("id")), k))
       .select(col("qid"), col("id"), col("rrf_fp"), col("n_lists"), col("rank"))
   }
 
@@ -567,23 +573,7 @@ object Retrieval {
         col("s").isin(terms: _*))
     val post = tomb.mask(scan)
     val dft = post.groupBy("s").agg(count(lit(1)).as("df"))
-    val denom = col("tf") + lit(k1) *
-      (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))
-    val contrib = col("idf") * (col("tf") * (lit(k1) + lit(1.0))) / denom
-    val w = Window.partitionBy("qid").orderBy(col("score_fp").desc, col("id"))
-    post
-      .join(broadcast(qt), "s")
-      .join(broadcast(dft), "s")
-      .withColumn("avgdl", lit(totTokens).cast("double") / lit(nDocs))
-      .withColumn("idf",
-        (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-      .withColumn("fp", floor(contrib * lit(1048576.0)).cast("long"))
-      .groupBy("qid", "id")
-      .agg(sum("fp").as("score_fp"), count(lit(1)).as("n_terms_hit"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("id"),
-        (col("score_fp").cast("double") / lit(1048576.0)).as("score"),
-        col("n_terms_hit"), col("rank"))
+    bm25Rank(post.join(broadcast(qt), "s").join(broadcast(dft), "s"),
+      lit(nDocs), lit(totTokens).cast("double") / lit(nDocs), k, k1, b)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Materialize
+import graft.core.{Materialize, TopK}
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`):
   * brute-force cosine top-k as the exact baseline, and a
@@ -57,14 +57,19 @@ object Similarity {
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val w = Window.partitionBy(qidCol).orderBy(col("cosine").desc, col(idCol))
-    emb.crossJoin(broadcast(queries))
-      .filter(col(idCol) =!= col(qidCol))
-      .withColumn("cosine", cosineCol(col(vecCol), col(qvecCol)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("cosine"), col("rank"))
+    cosineTopK(emb.crossJoin(broadcast(queries)), k, idCol, vecCol, qidCol, qvecCol)
   }
+
+  /** The tail of [[bruteTopKBatch]], [[lshTopKBatch]] and
+    * [[ivfTopKBatch]]: candidate pairs drop self matches and each query
+    * keeps its k best by cosine, ties to the lower id.
+    */
+  private def cosineTopK(cands: DataFrame, k: Int, idCol: String, vecCol: String,
+                         qidCol: String, qvecCol: String): DataFrame =
+    cands.filter(col(idCol) =!= col(qidCol))
+      .withColumn("cosine", cosineCol(col(vecCol), col(qvecCol)))
+      .transform(TopK.per(Seq(qidCol), Seq(col("cosine").desc, col(idCol)), k))
+      .select(col(qidCol), col(idCol), col("cosine"), col("rank"))
 
   /** Deterministic hyperplane weight for (plane j, dim i): an integer
     * LCG mapped to [−1000, 1000].
@@ -110,13 +115,8 @@ object Similarity {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val bucketed = emb.withColumn("bucket", bucketCol(col(vecCol), planes))
     val qBucketed = queries.withColumn("qbucket", bucketCol(col(qvecCol), planes))
-    bucketed.join(qBucketed, col("bucket") === col("qbucket"))
-      .filter(col(idCol) =!= col(qidCol))
-      .withColumn("cosine", cosineCol(col(vecCol), col(qvecCol)))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(qidCol).orderBy(col("cosine").desc, col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("cosine"), col("rank"))
+    cosineTopK(bucketed.join(qBucketed, col("bucket") === col("qbucket")),
+      k, idCol, vecCol, qidCol, qvecCol)
   }
 
   /** ANN recall audit — recall@k of the hyperplane-LSH index against
@@ -246,12 +246,10 @@ object Similarity {
                nprobe: Int = 2, coarseK: Int = 8,
                m: Int = 4, codeK: Int = 8, rounds: Int = 1): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val wT = Window.partitionBy("qid").orderBy(col("l2"), col("vec_id"))
     val truth = emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("l2", pqSqDist(col("embedding"), col("qvec")))
-      .withColumn("rank", row_number().over(wT))
-      .filter(col("rank") <= k)
+      .transform(TopK.per(Seq("qid"), Seq(col("l2"), col("vec_id")), k))
       .select("qid", "vec_id")
     val (pModel, pAssign) = pqCore(emb, m, codeK, rounds, "vec_id", "embedding")
     val (cModel, cAssign) = pqCore(emb, 1, coarseK, rounds, "vec_id", "embedding")
@@ -492,9 +490,7 @@ object Similarity {
     a.join(b, "bucket").filter(col("id_a") =!= col("id_b"))
       .withColumn("cosine",
         dotCol(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("id_a").orderBy(col("cosine").desc, col("id_b"))))
-      .filter(col("rank") <= k)
+      .transform(TopK.per(Seq("id_a"), Seq(col("cosine").desc, col("id_b")), k))
       .select(col("id_a").as("vec_id"), col("rank"),
         col("id_b").as("nbr_id"), col("cosine"))
   }
@@ -612,13 +608,8 @@ object Similarity {
       case Some(c) => emb.withColumn("cluster_c", col(c))
       case None    => emb.withColumn("cluster_c", assignCol(col(vecCol), model))
     }
-    assigned.join(probes, col("cluster_c") === col("probe_c"))
-      .filter(col(idCol) =!= col(qidCol))
-      .withColumn("cosine", cosineCol(col(vecCol), col(qvecCol)))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(qidCol).orderBy(col("cosine").desc, col(idCol))))
-      .filter(col("rank") <= topK)
-      .select(col(qidCol), col(idCol), col("cosine"), col("rank"))
+    cosineTopK(assigned.join(probes, col("cluster_c") === col("probe_c")),
+      topK, idCol, vecCol, qidCol, qvecCol)
   }
 
   /** Per-vector max-abs scale for symmetric int8 quantization. Exact:
@@ -687,7 +678,6 @@ object Similarity {
       .select(col("id"), col("q_codes"),
         aggregate(col("q_codes"), lit(0L),
           (a, c) => a + c.cast("long") * c.cast("long")).as("ss_c"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("id"))
     codes.crossJoin(broadcast(
         queries.select(col("qid").cast("long").as("qid"), col("qvec"))))
       .filter(col("id") =!= col("qid"))
@@ -700,8 +690,7 @@ object Similarity {
         when(col("ss_c") === 0L || col("ss_q") === 0.0, lit(0.0))
           .otherwise(col("dot")
             / (sqrt(col("ss_c").cast("double")) * sqrt(col("ss_q")))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+      .transform(TopK.per(Seq("qid"), Seq(col("cosine").desc, col("id")), topK))
       .select(col("qid"), col("id").as("vec_id"), col("cosine"), col("rank"))
   }
 
@@ -775,17 +764,14 @@ object Similarity {
       when(sa * sb === 0.0, lit(0.0))
         .otherwise(dotN(a, b, n) / (sqrt(sa) * sqrt(sb)))
     }
-    val w1 = Window.partitionBy("qid").orderBy(col("c_pre").desc, col("id"))
-    val w2 = Window.partitionBy("qid").orderBy(col("cosine").desc, col("id"))
     emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .crossJoin(broadcast(queries.select(col("qid").cast("long").as("qid"), col("qvec"))))
       .filter(col("id") =!= col("qid"))
       .withColumn("c_pre", cosN(col("v"), col("qvec"), prefixDim))
-      .withColumn("coarse_rank", row_number().over(w1))
-      .filter(col("coarse_rank") <= coarseK)
+      .transform(TopK.per(Seq("qid"), Seq(col("c_pre").desc, col("id")), coarseK,
+        "coarse_rank"))
       .withColumn("cosine", cosN(col("v"), col("qvec"), dim))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+      .transform(TopK.per(Seq("qid"), Seq(col("cosine").desc, col("id")), k))
       .select(col("qid"), col("id").as("vec_id"), col("cosine"),
         col("coarse_rank"), col("rank"))
   }
@@ -1109,9 +1095,7 @@ object Similarity {
   private def adcRank(scored: DataFrame, topK: Int): DataFrame =
     scored.groupBy(col("qid"), col("id"))
       .agg(sum(col("d_fp")).as("adc_fp"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc_fp"), col("id"))))
-      .filter(col("rank") <= topK)
+      .transform(TopK.per(Seq("qid"), Seq(col("adc_fp"), col("id")), topK))
       .select(col("qid"), col("id").as("vec_id"), col("adc_fp"),
         (col("adc_fp").cast("double") / 1048576.0).as("adc"), col("rank"))
 
@@ -1307,9 +1291,8 @@ object Similarity {
                         nprobe: Int): DataFrame =
     pqLut(queries, cModel, 1)
       .select(col("qid"), col("c").as("cell"), col("d_fp").as("cd_fp"))
-      .withColumn("r", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cd_fp"), col("cell"))))
-      .filter(col("r") <= nprobe).select("qid", "cell")
+      .transform(TopK.per(Seq("qid"), Seq(col("cd_fp"), col("cell")), nprobe, "r"))
+      .select("qid", "cell")
 
   /** The one IVF-ADC search body of [[ivfPqTopK]], [[ivfPqTopKAtRest]]
     * and [[ivfPqResidualTopK]]: code rows (id, sub, c, cell) meet the

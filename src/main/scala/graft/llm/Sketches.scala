@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.TopK
 import graft.functions.GraftFunctions.md5Prefix60Col
 
 /** Streaming-sketch operators for corpus-scale frequency and
@@ -279,14 +280,9 @@ object Sketches {
         md5(col(idCol).cast("string")).as("_d"))
       .filter(col("v").isNotNull)
       .withColumn("_b", substring(col("_d"), 1, 1))
-    val wB = Window.partitionBy("g", "_b").orderBy(col("_d"), col("v"))
-    val candidates = drawn
-      .withColumn("_rb", row_number().over(wB))
-      .filter(col("_rb") <= k)
-    val wG = Window.partitionBy("g").orderBy(col("_d"), col("v"))
-    val sample = candidates
-      .withColumn("_r", row_number().over(wG))
-      .filter(col("_r") <= k)
+    val sample = drawn
+      .transform(TopK.per(Seq("g", "_b"), Seq(col("_d"), col("v")), k, "_rb"))
+      .transform(TopK.per(Seq("g"), Seq(col("_d"), col("v")), k, "_r"))
     val sizes = drawn.groupBy("g").agg(count(lit(1)).as("n_rows"))
     // nearest-rank on the VALUE-ordered sample of size k' = min(k, n)
     val wV = Window.partitionBy("g").orderBy(col("v"), col("_d"))

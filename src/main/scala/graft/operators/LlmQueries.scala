@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.core.TopK
 import graft.llm.{Dedup, Multimodal, Retrieval, Sampling, Similarity, Sketches, TextAnalysis}
 
 /** Declared correctness queries for the LLM-data-pipeline operators
@@ -390,9 +391,7 @@ object LlmQueries {
       .filter(col("keep") === 1)
     val deduped = kept
       .withColumn("h", md5(substring(col("text"), 1, 64)))
-      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("h").orderBy("doc_id")))
-      .filter(col("rk") === 1)
+      .transform(TopK.per(Seq("h"), Seq(col("doc_id")), 1, "rk"))
       .withColumn("lang_pred", TextAnalysis.langIdCol(col("text")))
     Sampling.stratifiedSample(deduped, col("lang_pred"), col("doc_id"),
         Seq("en" -> 0.5), defaultRate = 1.0)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables._
+import graft.core.TopK
 
 /** The relational operator spine (SURVEY.md §5.3, probes Q01–Q24).
   *
@@ -146,15 +147,14 @@ object Relational {
       .orderBy("k")
   }
 
-  /** Q13 as-of / top-1 via window (C5/F4): nearest-center routing. */
-  def q13(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+  /** Q13 as-of / top-1 via window (C5/F4): each customer's first
+    * order by (date, order key). */
+  def q13(s: SparkSession, d: String): DataFrame =
     orders(s, d)
-      .select(col("o_orderkey"), col("o_custkey"),
-        row_number().over(w).as("rn"))
-      .filter(col("rn") === 1)
+      .transform(TopK.per(Seq("o_custkey"), Seq(col("o_orderdate"), col("o_orderkey")),
+        1, "rn"))
+      .select(col("o_orderkey"), col("o_custkey"), col("rn"))
       .orderBy("o_custkey")
-  }
 
   /** Q14 cross join (C6): observer×target `product` pairing. */
   def q14(s: SparkSession, d: String): DataFrame =

@@ -55,6 +55,15 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.over2x(-1.0, 1.0, 1.0))
   }
 
+  test("retry waves use the gate's host-scaled threshold, worst ratio first") {
+    val floors = Map("q1_a" -> 1.0, "q2_b" -> 1.0, "q3_c" -> 1.0, "q4_d" -> 1.0, "q5_e" -> 1.0)
+    val values = Map("q1_a" -> 2.4, "q2_b" -> 3.2, "q3_c" -> 4.5, "q4_d" -> -1.0, "q5_e" -> 1.0)
+    // at host_scale 1.5 the gate needs 3x: 2.4x is not retried
+    assert(Bench.retrySuspects(values, floors, 1.5) == Seq("q3_c", "q2_b"))
+    assert(Bench.retrySuspects(values, floors, 1.0) == Seq("q3_c", "q2_b", "q1_a"))
+    assert(Bench.retrySuspects(values, Map.empty, 1.0).isEmpty)
+  }
+
   test("an 8-core pass leaves the 32-core protocol record in bench_last.json") {
     withDir { dir =>
       val sf = "/data/sf0.1"

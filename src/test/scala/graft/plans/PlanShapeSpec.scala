@@ -187,6 +187,25 @@ class PlanShapeSpec extends SparkSpec {
         "\nall actuals: " + actual.toSeq.sorted.mkString(", "))
   }
 
+  test("TopK.per: ties break on the trailing key, short groups survive whole, " +
+    "and the cut plans a WindowGroupLimit") {
+    val df = Seq(("a", 0.9, 3L), ("a", 0.9, 1L), ("a", 0.5, 2L), ("a", 0.1, 4L),
+      ("b", 0.7, 5L), ("b", 0.2, 6L)).toDF("key", "score", "id")
+    def top(k: Int) =
+      df.transform(graft.core.TopK.per(Seq("key"), Seq(col("score").desc, col("id")), k))
+    // a's two 0.9 rows tie at the k = 1 cut: the lower id wins
+    assert(top(1).orderBy("key").collect().map(r => (r.getString(0), r.getLong(2), r.getInt(3)))
+      .toSeq == Seq(("a", 1L, 1), ("b", 5L, 1)))
+    // k = 5 is past both groups (4 and 2 rows): every row, ranked
+    assert(top(5).orderBy("key", "rank").collect().map(r => (r.getLong(2), r.getInt(3)))
+      .toSeq == Seq((1L, 1), (3L, 2), (2L, 3), (4L, 4), (5L, 1), (6L, 2)))
+    for (k <- Seq(1, 5)) {
+      val plan = top(k).queryExecution.executedPlan.toString
+      assert(plan.contains("WindowGroupLimit"),
+        s"k = $k: the rank cut should prune before the shuffle:\n$plan")
+    }
+  }
+
   test("bucketedOrderScan consumers: the row window partitions by (group, bucket)") {
     // the round-12 decomposition exists to lift the one-task-per-
     // group floor: the corpus-side window's sort keys must include
