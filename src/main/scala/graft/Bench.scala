@@ -16,8 +16,9 @@ import scala.jdk.CollectionConverters._
   * its message in `errors`; it is not swallowed.
   *
   * After the sweep, two retry waves (48 slots in a 90 s slice) re-time
-  * the queries the gate would flag, worst ratio to their floor first,
-  * and min-merge the result. A co-tenant burst can span all of one
+  * the queries the gate would flag at that point, `host_scale` read
+  * afresh before each wave, worst ratio to their floor first, and
+  * min-merge the result. A co-tenant burst can span all of one
   * query's runs but has usually passed by the end of the sweep; a
   * genuine regression survives its re-measurement.
   *
@@ -185,13 +186,13 @@ object Bench {
 
     val retryDeadline = elapsed() + 90.0
     var retryBudget = 48
-    val sweepScale = hostScale(merged, floors)
     for (wave <- 1 to 2) {
-      val suspects = retrySuspects(merged, floors, sweepScale).take(retryBudget)
+      val waveScale = hostScale(merged, floors)
+      val suspects = retrySuspects(merged, floors, waveScale).take(retryBudget)
       retryBudget -= suspects.size
       for (n <- suspects if elapsed() < retryDeadline) {
         System.err.println(f"NOTE: $n at ${merged(n)}%.2fs > 2x floor " +
-          f"${floors(n)}%.2fs x host_scale $sweepScale%.3f — deferred re-time (wave $wave)")
+          f"${floors(n)}%.2fs x host_scale $waveScale%.3f — deferred re-time (wave $wave)")
         val t2 = timeQuery(n)
         if (t2 >= 0) merged(n) = math.min(merged(n), t2)
         else errors.remove(n) // first pass succeeded; a flaky retry is not a failure

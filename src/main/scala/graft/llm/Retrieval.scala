@@ -165,8 +165,7 @@ object Retrieval {
       .join(dl, "id")
       .join(broadcast(dft), "s")
       .crossJoin(broadcast(g))
-    bm25Rank(matched, col("n_docs"), col("tot_tokens").cast("double") / col("n_docs"),
-      k, k1, b)
+    bm25Rank(matched, col("n_docs"), col("tot_tokens"), k, k1, b)
   }
 
   /** The BM25 score-and-rank tail of [[bm25TopKBatch]] and
@@ -174,13 +173,13 @@ object Retrieval {
     * The corpus statistics are columns of a joined aggregate in the
     * batch form and literals at rest.
     */
-  private def bm25Rank(matched: DataFrame, nDocs: Column, avgdl: Column,
+  private def bm25Rank(matched: DataFrame, nDocs: Column, totTokens: Column,
                        k: Int, k1: Double, b: Double): DataFrame = {
     val denom = col("tf") + lit(k1) *
       (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))
     val contrib = col("idf") * (col("tf") * (lit(k1) + lit(1.0))) / denom
     matched
-      .withColumn("avgdl", avgdl)
+      .withColumn("avgdl", totTokens.cast("double") / nDocs)
       .withColumn("idf", (nDocs - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
       .withColumn("fp", floor(contrib * lit(1048576.0)).cast("long"))
       .groupBy("qid", "id")
@@ -574,6 +573,6 @@ object Retrieval {
     val post = tomb.mask(scan)
     val dft = post.groupBy("s").agg(count(lit(1)).as("df"))
     bm25Rank(post.join(broadcast(qt), "s").join(broadcast(dft), "s"),
-      lit(nDocs), lit(totTokens).cast("double") / lit(nDocs), k, k1, b)
+      lit(nDocs), lit(totTokens), k, k1, b)
   }
 }

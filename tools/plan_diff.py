@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two directories of formatted Spark plans, one file per query.
 
-    python3 tools/plan_diff.py OLD_DIR NEW_DIR [--show]
+    python3 tools/plan_diff.py OLD_DIR NEW_DIR
 
 Each `<query>.txt` (as written by `Session.dumpPlan`) is normalized
 before comparison, so that only plan changes count:
@@ -10,14 +10,14 @@ before comparison, so that only plan changes count:
   - exchange plan ids:         `plan_id=67` -> `plan_id=N`
   - JVM lambda identities:     `$$Lambda$4770/0x7f13@17aa` -> `$$Lambda`
   - RDD call-site lines:       `at localCheckpoint at X.scala:98` -> `X.scala:N`
-  - temp and scratch paths:    `/tmp/abc/d` -> `<tmp>` (any prefix
-    given with --tmp, default: /tmp and $TMPDIR)
+  - temp and scratch paths:    `/tmp/abc/d` -> `<tmp>` (under /tmp
+    or $TMPDIR)
 
 Prints one line per differing query (`changed`, `only in OLD`, `only
-in NEW`), with `--show` also the normalized unified diff, then a
-summary. Exits 1 when any query differs, 0 when all are identical.
+in NEW`), each `changed` one followed by its normalized unified diff,
+then a summary. Exits 1 when any query differs, 0 when all are
+identical.
 """
-import argparse
 import difflib
 import os
 import re
@@ -28,21 +28,18 @@ LAMBDA_VAR = re.compile(r"\b([xyz])_\d+\b")
 PLAN_ID = re.compile(r"plan_id=\d+")
 JVM_LAMBDA = re.compile(r"\$\$Lambda\$[\w/$]+@[0-9a-f]+")
 CALL_SITE = re.compile(r"(\w+\.(?:scala|java)):\d+")
+TMP_ROOTS = sorted({p.rstrip("/") for p in ("/tmp", os.environ.get("TMPDIR") or "/tmp")},
+                   key=len, reverse=True)
+TMP_PATH = re.compile(r"(?:file:)?(?:%s)/[^\s,\]\)\}'\"]*" % "|".join(map(re.escape, TMP_ROOTS)))
 
 
-def normalizer(tmp_prefixes):
-    alts = "|".join(re.escape(p.rstrip("/")) for p in sorted(set(tmp_prefixes), key=len,
-                                                             reverse=True))
-    tmp_path = re.compile(r"(?:file:)?(?:%s)/[^\s,\]\)\}'\"]*" % alts)
-
-    def norm(text):
-        text = tmp_path.sub("<tmp>", text)
-        text = EXPR_ID.sub("#N", text)
-        text = PLAN_ID.sub("plan_id=N", text)
-        text = JVM_LAMBDA.sub("$$Lambda", text)
-        text = CALL_SITE.sub(r"\1:N", text)
-        return LAMBDA_VAR.sub(r"\1_N", text)
-    return norm
+def norm(text):
+    text = TMP_PATH.sub("<tmp>", text)
+    text = EXPR_ID.sub("#N", text)
+    text = PLAN_ID.sub("plan_id=N", text)
+    text = JVM_LAMBDA.sub("$$Lambda", text)
+    text = CALL_SITE.sub(r"\1:N", text)
+    return LAMBDA_VAR.sub(r"\1_N", text)
 
 
 def plans(d):
@@ -50,16 +47,9 @@ def plans(d):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("old")
-    ap.add_argument("new")
-    ap.add_argument("--show", action="store_true", help="print each normalized diff")
-    ap.add_argument("--tmp", action="append", default=[],
-                    help="extra temp/scratch path prefix to normalize (repeatable)")
-    a = ap.parse_args()
-    prefixes = ["/tmp"] + a.tmp + ([os.environ["TMPDIR"]] if os.environ.get("TMPDIR") else [])
-    norm = normalizer(prefixes)
-    old, new = plans(a.old), plans(a.new)
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    old, new = plans(sys.argv[1]), plans(sys.argv[2])
     differing = []
     for q in sorted(set(old) | set(new)):
         if q not in new:
@@ -77,9 +67,8 @@ def main():
         if o != n:
             differing.append(q)
             print(f"changed: {q}")
-            if a.show:
-                for line in difflib.unified_diff(o, n, f"OLD/{q}", f"NEW/{q}", lineterm="", n=0):
-                    print("    " + line)
+            for line in difflib.unified_diff(o, n, f"OLD/{q}", f"NEW/{q}", lineterm="", n=0):
+                print("    " + line)
     print(f"{len(set(old) | set(new))} queries, {len(differing)} differ")
     return 1 if differing else 0
 
