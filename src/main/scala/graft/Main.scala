@@ -23,7 +23,9 @@ import graft.trans.Trans.TransOptions
   * {{{
   *   -o <out>            output path (default: <input>.out[.tif];
   *                       multi-job runs suffix .0, .1, …)
-  *   -of GTIFF|COG       single-file GeoTIFF export, or the
+  *   -of GTIFF|COG       one GeoTIFF file of 256-px DEFLATE tiles
+  *                       (overviews as internal pages; any size —
+  *                       tiles are encoded on the executors), or the
   *                       distributed COG parquet layout (default)
   *   -ot <dtype>         Byte|Int16|Float32|Float64 (GTIFF only)
   *   -dstnodata <v>      output nodata value
@@ -48,7 +50,8 @@ object Main {
     """usage: graft.Main [-o out] [-of GTIFF|COG] [-ot dtype]
       |  [-dstnodata v] [-srcnodata v] [-hideNoData]
       |  [-extent minx maxx miny maxy | -projwin ulx uly lrx lry | -srcwin x y w h]
-      |  [-t_srs srs[,srs…]] [-partition n] [-ovr n] [-overwrite] [-quiet] filename…""".stripMargin
+      |  [-t_srs srs[,srs…]] [-partition n] [-ovr n] [-overwrite] [-quiet] filename…
+      |  -of GTIFF writes one GeoTIFF of 256-px DEFLATE tiles; COG (default) the parquet tile layout""".stripMargin
 
   def main(argv: Array[String]): Unit = {
     val spark = Session.protocol(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
@@ -173,8 +176,8 @@ object Main {
       val planned = of match {
         case "GTIFF" =>
           Trans.plan(df, gt, info.width, info.height, opt).map { p =>
-            Trans.exportGeoTiff(p, outPath, ovrLevels = ovr, dtype = dtype,
-              ndv = opt.dstNdv)
+            Trans.exportGeoTiffSharded(p, outPath, dtype = dtype, ndv = opt.dstNdv,
+              ovrLevels = ovr)
             p
           }
         case "COG" =>

@@ -38,10 +38,4 @@ object Angles {
       if (aFrom > aTo) aFrom -= TwoPi
       (aFrom, aTo)
     }
-
-  /** `direction_and_aperture_from_az` (`geom_util.py:73-78`). */
-  def directionAndAperture(startAz: Double, endAz: Double, fullCircle: Double = 0): (Double, Double) = {
-    val (s, e) = if (fullCircle != 0) normalizePair(startAz, endAz, fullCircle) else (startAz, endAz)
-    ((e + s) / 2, e - s)
-  }
 }

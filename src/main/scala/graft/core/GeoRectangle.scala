@@ -33,8 +33,6 @@ final case class GeoRectangle(minX: Double, minY: Double, maxX: Double, maxY: Do
   def containsPoint(x: Double, y: Double): Boolean =
     minX <= x && x <= maxX && minY <= y && y <= maxY
 
-  def intersects(o: GeoRectangle): Boolean = !intersect(o).isEmpty
-
   /** The (i,j) cell of an nx×ny partition grid of this extent
     * (reference `partitions.py:17-24` + `get_partition` use at
     * `gdalos_trans.py:560-563`). Cell (0,0) is the min corner.
@@ -72,9 +70,7 @@ final case class GeoRectangle(minX: Double, minY: Double, maxX: Double, maxY: Do
 object GeoRectangle {
   val empty: GeoRectangle = GeoRectangle(0, 0, 0, 0)
 
-  /** Fold helpers mirroring the reference's extent folds (D8). */
+  /** Extent union fold, mirroring the reference's extent folds (D8). */
   def unionAll(rs: Iterable[GeoRectangle]): GeoRectangle =
     rs.reduceLeft(_ union _)
-  def intersectAll(rs: Iterable[GeoRectangle]): GeoRectangle =
-    rs.reduceLeft(_ intersect _)
 }

@@ -69,8 +69,6 @@ final case class GeoTransform(c0: Double, c1: Double, c2: Double,
     val f = (1 << k).toDouble
     GeoTransform(c0, c1 * f, c2 * f, c3, c4 * f, c5 * f)
   }
-
-  def asArray: Array[Double] = Array(c0, c1, c2, c3, c4, c5)
 }
 
 object GeoTransform {
@@ -83,10 +81,5 @@ object GeoTransform {
     val w = math.ceil(r.width / pixelSizeX).toInt
     val h = math.ceil(r.height / -pixelSizeY).toInt
     (GeoTransform(r.minX, pixelSizeX, 0, r.maxY, 0, pixelSizeY), w, h)
-  }
-
-  def fromArray(a: Array[Double]): GeoTransform = {
-    require(a.length == 6, s"geotransform needs 6 terms, got ${a.length}")
-    GeoTransform(a(0), a(1), a(2), a(3), a(4), a(5))
   }
 }

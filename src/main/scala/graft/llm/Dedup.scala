@@ -1894,29 +1894,18 @@ object Dedup {
       .select(col("id_t"), col("n_matches"), col("max_jaccard"), col("bench_id"))
   }
 
-  /** 16-bit SimHash from salted-md5 hex digits: bit k is the sign of
-    * the per-token vote where a token votes +1 if hex digit k of its
-    * md5 is ≥ 8 (the digit's MSB), −1 otherwise. Docs sharing a
-    * SimHash value are near-dup candidates (bucketed, not all-pairs).
-    */
-  def simhashCol(text: Column, bits: Int = 16): Column = {
-    val toks = TextAnalysis.tokensCol(text)
-    val bitCols = (0 until bits).map { k =>
-      val vote = aggregate(toks, lit(0),
-        (acc, t) => acc + when(substring(md5(t), k + 1, 1) >= "8", 1).otherwise(-1))
-      when(vote >= 0, lit(1L << k)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
-  }
-
-  /** SimHash bucket dedup: groups of docs sharing a simhash value.
+  /** SimHash bucket dedup: groups of docs sharing a 16-bit simhash
+    * value. Bit k is the sign of the per-token vote where a token
+    * votes +1 if hex digit k of its md5 is ≥ 8 (the digit's MSB), −1
+    * otherwise; votes sum ±1 per token occurrence (duplicates
+    * weighted). Docs sharing a SimHash value are near-dup candidates
+    * (bucketed, not all-pairs).
     *
     * Relational form (same reasoning as [[minhashLsh]]): tokens
     * exploded once, ONE md5 per token, 16 vote sums in one
-    * aggregation — the array-expression [[simhashCol]] re-inlines the
+    * aggregation — an array expression per bit would re-inline the
     * tokenizer and md5 into each of the 16 bit expressions (measured
-    * 3.4 s vs sub-second for 5000 docs). Values are identical: votes
-    * sum ±1 per token occurrence (duplicates weighted).
+    * 3.4 s vs sub-second for 5000 docs).
     */
   def simhashBuckets(df: DataFrame, idCol: String, textCol: String,
                      bits: Int = 16): DataFrame = {

@@ -1919,31 +1919,15 @@ object LlmQueries {
     val atRest = atRestDir(d, "graft_cdc_stream")
     ingestOnce(atRest + "#cdcs#" + inputFingerprint(d + "/documents.parquet")) {
       Dedup.cdcInitAtRest(s, atRest)
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_q227_feed").toString
+      // the ledger keys off batch ids, so the micro-batch boundaries
+      // must be exactly q226's three: a split batch would shift every
+      // later ledger batch id
       val batchConds = Seq(
         pmod(col("doc_id"), lit(5)) < 3,   // micro-batch 0 = q226 batch 0
         pmod(col("doc_id"), lit(5)) === 3, // micro-batch 1
         pmod(col("doc_id"), lit(5)) === 4) // micro-batch 2
-      // batch 0's files land BEFORE the stream starts so it arrives
-      // as ONE micro-batch — the ledger keys off batch ids, so the
-      // micro-batch boundaries must be exactly q226's three
-      docs.filter(batchConds.head).write.mode("append").parquet(feed)
-      val q = graft.streaming.EventStream.cdcIngestStream(
-        s.readStream.schema("doc_id LONG, text STRING").parquet(feed),
-        "doc_id", "text", atRest)
-      try {
-        q.processAllAvailable()
-        for (cond <- batchConds.tail) {
-          // ONE file per micro-batch (review r18): the live source
-          // polls continuously, and a multi-file commit can be
-          // half-listed — splitting the batch and shifting every
-          // later ledger batch id. A single part file appears
-          // atomically (one committer rename).
-          docs.filter(cond).coalesce(1).write.mode("append").parquet(feed)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
+      graft.streaming.EventStream.feedStream(docs, "doc_id LONG, text STRING", batchConds)(
+        graft.streaming.EventStream.cdcIngestStream(_, "doc_id", "text", atRest))
     }
     Dedup.cdcStoreCensus(s, atRest)
   }
@@ -1969,21 +1953,11 @@ object LlmQueries {
     val atRest = atRestDir(d, "graft_bm25_stream")
     ingestOnce(atRest + "#bm25s#" + inputFingerprint(d + "/documents.parquet")) {
       Retrieval.bm25InitAtRest(s, atRest)
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_q231_feed").toString
       val batchConds = Seq(
         pmod(col("doc_id"), lit(5)) < 3,   // micro-batch 0 = q217's ingest
         pmod(col("doc_id"), lit(5)) === 3) // micro-batch 1 = q217's append
-      docs.filter(batchConds.head).write.mode("append").parquet(feed)
-      val q = graft.streaming.EventStream.bm25IngestStream(
-        s.readStream.schema("doc_id LONG, text STRING").parquet(feed),
-        "doc_id", "text", atRest)
-      try {
-        q.processAllAvailable()
-        // one file: atomic visibility to the live source (review r18)
-        docs.filter(batchConds(1)).coalesce(1).write.mode("append").parquet(feed)
-        q.processAllAvailable()
-      } finally q.stop()
+      graft.streaming.EventStream.feedStream(docs, "doc_id LONG, text STRING", batchConds)(
+        graft.streaming.EventStream.bm25IngestStream(_, "doc_id", "text", atRest))
     }
     val queries = Seq((1L, "spark"), (1L, "merge"), (2L, "vector"),
       (2L, "index"), (3L, "data")).toDF("qid", "term")
@@ -2016,21 +1990,11 @@ object LlmQueries {
     val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
     val atRest = atRestDir(d, "graft_ivfpq_stream")
     ingestOnce(atRest + "#ivfs#" + inputFingerprint(d + "/embeddings.parquet")) {
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_q238_feed").toString
       val batchConds = Seq(
         pmod(col("vec_id"), lit(5)) =!= 4, // micro-batch 0 = q201's train set
         pmod(col("vec_id"), lit(5)) === 4) // micro-batch 1 = q201's append
-      emb.filter(batchConds.head).write.mode("append").parquet(feed)
-      val q = graft.streaming.EventStream.ivfPqIngestStream(
-        s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .parquet(feed), atRest)
-      try {
-        q.processAllAvailable()
-        // one file: atomic visibility to the live source (review r18)
-        emb.filter(batchConds(1)).coalesce(1).write.mode("append").parquet(feed)
-        q.processAllAvailable()
-      } finally q.stop()
+      graft.streaming.EventStream.feedStream(emb, "vec_id LONG, embedding ARRAY<FLOAT>",
+        batchConds)(graft.streaming.EventStream.ivfPqIngestStream(_, atRest))
     }
     val qs = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -2065,21 +2029,11 @@ object LlmQueries {
       // q239 is a scaling target whose tiers triple the corpus);
       // fingerprinting is content-deterministic per doc, so any
       // micro-batch slicing of the same rows builds the same store
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_q239_feed").toString
       val batchConds = Seq(
         pmod(col("doc_id"), lit(5)) < 3,   // micro-batch 0 = q230's ingest
         pmod(col("doc_id"), lit(5)) === 3) // micro-batch 1 = q230's append
-      docs.filter(batchConds.head).write.mode("append").parquet(feed)
-      val q = graft.streaming.EventStream.winnowIngestStream(
-        s.readStream.schema("doc_id LONG, text STRING").parquet(feed),
-        "doc_id", "text", atRest)
-      try {
-        q.processAllAvailable()
-        // one file: atomic visibility to the live source (review r18)
-        docs.filter(batchConds(1)).coalesce(1).write.mode("append").parquet(feed)
-        q.processAllAvailable()
-      } finally q.stop()
+      graft.streaming.EventStream.feedStream(docs, "doc_id LONG, text STRING", batchConds)(
+        graft.streaming.EventStream.winnowIngestStream(_, "doc_id", "text", atRest))
     }
     Dedup.winnowProbeAtRest(s, atRest,
         docs.filter(pmod(col("doc_id"), lit(5)) === 4), "doc_id", "text")
@@ -3442,7 +3396,7 @@ object LlmQueries {
       s"(CASE WHEN $proj >= 0 THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
     }.mkString("(", " + ", ")")
 
-  /** 16-bit simhash (matches Dedup.simhashCol): per-bit token votes by
+  /** 16-bit simhash (matches Dedup.simhashBuckets): per-bit token votes by
     * the hex digit's MSB of each token's salted md5.
     */
   private val simhashExpr: String =

@@ -209,12 +209,6 @@ object RasterOps {
       .withColumn("mean", col("s") / col("n_valid"))
   }
 
-  /** D8 extent fold: union/intersection of per-raster pixel extents. */
-  def extentFold(df: DataFrame): DataFrame =
-    df.groupBy("rid").agg(
-      min("px").as("minPx"), min("py").as("minPy"),
-      max("px").as("maxPx"), max("py").as("maxPy"))
-
   /** Horn 3×3 gradient over a pixel frame (the gdaldem slope/aspect
     * kernel — a terrain-analysis extension beyond the reference's own
     * operator set): p = dz/dx and q = dz/dy via the (1,2,1) weighted

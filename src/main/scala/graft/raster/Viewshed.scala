@@ -407,12 +407,25 @@ object Viewshed {
     }
   }
 
+  /** Full per-observer parameter set (`viewshed_params.py:32-125`:
+    * ox/oy/oz, MaxR, DirectionDeg, ApertureDeg are all per-vp).
+    */
+  final case class Observer(ox: Int, oy: Int, oz: Double, maxR: Double,
+                            directionDeg: Double = 0.0, apertureDeg: Double = 360.0)
+
   /** §3.2 multi-observer composition: per-observer viewsheds (rid =
     * observer index) unioned and reduced by a D-family combine
     * (`viewshed_calc_to_ds`, `viewshed_calc.py:180-562`: per-observer
     * kernel → combine → style). `op` ∈ max|min|count|count_z|unique.
     * Each observer's sweep is an independent branch of one job — the
-    * union is the reference's per-observer loop made parallel.
+    * union is the reference's per-observer loop made parallel. Each
+    * observer carries its own range and sector: its sweep is cropped
+    * to its DirectionDeg/ApertureDeg arc (the reference's per-observer
+    * `cut_sector` loop before the combine, `viewshed_calc.py:453-478`;
+    * aperture ≥ 360 = omni) and only then reduced. The per-observer
+    * radius rides the stack as a column (`vmaxr`) and the sector masks
+    * are per-rid guarded column predicates, so the whole stack pays
+    * ONE window shuffle.
     *
     * ENTRY-POINT GUIDANCE (round 12): prefer
     * [[viewshedCombineTable]] — observers as a DataFrame, one sweep
@@ -422,42 +435,6 @@ object Viewshed {
     * small fixed observer sets and for the reference's 50-point
     * polygonized sector ring, which the table path replaces with the
     * analytic arc it approximates.
-    */
-  def viewshedCombine(dem: DataFrame, observers: Seq[(Int, Int, Double)],
-                      op: String, cellSize: Double, maxR: Double,
-                      refractionCoeff: Double = Radio.AtmosphericRefractionCoeff,
-                      nBuckets: Int = 64, demNdv: Double = PixelFrame.Dem.Ndv): DataFrame =
-    viewshedCombineSector(dem,
-      observers.map { case (ox, oy, oz) => (ox, oy, oz, 0.0, 360.0) },
-      op, cellSize, maxR, refractionCoeff, nBuckets, demNdv)
-
-  /** [[viewshedCombine]] with per-observer DirectionDeg/ApertureDeg —
-    * each observer's sweep is cropped to its own sector (the
-    * reference's per-observer `cut_sector` loop before the combine,
-    * `viewshed_calc.py:453-478`) and only then reduced. Observer tuple
-    * = (ox, oy, oz, directionDeg, apertureDeg); aperture ≥ 360 = omni.
-    * The sector masks are per-rid guarded column predicates layered on
-    * the combined stack — still one window shuffle, no extra pass.
-    */
-  def viewshedCombineSector(dem: DataFrame,
-                            observers: Seq[(Int, Int, Double, Double, Double)],
-                            op: String, cellSize: Double, maxR: Double,
-                            refractionCoeff: Double = Radio.AtmosphericRefractionCoeff,
-                            nBuckets: Int = 64,
-                            demNdv: Double = PixelFrame.Dem.Ndv): DataFrame =
-    viewshedCombineObs(dem,
-      observers.map { case (ox, oy, oz, dir, ap) => Observer(ox, oy, oz, maxR, dir, ap) },
-      op, cellSize, refractionCoeff, nBuckets, demNdv)
-
-  /** Full per-observer parameter set (`viewshed_params.py:32-125`:
-    * ox/oy/oz, MaxR, DirectionDeg, ApertureDeg are all per-vp).
-    */
-  final case class Observer(ox: Int, oy: Int, oz: Double, maxR: Double,
-                            directionDeg: Double = 0.0, apertureDeg: Double = 360.0)
-
-  /** The general multi-observer combine: each observer carries its own
-    * range and sector. The per-observer radius rides the stack as a
-    * column (`vmaxr`), so the single window pass stays one shuffle.
     */
   def viewshedCombineObs(dem: DataFrame, observers: Seq[Observer],
                          op: String, cellSize: Double,

@@ -810,16 +810,17 @@ object GeoTiff {
     * (`header | page0 IFD | ext | segments | page1 …`), pushed to an
     * `OutputStream` with BOUNDED heap — the >2 GiB / BigTIFF export
     * path the in-memory encoder refuses (COG output contract,
-    * `gdalos_trans.py:773-816`). Per page it runs TWO segment passes:
-    * pass 1 compresses each segment to learn the byte counts the IFD
-    * (written BEFORE the segment data) must carry, pass 2 recompresses
-    * and streams — peak heap is one raw+compressed segment plus the
-    * O(nSegments) offset arrays, never the file and never a full page.
-    * Deterministic codecs (LZW/DEFLATE/PackBits/JPEG here) make the
-    * two passes agree, so output is byte-identical to
+    * `gdalos_trans.py:773-816`). It runs TWO segment passes: pass 1
+    * compresses every page's segments to learn the byte counts the
+    * IFDs (written BEFORE the segment data) must carry, pass 2
+    * recompresses and streams — peak heap is one raw+compressed
+    * segment plus the O(nSegments) offset arrays, never the file and
+    * never a full page. Deterministic codecs (LZW/DEFLATE/PackBits/JPEG
+    * here) make the two passes agree, so output is byte-identical to
     * [[encodePyramid]] on the same inputs (GeoTiffSpec pins this).
     * Classic (non-Big) TIFF offsets are checked against the u32 limit
-    * instead of silently truncating. Returns total bytes written.
+    * before any byte is written, instead of silently truncating.
+    * Returns total bytes written.
     */
   def writePyramid(out: java.io.OutputStream, pages: Seq[StreamPage],
                    dtype: DType, gt: GeoTransform, nodata: Option[Double] = None,
@@ -868,18 +869,26 @@ object GeoTiff {
       writeS32(raw, i * 8 + 4, (bits >>> 32).toInt, be = false)
   }
 
-  /** The writer's segment codec dispatch (JPEG excluded — it needs
-    * per-segment dimensions and stays inside [[writePyramidImpl]]).
+  /** The writer's segment tail: predictor, then codec, for one packed
+    * segment of `w × rows` chunky pixels (`raw` is differenced in
+    * place). The one codec dispatch of the strip path, the tile path
+    * and the executor-side [[encodeTileSegment]]; JPEG takes the
+    * segment's dimensions, so it is encoded per segment here too.
     */
-  private[sources] def compressSeg(raw: Array[Byte], compression: Int): Array[Byte] =
+  private def compressSeg(raw: Array[Byte], w: Int, rows: Int, bands: Int,
+                          bps: Int, predictor: Int, compression: Int): Array[Byte] = {
+    if (predictor == 2) diffRows(raw, w, rows, bps)
+    else if (predictor == 3) fpDiffRows(raw, w, rows, bands, bps)
     compression match {
       case 1 => raw
       case 5 => lzwEncode(raw)
-      case 32773 => packBitsEncode(raw)
+      case 7 => jpegEncode(raw, w, rows, bands)
       case 8 => deflate(raw)
+      case 32773 => packBitsEncode(raw)
       case other => throw new IllegalArgumentException(
-        s"unsupported segment compression $other (none/LZW/DEFLATE/PackBits)")
+        s"unsupported write compression $other (none/LZW/JPEG/DEFLATE/PackBits)")
     }
+  }
 
   private def tiffHeader(bigTiff: Boolean): Array[Byte] = {
     val header = new ByteArrayOutputStream()
@@ -899,10 +908,7 @@ object GeoTiff {
   /** IFD + external tag data of one page laid out at `base` with the
     * given compressed segment byte counts; segment data follows the
     * block immediately. Returns (block bytes, offset WITHIN the block
-    * of the next-IFD pointer) so the chain patch happens before the
-    * block is streamed. Extracted from [[writePyramidImpl]] so the
-    * sharded export can assemble the identical container around
-    * executor-encoded tile segments.
+    * of the next-IFD pointer) for [[tiffBlocks]] to chain.
     */
   private def pageBlock(pageIdx: Int, w: Int, h: Int, stripSizes: Seq[Long],
                         base: Long, dtype: DType, gt: GeoTransform,
@@ -1015,87 +1021,69 @@ object GeoTiff {
 
   /** Encode ONE tile's compressed TIFF segment from its padded sample
     * array (`tileSize²` row-major doubles, single band) — the
-    * EXECUTOR-side piece of the sharded export: byte-identical to
-    * what [[writePyramid]]'s tiled path emits for the same samples,
-    * with no driver involvement.
+    * EXECUTOR-side piece of the sharded export, with no driver
+    * involvement: the same packing and [[compressSeg]] tail as
+    * [[writePyramid]]'s tiled path, so the bytes match it for the same
+    * samples. JPEG is refused: its edge tiles replicate the border
+    * pixel, which one padded tile cannot.
     */
   def encodeTileSegment(vals: Array[Double], tileSize: Int, dtype: DType,
                         predictor: Int = 1, compression: Int = 8): Array[Byte] = {
     require(vals.length == tileSize * tileSize,
       s"expected ${tileSize * tileSize} samples, got ${vals.length}")
+    require(compression != 7, "JPEG tiles are written by writePyramid only")
     val bps = dtype.bits / 8
     val raw = new Array[Byte](vals.length * bps)
     var i = 0
     while (i < vals.length) { writeSampleLE(raw, i, vals(i), dtype); i += 1 }
-    if (predictor == 2) diffRows(raw, tileSize, tileSize, bps)
-    else if (predictor == 3) fpDiffRows(raw, tileSize, tileSize, 1, bps)
-    compressSeg(raw, compression)
+    compressSeg(raw, tileSize, tileSize, 1, bps, predictor, compression)
   }
 
-  /** Header + single-page tiled IFD for a SHARDED export: the
-    * driver-side container assembly, sized from the tile byte counts
-    * alone (IFDs only — never pixel data). Tile segments must follow
-    * the returned block immediately, in (ty, tx) row-major order with
-    * exactly `tileByteCounts` lengths (the executor-written shards).
+  /** The container around sized pages: the file header and one IFD
+    * block per (w, h, segmentByteCounts) page — page 0 the base with
+    * geo tags, page k the 2^k overview marked ReducedImage — with each
+    * next-IFD pointer already chained to the following page. The file
+    * is `header | blocks(0) | page-0 segments | blocks(1) | …`, and the
+    * segments (tiles or strips, row-major) MUST have exactly the
+    * declared byte counts: every offset is computed from them. Used by
+    * [[writePyramid]] and by the sharded export, whose tile segments
+    * are encoded on the executors.
     */
-  def shardedTiffHeader(w: Int, h: Int, tileByteCounts: Seq[Long],
-                        dtype: DType, gt: GeoTransform,
-                        nodata: Option[Double], tileSize: Int,
-                        compression: Int = 8, predictor: Int = 1,
-                        crs: CrsTag = CrsTag.Wgs84Geo,
-                        bigTiff: Boolean = false): Array[Byte] = {
-    val (header, blocks) = shardedTiffBlocks(Seq((w, h, tileByteCounts)),
-      dtype, gt, nodata, tileSize, compression, predictor, crs, bigTiff)
-    header ++ blocks.head
-  }
-
-  /** Multi-page twin of [[shardedTiffHeader]] — the full sharded COG
-    * container: one (w, h, tileByteCounts) triple per IFD page (page
-    * 0 = base with geo tags, page k = the 2^k overview, marked
-    * ReducedImage exactly as [[writePyramid]] does). Returns (file
-    * header, per-page IFD blocks with the next-IFD chain already
-    * patched); the caller streams `header | blocks(0) | page-0
-    * segments | blocks(1) | page-1 segments | …` — segment byte
-    * counts MUST match what was declared, the chain offsets are
-    * computed from them.
-    */
-  def shardedTiffBlocks(pages: Seq[(Int, Int, Seq[Long])],
-                        dtype: DType, gt: GeoTransform,
-                        nodata: Option[Double], tileSize: Int,
-                        compression: Int = 8, predictor: Int = 1,
-                        crs: CrsTag = CrsTag.Wgs84Geo,
-                        bigTiff: Boolean = false): (Array[Byte], Seq[Array[Byte]]) = {
-    require(tileSize > 0 && tileSize % 16 == 0,
+  private[graft] def tiffBlocks(pages: Seq[(Int, Int, Seq[Long])], dtype: DType,
+                                gt: GeoTransform, nodata: Option[Double],
+                                rowsPerStrip: Int, predictor: Int, crs: CrsTag,
+                                tileSize: Int, compression: Int, bands: Int,
+                                bigTiff: Boolean): (Array[Byte], Seq[Array[Byte]]) = {
+    require(tileSize == 0 || (tileSize > 0 && tileSize % 16 == 0),
       "TIFF tile size must be a positive multiple of 16")
-    require(gt.isNorthUp && gt.c5 < 0,
-      s"GeoTIFF writer needs a north-up geotransform, got $gt")
+    require(gt.isNorthUp && gt.c5 < 0, s"GeoTIFF writer needs a north-up geotransform, got $gt")
     require(pages.nonEmpty, "need at least one page")
     pages.zipWithIndex.foreach { case ((w, h, counts), i) =>
-      val ta = (w + tileSize - 1) / tileSize
-      val td = (h + tileSize - 1) / tileSize
-      require(counts.length == ta * td,
-        s"page $i: expected ${ta * td} tile byte counts for ${w}x$h " +
-          s"at $tileSize, got ${counts.length}")
+      val nSeg =
+        if (tileSize > 0) ((w + tileSize - 1) / tileSize) * ((h + tileSize - 1) / tileSize)
+        else (h + rowsPerStrip - 1) / rowsPerStrip
+      require(counts.length == nSeg,
+        s"page $i: expected $nSeg segment byte counts for ${w}x$h, got ${counts.length}")
     }
-    val headerSz = if (bigTiff) 16 else 8
+    // BigTIFF (version 43) widths: 8-byte counts/offsets/value fields,
+    // 20-byte IFD entries, LONG8 (type 16) segment offset arrays — the
+    // `BIGTIFF` creation option (`gdalos_trans.py:788-801`), REQUIRED
+    // for >4 GiB outputs. Classic widths otherwise.
+    val header = tiffHeader(bigTiff)
     val ptrSz = if (bigTiff) 8 else 4
-    var base = headerSz.toLong
+    var base = header.length.toLong
     val blocks = pages.zipWithIndex.map { case ((w, h, counts), i) =>
-      val (block, ptrRel) = pageBlock(i, w, h, counts, base,
-        dtype, gt, nodata, rowsPerStrip = 64, predictor, crs, tileSize,
-        compression, bands = 1, bigTiff)
+      val (block, ptrRel) = pageBlock(i, w, h, counts, base, dtype, gt, nodata,
+        rowsPerStrip, predictor, crs, tileSize, compression, bands, bigTiff)
       base += block.length + counts.sum
       if (i < pages.length - 1) {
-        // chain patch: next page's IFD starts right after this page's
-        // segment data (same layout contract as writePyramidImpl)
+        // next page's IFD starts right after this page's segment data
         var j = 0
-        while (j < ptrSz) {
-          block(ptrRel + j) = ((base >> (8 * j)) & 0xff).toByte; j += 1
-        }
+        while (j < ptrSz) { block(ptrRel + j) = ((base >> (8 * j)) & 0xff).toByte; j += 1 }
       }
       block
     }
-    (tiffHeader(bigTiff), blocks)
+    (header, blocks)
   }
 
   private def writePyramidImpl(out: java.io.OutputStream, pages: Seq[StreamPage],
@@ -1104,8 +1092,6 @@ object GeoTiff {
                                tileSize: Int, compression: Int, bands: Int,
                                bigTiff: Boolean, materialize: Boolean,
                                maxBytes: Long): Long = {
-    require(tileSize == 0 || (tileSize > 0 && tileSize % 16 == 0),
-      "TIFF tile size must be a positive multiple of 16")
     require(bands >= 1 && bands <= 16, s"unsupported band count $bands")
     require(predictor == 1 || bands == 1,
       "predictor 2 is supported for single-band pages only")
@@ -1114,29 +1100,11 @@ object GeoTiff {
     require(compression != 7 || (dtype == DtByte && predictor == 1
         && (bands == 1 || bands == 3)),
       "JPEG write needs Byte samples, no predictor, 1 or 3 bands (alpha dropped per B5)")
-    val compress: Array[Byte] => Array[Byte] = compression match {
-      case 1 => identity
-      case 5 => lzwEncode
-      case 32773 => packBitsEncode
-      case 7 => identity // replaced per-segment (needs dims)
-      case _ => deflate
-    }
-    require(pages.nonEmpty, "need at least one page")
-    require(gt.isNorthUp && gt.c5 < 0, s"GeoTIFF writer needs a north-up geotransform, got $gt")
     require(predictor == 1
         || (predictor == 2 && (dtype == DtByte || dtype == DtInt16))
         || (predictor == 3 && (dtype == DtFloat32 || dtype == DtFloat64)),
       "predictor 2 needs integer samples; predictor 3 needs float samples")
     val bps = dtype.bits / 8
-    // BigTIFF (version 43) widths: 8-byte counts/offsets/value fields,
-    // 20-byte IFD entries, LONG8 (type 16) segment offset arrays — the
-    // `BIGTIFF` creation option (`gdalos_trans.py:788-801`), REQUIRED
-    // for >4 GiB outputs. Classic widths otherwise.
-    val ptrSz = if (bigTiff) 8 else 4
-    val headerSz = if (bigTiff) 16 else 8
-
-    def writeSample(raw: Array[Byte], i: Int, v: Double): Unit =
-      writeSampleLE(raw, i, v, dtype)
 
     /** Compressed segments (strips or tiles) of one page, produced
       * lazily — one raw + one compressed segment live at a time.
@@ -1156,16 +1124,14 @@ object GeoTiff {
             val sy = ty * ts + p / ts
             // JPEG edge tiles replicate the border pixel (a hard
             // nodata edge would bleed DCT ringing into valid pixels)
-            writeSample(raw, i,
+            writeSampleLE(raw, i,
               if (sx < w && sy < h) at((sy.toLong * w + sx) * bands + b)
               else if (compression == 7)
                 at((math.min(sy, h - 1).toLong * w + math.min(sx, w - 1)) * bands + b)
-              else pad)
+              else pad, dtype)
             i += 1
           }
-          if (predictor == 2) diffRows(raw, ts, ts, bps)
-          else if (predictor == 3) fpDiffRows(raw, ts, ts, bands, bps)
-          if (compression == 7) jpegEncode(raw, ts, ts, bands) else compress(raw)
+          compressSeg(raw, ts, ts, bands, bps, predictor, compression)
         }
       } else {
         val nStrips = (h + rowsPerStrip - 1) / rowsPerStrip
@@ -1175,59 +1141,50 @@ object GeoTiff {
           val raw = new Array[Byte](rows * w * bands * bps)
           var i = 0
           while (i < rows * w * bands) {
-            writeSample(raw, i, at(y0.toLong * w * bands + i)) // chunky rows are contiguous
+            // chunky rows are contiguous
+            writeSampleLE(raw, i, at(y0.toLong * w * bands + i), dtype)
             i += 1
           }
-          if (predictor == 2) diffRows(raw, w, rows, bps)
-          else if (predictor == 3) fpDiffRows(raw, w, rows, bands, bps)
-          if (compression == 7) jpegEncode(raw, w, rows, bands) else compress(raw)
+          compressSeg(raw, w, rows, bands, bps, predictor, compression)
         }
       }
 
-    // stream: header | page0 block | page0 segments | page1 block | …
-    out.write(tiffHeader(bigTiff))
-    var base = headerSz.toLong
-    pages.zipWithIndex.foreach { case (pg, i) =>
-      // pass 1: segment byte counts (materialized in the in-memory
-      // path, compressed-and-discarded in the streaming path — except
-      // COMPRESSION=NONE, where a segment's byte count IS its raw size
-      // and the sizing pass is pure arithmetic)
-      val cached = if (materialize) segments(pg.w, pg.h, pg.at).toVector else null
-      val sizes: Seq[Long] =
-        if (materialize) cached.map(_.length.toLong)
-        else if (compression == 1) {
-          if (tileSize > 0) {
-            val ta = (pg.w + tileSize - 1) / tileSize
-            val td = (pg.h + tileSize - 1) / tileSize
-            Vector.fill(ta * td)(tileSize.toLong * tileSize * bands * bps)
-          } else {
-            val nStrips = (pg.h + rowsPerStrip - 1) / rowsPerStrip
-            (0 until nStrips).map { st =>
-              math.min(rowsPerStrip, pg.h - st * rowsPerStrip).toLong * pg.w * bands * bps
-            }.toVector
-          }
+    // pass 1: every page's segment byte counts (materialized in the
+    // in-memory path, compressed-and-discarded in the streaming path —
+    // except COMPRESSION=NONE, where a segment's byte count IS its raw
+    // size and the sizing pass is pure arithmetic)
+    val cached = if (materialize) pages.map(pg => segments(pg.w, pg.h, pg.at).toVector) else null
+    val sizes: Seq[Seq[Long]] = pages.indices.map { i =>
+      val pg = pages(i)
+      if (materialize) cached(i).map(_.length.toLong)
+      else if (compression == 1) {
+        if (tileSize > 0) {
+          val ta = (pg.w + tileSize - 1) / tileSize
+          val td = (pg.h + tileSize - 1) / tileSize
+          Vector.fill(ta * td)(tileSize.toLong * tileSize * bands * bps)
+        } else {
+          val nStrips = (pg.h + rowsPerStrip - 1) / rowsPerStrip
+          (0 until nStrips).map { st =>
+            math.min(rowsPerStrip, pg.h - st * rowsPerStrip).toLong * pg.w * bands * bps
+          }.toVector
         }
-        else segments(pg.w, pg.h, pg.at).map(_.length.toLong).toVector
-      val (block, ptrRel) = pageBlock(i, pg.w, pg.h, sizes, base,
-        dtype, gt, nodata, rowsPerStrip, predictor, crs, tileSize,
-        compression, bands, bigTiff)
-      val pageLen = block.length + sizes.sum
-      require(base + pageLen <= maxBytes,
-        s"encodePyramid assembles in memory; ${base + pageLen} bytes exceeds the 2 GiB " +
-          "Array ceiling — stream via writePyramid or write the COG parquet layout instead")
-      if (i < pages.length - 1) {
-        // the chain patch happens in the block BEFORE it streams
-        val nextBase = base + pageLen
-        var j = 0
-        while (j < ptrSz) { block(ptrRel + j) = ((nextBase >> (8 * j)) & 0xff).toByte; j += 1 }
       }
-      out.write(block)
-      // pass 2: the segment data itself
-      if (materialize) cached.foreach(out.write)
-      else segments(pg.w, pg.h, pg.at).foreach(out.write)
-      base += pageLen
+      else segments(pg.w, pg.h, pg.at).map(_.length.toLong).toVector
     }
-    base
+    val (header, blocks) = tiffBlocks(pages.zip(sizes).map { case (pg, s) => (pg.w, pg.h, s) },
+      dtype, gt, nodata, rowsPerStrip, predictor, crs, tileSize, compression, bands, bigTiff)
+    val total = header.length + blocks.map(_.length.toLong).sum + sizes.map(_.sum).sum
+    require(total <= maxBytes,
+      s"encodePyramid assembles in memory; $total bytes exceeds the 2 GiB " +
+        "Array ceiling — stream via writePyramid or write the COG parquet layout instead")
+    // pass 2: header | page0 block | page0 segments | page1 block | …
+    out.write(header)
+    pages.indices.foreach { i =>
+      out.write(blocks(i))
+      if (materialize) cached(i).foreach(out.write)
+      else segments(pages(i).w, pages(i).h, pages(i).at).foreach(out.write)
+    }
+    total
   }
 
   /** Apply TIFF predictor 2 (forward differencing) in place. */

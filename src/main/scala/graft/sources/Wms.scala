@@ -82,10 +82,6 @@ object Wms {
       yOrigin = text("YOrigin", "top").toLowerCase)
   }
 
-  def parseConfigFile(path: String): Config =
-    parseConfig(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"))
-
   /** Expand the `${x}`/`${y}`/`${z}` URL template for one tile.
     * `ty` is the INTERNAL top-down row; a `yOrigin=bottom` config
     * flips it here, at the wire boundary, so the rest of the pipeline

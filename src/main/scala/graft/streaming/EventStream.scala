@@ -2,10 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured-Streaming extension over the `events` table (SURVEY §2 J:
   * the reference is batch-only; the streaming surface shares the
@@ -548,6 +548,34 @@ object EventStream {
     graft.llm.AtRestStore.establishOrAppend(batch, dir, "fps", "id", idCol)(
       b => graft.llm.Dedup.winnowIngestAtRest(b, idCol, textCol, dir))(
       fresh => graft.llm.Dedup.winnowAppendAtRest(fresh, idCol, textCol, dir))
+
+  /** Feeds `df` through a FILE-source stream as one micro-batch per
+    * condition in `batchConds` — the crawl-shard shape, with no
+    * driver-side collect of the rows. Batch 0's rows land in a fresh
+    * feed directory BEFORE `start` runs, so they arrive as one
+    * micro-batch. Each later batch is written as ONE parquet file and
+    * drained with `processAllAvailable`: the live source polls
+    * continuously and could list a multi-file commit half-way,
+    * splitting the batch, while a single part file appears atomically
+    * (one committer rename). `schemaDdl` is `df`'s schema. The query
+    * is stopped and the feed directory (a parquet copy of the fed
+    * rows) deleted before this returns.
+    */
+  private[graft] def feedStream(df: DataFrame, schemaDdl: String, batchConds: Seq[Column])
+                               (start: DataFrame => StreamingQuery): Unit = {
+    val feed = java.nio.file.Files.createTempDirectory("graft_stream_feed")
+    try {
+      df.filter(batchConds.head).write.mode("append").parquet(feed.toString)
+      val q = start(df.sparkSession.readStream.schema(schemaDdl).parquet(feed.toString))
+      try {
+        q.processAllAvailable()
+        for (cond <- batchConds.tail) {
+          df.filter(cond).coalesce(1).write.mode("append").parquet(feed.toString)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(feed.toFile)
+  }
 
   /** File-source streaming reader with an explicit schema (streaming
     * requires one) — `readStream` over a parquet directory.

@@ -224,68 +224,11 @@ object Trans {
     Some(TransPlan(frame, log.result(), outGt, outW, outH, opt.srcSrs))
   }
 
-  /** Export a planned frame as an actual GeoTIFF file with an internal
-    * overview pyramid (the reference's primary OUTPUT form:
-    * tiled+overviewed GTiff, `gdalos_trans.py:773-816` + `gdalos_ovr`).
-    * A bounded driver-side sink like the CZML/JSON exports — it guards
-    * `maxPixels` and collects; the distributed layout for big rasters
-    * remains the A3 parquet COG. Overview levels are computed by the
-    * DISTRIBUTED D7 aggregation before the bounded collect.
-    */
-  def exportGeoTiff(p: TransPlan, path: String, ovrLevels: Int = 0,
-                    dtype: graft.sources.GeoTiff.DType = graft.sources.GeoTiff.DtInt16,
-                    ndv: Double = PixelFrame.Dem.Ndv,
-                    resampling: ResamplingAlg = ResamplingAlg.Average,
-                    maxPixels: Long = 4000000, tileSize: Int = 0,
-                    bigTiff: Option[Boolean] = None): Unit = {
-    require(p.outW.toLong * p.outH <= maxPixels,
-      s"raster too large for single-file GeoTIFF export (> $maxPixels px); use the COG parquet layout")
-    def collectPage(df: DataFrame, w: Int, h: Int): Array[Double] = {
-      val vals = Array.fill(w * h)(ndv)
-      df.select("px", "py", "v").collect().foreach { r =>
-        val (x, y) = (r.getInt(0), r.getInt(1))
-        if (x >= 0 && x < w && y >= 0 && y < h) vals(y * w + x) = r.getDouble(2)
-      }
-      vals
-    }
-    var pages = Vector((p.outW, p.outH, collectPage(p.frame, p.outW, p.outH)))
-    var cur = p.frame
-    var (cw, ch) = (p.outW, p.outH)
-    for (_ <- 1 to ovrLevels) {
-      val prev = cur
-      cur = Overview.buildLevel(prev, resampling, ndv).localCheckpoint()
-      // level k−1's blocks are dead once level k has materialized
-      // (eager checkpoint) and its page is collected below
-      if (prev ne p.frame) graft.core.Materialize.release(prev)
-      // buildLevel emits coarse pixels 0..floor((n-1)/2) = ceil(n/2)
-      // per axis (GDAL's ceil overview convention) — size pages to match
-      cw = (cw + 1) / 2; ch = (ch + 1) / 2
-      pages :+= ((cw, ch, collectPage(cur, cw, ch)))
-    }
-    if (cur ne p.frame) graft.core.Materialize.release(cur)
-    // BIGTIFF creation option (`gdalos_trans.py:785` via GDAL's
-    // get_bigtiff_creation_option_value): Some(true)=YES,
-    // Some(false)=NO, None=IF_NEEDED — version 43 when the estimated
-    // uncompressed payload would cross the classic 4 GiB offset
-    // ceiling (compression can't be relied on to stay under it).
-    val rawBytes = pages.map { case (pw, ph, _) =>
-      pw.toLong * ph * (dtype.bits / 8) }.sum
-    val useBig = bigTiff.getOrElse(rawBytes > (1L << 32) - (1L << 24))
-    // stream page-by-page: per-page pixel arrays stay (bounded by
-    // maxPixels), but the FILE is never assembled in memory — large
-    // BigTIFF outputs write through the two-pass segment streamer
-    val out = java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(path))
-    try graft.sources.GeoTiff.writePyramid(out,
-      pages.map { case (pw, ph, pv) =>
-        graft.sources.GeoTiff.StreamPage(pw, ph, i => pv(i.toInt)) },
-      dtype, p.outGt, Some(ndv),
-      crs = graft.sources.GeoTiff.CrsTag.fromEpsg(Proj.epsgFromName(p.outSrs)),
-      tileSize = tileSize, bigTiff = useBig)
-    finally out.close()
-  }
-
-  /** DISTRIBUTED GeoTIFF export — the 100×-scale path the collect-based
-    * [[exportGeoTiff]] refuses above `maxPixels`. Tile segments are
+  /** Export a planned frame as one tiled GeoTIFF file with an internal
+    * overview pyramid — the reference's primary OUTPUT form
+    * (tiled+overviewed GTiff, `gdalos_trans.py:773-816` +
+    * `gdalos_ovr`), and the one GeoTIFF export path: no page is ever
+    * collected, so its size has no driver cap. Tile segments are
     * encoded EXECUTOR-side (group pixels by tile key, pack + predictor
     * + compress each tile into its final TIFF segment bytes —
     * [[graft.sources.GeoTiff.encodeTileSegment]], byte-identical to
@@ -293,7 +236,7 @@ object Trans {
     * parquet table (the [[graft.sources.Sinks.writeCogLayout]] sort,
     * on any DFS). The driver then assembles the container from
     * METADATA only — header + IFD from the per-tile byte counts
-    * ([[graft.sources.GeoTiff.shardedTiffHeader]]) — and streams the
+    * ([[graft.sources.GeoTiff.tiffBlocks]]) — and streams the
     * compressed segments through in tid order
     * (`toLocalIterator`: one staging partition in memory at a time,
     * never a page, never the raster). Driver peak heap is
@@ -303,8 +246,12 @@ object Trans {
     * (`gdalos_trans.py:773-816`).
     *
     * Tiles with no pixels in the frame emit a shared all-nodata
-    * segment. Single-band, DEFLATE by default; `bigTiff` switches the
-    * container widths for >4 GiB outputs exactly as [[exportGeoTiff]].
+    * segment. Single-band, DEFLATE by default. `bigTiff` is the BIGTIFF
+    * creation option (`gdalos_trans.py:785` via GDAL's
+    * get_bigtiff_creation_option_value): Some(true)=YES,
+    * Some(false)=NO, None=IF_NEEDED — version 43 when the uncompressed
+    * payload would cross the classic 4 GiB offset ceiling (compression
+    * can't be relied on to stay under it).
     * `ovrLevels > 0` completes the COG contract at scale: each
     * overview level is computed DISTRIBUTED ([[Overview.buildLevel]],
     * GDAL ceil sizing) and staged exactly like the base, and the
@@ -354,8 +301,8 @@ object Trans {
       require(nTiles <= Int.MaxValue, s"tile grid too large: $nTiles")
       val taL = ta; val kL = k
       frame
-        // same silent-drop contract as exportGeoTiff's collectPage: a
-        // stray out-of-frame pixel must not alias into another tile's
+        // out-of-frame pixels are dropped silently: a stray one
+        // must not alias into another tile's
         // tid (px/ts >= ta wraps into the NEXT tile row) or index past
         // the tile buffer
         .filter(col("px") >= 0 && col("px") < w &&
@@ -394,8 +341,8 @@ object Trans {
         .toDF("lvl", "tid", "len", "seg")
     }
 
-    // level 0 + distributed overview levels (GDAL ceil sizing, as
-    // exportGeoTiff) — overview FRAMES build eagerly (localCheckpoint,
+    // level 0 + distributed overview levels (GDAL ceil sizing:
+    // buildLevel emits ceil(n/2) pixels per axis) — overview FRAMES build eagerly (localCheckpoint,
     // so the union write below never recomputes a level's lineage
     // twice), but every level's encode lands in ONE staging write
     val levelDims = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
@@ -432,12 +379,10 @@ object Trans {
     val rawBytes = levels.map { case (w, h, _) =>
       w.toLong * h * (dtype.bits / 8) }.sum
     val useBig = bigTiff.getOrElse(rawBytes > (1L << 32) - (1L << 24))
-    val (header, blocks) = graft.sources.GeoTiff.shardedTiffBlocks(
-      levels.map { case (w, h, counts) => (w, h, counts) },
-      dtype, p.outGt, Some(ndv), ts,
-      compression = compression, predictor = 1,
+    val (header, blocks) = graft.sources.GeoTiff.tiffBlocks(levels,
+      dtype, p.outGt, Some(ndv), rowsPerStrip = 64, predictor = 1,
       crs = graft.sources.GeoTiff.CrsTag.fromEpsg(Proj.epsgFromName(p.outSrs)),
-      bigTiff = useBig)
+      tileSize = ts, compression = compression, bands = 1, bigTiff = useBig)
     val out = new java.io.BufferedOutputStream(
       java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(path)), 1 << 20)
     try {

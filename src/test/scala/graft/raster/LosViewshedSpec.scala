@@ -289,8 +289,10 @@ class LosViewshedSpec extends SparkSpec {
   test("multi-observer combine pays ONE window shuffle (obs x buckets keys)") {
     import org.apache.spark.sql.execution.ExplainMode
     val dem = PixelFrame.dem(spark, 41, 41)
-    val vs = Viewshed.viewshedCombine(dem, Seq((10, 10, 15.0), (30, 30, 15.0), (20, 5, 10.0)),
-      op = "count", cellSize = 5.0, maxR = 150.0, nBuckets = 16)
+    val vs = Viewshed.viewshedCombineObs(dem,
+      Seq(Viewshed.Observer(10, 10, 15.0, 150.0), Viewshed.Observer(30, 30, 15.0, 150.0),
+        Viewshed.Observer(20, 5, 10.0, 150.0)),
+      op = "count", cellSize = 5.0, nBuckets = 16)
     val plan = vs.queryExecution.explainString(ExplainMode.fromString("simple"))
     val windows = "(?m)^\\s*[+:\\-]*\\s*Window ".r.findAllIn(plan).length
     assert(windows == 1, s"expected a single Window node, plan:\n$plan")
@@ -335,23 +337,15 @@ class LosViewshedSpec extends SparkSpec {
   test("viewshedCombineSector: per-observer sector crop feeds the combine") {
     val dem = flatDem(21, 21)
     // observer 0 omni, observer 1 faces north only
-    val cnt = Viewshed.viewshedCombineSector(dem,
-        Seq((10, 10, 5.0, 0.0, 360.0), (10, 10, 5.0, 0.0, 90.0)),
-        op = "count", cellSize = 1.0, maxR = 8.0)
+    val cnt = Viewshed.viewshedCombineObs(dem,
+        Seq(Viewshed.Observer(10, 10, 5.0, 8.0, 0.0, 360.0),
+          Viewshed.Observer(10, 10, 5.0, 8.0, 0.0, 90.0)),
+        op = "count", cellSize = 1.0)
       .select("px", "py", "v").as[(Int, Int, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(cnt((10, 5)) == 2.0)  // north: both observers see it
     assert(cnt((10, 15)) == 1.0) // south: only the omni observer
     assert(cnt((15, 10)) == 1.0) // east: outside the 90° aperture
-    // delegation: viewshedCombine == all-omni viewshedCombineSector
-    val a = Viewshed.viewshedCombine(dem, Seq((10, 10, 5.0), (4, 4, 2.0)),
-      op = "max", cellSize = 1.0, maxR = 8.0)
-      .select("px", "py", "v").as[(Int, Int, Double)].collect().toSet
-    val b = Viewshed.viewshedCombineSector(dem,
-      Seq((10, 10, 5.0, 7.0, 360.0), (4, 4, 2.0, 0.0, 361.0)),
-      op = "max", cellSize = 1.0, maxR = 8.0)
-      .select("px", "py", "v").as[(Int, Int, Double)].collect().toSet
-    assert(a == b)
   }
 
   test("viewshedCombineObs: per-observer MaxR bounds each stack member independently") {
@@ -366,17 +360,6 @@ class LosViewshedSpec extends SparkSpec {
     assert(cnt((10, 7)) == 2.0)  // dist 3: inside both radii
     assert(cnt((10, 3)) == 1.0)  // dist 7: only the 9-range observer
     assert(cnt((10, 0)) == 0.0)  // dist 10: beyond both
-    // shared-radius delegation stays equivalent
-    val viaSector = Viewshed.viewshedCombineSector(dem,
-      Seq((10, 10, 5.0, 0.0, 360.0), (4, 4, 2.0, 90.0, 120.0)),
-      op = "max", cellSize = 1.0, maxR = 8.0)
-      .select("px", "py", "v").as[(Int, Int, Double)].collect().toSet
-    val viaObs = Viewshed.viewshedCombineObs(dem,
-      Seq(Viewshed.Observer(10, 10, 5.0, 8.0),
-        Viewshed.Observer(4, 4, 2.0, 8.0, 90.0, 120.0)),
-      op = "max", cellSize = 1.0)
-      .select("px", "py", "v").as[(Int, Int, Double)].collect().toSet
-    assert(viaSector == viaObs)
   }
 
   test("viewshedCombineTable: bit-equal to viewshedCombineObs for omni observers, every op") {

@@ -493,4 +493,23 @@ class EventStreamSpec extends SparkSpec {
     assert(spark.read.parquet(AtRestStore.tablePath(spark, sDir, "fps")).count() == nFps,
       "fps table gained rows on replay")
   }
+
+  test("feedStream: one micro-batch per condition, and no feed directory left behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def feeds(): Set[String] = tmp.list().filter(_.startsWith("graft_stream_feed")).toSet
+    val before = feeds()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]()
+    var during = Set.empty[String]
+    feedStream(spark.range(20).toDF("id"), "id LONG", Seq(col("id") < 12, col("id") >= 12)) {
+      stream =>
+        during = feeds() -- before
+        stream.writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          seen.add((id, b.as[Long].collect().sorted.toSeq)); ()
+        }.start()
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq == Seq((0L, (0L until 12L).toSeq), (1L, (12L until 20L).toSeq)))
+    assert(during.size == 1, s"expected one feed directory while streaming: $during")
+    assert((feeds() -- before).isEmpty, s"feed directory left behind: ${feeds() -- before}")
+  }
 }

@@ -82,15 +82,16 @@ class TransSpec extends SparkSpec {
       lit(0).as("rid"), lit(1).as("band"),
       (col("id") % 21).cast("int").as("px"),
       floor(col("id") / 21).cast("int").as("py"), lit(0.0).as("v"))
-    val out = Viewshed.viewshedCombine(flat,
-      observers = Seq((5, 10, 10.0), (15, 10, 10.0)),
-      op = "count", cellSize = 1.0, maxR = 100.0).cache()
+    val out = Viewshed.viewshedCombineObs(flat,
+      observers = Seq(Viewshed.Observer(5, 10, 10.0, 100.0),
+        Viewshed.Observer(15, 10, 10.0, 100.0)),
+      op = "count", cellSize = 1.0).cache()
     // flat world: every pixel (except each observer's own cell) is seen
     // by both observers → count 2; observer cells are seen by the other
     assert(out.filter($"px" === 10 && $"py" === 3).select("v").as[Double].head() == 2.0)
     assert(out.filter($"px" === 5 && $"py" === 10).select("v").as[Double].head() == 1.0)
     assertThrows[IllegalArgumentException](
-      Viewshed.viewshedCombine(flat, Seq.empty, "count", 1.0, 100.0))
+      Viewshed.viewshedCombineObs(flat, Seq.empty, "count", 1.0))
   }
   test("exportGeoTiff writes a real multi-IFD tiff the engine reads back (steps 5-7)") {
     import graft.sources.GeoTiff
@@ -98,7 +99,7 @@ class TransSpec extends SparkSpec {
     val p = Trans.plan(PixelFrame.dem(spark, 64, 48), gt, 64, 48,
       Trans.TransOptions()).get
     val f = java.nio.file.Files.createTempFile("graft_export", ".tif")
-    Trans.exportGeoTiff(p, f.toString, ovrLevels = 2)
+    Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
     val infos = GeoTiff.readInfos(f.toString)
     assert(infos.map(i => (i.width, i.height)) == Seq((64, 48), (32, 24), (16, 12)))
     // read the base back through the connector: identical to the plan frame
@@ -121,12 +122,10 @@ class TransSpec extends SparkSpec {
   test("exportGeoTiffSharded: distributed export round-trips bit-equal at a collect-refusing size") {
     import graft.sources.GeoTiff
     val gt = GeoTransform(100, 0.25, 0, 50, 0, -0.25)
-    val (w, h) = (2400, 2000) // 4.8M px — over exportGeoTiff's 4M collect guard
+    val (w, h) = (2400, 2000) // 4.8M px — more than a driver collect should hold
     val p = Trans.plan(PixelFrame.dem(spark, w, h), gt, w, h,
       Trans.TransOptions()).get
     val f = java.nio.file.Files.createTempFile("graft_shard_export", ".tif")
-    // the collect path REFUSES this size — the sharded path is the only way
-    intercept[IllegalArgumentException] { Trans.exportGeoTiff(p, f.toString) }
     Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
     // multi-IFD COG: base + two distributed overview pages, ceil-sized
     val infos = GeoTiff.readInfos(f.toString)
@@ -228,14 +227,14 @@ class TransSpec extends SparkSpec {
     val p = Trans.plan(PixelFrame.dem(spark, 32, 24), gt, 32, 24,
       Trans.TransOptions()).get
     val fBig = java.nio.file.Files.createTempFile("graft_exp_big", ".tif")
-    Trans.exportGeoTiff(p, fBig.toString, bigTiff = Some(true))
+    Trans.exportGeoTiffSharded(p, fBig.toString, bigTiff = Some(true))
     val bytes = java.nio.file.Files.readAllBytes(fBig)
     assert(bytes(2) == 43) // BigTIFF version
     val info = GeoTiff.readInfo(fBig.toString)
     assert(info.width == 32 && info.height == 24 && info.gt.isDefined)
     // IF_NEEDED (None) on a small raster → classic 42
     val fStd = java.nio.file.Files.createTempFile("graft_exp_std", ".tif")
-    Trans.exportGeoTiff(p, fStd.toString)
+    Trans.exportGeoTiffSharded(p, fStd.toString)
     assert(java.nio.file.Files.readAllBytes(fStd)(2) == 42)
     java.nio.file.Files.deleteIfExists(fBig)
     java.nio.file.Files.deleteIfExists(fStd)
@@ -247,7 +246,7 @@ class TransSpec extends SparkSpec {
     val p = Trans.plan(PixelFrame.dem(spark, 45, 33), gtOdd, 45, 33,
       Trans.TransOptions()).get
     val f = java.nio.file.Files.createTempFile("graft_odd", ".tif")
-    Trans.exportGeoTiff(p, f.toString, ovrLevels = 2)
+    Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
     val infos = GeoTiff.readInfos(f.toString)
     // buildLevel emits ceil(n/2) per axis: 45→23→12, 33→17→9
     assert(infos.map(i => (i.width, i.height)) == Seq((45, 33), (23, 17), (12, 9)))
@@ -256,6 +255,44 @@ class TransSpec extends SparkSpec {
       .option("path", f.toString).option("ovr", 2).load()
     assert(o2.filter(col("px") === 11).count() == 9)
     assert(o2.count() == 12 * 9)
+  }
+
+  test("exportGeoTiffSharded writes the bytes GeoTiff.encodePyramid writes for the collected pages") {
+    import graft.sources.GeoTiff
+    val gtOdd = GeoTransform(0, 1, 0, 45, 0, -1)
+    val full = Trans.plan(PixelFrame.dem(spark, 45, 33), gtOdd, 45, 33,
+      Trans.TransOptions()).get
+    val ndv = PixelFrame.Dem.Ndv
+    // tile (1, 1) of the 16-px grid holds no pixel, so the export emits
+    // its shared empty-tile segment there. The hole is 2×2-aligned and
+    // no pixel is nodata, so every overview average divides by 1, 2 or
+    // 4: exact in any summation order, and the levels rebuilt below
+    // match the export's bit for bit.
+    val p = full.copy(frame = full.frame
+      .filter(!(col("px").between(16, 31) && col("py").between(16, 31)))
+      .withColumn("v", when(col("v") === ndv, lit(1.0)).otherwise(col("v"))))
+    def collectPage(df: org.apache.spark.sql.DataFrame, w: Int, h: Int): Array[Double] = {
+      val vals = Array.fill(w * h)(ndv)
+      df.select("px", "py", "v").collect().foreach { r =>
+        vals(r.getInt(1) * w + r.getInt(0)) = r.getDouble(2)
+      }
+      vals
+    }
+    val levels = Iterator.iterate(p.frame)(
+      graft.raster.Overview.buildLevel(_, graft.core.ResamplingAlg.Average, ndv)).take(3).toSeq
+    val pages = levels.zip(Seq((45, 33), (23, 17), (12, 9))).map { case (df, (w, h)) =>
+      (w, h, collectPage(df, w, h)) }
+    for (dt <- Seq(GeoTiff.DtInt16, GeoTiff.DtFloat32); big <- Seq(None, Some(true))) {
+      val f = java.nio.file.Files.createTempFile("graft_shard_bytes", ".tif")
+      Trans.exportGeoTiffSharded(p, f.toString, tileSize = 16, dtype = dt,
+        ovrLevels = 2, bigTiff = big)
+      val want = GeoTiff.encodePyramid(pages, dt, p.outGt, Some(ndv),
+        crs = GeoTiff.CrsTag.fromEpsg(graft.core.Proj.epsgFromName(p.outSrs)),
+        tileSize = 16, bigTiff = big.contains(true))
+      assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f), want),
+        s"dtype $dt, bigTiff $big")
+      java.nio.file.Files.deleteIfExists(f)
+    }
   }
 
   // The CLI tests below read the committed SRTM-shaped fixture
@@ -378,7 +415,7 @@ class TransSpec extends SparkSpec {
       warpSrs = Some("w84u51"), srcSrs = "w84geo")).get
     assert(p.outSrs == "w84u51")
     val f = java.nio.file.Files.createTempFile("graft_utm_export", ".tif")
-    Trans.exportGeoTiff(p, f.toString)
+    Trans.exportGeoTiffSharded(p, f.toString)
     val info = GeoTiff.readInfo(f.toString)
     assert(info.epsg.contains(32651)) // ProjectedCSTypeGeoKey, zone 51
     // pixel scale is in meters now, not degrees
