@@ -3,8 +3,6 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.TopK
-
 /** Catalog / mosaic / routing operators (SURVEY §2 A4/A5, C5, C8, F1,
   * G2/G3) over a raster-catalog DataFrame
   * `(rid INT, path STRING, minx, miny, maxx, maxy, resx DOUBLE)`.
@@ -76,19 +74,53 @@ object Catalog {
     * `gdalos_selector.py:44-65`): zone center from the `w84u<zone>`
     * path pattern (`gdalos_selector.py:15`, center = zone·6 − 183 per
     * `osr_utm_util.py:9-26`), each point routed to the catalog row
-    * minimizing |x − center|. Broadcast the catalog; top-1 via a
-    * window with a deterministic (dist, rid) tie-break.
+    * minimizing (|x − center|, rid). Output: the point columns plus
+    * `rid`, `path`, `center`.
+    *
+    * The catalog is small file metadata, so its `(rid, path, center)`
+    * rows are read once on the driver; a row whose path has no zone
+    * routes nothing, and a catalog without a zoned row routes no point.
+    * The lowest rid per distinct center is kept, sorted by center, and
+    * each point takes its nearest center by binary search in one narrow
+    * projection: no join, no exchange. On local points the optimizer
+    * folds that projection, so the caller's collect runs no Spark job.
     */
   def route(points: DataFrame, cat: DataFrame): DataFrame = {
-    val centers = cat
-      .withColumn("zone", regexp_extract(col("path"), "w84u([-+]?[0-9]*\\.?[0-9]+)", 1)
-        .cast("double"))
-      .withColumn("center", col("zone") * 6 - 183)
-      .select(col("rid"), col("path"), col("center"))
-    points.crossJoin(broadcast(centers))
-      .transform(TopK.per(Seq("point_id"), Seq(abs(col("x") - col("center")), col("rid")),
-        1, "rn"))
-      .drop("rn")
+    val zone = regexp_extract(col("path"), "w84u([-+]?[0-9]*\\.?[0-9]+)", 1)
+    val byCenter = cat.filter(zone =!= "")
+      .select(col("rid"), col("path"), (zone.cast("double") * 6 - 183).as("center"))
+      .collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getDouble(2)))
+      .groupBy(_._3).values.map(_.minBy(_._1)).toArray
+      .sortBy(_._3)(Ordering.Double.TotalOrdering)
+    val (rids, centers) = (byCenter.map(_._1), byCenter.map(_._3))
+    val nearest = udf { (x: java.lang.Double) =>
+      val (rid, path, center) = byCenter(nearestCenter(centers, rids, x))
+      (rid, path, Double.box(center)) // boxed: `center` stays nullable, like the cast
+    }.asNonNullable()
+    val hit = nearest(col("x"))
+    (if (centers.isEmpty) points.filter(lit(false)) else points)
+      .select(col("*"), hit("_1").as("rid"), hit("_2").as("path"), hit("_3").as("center"))
+  }
+
+  /** Index of the center minimizing (|x − center|, rid) in Spark's
+    * double order (NaN above every number; a null x ties everywhere).
+    * `centers` is sorted and distinct, so the nearest is a neighbour of
+    * x's insertion point and every equally near center is contiguous
+    * with it.
+    */
+  private def nearestCenter(centers: Array[Double], rids: Array[Int],
+                            x: java.lang.Double): Int = {
+    val byDist = Ordering.Double.TotalOrdering // distances are never −0.0
+    def dist(j: Int) = if (x == null) 0.0 else math.abs(x - centers(j))
+    val i = if (x == null) 0 else {
+      val j = java.util.Arrays.binarySearch(centers, x.doubleValue)
+      if (j >= 0) j else -j - 1
+    }
+    val d = Seq(i - 1, i).filter(centers.indices.contains).map(dist).min(byDist)
+    def tie(j: Int) = byDist.equiv(dist(j), d)
+    ((i - 1 to 0 by -1).takeWhile(tie) ++ (i until centers.length).takeWhile(tie))
+      .minBy(rids(_))
   }
 
   /** G2 mosaic first-wins de-overlap (`gdal.BuildVRT` semantics at

@@ -30,18 +30,8 @@ object LlmQueries {
   private def atRestDir(d: String,
                         prefix: String = "graft_ivf_at_rest"): String = {
     val key = prefix + "_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
-    atRestDirs.computeIfAbsent(key, { k =>
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"${k}_$jvmToken")
-      val root = f.toPath
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          if (java.nio.file.Files.exists(root))
-            java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        } catch { case _: Throwable => () }))
-      f.toString
-    })
+    atRestDirs.computeIfAbsent(key,
+      k => graft.core.TempFiles.inTmpdir(s"${k}_$jvmToken").toString)
   }
 
   /** One-shot at-rest ingest: runs `write` the FIRST time `key` is

@@ -105,7 +105,7 @@ object RasterQueries {
     Catalog.filterContained(Catalog.synthetic(s, 32))
       .select("rid", "path").orderBy("rid")
 
-  /** q38 C5 nearest-zone-center routing (selector join + H7 regex). */
+  /** q38 C5 nearest-zone-center routing (selector lookup + H7 regex). */
   def q38(s: SparkSession, d: String): DataFrame = {
     val points = s.range(40).select(col("id").cast("int").as("point_id"),
       (col("id") * 2.0 - 30).as("x"))
@@ -651,7 +651,7 @@ object RasterQueries {
     val (w, h) = (1024, 768)
     val p = graft.trans.Trans.plan(PixelFrame.dem(s, w, h), Gt, w, h,
       graft.trans.Trans.TransOptions()).get
-    val f = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+    val f = graft.core.TempFiles.inTmpdir(
       s"graft_q232_cog_${ProcessHandle.current().pid()}.tif")
     graft.trans.Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
     cogVerifyFrame(s, f.toString, p.frame)
@@ -700,7 +700,7 @@ object RasterQueries {
     val (w, h) = (1024, 768)
     val p = graft.trans.Trans.plan(PixelFrame.dem(s, w, h), Gt, w, h,
       graft.trans.Trans.TransOptions()).get
-    val f = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+    val f = graft.core.TempFiles.inTmpdir(
       s"graft_q243_cog_${ProcessHandle.current().pid()}.tif")
     graft.trans.Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
     graft.sources.GeoTiff.readInfos(f.toString).zipWithIndex
@@ -720,7 +720,7 @@ object RasterQueries {
     val (w, h) = (1024, 768)
     val p = graft.trans.Trans.plan(PixelFrame.dem(s, w, h), Gt, w, h,
       graft.trans.Trans.TransOptions()).get
-    val f = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+    val f = graft.core.TempFiles.inTmpdir(
       s"graft_q244_cog_${ProcessHandle.current().pid()}.tif")
     if (!java.nio.file.Files.exists(f))
       graft.trans.Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
@@ -746,11 +746,11 @@ object RasterQueries {
     val (w, h) = (640, 480)
     val p = graft.trans.Trans.plan(PixelFrame.dem(s, w, h), Gt, w, h,
       graft.trans.Trans.TransOptions()).get
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+    val dir = graft.core.TempFiles.inTmpdir(
       s"graft_q245_grid_${ProcessHandle.current().pid()}").toString
     val receipts = graft.trans.Trans.exportGeoTiffGrid(p, dir,
       xParts = 2, yParts = 3, tileSize = 128)
-    val single = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+    val single = graft.core.TempFiles.inTmpdir(
       s"graft_q245_single_${ProcessHandle.current().pid()}.tif")
     if (!java.nio.file.Files.exists(single))
       graft.trans.Trans.exportGeoTiffSharded(p, single.toString, tileSize = 128)

@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.TempFiles
 
 /** Shared local SparkSession for all suites (sequential execution per
   * build.sbt). Small shuffle-partition count keeps tiny-grid tests
@@ -11,6 +17,25 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** A fresh temp directory, removed with its contents at JVM exit. */
+  def tempDir(prefix: String): Path = TempFiles.deleteAtExit(Files.createTempDirectory(prefix))
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val r = body
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(counter)
+  }
 }
 
 object SparkSpec {

@@ -45,6 +45,45 @@ class CatalogSpec extends SparkSpec {
     assert(routed(2) == 0) // equidistant → lower rid (deterministic tie)
   }
 
+  test("route runs 0 Spark jobs on a local point and a local catalog") {
+    val c = Seq((0, "srtm_w84u36.tif"), (1, "srtm_w84u37.tif")).toDF("rid", "path")
+    val pts = Seq((0, 38.0, 31.0)).toDF("point_id", "x", "y")
+    val (got, jobs) = jobsOf(Catalog.route(pts, c).collect())
+    assert(jobs == 0, s"route ran $jobs Spark jobs")
+    assert(got.map(_.toSeq).toSeq == Seq(Seq(0, 38.0, 31.0, 1, "srtm_w84u37.tif", 39.0)))
+  }
+
+  test("route over distributed points equals a brute force over (|x - center|, rid), " +
+    "exact midpoints included") {
+    // x = 2·id − 30 lands on every midpoint 0, 6, … between zone centers
+    val pts = spark.range(40).select(col("id").cast("int").as("point_id"),
+      (col("id") * 2.0 - 30).as("x"))
+    val c = Catalog.synthetic(spark, 16)
+    val zone = "w84u([0-9]+)".r.unanchored
+    val cat = c.select("rid", "path").as[(Int, String)].collect().toSeq
+      .map { case (rid, p @ zone(z)) => (rid, p, z.toDouble * 6 - 183) }
+    val want = (0 until 40).map { id =>
+      val x = id * 2.0 - 30
+      val (rid, path, center) = cat.minBy { case (rid, _, c) => (math.abs(x - c), rid) }(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      (id, x, rid, path, center)
+    }
+    val got = Catalog.route(pts, c).as[(Int, Double, Int, String, Double)]
+      .collect().sortBy(_._1).toSeq
+    assert(got == want)
+  }
+
+  test("route skips catalog rows without a zone; with none zoned it routes no point") {
+    val pts = Seq((0, 20.0), (1, 40.0)).toDF("point_id", "x")
+    val mixed = Seq((0, "plain.tif"), (1, "srtm_w84u36.tif")).toDF("rid", "path")
+    assert(Catalog.route(pts, mixed).select("point_id", "rid").as[(Int, Int)]
+      .collect().toSet == Set((0, 1), (1, 1)))
+    val plain = Seq((1, "plain.tif")).toDF("rid", "path")
+    assert(Catalog.route(pts, plain).collect().isEmpty)
+    assert(Catalog.route(pts, plain).columns.toSeq ==
+      Seq("point_id", "x", "rid", "path", "center"))
+  }
+
   test("mosaicFirstWins: lowest rid covers overlaps (G2)") {
     val tiles = Seq((0, 1, 0, 0, 10.0), (1, 1, 0, 0, 20.0), (1, 1, 1, 0, 30.0))
       .toDF("rid", "band", "px", "py", "v")

@@ -31,7 +31,7 @@ class AtRestStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_ars_$tag").toString
+    tempDir(s"graft_ars_$tag").toString
 
   private def writeVals(path: String, vals: Seq[Int]): Unit =
     vals.toDF("v").coalesce(1).write.mode("overwrite").parquet(path)
@@ -578,7 +578,8 @@ class AtRestStoreSpec extends SparkSpec {
     * classpath and module flags; returns (process, log path).
     */
   private def forkWriter(args: String*): (Process, java.nio.file.Path) = {
-    val out = java.nio.file.Files.createTempFile("graft_xjvm_w", ".log")
+    val logs = tempDir("graft_xjvm_w")
+    val out = Files.createFile(logs.resolve("out.log"))
     val addOpens = java.lang.management.ManagementFactory
       .getRuntimeMXBean.getInputArguments.asScala
       .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports"))
@@ -588,7 +589,7 @@ class AtRestStoreSpec extends SparkSpec {
       "graft.llm.CrossJvmWriter", args(0), args(1), out.toString) ++ args.drop(2)
     val proc = new ProcessBuilder(full: _*)
       .redirectErrorStream(true)
-      .redirectOutput(java.io.File.createTempFile("graft_xjvm_w_stdout", ".log"))
+      .redirectOutput(logs.resolve("stdout.log").toFile)
       .start()
     (proc, out)
   }
@@ -694,7 +695,8 @@ class AtRestStoreSpec extends SparkSpec {
     val dir = tmpDir("xjvm")
     writeVals(dir + "/t", Seq(1, 2))
     val generations = scala.collection.mutable.ArrayBuffer(Set(1, 2))
-    val out = java.nio.file.Files.createTempFile("graft_xjvm", ".log")
+    val logs = tempDir("graft_xjvm")
+    val out = Files.createFile(logs.resolve("out.log"))
     // fork a separate JVM + SparkSession on the SAME classpath (tests
     // run forked, so java.class.path is the full test classpath) and
     // the same JDK-17 module flags this JVM got from build.sbt
@@ -707,7 +709,7 @@ class AtRestStoreSpec extends SparkSpec {
       "graft.llm.CrossJvmProbe", dir, out.toString, "25")
     val proc = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
-      .redirectOutput(java.io.File.createTempFile("graft_xjvm_stdout", ".log"))
+      .redirectOutput(logs.resolve("stdout.log").toFile)
       .start()
     try {
       // wait for the probe JVM's session to come up

@@ -1063,23 +1063,6 @@ class LlmSpec extends SparkSpec {
     Retrieval.bm25AppendAtRest(docs.filter($"doc_id" >= 30), "doc_id", "text", dir)
     val batch = Seq((0L, "spark"), (0L, "w3"), (1L, "scan"), (1L, "w4"))
       .toDF("qid", "term")
-    val sc = spark.sparkContext
-    def jobsOf[T](body: => T): (T, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.graft.ListenerBus.drain(sc)
-      sc.addSparkListener(counter)
-      try {
-        val r = body
-        org.apache.spark.graft.ListenerBus.drain(sc)
-        (r, jobs.get)
-      } finally sc.removeSparkListener(counter)
-    }
     // delete and compact run in every index update; the bounds are
     // their counts before the takedown protocol moved into AtRestStore
     val (_, deleteJobs) = jobsOf(

@@ -44,7 +44,7 @@ class TransSpec extends SparkSpec {
   }
 
   test("run writes COG-layout base + .ovr pyramid + .info (steps 5–7)") {
-    val out = Files.createTempDirectory("graft_trans").resolve("out").toString
+    val out = tempDir("graft_trans").resolve("out").toString
     val p = Trans.run(spark, dem, gt, 200, 120,
       TransOptions(extent = Some(GeoRectangle(110, 35, 120, 45))),
       out, tileSize = 16, ovrLevels = 2).get
@@ -98,7 +98,7 @@ class TransSpec extends SparkSpec {
     val gt = GeoTransform(100, 0.25, 0, 50, 0, -0.25)
     val p = Trans.plan(PixelFrame.dem(spark, 64, 48), gt, 64, 48,
       Trans.TransOptions()).get
-    val f = java.nio.file.Files.createTempFile("graft_export", ".tif")
+    val f = tempDir("graft_export").resolve("out.tif")
     Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
     val infos = GeoTiff.readInfos(f.toString)
     assert(infos.map(i => (i.width, i.height)) == Seq((64, 48), (32, 24), (16, 12)))
@@ -125,7 +125,7 @@ class TransSpec extends SparkSpec {
     val (w, h) = (2400, 2000) // 4.8M px — more than a driver collect should hold
     val p = Trans.plan(PixelFrame.dem(spark, w, h), gt, w, h,
       Trans.TransOptions()).get
-    val f = java.nio.file.Files.createTempFile("graft_shard_export", ".tif")
+    val f = tempDir("graft_shard_export").resolve("out.tif")
     Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
     // multi-IFD COG: base + two distributed overview pages, ceil-sized
     val infos = GeoTiff.readInfos(f.toString)
@@ -162,7 +162,7 @@ class TransSpec extends SparkSpec {
     val (w, h) = (130, 90) // NOT divisible by the grid: ragged last parts
     val p = Trans.plan(PixelFrame.dem(spark, w, h), gt, w, h,
       Trans.TransOptions()).get
-    val dir = Files.createTempDirectory("graft_grid_export").toString
+    val dir = tempDir("graft_grid_export").toString
     val receipts = Trans.exportGeoTiffGrid(p, dir, xParts = 3, yParts = 2,
       tileSize = 16).collect().sortBy(_.getAs[Int]("part"))
     // ceil split: partW=44, partH=45 — last column is 130-88=42 wide
@@ -185,7 +185,7 @@ class TransSpec extends SparkSpec {
         math.abs(tp(4) - (50 - 45 * 0.25)) < 1e-9
     })
     // mosaic read-back ≡ the single-file sharded export, bit for bit
-    val single = Files.createTempFile("graft_grid_single", ".tif")
+    val single = tempDir("graft_grid_single").resolve("out.tif")
     Trans.exportGeoTiffSharded(p, single.toString, tileSize = 16)
     val mosaic = receipts.map { r =>
       spark.read.format("graft.sources.RasterSource")
@@ -209,7 +209,7 @@ class TransSpec extends SparkSpec {
     assert(tooBig.getMessage.contains("maxPartPixels"))
     // a frame confined to one part writes ONLY that part (the
     // reference skips empty partitions too)
-    val dir2 = Files.createTempDirectory("graft_grid_sparse").toString
+    val dir2 = tempDir("graft_grid_sparse").toString
     val sparse = p.frame.filter(col("px") < 40 && col("py") < 40)
     val p2 = p.copy(frame = sparse)
     val r2 = Trans.exportGeoTiffGrid(p2, dir2, xParts = 3, yParts = 2,
@@ -226,14 +226,14 @@ class TransSpec extends SparkSpec {
     val gt = GeoTransform(100, 0.25, 0, 50, 0, -0.25)
     val p = Trans.plan(PixelFrame.dem(spark, 32, 24), gt, 32, 24,
       Trans.TransOptions()).get
-    val fBig = java.nio.file.Files.createTempFile("graft_exp_big", ".tif")
+    val fBig = tempDir("graft_exp_big").resolve("out.tif")
     Trans.exportGeoTiffSharded(p, fBig.toString, bigTiff = Some(true))
     val bytes = java.nio.file.Files.readAllBytes(fBig)
     assert(bytes(2) == 43) // BigTIFF version
     val info = GeoTiff.readInfo(fBig.toString)
     assert(info.width == 32 && info.height == 24 && info.gt.isDefined)
     // IF_NEEDED (None) on a small raster → classic 42
-    val fStd = java.nio.file.Files.createTempFile("graft_exp_std", ".tif")
+    val fStd = tempDir("graft_exp_std").resolve("out.tif")
     Trans.exportGeoTiffSharded(p, fStd.toString)
     assert(java.nio.file.Files.readAllBytes(fStd)(2) == 42)
     java.nio.file.Files.deleteIfExists(fBig)
@@ -245,7 +245,7 @@ class TransSpec extends SparkSpec {
     val gtOdd = GeoTransform(0, 1, 0, 45, 0, -1)
     val p = Trans.plan(PixelFrame.dem(spark, 45, 33), gtOdd, 45, 33,
       Trans.TransOptions()).get
-    val f = java.nio.file.Files.createTempFile("graft_odd", ".tif")
+    val f = tempDir("graft_odd").resolve("out.tif")
     Trans.exportGeoTiffSharded(p, f.toString, ovrLevels = 2)
     val infos = GeoTiff.readInfos(f.toString)
     // buildLevel emits ceil(n/2) per axis: 45→23→12, 33→17→9
@@ -283,7 +283,7 @@ class TransSpec extends SparkSpec {
     val pages = levels.zip(Seq((45, 33), (23, 17), (12, 9))).map { case (df, (w, h)) =>
       (w, h, collectPage(df, w, h)) }
     for (dt <- Seq(GeoTiff.DtInt16, GeoTiff.DtFloat32); big <- Seq(None, Some(true))) {
-      val f = java.nio.file.Files.createTempFile("graft_shard_bytes", ".tif")
+      val f = tempDir("graft_shard_bytes").resolve("out.tif")
       Trans.exportGeoTiffSharded(p, f.toString, tileSize = 16, dtype = dt,
         ovrLevels = 2, bigTiff = big)
       val want = GeoTiff.encodePyramid(pages, dt, p.outGt, Some(ndv),
@@ -301,7 +301,7 @@ class TransSpec extends SparkSpec {
   test("CLI front-end drives srcwin crop + GTIFF export end-to-end on the SRTM fixture (§3.1)") {
     import graft.sources.GeoTiff
     val srtm = graft.sources.SrtmFixture.path
-    val out = java.nio.file.Files.createTempDirectory("graft_cli")
+    val out = tempDir("graft_cli")
       .resolve("crop.tif").toString
     val rc = graft.Main.run(Array(
       "-o", out, "-of", "GTIFF", "-srcwin", "100", "100", "200", "150",
@@ -325,7 +325,7 @@ class TransSpec extends SparkSpec {
 
   test("CLI sequence fan-out: multiple inputs expand to suffixed COG jobs (I3)") {
     val srtm = graft.sources.SrtmFixture.path
-    val base = java.nio.file.Files.createTempDirectory("graft_cli_seq")
+    val base = tempDir("graft_cli_seq")
       .resolve("out").toString
     val rc = graft.Main.run(Array(
       "-o", base, "-srcwin", "0", "0", "64", "64", "-quiet", srtm, srtm), spark)
@@ -366,7 +366,7 @@ class TransSpec extends SparkSpec {
   test("CLI -t_srs warps through the planner to a projected-CRS GeoTIFF") {
     import graft.sources.GeoTiff
     val srtm = graft.sources.SrtmFixture.path
-    val out = java.nio.file.Files.createTempDirectory("graft_cli_warp")
+    val out = tempDir("graft_cli_warp")
       .resolve("utm.tif").toString
     val rc = graft.Main.run(Array(
       "-o", out, "-of", "GTIFF", "-srcwin", "0", "0", "120", "120",
@@ -385,7 +385,7 @@ class TransSpec extends SparkSpec {
   test("CLI -partition splits the extent into grid-cell jobs (R5 + I3)") {
     import graft.sources.GeoTiff
     val srtm = graft.sources.SrtmFixture.path
-    val base = java.nio.file.Files.createTempDirectory("graft_cli_part")
+    val base = tempDir("graft_cli_part")
       .resolve("part.tif").toString
     val rc = graft.Main.run(Array(
       "-o", base, "-of", "GTIFF", "-srcwin", "0", "0", "64", "64",
@@ -414,7 +414,7 @@ class TransSpec extends SparkSpec {
     val p = Trans.plan(dem, gt, 200, 120, TransOptions(
       warpSrs = Some("w84u51"), srcSrs = "w84geo")).get
     assert(p.outSrs == "w84u51")
-    val f = java.nio.file.Files.createTempFile("graft_utm_export", ".tif")
+    val f = tempDir("graft_utm_export").resolve("out.tif")
     Trans.exportGeoTiffSharded(p, f.toString)
     val info = GeoTiff.readInfo(f.toString)
     assert(info.epsg.contains(32651)) // ProjectedCSTypeGeoKey, zone 51
