@@ -1,8 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.core.Materialize
 import graft.functions.GraftFunctions.md5Prefix60Col
@@ -707,7 +710,7 @@ object Dedup {
     }: _*)
 
   /** Full MinHash-LSH near-dup pipeline: shingle → sign → band →
-    * bucket-join → exact-Jaccard verify. Returns candidate pairs
+    * bucket pass → exact-Jaccard verify. Returns candidate pairs
     * (id_a < id_b) with their exact shingle Jaccard, filtered at
     * `threshold`.
     *
@@ -796,41 +799,32 @@ object Dedup {
           col(s"mh${b * rowsPerBand + r}").cast("string")): _*))
       }: _*)).as(Seq("band", "bkey")))
 
-  /** MinHash-LSH near-duplicate pairs: banded bucket join for
-    * candidates, exact-Jaccard verify on the shingle sets.
+  /** MinHash-LSH near-duplicate pairs: one sorted bucket pass for
+    * candidates ([[bucketWalk]]), exact-Jaccard verify on the shingle
+    * sets.
     *
-    * Hot-bucket guard (round 13): within one (band, bkey) bucket the
-    * candidate join is |bucket|² — a degenerate corpus (one text
-    * repeated m times, or m near-empty docs sharing a tiny shingle
-    * set) collapses all m docs into ONE bucket per band and the
-    * "never all-pairs" promise silently dies (measured on a 128-copy
-    * corpus: 8,128 clique candidates per band). Buckets larger than
-    * `maxBucket` therefore switch from clique pairing to STAR
-    * pairing — every member paired with the bucket's minimum id —
-    * bounding a hot bucket's candidates at |bucket|−1 (128-copy
-    * corpus: 127 per band, deduped to 127 corpus-wide). Star, not
-    * chain: a chain is a diameter-|bucket| path that the min-label
-    * closure ([[connectedComponents]], 50-round cap) cannot close on
-    * a big bucket, while a star has diameter 2 and closes in one
-    * round. The recall trade: cluster-level recall is unchanged WHEN
-    * hot-bucket members are mutual near-duplicates — the common
-    * over-cap shape, where every hub–member star edge survives the
-    * exact-Jaccard verify and the closure consumers q70/q146/q161
-    * see identical clusters (asserted in LlmSpec on the 128-copy
-    * corpus). A HETEROGENEOUS over-cap bucket can lose verified
-    * pairs: if J(hub, i) < threshold < J(i, j) for members i, j
-    * (e.g. short docs sharing a tiny shingle set with a dissimilar
-    * hub), the star edge fails verify where a clique edge would
-    * pass, and the cluster splits. Direct pair LISTS inside a hot
-    * bucket are always the verified star subset rather than the
-    * full clique (a ≥`maxBucket`-member full-band collision is
-    * near-exact duplication in practice, where the clique adds no
-    * information the closure doesn't already imply). Fixture scale
-    * (measured via [[lshCalibration]]'s bucket census at sf0.1):
-    * 37,511 buckets, worst bucket 6 members, 0 over the cap — the
-    * cap is dormant on every oracle fixture and exercised by the
-    * 128-copy degenerate-corpus spec (8,128 clique candidates per
-    * band uncapped → 127 star pairs capped).
+    * Hot-bucket guard: a degenerate corpus (one text repeated m
+    * times, or m near-empty docs sharing a tiny shingle set) puts all
+    * m docs in ONE bucket per band, where clique pairing is |bucket|²
+    * (128 copies: 8,128 candidates per band). A bucket over
+    * `maxBucket` rows therefore pairs STAR-wise — every member with
+    * the bucket's minimum id — bounding it at |bucket|−1 pairs (128
+    * copies: 127 corpus-wide). Star, not chain: a star has diameter 2,
+    * so the min-label closure ([[connectedComponents]], 50-round cap)
+    * closes it in one round. The recall trade: clusters are unchanged
+    * when hot-bucket members are mutual near-duplicates, the common
+    * over-cap shape (asserted in LlmSpec on the 128-copy corpus; the
+    * closure consumers are q70/q146/q161). A HETEROGENEOUS over-cap
+    * bucket can lose verified pairs: if J(hub, i) < threshold <
+    * J(i, j), the star edge fails verify where a clique edge would
+    * pass, and the cluster splits. Fixture scale (sf0.1,
+    * [[lshCalibration]]'s census): 37,511 buckets, worst 6 members,
+    * none over the cap — the 128-copy spec exercises it.
+    *
+    * Scale shape: one O(bands × docs) shuffle sorted by (band, bkey,
+    * id); each task streams its buckets in O(cap) state, so a
+    * celebrity bucket is never buffered. The verify joins move
+    * candidates only.
     *
     * Signature-estimate pre-verify was CONSIDERED and rejected: a
     * band collision already forces `numHashes/bands` equal signature
@@ -872,38 +866,58 @@ object Dedup {
   /** Hub-capped candidate pairs of a banded frame — the pre-verify
     * half of [[minhashPairsFrom]], standalone for consumers that need
     * candidate MEMBERSHIP without the exact-Jaccard verify (the
-    * [[minhashRecallAudit]] strict side).
+    * [[minhashRecallAudit]] strict side); distinct across bands.
     */
   private def candidatePairsFrom(banded: DataFrame,
-                                 maxBucket: Int): DataFrame = {
-    // over-cap buckets: tiny on any healthy corpus (usually empty) —
-    // one map-side-partial aggregation over the banded rows that
-    // carries the hub (min id) alongside the count, so the star
-    // pairing below needs NO per-bucket window (judge r14 item 2:
-    // the old `min().over(Window.partitionBy(band,bkey))` buffered a
-    // hot bucket's whole partition in one WindowExec task — the
-    // skew-defense path was itself skew-prone). AQE broadcasts `hot`
-    // when small; a pathological corpus where it is large still
-    // joins sort-merge on the same (band, bkey) key.
-    val hot = banded.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bn"), min(col("id")).as("hub"))
-      .filter(col("bn") > maxBucket)
-      .select("band", "bkey", "hub")
-    val cool = banded.join(hot.select("band", "bkey"),
-      Seq("band", "bkey"), "left_anti")
+                                 maxBucket: Int): DataFrame =
+    bucketWalk(banded, maxBucket, pairs = true).distinct()
 
-    val a = cool.select(col("band"), col("bkey"), col("id").as("id_a"))
-    val b = cool.select(col("band"), col("bkey"), col("id").as("id_b"))
-    val clique = a.join(b, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // star pairing runs ONLY over hot-bucket rows (the aggregation
-    // never touches the healthy corpus); the hub rides the broadcast
-    // join — hot-bucket rows stream past it, nothing buffers
-    val star = banded.join(hot, Seq("band", "bkey"))
-      .filter(col("id") =!= col("hub"))
-      .select(col("hub").as("id_a"), col("id").as("id_b"))
-    clique.unionByName(star).distinct()
+  /** THE hub-capped bucket rule, one sorted pass over a banded
+    * (id, band, bkey) frame: one shuffle by (band, bkey), ids sorted
+    * inside it (nulls last), then each bucket streams once holding at
+    * most `cap + 1` ids. Up to `cap` rows the bucket is cool; at row
+    * `cap + 1` it is hot and its first id, the minimum, is the hub —
+    * the rest streams past unbuffered. Rows count as rows: a repeated
+    * id counts twice and never pairs with itself. With `pairs`, a
+    * cool bucket emits its clique (id_a < id_b) and a hot one the star
+    * (hub, id) for every id ≠ hub, repeats included; otherwise a cool
+    * bucket emits its rows and a hot one its hub row (the at-rest
+    * bucket table). A celebrity bucket costs one task O(cap) state
+    * and a spillable sort; the Dataset form keeps both in `explain`.
+    */
+  private[llm] def bucketWalk(banded: DataFrame, cap: Int,
+                              pairs: Boolean): DataFrame = {
+    val rows = banded.select("id", "band", "bkey")
+    val idType = rows.schema("id").dataType
+    val out = if (!pairs) rows.schema
+      else StructType(Seq(StructField("id_a", idType), StructField("id_b", idType)))
+    rows.repartition(col("band"), col("bkey"))
+      .sortWithinPartitions(col("band"), col("bkey"), col("id").asc_nulls_last)
+      .mapPartitions(walkBuckets(_, cap, pairs))(Encoders.row(out))
+  }
+
+  private def walkBuckets(sorted: Iterator[Row], cap: Int,
+                          pairs: Boolean): Iterator[Row] = {
+    val in = sorted.buffered
+    def inBucket(r: Row) =
+      in.hasNext && in.head.get(2) == r.get(2) && in.head.get(1) == r.get(1)
+    def pairable(a: Any, b: Any) = a != null && b != null && a != b
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val first = in.next()
+      val ids = ArrayBuffer(first.get(0))
+      while (ids.length <= cap && inBucket(first)) ids += in.next().get(0)
+      if (ids.length <= cap) {
+        if (!pairs) ids.iterator.map(Row(_, first.get(1), first.get(2)))
+        else for (i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator
+                  if pairable(ids(i), ids(j))) yield Row(ids(i), ids(j))
+      } else {
+        val hub = ids(0)
+        val rest = ids.iterator.drop(1) ++
+          Iterator.continually(first).takeWhile(inBucket).map(_ => in.next().get(0))
+        if (pairs) rest.filter(pairable(hub, _)).map(Row(hub, _))
+        else { rest.foreach(_ => ()); Iterator.single(Row(hub, first.get(1), first.get(2))) }
+      }
+    }
   }
 
   private def minhashPairsFrom(agg: DataFrame, banded: DataFrame,
@@ -1350,9 +1364,9 @@ object Dedup {
     * their own corpus instead of the iid-hash idealization.
     *
     * Scale shape: ONE signature pass serves both bandings
-    * ([[signatureAgg]] is materialized); each side is the standard
-    * hub-capped band equi-join ([[minhashPairsFrom]]); the audit
-    * join moves only verified pairs.
+    * ([[signatureAgg]] is materialized); each side is one sorted
+    * hub-capped bucket pass ([[bucketWalk]]); the audit join moves
+    * only verified pairs.
     */
   def minhashRecallAudit(df: DataFrame, idCol: String, textCol: String,
                          numHashes: Int = 16, strictBands: Int = 4,
@@ -1427,7 +1441,9 @@ object Dedup {
     * every future copy still collides with the stored hub and
     * verifies against it, exactly the star-pairing recall contract
     * (heterogeneous-bucket caveat documented on [[minhashLsh]]).
-    * At scale, bucket the `buckets` table by `bkey` within each band
+    * Scale shape: the reduction is [[bucketWalk]]'s rows face — one
+    * shuffle sorted by (band, bkey, id), O(cap) state per task. At
+    * scale, bucket the `buckets` table by `bkey` within each band
     * partition so probe joins co-locate without a shuffle.
     */
   def lshIngestAtRest(df: DataFrame, idCol: String, textCol: String,
@@ -1459,17 +1475,8 @@ object Dedup {
     val spark = df.sparkSession
     val mode = if (overwrite) "overwrite" else "append"
     val agg = signatureAgg(df, idCol, textCol, numHashes, shingleLen)
-    val banded = bandedOf(agg, bands, numHashes / bands)
-    val hot = banded.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bn")).filter(col("bn") > maxBucket)
-      .select("band", "bkey")
-    val cool = banded.join(hot, Seq("band", "bkey"), "left_anti")
-      .select("id", "band", "bkey")
-    val reps = banded.join(hot, Seq("band", "bkey"))
-      .groupBy("band", "bkey").agg(min(col("id")).as("id"))
-      .select("id", "band", "bkey")
     AtRestStore.fence(spark, dir) // review r18: pre-write append fence
-    cool.unionByName(reps)
+    bucketWalk(bandedOf(agg, bands, numHashes / bands), maxBucket, pairs = false)
       .write.mode(mode).partitionBy("band")
       .parquet(tablePath(spark, dir, "buckets"))
     agg.select(col("id"), col("sh"))
@@ -1630,8 +1637,8 @@ object Dedup {
     * exceed the cap — post-compaction occupancy is therefore
     * ≤ max(maxBucket, #batches) for every bucket.
     *
-    * Scale shape: one map-side-partial aggregation over the bucket
-    * table (long keys, no text), an anti-join + broadcast join back,
+    * Scale shape: one sorted bucket pass over the bucket table
+    * ([[bucketWalk]]: one shuffle, O(cap) state per task, no text)
     * and partitioned rewrites into sibling directories swapped in by
     * rename — no source is overwritten while being read, and
     * nothing in the job is proportional to corpus TEXT volume. The
@@ -1649,19 +1656,11 @@ object Dedup {
     val snap = AtRestStore.snapshot(spark, dir)
     val tomb = snap.tombstones()
     val buckets = tomb.mask(spark.read.parquet(snap.path("buckets")))
-    val hot = buckets.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bn"), min(col("id")).as("hub"))
-      .filter(col("bn") > mb)
-      .select("band", "bkey", "hub")
-    val cool = buckets.join(hot.select("band", "bkey"),
-      Seq("band", "bkey"), "left_anti")
-      .select("id", "band", "bkey")
-    val reps = hot.select(col("hub").as("id"), col("band"), col("bkey"))
     // no checkpoint on the shingle rewrite: it targets a STAGING dir,
     // the live table is only retired after the flip (corpus-sized
     // frame — materializing it in block storage would double the I/O)
     val bucketsWrite = "buckets" -> ((out: String) =>
-      cool.unionByName(reps)
+      bucketWalk(buckets, mb, pairs = false)
         .write.mode("overwrite").partitionBy("band").parquet(out))
     val shinglesWrite = "shingles" -> ((out: String) =>
       tomb.mask(spark.read.parquet(snap.path("shingles")))
@@ -1835,13 +1834,10 @@ object Dedup {
       // bucket census — total buckets, worst bucket, and how many
       // exceed the guard cap — so the operator's |bucket|² exposure
       // is measurable from the same report that tunes its threshold.
-      // One extra aggregation of the banded rows; 1-row broadcast.
-      .crossJoin(broadcast(
-        banded.groupBy("band", "bkey").agg(count(lit(1)).as("bn"))
-          .agg(count(lit(1)).as("n_buckets"),
-            max("bn").as("max_bucket"),
-            coalesce(sum(when(col("bn") > maxBucket, 1L).otherwise(0L)),
-              lit(0L)).as("n_over_cap"))))
+      // One global fold of the per-band census; 1-row broadcast.
+      .crossJoin(broadcast(censusFrom(banded, maxBucket)
+        .agg(sum("n_buckets").as("n_buckets"), max("max_bucket").as("max_bucket"),
+          coalesce(sum("n_hot"), lit(0L)).as("n_over_cap"))))
   }
 
   /** FUZZY cross-corpus decontamination: MinHash-banded train ×

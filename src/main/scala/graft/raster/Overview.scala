@@ -1,6 +1,6 @@
 package graft.raster
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.ResamplingAlg
@@ -107,70 +107,5 @@ object Overview {
       acc = acc.unionByName(cur.withColumn("ovr", lit(k)))
     }
     acc
-  }
-
-  /** E1 interpolating kernels, 2× upsample direction
-    * (`gdalos_types.py:40-47`): separable scatter-to-contributions +
-    * re-aggregate — the gather-style stencil of SURVEY §2 E1. Each
-    * source pixel fans out to its (offset → weight) footprint per
-    * axis; fine pixels re-aggregate weighted sums, normalized so edge
-    * pixels (partial footprints) stay correct. Fan-out is bounded
-    * (|offsets|² rows per source pixel) and the single shuffle keys on
-    * the fine pixel.
-    *
-    * Half-pixel-center geometry: fine pixel f samples coarse
-    * coordinate u = f/2 − 1/4, so the per-axis footprint of source s
-    * is f − 2s ∈ offsets with kernel argument |u − s|.
-    */
-  private def separableUp2(df: DataFrame, weights: Seq[(Int, Double)],
-                           ndv: Double): DataFrame = {
-    def axis(c: Column, fName: String, wName: String) =
-      explode(array(weights.map { case (off, w) =>
-        struct((c * 2 + off).as(fName), lit(w).as(wName))
-      }: _*))
-    df.filter(col("v") =!= ndv).select(col("rid"), col("band"),
-        col("px"), col("py"), col("v"), axis(col("px"), "fx", "wx").as("cx"))
-      .select(col("rid"), col("band"), col("py"), col("v"),
-        col("cx.fx").as("fx"), col("cx.wx").as("wx"))
-      .select(col("rid"), col("band"), col("fx"), col("wx"), col("v"),
-        axis(col("py"), "fy", "wy").as("cy"))
-      .select(col("rid"), col("band"), col("fx").as("px"),
-        col("cy.fy").as("py"), (col("wx") * col("cy.wy")).as("w"), col("v"))
-      .filter(col("px") >= 0 && col("py") >= 0)
-      .groupBy("rid", "band", "px", "py")
-      .agg((sum(col("w") * col("v")) / sum(col("w"))).as("v"))
-  }
-
-  /** Bilinear 2× upsample: 4-tap triangle footprint per axis. */
-  def bilinearUp2(df: DataFrame, ndv: Double): DataFrame =
-    separableUp2(df, Seq(-1 -> 0.25, 0 -> 0.75, 1 -> 0.75, 2 -> 0.25), ndv)
-
-  /** Catmull-Rom cubic 2× upsample (`gdalos_types.py:42-43`): 8-tap
-    * footprint per axis; weights W(|u−s|) for the two fine phases
-    * ±1/4, from the a=−1/2 cubic convolution kernel.
-    */
-  def cubicUp2(df: DataFrame, ndv: Double): DataFrame = {
-    def w(x: Double): Double = {
-      val ax = math.abs(x)
-      if (ax < 1) 1.5 * ax * ax * ax - 2.5 * ax * ax + 1
-      else if (ax < 2) -0.5 * ax * ax * ax + 2.5 * ax * ax - 4 * ax + 2
-      else 0.0
-    }
-    // offset f−2s ↔ kernel argument u−s = (f/2 − 1/4) − s
-    val offsets = Seq(-3, -2, -1, 0, 1, 2, 3, 4)
-    separableUp2(df, offsets.map(o => o -> w(o / 2.0 - 0.25)), ndv)
-  }
-
-  /** Lanczos-3 2× upsample (`gdalos_types.py:46-47`): 12-tap windowed
-    * sinc per axis (the weight normalization in [[separableUp2]]
-    * absorbs the window's imperfect partition of unity).
-    */
-  def lanczosUp2(df: DataFrame, ndv: Double): DataFrame = {
-    def sinc(x: Double): Double =
-      if (x == 0) 1.0 else math.sin(math.Pi * x) / (math.Pi * x)
-    def w(x: Double): Double =
-      if (math.abs(x) >= 3) 0.0 else sinc(x) * sinc(x / 3)
-    val offsets = -5 to 6
-    separableUp2(df, offsets.map(o => o -> w(o / 2.0 - 0.25)), ndv)
   }
 }

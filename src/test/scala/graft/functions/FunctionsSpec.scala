@@ -86,33 +86,6 @@ class FunctionsSpec extends SparkSpec {
     assert(got == graft.core.Proj.utm(36).forward(10.0, 33.0)._1)
   }
 
-  test("cubic 2× upsample: constant preservation + interpolation (E1)") {
-    import graft.raster.{Overview, PixelFrame}
-    val const = PixelFrame.constant(spark, 6, 6, 5.0)
-    val up = Overview.cubicUp2(const, ndv = -1)
-    // Catmull-Rom reproduces constants exactly (weights sum to 1)
-    val vals = up.select("v").as[Double].collect()
-    assert(vals.forall(v => math.abs(v - 5.0) < 1e-12))
-    // a linear ramp is also reproduced exactly by cubic interpolation
-    val ramp = spark.range(8L * 8).select(
-      lit(0).as("rid"), lit(1).as("band"),
-      (col("id") % 8).cast("int").as("px"),
-      floor(col("id") / 8).cast("int").as("py"),
-      (col("id") % 8).cast("double").as("v"))
-    val upr = Overview.cubicUp2(ramp, ndv = -1)
-      .filter($"px" >= 4 && $"px" <= 10 && $"py" === 6) // interior
-      .orderBy("px").select("px", "v").as[(Int, Double)].collect()
-    // fine pixel f samples coarse u = f/2 − 1/4 → v == u on a ramp
-    for ((f, v) <- upr) assert(math.abs(v - (f / 2.0 - 0.25)) < 1e-12, s"f=$f v=$v")
-  }
-
-  test("lanczos 2× upsample preserves constants via weight normalization (E1)") {
-    import graft.raster.{Overview, PixelFrame}
-    val up = Overview.lanczosUp2(PixelFrame.constant(spark, 8, 8, 3.0), ndv = -1)
-    val vals = up.select("v").as[Double].collect()
-    assert(vals.nonEmpty && vals.forall(v => math.abs(v - 3.0) < 1e-12))
-  }
-
   test("ProgressListener counts jobs/tasks (I4)") {
     val l = ProgressListener.attach(spark)
     try {

@@ -100,6 +100,49 @@ class LlmSpec extends SparkSpec {
     assert(c.sameElements(cSep))
   }
 
+  test("bucketWalk ≡ the census/anti-join/self-join/hub-join form on both faces") {
+    // reference: the join form the sorted walk replaced
+    def joinForm(banded: DataFrame, cap: Int): (DataFrame, DataFrame) = {
+      val hot = banded.groupBy("band", "bkey")
+        .agg(count(lit(1)).as("bn"), min($"id").as("hub"))
+        .filter($"bn" > cap).select("band", "bkey", "hub")
+      val cool = banded.join(hot.select("band", "bkey"), Seq("band", "bkey"), "left_anti")
+      val clique = cool.select($"band", $"bkey", $"id".as("id_a"))
+        .join(cool.select($"band", $"bkey", $"id".as("id_b")), Seq("band", "bkey"))
+        .filter($"id_a" < $"id_b").select("id_a", "id_b")
+      val star = banded.join(hot, Seq("band", "bkey"))
+        .filter($"id" =!= $"hub").select($"hub".as("id_a"), $"id".as("id_b"))
+      val rows = cool.select("id", "band", "bkey")
+        .unionByName(hot.select($"hub".as("id"), $"band", $"bkey"))
+      (clique.unionByName(star).distinct(), rows)
+    }
+    val rnd = new scala.util.Random(11)
+    for (cap <- Seq(2, 8)) {
+      // boundary sizes, one 3×cap bucket, then random sizes; ids from a
+      // shared pool so buckets overlap, dozens of buckets per partition
+      val sizes = Seq(1, cap, cap + 1, 3 * cap) ++ Seq.fill(60)(1 + rnd.nextInt(2 * cap + 2))
+      val random = sizes.zipWithIndex.flatMap { case (n, b) =>
+        rnd.shuffle((0L until 200L).toList).take(n).map(id => (Option(id), b % 4, s"k$b"))
+      }
+      // repeated ids (cool, and a hot bucket whose hub repeats) and nulls
+      val edge = Seq(5L, 5L, 9L).map(i => (Option(i), 0, "rep_cool")) ++
+        (Seq(2L, 2L) ++ (10L until 10L + cap)).map(i => (Option(i), 1, "rep_hot")) ++
+        Seq(Some(7L), None, Some(3L)).map((_, 2, "null_cool")) ++
+        (None +: (20L to 20L + cap).map(Option(_))).map((_, 3, "null_hot"))
+      val banded = (random ++ edge).toDF("id", "band", "bkey")
+      val (refPairs, refRows) = joinForm(banded, cap)
+      val walked = Dedup.bucketWalk(banded, cap, pairs = true).distinct()
+      assert(walked.as[(Long, Long)].collect().toSet ==
+        refPairs.as[(Long, Long)].collect().toSet, s"pairs, cap $cap")
+      val rowsOf = (df: DataFrame) =>
+        df.select("id", "band", "bkey").as[(Option[Long], Int, String)].collect()
+          .toSeq.sortBy(r => (r._3, r._1.getOrElse(Long.MaxValue)))
+      assert(rowsOf(Dedup.bucketWalk(banded, cap, pairs = false)) == rowsOf(refRows),
+        s"at-rest rows, cap $cap")
+      assert(!walked.queryExecution.executedPlan.toString.contains("Join"))
+    }
+  }
+
   test("minhash signature is identical for identical texts, differs otherwise") {
     val sig = docs.select($"doc_id",
       Dedup.minhashSigCol(Dedup.shinglesCol($"text"), 16).as("sig"))
@@ -221,7 +264,7 @@ class LlmSpec extends SparkSpec {
       .select("vec_id", "embedding")
     val model = Similarity.IvfModel(
       (0 until 4).map(c => Array.tabulate(64)(i => ((c * 37 + i * 13) % 41 - 20) / 10.0)))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_at_rest").toString
+    val dir = tempDir("ivf_at_rest").toString
     Similarity.assignIvf(emb, model).write.mode("overwrite")
       .partitionBy("ivf_c").parquet(dir)
     val corpus = spark.read.parquet(dir)
@@ -626,7 +669,7 @@ class LlmSpec extends SparkSpec {
     val b0 = Seq((1L, base), (2L, "tiny")).toDF("doc_id", "text")
     val b1 = Seq((3L, base)).toDF("doc_id", "text") // exact re-ingest of known content
     val b2 = Seq((4L, base + " plus a brand new unique tail here")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("cdc_store_spec").toString
+    val dir = tempDir("cdc_store_spec").toString
     Dedup.cdcIngestAtRest(b0, "doc_id", "text", dir)
     Dedup.cdcAppendAtRest(b1, "doc_id", "text", dir, batchId = 1)
     Dedup.cdcAppendAtRest(b2, "doc_id", "text", dir, batchId = 2)
@@ -654,7 +697,7 @@ class LlmSpec extends SparkSpec {
     val tShared = (1 to 30).map(i => s"common clause $i shared verbatim across twins").mkString(" ")
     val tUnique = (1 to 30).map(i => s"solitary line $i that nothing else repeats anywhere").mkString(" ")
     // docs 1 and 2 are identical (every chunk shared); 3 is disjoint
-    val dir = java.nio.file.Files.createTempDirectory("cdc_content_spec").toString
+    val dir = tempDir("cdc_content_spec").toString
     Dedup.cdcInitAtRest(spark, dir)
     Dedup.cdcAppendAtRest(Seq((1L, tShared), (3L, tUnique)).toDF("doc_id", "text"),
       "doc_id", "text", dir, batchId = 0)
@@ -696,7 +739,7 @@ class LlmSpec extends SparkSpec {
   test("cdc compaction: folds to one partition per table, preserves store, manifests, and cumulative ledger") {
     val t1 = (1 to 25).map(i => s"alpha paragraph $i for the compaction fixture").mkString(" ")
     val t2 = (1 to 25).map(i => s"beta paragraph $i with different words throughout").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("cdc_compact_spec").toString
+    val dir = tempDir("cdc_compact_spec").toString
     Dedup.cdcInitAtRest(spark, dir)
     Dedup.cdcAppendAtRest(Seq((1L, t1)).toDF("doc_id", "text"), "doc_id", "text", dir, 0)
     Dedup.cdcAppendAtRest(Seq((2L, t2)).toDF("doc_id", "text"), "doc_id", "text", dir, 1)
@@ -789,7 +832,7 @@ class LlmSpec extends SparkSpec {
       Dedup.winnowProbeAtRest(spark, dir, probe, "doc_id", "text")
         .orderBy("base_id").as[(Long, Long, Long)].collect().toSeq
 
-    val one = java.nio.file.Files.createTempDirectory("win_one").toString
+    val one = tempDir("win_one").toString
     Dedup.winnowIngestAtRest(docs, "doc_id", "text", one)
     val got = pairs(one)
     // the probe shares the passage with docs 1 and 2, never 3
@@ -797,7 +840,7 @@ class LlmSpec extends SparkSpec {
     assert(got.forall(_._3 >= 5))
 
     // append is equivalent to a one-shot ingest of the union
-    val two = java.nio.file.Files.createTempDirectory("win_two").toString
+    val two = tempDir("win_two").toString
     Dedup.winnowIngestAtRest(docs.filter($"doc_id" < 3), "doc_id", "text", two)
     Dedup.winnowAppendAtRest(docs.filter($"doc_id" === 3), "doc_id", "text", two)
     assert(pairs(two) == got)
@@ -820,7 +863,7 @@ class LlmSpec extends SparkSpec {
     val normalB = "completely different words about raster pyramids and tile overviews"
     val base = Seq((1L, normalA), (2L, normalB), (3L, normalA)).toDF("doc_id", "text")
     val probe = Seq((10L, normalA)).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lsh_takedown_spec").toString
+    val dir = tempDir("lsh_takedown_spec").toString
     Dedup.lshIngestAtRest(base, "doc_id", "text", dir)
     def hits() = Dedup.lshProbeAtRest(spark, dir, probe, "doc_id", "text")
       .select("base_id").as[Long].collect().toSet
@@ -842,7 +885,7 @@ class LlmSpec extends SparkSpec {
     Dedup.lshIngestAtRest(base, "doc_id", "text", dir)
     assert(hits() == Set(1L, 3L), "stale tombstone survived a re-ingest")
     // takedown against a dir that is not an ingested index fails loud
-    val bogus = java.nio.file.Files.createTempDirectory("lsh_bogus").toString
+    val bogus = tempDir("lsh_bogus").toString
     val e = intercept[IllegalArgumentException](
       Dedup.lshDeleteAtRest(Seq(1L).toDF("doc_id"), "doc_id", bogus))
     assert(e.getMessage.contains("not an ingested index"))
@@ -853,7 +896,7 @@ class LlmSpec extends SparkSpec {
       .select("vec_id", "embedding")
     val qs = emb.filter($"vec_id" < 2)
       .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_takedown_spec").toString
+    val dir = tempDir("ivf_takedown_spec").toString
     Similarity.ivfPqIngest(emb, dir)
     def search() = Similarity.ivfPqTopKAtRest(spark, dir, qs, topK = 5, nprobe = 2)
       .orderBy("qid", "rank").collect().toSeq
@@ -880,7 +923,7 @@ class LlmSpec extends SparkSpec {
       (3L, "one"))
       .toDF("doc_id", "text")
     val mt = Dedup.bpeTrain(docs, "doc_id", "text", rounds = 2)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_at_rest_spec").toString
+    val dir = tempDir("bpe_at_rest_spec").toString
     Dedup.bpeSaveAtRest(mt, dir)
     val merges = mt.orderBy("round").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1012,14 +1055,14 @@ class LlmSpec extends SparkSpec {
       df.orderBy("qid", "rank").collect().toSeq
 
     // ingest + probe ≡ the corpus-tokenizing batch form, bit-for-bit
-    val dir = java.nio.file.Files.createTempDirectory("bm25_at_rest_spec").toString
+    val dir = tempDir("bm25_at_rest_spec").toString
     Retrieval.bm25IngestAtRest(docs, "doc_id", "text", dir, nBuckets = 4)
     val atRest = rows(Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 10))
     val scratch = rows(Retrieval.bm25TopKBatch(docs, "doc_id", "text", batch, k = 10))
     assert(atRest == scratch, "at-rest probe diverged from the from-scratch form")
 
     // append is drift-free: base+append probe ≡ one-shot ingest of the union
-    val dir2 = java.nio.file.Files.createTempDirectory("bm25_append_spec").toString
+    val dir2 = tempDir("bm25_append_spec").toString
     Retrieval.bm25IngestAtRest(docs.filter($"doc_id" < 4), "doc_id", "text",
       dir2, nBuckets = 4)
     Retrieval.bm25AppendAtRest(docs.filter($"doc_id" >= 4), "doc_id", "text", dir2)
@@ -1057,7 +1100,7 @@ class LlmSpec extends SparkSpec {
     val docs = (0L until 40L).map { i =>
       (i, s"spark join w${i % 7} w${i % 5} merge ${"scan " * (1 + i % 3).toInt}")
     }.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_probe_jobs").toString
+    val dir = tempDir("bm25_probe_jobs").toString
     Retrieval.bm25IngestAtRest(docs.filter($"doc_id" < 30), "doc_id", "text",
       dir, nBuckets = 4)
     Retrieval.bm25AppendAtRest(docs.filter($"doc_id" >= 30), "doc_id", "text", dir)
@@ -1112,7 +1155,7 @@ class LlmSpec extends SparkSpec {
           del.select($"doc_id".as("vec_id")), d)),
         "purge" -> (d => Similarity.ivfPqPurgeAtRest(spark, d))))
     for ((store, faces) <- stores) {
-      val dir = java.nio.file.Files.createTempDirectory(s"leak_$store").toString
+      val dir = tempDir(s"leak_$store").toString
       for ((face, run) <- faces) {
         val before = graft.core.Materialize.liveIds(spark)
         run(dir)
@@ -1123,7 +1166,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("bm25ProbeAtRest fails loud on an initialized store before its first batch") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_probe_init").toString
+    val dir = tempDir("bm25_probe_init").toString
     Retrieval.bm25InitAtRest(spark, dir, nBuckets = 4)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Retrieval.bm25ProbeAtRest(spark, dir,
@@ -2686,7 +2729,7 @@ class LlmSpec extends SparkSpec {
     // have already bound — reuse it if so (connectedComponents refuses
     // to rebind mid-flight by design)
     val dir = sc.getCheckpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("cc_ckpt_llm").toString)
+      tempDir("cc_ckpt_llm").toString)
     val root = new java.io.File(new org.apache.hadoop.fs.Path(dir).toUri.getPath)
     val before = listFiles(root)
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -3114,7 +3157,7 @@ class LlmSpec extends SparkSpec {
     val base = spark.range(130L).select(col("id").as("doc_id"),
         lit(boiler).as("text"))
       .unionByName(Seq((500L, normal)).toDF("doc_id", "text"))
-    val dir = java.nio.file.Files.createTempDirectory("lsh_at_rest_spec").toString
+    val dir = tempDir("lsh_at_rest_spec").toString
     Dedup.lshIngestAtRest(base, "doc_id", "text", dir)
     // hot-bucket reduction is visible in the artifact itself: the
     // boilerplate bucket stores ONE row (the hub) per band
@@ -3142,7 +3185,7 @@ class LlmSpec extends SparkSpec {
       "service privacy policy all rights reserved contact support now"
     val normalA = "the quick brown fox jumps over the lazy dog again and again"
     val normalB = "completely different words about raster pyramids and tile overviews"
-    val dir = java.nio.file.Files.createTempDirectory("lsh_append_spec").toString
+    val dir = tempDir("lsh_append_spec").toString
     // 40 boilerplate copies per batch: UNDER the 64 cap individually,
     // over it combined — the documented per-ingest-batch contract
     val base = spark.range(40L).select(col("id").as("doc_id"),
@@ -3171,8 +3214,8 @@ class LlmSpec extends SparkSpec {
     val boiler = "subscribe to our newsletter for updates terms of " +
       "service privacy policy all rights reserved contact support now"
     val normalA = "the quick brown fox jumps over the lazy dog again and again"
-    val dirM = java.nio.file.Files.createTempDirectory("lsh_compact_spec_m").toString
-    val dirO = java.nio.file.Files.createTempDirectory("lsh_compact_spec_o").toString
+    val dirM = tempDir("lsh_compact_spec_m").toString
+    val dirO = tempDir("lsh_compact_spec_o").toString
     // the q209 drift fixture: 40 boiler copies per batch, under the
     // 64 cap individually, over it combined
     val base = spark.range(40L).select(col("id").as("doc_id"),
@@ -3223,7 +3266,7 @@ class LlmSpec extends SparkSpec {
     val drifted = (100L until 160L)
       .map(i => (i, Array.tabulate(64)(d => if (d < 8) 2.5f + (i % 7) * 0.5f else 2.5f)))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_rebal_spec").toString
+    val dir = tempDir("ivf_rebal_spec").toString
     Similarity.ivfPqIngest(base, dir)
     Similarity.ivfPqAppend(drifted, dir)
     // loud structural gate: wrong m must fail before writing codes

@@ -95,7 +95,7 @@ class TemporalSpec extends SparkSpec {
     // (LlmSpec's sf0.01 reliable-CC test) may have bound it already —
     // reuse it then, since connectedComponents refuses to rebind
     val dir = spark.sparkContext.getCheckpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("cc_ckpt").toString)
+      tempDir("cc_ckpt").toString)
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap

@@ -66,14 +66,6 @@ class OverviewSpec extends SparkSpec {
     assert(counts == Map(0 -> 1024L, 1 -> 256L, 2 -> 64L))
   }
 
-  test("bilinear 2× upsample preserves a constant raster (E1)") {
-    val const = PixelFrame.constant(spark, 4, 4, 5.0)
-    val up = Overview.bilinearUp2(const, ndv)
-    assert(up.select(countDistinct("v")).head().getLong(0) == 1)
-    assert(up.select(max("v")).head().getDouble(0) == 5.0)
-    // interior size 8×8 plus the half-pixel border fringe
-    assert(up.count() >= 64)
-  }
   test("pyramid materializes each level once: no O(L^2) re-aggregation lineage") {
     import org.apache.spark.sql.execution.ExplainMode
     val dem = PixelFrame.dem(spark, 64, 64)

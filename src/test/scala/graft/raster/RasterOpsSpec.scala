@@ -144,7 +144,7 @@ class RasterOpsSpec extends SparkSpec {
     // (measured ratio recorded in COVERAGE.md)
     val big = PixelFrame.pack(PixelFrame.dem(spark, 800, 600), ts = 16,
       ndv = PixelFrame.Dem.Ndv)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tiles").toString
+    val dir = tempDir("graft_tiles").toString
     big.write.mode("overwrite").parquet(s"$dir/arr")
     PixelFrame.packBinary(big, 16).write.mode("overwrite").parquet(s"$dir/bin")
     def dirSize(p: String): Long =

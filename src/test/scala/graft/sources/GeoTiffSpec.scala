@@ -119,7 +119,7 @@ class GeoTiffSpec extends SparkSpec {
     val gt = GeoTransform(35.0, 0.001, 0, 32.0, 0, -0.001)
     val bytes = GeoTiff.encode(w, h, vals, GeoTiff.DtInt16, gt,
       nodata = Some(-32768.0), rowsPerStrip = 16, predictor = 2)
-    val f = Files.createTempFile("graft_gt", ".tif")
+    val f = tempDir("graft_gt").resolve("t.tif")
     Files.write(f, bytes)
     val info = GeoTiff.readInfo(f.toString)
     assert(info.width == w && info.height == h)
@@ -143,7 +143,7 @@ class GeoTiffSpec extends SparkSpec {
     val vals = Array.tabulate(w * h)(i => i * 0.25f - 40.5f).map(_.toDouble)
     val gt = GeoTransform(0.0, 0.5, 0, 10.0, 0, -0.5)
     val bytes = GeoTiff.encode(w, h, vals, GeoTiff.DtFloat32, gt)
-    val f = Files.createTempFile("graft_gtf", ".tif")
+    val f = tempDir("graft_gtf").resolve("t.tif")
     Files.write(f, bytes)
     val info = GeoTiff.readInfo(f.toString)
     assert(info.dtypeName == "Float32" && info.nodata.isEmpty)
@@ -161,7 +161,7 @@ class GeoTiffSpec extends SparkSpec {
     val vals = Array.tabulate(w * h)(i => math.Pi * (i - 100) + 1.0 / 3)
     val gt = GeoTransform(5.0, 0.125, 0, 60.0, 0, -0.125)
     val bytes = GeoTiff.encode(w, h, vals, GeoTiff.DtFloat64, gt, rowsPerStrip = 4)
-    val f = Files.createTempFile("graft_gtd", ".tif")
+    val f = tempDir("graft_gtd").resolve("t.tif")
     Files.write(f, bytes)
     val info = GeoTiff.readInfo(f.toString)
     assert(info.dtypeName == "Float64" && !info.bigEndian)
@@ -180,13 +180,13 @@ class GeoTiffSpec extends SparkSpec {
     val vals = Array.tabulate(w * h)(_.toDouble)
     // a UTM-meter grid: 30 m pixels anchored in zone 36 coordinates
     val utmGt = GeoTransform(500000.0, 30.0, 0, 3600000.0, 0, -30.0)
-    val f = Files.createTempFile("graft_utm", ".tif")
+    val f = tempDir("graft_utm").resolve("t.tif")
     Files.write(f, GeoTiff.encode(w, h, vals, GeoTiff.DtInt16, utmGt,
       crs = GeoTiff.CrsTag.fromEpsg(32636)))
     val info = GeoTiff.readInfo(f.toString)
     assert(info.epsg.contains(32636))
     // geographic default still writes the geographic key
-    val f2 = Files.createTempFile("graft_geo", ".tif")
+    val f2 = tempDir("graft_geo").resolve("t.tif")
     Files.write(f2, GeoTiff.encode(w, h, vals, GeoTiff.DtInt16,
       GeoTransform(35.0, 0.001, 0, 32.0, 0, -0.001)))
     assert(GeoTiff.readInfo(f2.toString).epsg.contains(4326))
@@ -203,7 +203,7 @@ class GeoTiffSpec extends SparkSpec {
       else ((px * 7 + py * 13) % 997).toDouble
     }
     val gt = GeoTransform(100.0, 0.25, 0, 50.0, 0, -0.25)
-    val f = Files.createTempFile("graft_rt", ".tif")
+    val f = tempDir("graft_rt").resolve("t.tif")
     Files.write(f, GeoTiff.encode(w, h, vals, GeoTiff.DtInt16, gt,
       nodata = Some(-32768.0), rowsPerStrip = 16))
     val back = spark.read.format("graft.sources.RasterSource")
@@ -224,7 +224,7 @@ class GeoTiffSpec extends SparkSpec {
     val bytes = GeoTiff.encodePyramid(
       Seq((w, h, base), (w / 2, h / 2, level(base, w, h, 1)), (w / 4, h / 4, level(base, w, h, 2))),
       GeoTiff.DtInt16, gt, nodata = Some(-32768.0), rowsPerStrip = 16)
-    val f = Files.createTempFile("graft_pyr", ".tif")
+    val f = tempDir("graft_pyr").resolve("t.tif")
     Files.write(f, bytes)
 
     val infos = GeoTiff.readInfos(f.toString)
@@ -263,7 +263,7 @@ class GeoTiffSpec extends SparkSpec {
     val bytes = GeoTiff.encodePyramid(
       Seq((w, h, vals), ((w + 1) / 2, (h + 1) / 2, level(1))),
       GeoTiff.DtInt16, gt, nodata = Some(-32768.0), predictor = 2, tileSize = 32)
-    val f = Files.createTempFile("graft_cog", ".tif")
+    val f = tempDir("graft_cog").resolve("t.tif")
     Files.write(f, bytes)
 
     val infos = GeoTiff.readInfos(f.toString)
@@ -321,7 +321,7 @@ class GeoTiffSpec extends SparkSpec {
       val bytes = GeoTiff.encodePyramid(Seq((w, h, vals)), GeoTiff.DtInt16, gt,
         nodata = Some(-32768.0), rowsPerStrip = 16,
         predictor = if (comp == 5) 2 else 1, compression = comp)
-      val f = Files.createTempFile(s"graft_c$comp", ".tif")
+      val f = tempDir(s"graft_c$comp").resolve("t.tif")
       Files.write(f, bytes)
       val info = GeoTiff.readInfo(f.toString)
       assert(info.compression == comp)
@@ -337,7 +337,7 @@ class GeoTiffSpec extends SparkSpec {
   test("DSv2 scan reads an LZW tiled file with pushdown pruning") {
     val w = 80; val h = 48
     val vals = Array.tabulate(w * h)(i => ((i % w) * 7 + (i / w) * 13) % 997.0)
-    val f = Files.createTempFile("graft_lzw_cog", ".tif")
+    val f = tempDir("graft_lzw_cog").resolve("t.tif")
     Files.write(f, GeoTiff.encodePyramid(Seq((w, h, vals)), GeoTiff.DtInt16,
       GeoTransform(0, 1, 0, 48, 0, -1), nodata = Some(-32768.0),
       compression = 5, tileSize = 32))
@@ -361,7 +361,7 @@ class GeoTiffSpec extends SparkSpec {
     for (ts <- Seq(0, 16)) {
       val bytes = GeoTiff.encodePyramid(Seq((w, h, vals)), GeoTiff.DtByte, gt,
         rowsPerStrip = 7, tileSize = ts, bands = bands)
-      val f = Files.createTempFile(s"graft_rgb$ts", ".tif")
+      val f = tempDir(s"graft_rgb$ts").resolve("t.tif")
       Files.write(f, bytes)
       val info = GeoTiff.readInfo(f.toString)
       assert(info.bands == 3 && info.dtypeName == "Byte")
@@ -398,7 +398,7 @@ class GeoTiffSpec extends SparkSpec {
     val gt = GeoTransform(0.0, 0.5, 0, 10.0, 0, -0.5)
 
     def readBack(bytes: Array[Byte], expPred: Int): Array[Double] = {
-      val f = Files.createTempFile("graft_p3", ".tif")
+      val f = tempDir("graft_p3").resolve("t.tif")
       Files.write(f, bytes)
       val info = GeoTiff.readInfo(f.toString)
       assert(info.predictor == expPred)
@@ -423,7 +423,7 @@ class GeoTiffSpec extends SparkSpec {
     val vals64 = Array.tabulate(w * h)(i => math.Pi * (i - 100) + 1.0 / 3)
     val striped64 = GeoTiff.encode(w, h, vals64, GeoTiff.DtFloat64, gt,
       rowsPerStrip = 6, predictor = 3)
-    val f64 = Files.createTempFile("graft_p3d", ".tif")
+    val f64 = tempDir("graft_p3d").resolve("t.tif")
     Files.write(f64, striped64)
     val i64 = GeoTiff.readInfo(f64.toString)
     val out64 = Array.ofDim[Double](w * h)
@@ -546,7 +546,7 @@ class GeoTiffSpec extends SparkSpec {
     val w = 8; val h = 5
     val band1 = Array.tabulate(w * h)(i => i.toByte)
     val band2 = Array.tabulate(w * h)(i => (100 + i).toByte)
-    val f = Files.createTempFile("graft_planar", ".tif")
+    val f = tempDir("graft_planar").resolve("t.tif")
     Files.write(f, buildPlanar2())
     val info = GeoTiff.readInfo(f.toString)
     assert(info.bands == 2 && info.segments.length == 4)
@@ -572,7 +572,7 @@ class GeoTiffSpec extends SparkSpec {
     val w = 8; val h = 5
     val vals = Array.tabulate(w * h)(i => ((i * 7) % 251).toByte)
     val bytes = buildBigTiff(w, h, rps = 3, vals)
-    val f = Files.createTempFile("graft_big", ".tif")
+    val f = tempDir("graft_big").resolve("t.tif")
     Files.write(f, bytes)
     val info = GeoTiff.readInfo(f.toString)
     assert(info.width == w && info.height == h && info.dtypeName == "Byte")
@@ -598,7 +598,7 @@ class GeoTiffSpec extends SparkSpec {
       GeoTiff.DtInt16, gt, nodata = Some(-32768.0), rowsPerStrip = 8,
       bigTiff = true)
     assert(bytes(2) == 43 && bytes(3) == 0) // BigTIFF version word
-    val f = Files.createTempFile("graft_bigw", ".tif"); Files.write(f, bytes)
+    val f = tempDir("graft_bigw").resolve("t.tif"); Files.write(f, bytes)
     val infos = GeoTiff.readInfos(f.toString)
     assert(infos.length == 2)
     assert(infos.head.width == w && infos.head.height == h)
@@ -617,7 +617,7 @@ class GeoTiffSpec extends SparkSpec {
     val fv = Array.tabulate(w * h)(i => (i * 0.25f - 10f).toDouble)
     val tb = GeoTiff.encodePyramid(Seq((w, h, fv)), GeoTiff.DtFloat32, gt,
       tileSize = 16, compression = 5, predictor = 3, bigTiff = true)
-    val f2 = Files.createTempFile("graft_bigw2", ".tif"); Files.write(f2, tb)
+    val f2 = tempDir("graft_bigw2").resolve("t.tif"); Files.write(f2, tb)
     val i2 = GeoTiff.readInfo(f2.toString)
     assert(decodeAll(f2.toString, i2, w, h).sameElements(fv))
     Files.deleteIfExists(f); Files.deleteIfExists(f2)
@@ -636,7 +636,7 @@ class GeoTiffSpec extends SparkSpec {
     val gt = GeoTransform(0, 1, 0, h.toDouble, 0, -1)
     val bytes = GeoTiff.encodePyramid(Seq((w, h, vals)), GeoTiff.DtByte, gt,
       tileSize = 16, compression = 7, bands = 3)
-    val f = Files.createTempFile("graft_jpg", ".tif"); Files.write(f, bytes)
+    val f = tempDir("graft_jpg").resolve("t.tif"); Files.write(f, bytes)
     val info = GeoTiff.readInfo(f.toString)
     assert(info.compression == 7 && info.bands == 3
       && info.width == w && info.height == h) // exact dims
@@ -684,7 +684,7 @@ class GeoTiffSpec extends SparkSpec {
     val gvals = Array.tabulate(w * h)(i => ((i % w) * 255 / (w - 1)).toDouble)
     val gb = GeoTiff.encodePyramid(Seq((w, h, gvals)), GeoTiff.DtByte, gt,
       rowsPerStrip = 16, compression = 7)
-    val gf = Files.createTempFile("graft_jpgg", ".tif"); Files.write(gf, gb)
+    val gf = tempDir("graft_jpgg").resolve("t.tif"); Files.write(gf, gb)
     val gi = GeoTiff.readInfo(gf.toString)
     val gout = Array.ofDim[Double](w * h)
     for (seg <- gi.segments) {
@@ -719,8 +719,9 @@ class GeoTiffSpec extends SparkSpec {
       GeoTiff.encode(32, 24, vals, GeoTiff.DtInt16,
         GeoTransform(0, 1, 0, 24, 0, -1), nodata = Some(-1.0), rowsPerStrip = 8)
     }
+    val fuzzDir = tempDir("graft_fuzz")
     def tryRead(bytes: Array[Byte]): Unit = {
-      val f = Files.createTempFile("graft_fuzz", ".tif")
+      val f = fuzzDir.resolve("t.tif")
       try {
         Files.write(f, bytes)
         try {
@@ -863,7 +864,7 @@ class GeoTiffSpec extends SparkSpec {
     }
     // the streaming path writes straight to a FILE (no whole-file
     // buffer anywhere) and the result reads back
-    val f = Files.createTempFile("graft_stream", ".tif")
+    val f = tempDir("graft_stream").resolve("t.tif")
     val os = Files.newOutputStream(f)
     try GeoTiff.writePyramid(os, Seq(GeoTiff.StreamPage(w, h, i => vals(i.toInt))),
       GeoTiff.DtInt16, gt, nodata = Some(-32768.0), tileSize = 16, bigTiff = true)

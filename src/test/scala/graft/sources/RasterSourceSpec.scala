@@ -71,7 +71,7 @@ class RasterSourceSpec extends SparkSpec {
     import graft.core.GeoTransform
     val w = 40; val h = 24
     val vals = Array.tabulate(w * h)(i => (i % 997).toDouble)
-    val f = Files.createTempFile("graft_hfs", ".tif")
+    val f = tempDir("graft_hfs").resolve("t.tif")
     Files.write(f, GeoTiff.encodePyramid(Seq((w, h, vals)), GeoTiff.DtInt16,
       GeoTransform(0, 1, 0, h.toDouble, 0, -1), compression = 5, tileSize = 16))
     val uri = "file://" + f.toAbsolutePath // qualified path → Hadoop FS route

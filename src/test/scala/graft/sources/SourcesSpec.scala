@@ -11,7 +11,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("FileList: flatten, glob, and .txt expansion (A2, gdalos_util.py:37-66)") {
-    val dir = Files.createTempDirectory("graft_fl")
+    val dir = tempDir("graft_fl")
     val a = dir.resolve("a.tif"); Files.writeString(a, "")
     val b = dir.resolve("b.tif"); Files.writeString(b, "")
     val c = dir.resolve("c.dat"); Files.writeString(c, "")
@@ -25,7 +25,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("writeCogLayout produces spatially-sorted tile files (A3)") {
-    val dir = Files.createTempDirectory("graft_cog").resolve("tiles")
+    val dir = tempDir("graft_cog").resolve("tiles")
     val tiles = PixelFrame.pack(PixelFrame.dem(spark, 32, 32), 8, PixelFrame.Dem.Ndv)
     Sinks.writeCogLayout(tiles, dir.toString, buckets = 2)
     val back = spark.read.parquet(dir.toString)
@@ -43,7 +43,7 @@ class SourcesSpec extends SparkSpec {
     def dirBytes(p: java.nio.file.Path): Long =
       Files.walk(p).filter(Files.isRegularFile(_))
         .mapToLong(Files.size(_)).sum()
-    val root = Files.createTempDirectory("graft_cog_bin")
+    val root = tempDir("graft_cog_bin")
     // integer-valued DEM + Int16 ndv: the 16-bit payload is lossless.
     // 256x256 keeps the payload well above parquet footer overhead so
     // the size assertion measures the encoding, not file fixed costs.
@@ -77,7 +77,7 @@ class SourcesSpec extends SparkSpec {
     // widen or re-order the cast chain): fractional samples truncate
     // TOWARD ZERO, out-of-range saturates at the int cast then
     // narrows by two's-complement wrap.
-    val dir = Files.createTempDirectory("graft_cog_lossy").resolve("tiles")
+    val dir = tempDir("graft_cog_lossy").resolve("tiles")
     val vals = Seq(1.9, -3.9, 40000.0, -40000.0, 1e10, -1e10, 0.25, -0.75)
     val tiles = Seq((7L, 1, 2, 3, vals)).toDF("rid", "band", "tx", "ty", "data")
     Sinks.writeCogLayout(tiles, dir.toString, buckets = 1, dtypeCode = 16)
@@ -104,14 +104,14 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("infoSink writes schema+stats+plan (A10)") {
-    val p = Files.createTempDirectory("graft_info").resolve("r")
+    val p = tempDir("graft_info").resolve("r")
     Sinks.infoSink(PixelFrame.dem(spark, 8, 8), p.toString)
     val txt = Files.readString(Paths.get(p.toString + ".info"))
     assert(txt.contains("px") && txt.contains("mean") && txt.contains("Physical Plan"))
   }
 
   test("xyzSink writes whitespace tables (A13)") {
-    val dir = Files.createTempDirectory("graft_xyz").resolve("out")
+    val dir = tempDir("graft_xyz").resolve("out")
     Sinks.xyzSink(PixelFrame.dem(spark, 4, 4).select("px", "py", "v")
       .orderBy("py", "px").coalesce(1), dir.toString)
     val f = Files.list(Paths.get(dir.toString)).toArray.map(_.toString)

@@ -228,8 +228,8 @@ class EventStreamSpec extends SparkSpec {
       Seq((11L, normalA), (12L, normalC)),
       Seq((21L, normalC), (22L, boiler), (23L, boiler)),
       Seq((31L, normalA)))
-    val dir = java.nio.file.Files.createTempDirectory("stream_dedup_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("stream_dedup_out").toString + "/flags"
+    val dir = tempDir("stream_dedup_idx").toString
+    val out = tempDir("stream_dedup_out").toString + "/flags"
     graft.llm.Dedup.lshIngestAtRest(seed, "doc_id", "text", dir)
     val stream = MemoryStream[(Long, String)]
     val q = EventStream.dedupBeforeIngestStream(
@@ -294,7 +294,7 @@ class EventStreamSpec extends SparkSpec {
       Seq((3L, base)), // content the store already holds
       Seq((4L, base + " plus a brand new unique tail here")))
     // stream-built store
-    val sDir = java.nio.file.Files.createTempDirectory("cdc_stream_store").toString
+    val sDir = tempDir("cdc_stream_store").toString
     graft.llm.Dedup.cdcInitAtRest(spark, sDir)
     val stream = MemoryStream[(Long, String)]
     val q = EventStream.cdcIngestStream(
@@ -303,7 +303,7 @@ class EventStreamSpec extends SparkSpec {
       for (b <- batches) { stream.addData(b); q.processAllAvailable() }
     } finally q.stop()
     // batch-built twin through the same append face
-    val bDir = java.nio.file.Files.createTempDirectory("cdc_batch_store").toString
+    val bDir = tempDir("cdc_batch_store").toString
     graft.llm.Dedup.cdcInitAtRest(spark, bDir)
     for ((b, i) <- batches.zipWithIndex)
       graft.llm.Dedup.cdcAppendAtRest(b.toDF("doc_id", "text"),
@@ -330,8 +330,8 @@ class EventStreamSpec extends SparkSpec {
     val normalA = "the quick brown fox jumps over the lazy dog again and again"
     val normalC = "unrelated musing on catalyst plans and broadcast joins at scale"
     val seed = Seq((1L, normalA), (2L, normalC)).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("replay_dedup_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("replay_dedup_out").toString + "/flags"
+    val dir = tempDir("replay_dedup_idx").toString
+    val out = tempDir("replay_dedup_out").toString + "/flags"
     graft.llm.Dedup.lshIngestAtRest(seed, "doc_id", "text", dir)
     val batch = Seq((11L, normalA), (12L, normalA), (13L, "something else entirely new"))
       .toDF("doc_id", "text")
@@ -364,7 +364,7 @@ class EventStreamSpec extends SparkSpec {
       graft.llm.Retrieval.bm25ProbeAtRest(spark, dir, queries, k = 5)
         .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
     // stream-built store
-    val sDir = java.nio.file.Files.createTempDirectory("bm25_stream_store").toString
+    val sDir = tempDir("bm25_stream_store").toString
     graft.llm.Retrieval.bm25InitAtRest(spark, sDir)
     val stream = MemoryStream[(Long, String)]
     val q = EventStream.bm25IngestStream(
@@ -374,7 +374,7 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
     // batch-built twin: one-shot ingest of the union — additive
     // drift-free stats mean the ranking must be bit-equal
-    val bDir = java.nio.file.Files.createTempDirectory("bm25_batch_store").toString
+    val bDir = tempDir("bm25_batch_store").toString
     graft.llm.Retrieval.bm25IngestAtRest(batches.flatten.toDF("doc_id", "text"),
       "doc_id", "text", bDir)
     val fromStream = probe(sDir)
@@ -393,7 +393,7 @@ class EventStreamSpec extends SparkSpec {
   test("bm25IngestStream refuses a store that already holds batches; the store is untouched") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("bm25_stream_refuse").toString
+    val dir = tempDir("bm25_stream_refuse").toString
     graft.llm.Retrieval.bm25IngestAtRest(Seq(
       (1L, "spark merge engine with spark joins"),
       (2L, "vector index layouts for retrieval")).toDF("doc_id", "text"),
@@ -420,7 +420,7 @@ class EventStreamSpec extends SparkSpec {
     val batches = Seq(
       (0L to 19L).map(i => (i, vec(i))),  // micro-batch 0: trains
       (20L to 27L).map(i => (i, vec(i)))) // micro-batch 1: frozen append
-    val sDir = java.nio.file.Files.createTempDirectory("ivfpq_stream_store").toString
+    val sDir = tempDir("ivfpq_stream_store").toString
     val stream = MemoryStream[(Long, Seq[Float])]
     val q = EventStream.ivfPqIngestStream(
       stream.toDF().toDF("vec_id", "embedding"), sDir, coarseK = 4, m = 4, k = 4)
@@ -428,7 +428,7 @@ class EventStreamSpec extends SparkSpec {
       for (b <- batches) { stream.addData(b); q.processAllAvailable() }
     } finally q.stop()
     // batch-built twin: same split through the batch lifecycle
-    val bDir = java.nio.file.Files.createTempDirectory("ivfpq_batch_store").toString
+    val bDir = tempDir("ivfpq_batch_store").toString
     graft.llm.Similarity.ivfPqIngest(batches(0).toDF("vec_id", "embedding"),
       bDir, coarseK = 4, m = 4, k = 4)
     graft.llm.Similarity.ivfPqAppend(batches(1).toDF("vec_id", "embedding"), bDir)
@@ -462,7 +462,7 @@ class EventStreamSpec extends SparkSpec {
       (21L, passage + " held out probe carrier"),
       (22L, "noise that shares no passage with anything above"))
     // stream-built store
-    val sDir = java.nio.file.Files.createTempDirectory("winnow_stream_store").toString
+    val sDir = tempDir("winnow_stream_store").toString
     val stream = MemoryStream[(Long, String)]
     val q = EventStream.winnowIngestStream(
       stream.toDF().toDF("doc_id", "text"), "doc_id", "text", sDir)
@@ -470,7 +470,7 @@ class EventStreamSpec extends SparkSpec {
       for (b <- batches) { stream.addData(b); q.processAllAvailable() }
     } finally q.stop()
     // batch-built twin
-    val bDir = java.nio.file.Files.createTempDirectory("winnow_batch_store").toString
+    val bDir = tempDir("winnow_batch_store").toString
     graft.llm.Dedup.winnowIngestAtRest(batches(0).toDF("doc_id", "text"),
       "doc_id", "text", bDir)
     graft.llm.Dedup.winnowAppendAtRest(batches(1).toDF("doc_id", "text"),

@@ -10,6 +10,9 @@ before comparison, so that only plan changes count:
   - exchange plan ids:         `plan_id=67` -> `plan_id=N`
   - JVM lambda identities:     `$$Lambda$4770/0x7f13@17aa` -> `$$Lambda`
   - RDD call-site lines:       `at localCheckpoint at X.scala:98` -> `X.scala:N`
+  - RDD ids:                   `MapPartitionsRDD[3952]` -> `MapPartitionsRDD[N]`
+    (one JVM numbers every query's RDDs in turn, so a plan change in
+    one query shifts the ids of every later one)
   - temp and scratch paths:    `/tmp/abc/d` -> `<tmp>` (under /tmp
     or $TMPDIR)
 
@@ -28,6 +31,7 @@ LAMBDA_VAR = re.compile(r"\b([xyz])_\d+\b")
 PLAN_ID = re.compile(r"plan_id=\d+")
 JVM_LAMBDA = re.compile(r"\$\$Lambda\$[\w/$]+@[0-9a-f]+")
 CALL_SITE = re.compile(r"(\w+\.(?:scala|java)):\d+")
+RDD_ID = re.compile(r"(RDD)\[\d+\]")
 TMP_ROOTS = sorted({p.rstrip("/") for p in ("/tmp", os.environ.get("TMPDIR") or "/tmp")},
                    key=len, reverse=True)
 TMP_PATH = re.compile(r"(?:file:)?(?:%s)/[^\s,\]\)\}'\"]*" % "|".join(map(re.escape, TMP_ROOTS)))
@@ -39,6 +43,7 @@ def norm(text):
     text = PLAN_ID.sub("plan_id=N", text)
     text = JVM_LAMBDA.sub("$$Lambda", text)
     text = CALL_SITE.sub(r"\1:N", text)
+    text = RDD_ID.sub(r"\1[N]", text)
     return LAMBDA_VAR.sub(r"\1_N", text)
 
 
