@@ -25,10 +25,12 @@ import graft.core.Materialize
   *  - absent ≡ empty: ingests drop the table ([[tombstoneClear]]),
   *    the first delete creates it.
   *  - read once, collected: each face reads the set through its
-  *    snapshot ([[Snapshot.tombstones]]) on a declared schema and
-  *    collects it. The set stays under broadcast size by contract (it
-  *    rides broadcast anti-joins, [[Tombstones.mask]]; compact once
-  *    it outgrows that), so nothing corpus-sized reaches the driver.
+  *    snapshot on a declared schema and collects it, alone
+  *    ([[Snapshot.tombstones]]) or in the same job as the face's other
+  *    small tables ([[Snapshot.small]]). The set stays under broadcast
+  *    size by contract (it rides broadcast anti-joins,
+  *    [[Tombstones.mask]]; compact once it outgrows that), so nothing
+  *    corpus-sized reaches the driver.
   *  - deduped append: [[tombstoneAppend]] masks the new rows with the
   *    collected set, so a re-delete is a no-op.
   *  - truncation rides the purge's flip ([[purgeFlip]]): no reader
@@ -464,12 +466,31 @@ private[graft] object AtRestStore {
       if (exists(table)) Some(spark.read.parquet(path(table))) else None
 
     /** This generation's tombstone set, read on `schema` and collected. */
-    def tombstones(schema: StructType = TombstoneIds): Tombstones = {
+    def tombstones(schema: StructType = TombstoneIds): Tombstones =
+      tombstonesOf(small("tombstones" -> schema), schema)
+
+    /** The tombstone rows of a [[small]] read as the set on `schema`. */
+    def tombstonesOf(read: Map[String, Array[Row]], schema: StructType): Tombstones =
+      new Tombstones(spark, read("tombstones"), schema)
+
+    /** Small `tables` of this generation, each read on its declared
+      * schema and collected, all in ONE Spark job (a union of their
+      * scans); each maps to its rows in read order. An absent
+      * `tombstones` table reads as empty and costs no read; any other
+      * absent table fails the read (path not found).
+      */
+    def small(tables: (String, StructType)*): Map[String, Array[Row]] = {
+      val reads = tables.filter { case (t, _) => t != "tombstones" || exists(t) }
       val rows =
-        if (exists("tombstones"))
-          spark.read.schema(schema).parquet(path("tombstones")).collect()
-        else Array.empty[Row]
-      new Tombstones(spark, rows, schema)
+        if (reads.isEmpty) Array.empty[Row]
+        else reads.zipWithIndex.map { case ((t, schema), i) =>
+          spark.read.schema(schema).parquet(path(t)).select(lit(i).as("t"),
+            struct(schema.fieldNames.toSeq.map(col): _*).as(s"r$i"))
+        }.reduce(_.unionByName(_, allowMissingColumns = true)).collect()
+      tables.map { case (t, _) =>
+        val i = reads.indexWhere(_._1 == t)
+        t -> rows.filter(_.getInt(0) == i).map(_.getAs[Row](s"r$i"))
+      }.toMap
     }
 
     private[AtRestStore] def entryMap: Map[String, String] = entries
@@ -768,6 +789,13 @@ private[graft] object AtRestStore {
       * the table's files.
       */
     def frame: DataFrame = spark.createDataFrame(rows.toSeq.asJava, schema)
+
+    /** The set's ids, sorted, for a binary-search membership test
+      * inside a task: a per-partition fold that drops tombstoned rows
+      * itself reads the ids from a broadcast variable, which starts no
+      * Spark job, where [[mask]]'s broadcast join starts one.
+      */
+    def sortedIds: Array[Long] = rows.map(_.getLong(0)).sorted
 
     /** `df` without its tombstoned rows — a broadcast `left_anti` on
       * `id`, skipped when the set is empty.

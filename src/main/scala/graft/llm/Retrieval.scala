@@ -2,7 +2,7 @@ package graft.llm
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -165,22 +165,25 @@ object Retrieval {
       .join(dl, "id")
       .join(broadcast(dft), "s")
       .crossJoin(broadcast(g))
-    bm25Rank(matched, col("n_docs"), col("tot_tokens"), k, k1, b)
+    bm25Rank(matched, k, k1, b)
   }
 
   /** The BM25 score-and-rank tail of [[bm25TopKBatch]] and
-    * [[bm25ProbeAtRest]] over matched (qid, s, id, tf, dl, df) rows.
-    * The corpus statistics are columns of a joined aggregate in the
-    * batch form and literals at rest.
+    * [[bm25ProbeAtRest]] over matched (qid, s, id, tf, dl, df, n_docs,
+    * tot_tokens) rows. The corpus statistics are columns in both forms
+    * (of a joined aggregate in the batch form, of the broadcast query
+    * table at rest), never literals, so no number computed on the
+    * driver lands in the generated code.
     */
-  private def bm25Rank(matched: DataFrame, nDocs: Column, totTokens: Column,
-                       k: Int, k1: Double, b: Double): DataFrame = {
+  private def bm25Rank(matched: DataFrame, k: Int, k1: Double,
+                       b: Double): DataFrame = {
     val denom = col("tf") + lit(k1) *
       (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))
     val contrib = col("idf") * (col("tf") * (lit(k1) + lit(1.0))) / denom
     matched
-      .withColumn("avgdl", totTokens.cast("double") / nDocs)
-      .withColumn("idf", (nDocs - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+      .withColumn("avgdl", col("tot_tokens").cast("double") / col("n_docs"))
+      .withColumn("idf",
+        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
       .withColumn("fp", floor(contrib * lit(1048576.0)).cast("long"))
       .groupBy("qid", "id")
       .agg(sum("fp").as("score_fp"), count(lit(1)).as("n_terms_hit"))
@@ -293,6 +296,38 @@ object Retrieval {
 
   private val bm25TombSchema = StructType.fromDDL(bm25Schemas("tombstones"))
 
+  /** Small tables `ts` of `snap` on their declared schemas, in ONE
+    * Spark job ([[AtRestStore.Snapshot.small]]): the params gate, the
+    * batch-count-sized stats and the tombstone set.
+    */
+  private def bm25Small(snap: AtRestStore.Snapshot,
+                        ts: String*): Map[String, Array[Row]] =
+    snap.small(ts.map(t => t -> StructType.fromDDL(bm25Schemas(t))): _*)
+
+  /** The store's bucket count from a [[bm25Small]] read of params.
+    * Writers and probes adopt it instead of taking one: terms routed
+    * under a different count would land in, or be looked up in, the
+    * wrong partitions (silent recall loss). A store without a params
+    * table fails the read; an empty one fails here.
+    */
+  private def bm25Buckets(small: Map[String, Array[Row]]): Int =
+    small("params").head.getInt(0)
+
+  /** The stats deltas (n_docs, tot_tokens) net of the tombstone set:
+    * the set's totals join as one negative delta row, so a sum over the
+    * result counts the surviving corpus. A row, not a literal: the
+    * totals change with every store generation, and a literal in the
+    * fold would compile a new class each time. An empty set adds no
+    * row (a sum over null tot_tokens alone stays null).
+    */
+  private def bm25NetStats(stats: DataFrame,
+                           tomb: AtRestStore.Tombstones): DataFrame = {
+    val deltas = stats.select("n_docs", "tot_tokens")
+    if (tomb.isEmpty) deltas
+    else deltas.union(stats.sparkSession.createDataFrame(Seq(Row(
+      -tomb.rows.length.toLong, -total(tomb.rows, 1))).asJava, deltas.schema))
+  }
+
   /** Column `i` of collected stats or tombstone rows, summed; skips
     * nulls as SQL sum does (an empty batch's delta row carries a null
     * tot_tokens).
@@ -388,17 +423,6 @@ object Retrieval {
     AtRestStore.tombstoneClear(spark, dir) // a re-ingest voids old takedowns
   }
 
-  /** The store's bucket count, read from its params table (one job).
-    * Writers and probes adopt it instead of taking one: terms routed
-    * under a different count would land in, or be looked up in, the
-    * wrong partitions (silent recall loss). Throws when the store has
-    * no params table.
-    */
-  private def bm25Buckets(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Int =
-    bm25Read(spark, AtRestStore.snapshot(spark, dir), "params")
-      .head().getAs[Int]("n_buckets")
-
   /** Whether any batch has landed in the store: its stats table holds
     * a row (each ingest, append and micro-batch writes one).
     */
@@ -417,13 +441,11 @@ object Retrieval {
   def bm25AppendAtRest(newDocs: DataFrame, idCol: String, textCol: String,
                        dir: String): Unit =
     AtRestStore.withLease(newDocs.sparkSession, dir, "bm25Append") {
-    val spark = newDocs.sparkSession
-    val nB = bm25Buckets(spark, dir)
-    // next ledger slot: one read of the batch-count-sized stats table
-    val nextBatch = bm25Read(spark, AtRestStore.snapshot(spark, dir), "stats")
-      .agg(coalesce(max(col("batch")), lit(-1L)))
-      .head().getLong(0) + 1L
-    bm25WriteAtRest(newDocs, idCol, textCol, dir, nB,
+    val small = bm25Small(
+      AtRestStore.snapshot(newDocs.sparkSession, dir), "params", "stats")
+    // next ledger slot: past the highest batch of the stats deltas
+    val nextBatch = small("stats").map(_.getLong(2)).foldLeft(-1L)(math.max) + 1L
+    bm25WriteAtRest(newDocs, idCol, textCol, dir, bm25Buckets(small),
       overwrite = false, batchId = nextBatch)
   }
 
@@ -439,7 +461,8 @@ object Retrieval {
                                      textCol: String, dir: String,
                                      batchId: Long): Unit =
     AtRestStore.withLease(newDocs.sparkSession, dir, "bm25AppendBatch") {
-    val nB = bm25Buckets(newDocs.sparkSession, dir)
+    val nB = bm25Buckets(bm25Small(
+      AtRestStore.snapshot(newDocs.sparkSession, dir), "params"))
     bm25WriteAtRest(newDocs, idCol, textCol, dir, nB,
       overwrite = false, batchId = batchId, replaySafe = true)
   }
@@ -483,11 +506,10 @@ object Retrieval {
   def bm25CompactAtRest(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Unit =
     AtRestStore.withLease(spark, dir, "bm25Compact") {
-    bm25Buckets(spark, dir) // loud missing-index failure
     val snap = AtRestStore.snapshot(spark, dir)
-    val tomb = snap.tombstones(bm25TombSchema)
-    // the probe's arithmetic: the set's totals enter as literals
-    val (tDocs, tTok) = (tomb.rows.length.toLong, total(tomb.rows, 1))
+    val small = bm25Small(snap, "params", "tombstones")
+    bm25Buckets(small) // loud missing-index failure
+    val tomb = snap.tombstonesOf(small, bm25TombSchema)
     // history folds to batch=0 — the batch dimension is ingest
     // provenance, and compaction is the provenance horizon. The
     // tombstone truncation rides the SAME flip as the net stats fold
@@ -504,9 +526,8 @@ object Retrieval {
           .withColumn("batch", lit(0L))
           .write.mode("overwrite").partitionBy("batch").parquet(out)),
       "stats" -> ((out: String) =>
-        bm25Read(spark, snap, "stats")
-          .agg((sum("n_docs") - lit(tDocs)).as("n_docs"),
-            (sum("tot_tokens") - lit(tTok)).as("tot_tokens"))
+        bm25NetStats(bm25Read(spark, snap, "stats"), tomb)
+          .agg(sum("n_docs").as("n_docs"), sum("tot_tokens").as("tot_tokens"))
           .withColumn("batch", lit(0L))
           .write.mode("overwrite").partitionBy("batch").parquet(out))))
   }
@@ -522,57 +543,84 @@ object Retrieval {
     * Probe cost scales with the BATCH's term postings, not the corpus.
     *
     * Collected to the driver, each once and each bounded by contract:
-    *  - params: one row, the bucket count;
-    *  - stats: one delta row per batch, folded to one by compaction;
-    *    their sums net of the tombstones enter the plan as the
-    *    literals n_docs and tot_tokens;
-    *  - tombstones: one read serves both the denominators and the
+    *  - params, stats and tombstones, in one job: the bucket count,
+    *    one delta row per batch (folded to one by compaction), and
+    *    the tombstone set, which serves both the denominators and the
     *    mask, so the two cannot disagree (the takedown protocol of
     *    [[AtRestStore]]);
-    *  - the query batch, deduplicated: it is broadcast to the scan
-    *    anyway, and its terms and buckets become literal filters.
-    * The postings scan, the df aggregate, the (qid, id) aggregation and
-    * the rank window stay distributed: nothing whose size grows with
-    * the corpus reaches the driver.
+    *  - the query batch with each term's bucket, deduplicated; its
+    *    terms and buckets become literal filters;
+    *  - document frequency per batch term and scan partition, from one
+    *    per-partition fold over the masked, pruned postings scan
+    *    (|terms| × partitions rows), merged on the driver.
+    * df, n_docs and tot_tokens then ride the batch as columns of one
+    * broadcast (qid, s, df, n_docs, tot_tokens) table, so no number
+    * that changes with the store's generation lands in the generated
+    * code: a probe after an append reuses the classes of the last one
+    * (only the batch's shape, e.g. its term count, shapes the code).
+    * The scoring scan,
+    * the (qid, id) aggregation and the rank window stay distributed:
+    * nothing whose size grows with the corpus reaches the driver.
     *
-    * Spark jobs per call: 10 on a store that holds tombstones, 9 on one
-    * whose tombstone table is empty (as after compaction), 8 on one
-    * without it — the params, tombstones and stats reads, then the
-    * plan's own: the tombstone and batch broadcasts, the df
-    * aggregate's shuffle and broadcast, the (qid, id) aggregate's and
+    * Spark jobs per call: 7 on a store that holds tombstones, 6 on one
+    * that holds none (as after compaction) — the small-table read, the
+    * df fold, then the plan's own: the tombstone mask's broadcast (if
+    * any), the query table's broadcast, the (qid, id) aggregate's and
     * the rank window's shuffles, the result.
     */
   def bm25ProbeAtRest(spark: org.apache.spark.sql.SparkSession, dir: String,
                       queries: DataFrame, k: Int,
                       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val nB = bm25Buckets(spark, dir)
-    // ONE snapshot for the three tables: the mask set, the stats
-    // deltas, and the postings must belong to the same store
-    // generation or a concurrent compaction flip could be
-    // double-counted (see bm25CompactAtRest)
+    // ONE snapshot for every table: the mask set, the stats deltas,
+    // and the postings must belong to the same store generation or a
+    // concurrent compaction flip could be double-counted (see
+    // bm25CompactAtRest)
     val snap = AtRestStore.snapshot(spark, dir)
-    val tomb = snap.tombstones(bm25TombSchema)
-    val stats = bm25Read(spark, snap, "stats").select("n_docs", "tot_tokens")
-      .collect()
-    val nDocs = total(stats, 0) - tomb.rows.length
-    val totTokens = total(stats, 1) - total(tomb.rows, 1)
-    val qt = localQueryTerms(queries)
+    val small = bm25Small(snap, "params", "stats", "tombstones")
+    val tomb = snap.tombstonesOf(small, bm25TombSchema)
+    val nDocs = total(small("stats"), 0) - tomb.rows.length
+    val totTokens = total(small("stats"), 1) - total(tomb.rows, 1)
+    val q = queries.select(col("qid"), col("term").as("s"),
+      pbucketCol(col("term"), bm25Buckets(small)).as("pbucket"))
+    // a null term matches no posting: it routes nowhere
+    val qt = q.collect().distinct.filterNot(_.isNullAt(1))
     // STATIC partition pruning: the batch's terms and their bucket set
     // are pushed as LITERAL filters — planning-time pruning, visible as
     // `pbucket IN (…)` in PartitionFilters (a term's postings all sit
     // in its own bucket, so the term filter alone decides the match)
-    val routed = qt.select(col("s"), pbucketCol(col("s"), nB)).collect()
-    val terms = routed.map(_.getString(0)).distinct
-    val buckets = routed.map(_.getInt(1)).distinct.sorted
-    // one postings row per matched (term, doc) — distinct terms only,
-    // so df below is a plain count; the qid fan-out joins afterwards
+    val terms = qt.map(_.getString(1)).distinct
     val scan = bm25Read(spark, snap, "postings")
-      .filter(col("pbucket").isin(buckets.map(Int.box): _*) &&
-        col("s").isin(terms: _*))
-    val post = tomb.mask(scan)
-    val dft = post.groupBy("s").agg(count(lit(1)).as("df"))
-    bm25Rank(post.join(broadcast(qt), "s").join(broadcast(dft), "s"),
-      lit(nDocs), lit(totTokens), k, k1, b)
+      .filter(col("pbucket").isin(qt.map(_.getInt(2)).distinct.sorted.map(Int.box): _*) &&
+        col("s").isin(terms.toSeq: _*))
+    val df = bm25DocFreqs(scan, tomb)
+    val table = spark.createDataFrame(qt.toSeq.map { r =>
+      Row(r.get(0), r.getString(1), df.getOrElse(r.getString(1), 0L), nDocs, totTokens)
+    }.asJava, StructType(q.schema.fields.take(2)).add("df", "bigint", nullable = false)
+      .add("n_docs", "bigint", nullable = false)
+      .add("tot_tokens", "bigint", nullable = false))
+    bm25Rank(tomb.mask(scan).join(broadcast(table), "s"), k, k1, b)
+  }
+
+  /** Postings per term of a pruned postings `scan`, tombstoned docs
+    * left out: one per-partition fold, one Spark job and no shuffle,
+    * whose |terms| rows per partition merge on the driver. The fold
+    * tests each id against the set's sorted ids in a broadcast
+    * variable, so no mask broadcast job runs first.
+    */
+  private def bm25DocFreqs(scan: DataFrame,
+                           tomb: AtRestStore.Tombstones): Map[String, Long] = {
+    val gone = scan.sparkSession.sparkContext.broadcast(tomb.sortedIds)
+    try scan.select("s", "id").mapPartitions { (rows: Iterator[Row]) =>
+        val dead = gone.value
+        val n = scala.collection.mutable.HashMap.empty[String, Long]
+        // a null id is never tombstoned (deletes join ids to doclens)
+        for (r <- rows if r.isNullAt(1) ||
+            java.util.Arrays.binarySearch(dead, r.getLong(1)) < 0)
+          n(r.getString(0)) = n.getOrElse(r.getString(0), 0L) + 1L
+        n.iterator
+      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    finally gone.destroy()
   }
 }

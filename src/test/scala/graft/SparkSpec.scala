@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,6 +36,16 @@ trait SparkSpec extends AnyFunSuite {
       org.apache.spark.graft.ListenerBus.drain(sc)
       (r, jobs.get)
     } finally sc.removeSparkListener(counter)
+  }
+
+  /** `body`'s result and the number of classes Janino compiled while it
+    * ran: the misses of the JVM-wide generated-class cache, so a plan
+    * whose code an earlier run already compiled counts 0.
+    */
+  def compilesOf[T](body: => T): (T, Long) = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val r = body
+    (r, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
   }
 }
 

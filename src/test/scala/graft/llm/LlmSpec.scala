@@ -1111,9 +1111,11 @@ class LlmSpec extends SparkSpec {
     val (_, deleteJobs) = jobsOf(
       Retrieval.bm25DeleteAtRest(Seq(2L, 31L).toDF("doc_id"), "doc_id", dir))
     assert(deleteJobs <= 5, s"delete ran $deleteJobs Spark jobs")
+    // the probe: one small-table read, the df fold, the tombstone and
+    // query-table broadcasts, two shuffles, the result
     val (got, probeJobs) = jobsOf(
       Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 10).collect())
-    assert(probeJobs <= 11, s"probe ran $probeJobs Spark jobs")
+    assert(probeJobs == 7, s"probe ran $probeJobs Spark jobs")
     val want = Retrieval.bm25TopKBatch(docs.filter(!$"doc_id".isin(2L, 31L)),
       "doc_id", "text", batch, k = 10).collect()
     def byRank(rs: Array[org.apache.spark.sql.Row]) =
@@ -1121,8 +1123,91 @@ class LlmSpec extends SparkSpec {
     assert(got.length == 20 && byRank(got) == byRank(want))
     val (_, compactJobs) = jobsOf(Retrieval.bm25CompactAtRest(spark, dir))
     assert(compactJobs <= 11, s"compact ran $compactJobs Spark jobs")
-    assert(byRank(Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 10).collect())
-      == byRank(want), "compaction changed the probe result")
+    // no tombstone left to broadcast
+    val (compacted, compactedJobs) = jobsOf(
+      Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 10).collect())
+    assert(compactedJobs == 6, s"probe after compaction ran $compactedJobs Spark jobs")
+    assert(byRank(compacted) == byRank(want), "compaction changed the probe result")
+  }
+
+  test("bm25ProbeAtRest compiles no class for fresh terms after an append, " +
+    "once one probe has warmed the session") {
+    val docs = (0L until 40L).map { i =>
+      (i, s"spark join w${i % 7} v${i % 5} merge ${"scan " * (1 + i % 3).toInt}")
+    }.toDF("doc_id", "text")
+    val dir = tempDir("bm25_probe_compiles").toString
+    Retrieval.bm25IngestAtRest(docs.filter($"doc_id" < 30), "doc_id", "text",
+      dir, nBuckets = 4)
+    def probe(terms: Seq[(Long, String)]) =
+      Retrieval.bm25ProbeAtRest(spark, dir, terms.toDF("qid", "term"), k = 10).collect()
+    probe(Seq((0L, "spark"), (0L, "w3"), (1L, "scan"), (1L, "v4")))
+    // the append moves n_docs and tot_tokens: a probe that inlined them
+    // would compile its scoring stage afresh
+    Retrieval.bm25AppendAtRest(docs.filter($"doc_id" >= 30), "doc_id", "text", dir)
+    val (got, compiles) = compilesOf(
+      probe(Seq((0L, "join"), (0L, "w5"), (1L, "merge"), (1L, "v2"))))
+    assert(got.nonEmpty)
+    assert(compiles == 0, s"the warm probe compiled $compiles classes")
+  }
+
+  test("bm25CompactAtRest compiles no class for a new generation's tombstone totals") {
+    val docs = (0L until 30L).map { i =>
+      (i, s"spark join w${i % 7} v${i % 5} merge ${"scan " * (1 + i % 3).toInt}")
+    }.toDF("doc_id", "text")
+    val dir = tempDir("bm25_compact_compiles").toString
+    Retrieval.bm25IngestAtRest(docs, "doc_id", "text", dir, nBuckets = 4)
+    Retrieval.bm25DeleteAtRest(Seq(1L).toDF("doc_id"), "doc_id", dir)
+    Retrieval.bm25CompactAtRest(spark, dir)
+    // other (docs, tokens) totals: a stats fold that inlined them
+    // would compile afresh
+    Retrieval.bm25DeleteAtRest(Seq(2L, 5L).toDF("doc_id"), "doc_id", dir)
+    val (_, compiles) = compilesOf(Retrieval.bm25CompactAtRest(spark, dir))
+    assert(compiles == 0, s"the second compaction compiled $compiles classes")
+    val stats = spark.read.parquet(AtRestStore.tablePath(spark, dir, "stats"))
+      .select("n_docs", "tot_tokens").collect()
+    val live = docs.filter(!$"doc_id".isin(1L, 2L, 5L))
+    val want = Retrieval.termFrequencies(live, "doc_id", "text").agg(sum("tf")).head().getLong(0)
+    assert(stats.toSeq.map(r => (r.getLong(0), r.getLong(1))) == Seq((27L, want)))
+  }
+
+  test("bm25ProbeAtRest ≡ bm25TopKBatch over the surviving docs through " +
+    "appends, deletes and compaction, on an edge-case query batch") {
+    val docs = (0L until 36L).map { i =>
+      (i, s"spark join w${i % 7} v${i % 5} merge ${"scan " * (1 + i % 3).toInt}")
+    }.toDF("doc_id", "text")
+    val dir = tempDir("bm25_probe_edges").toString
+    Retrieval.bm25IngestAtRest(docs.filter($"doc_id" < 20), "doc_id", "text",
+      dir, nBuckets = 4)
+    Retrieval.bm25AppendAtRest(docs.filter($"doc_id".between(20, 27)), "doc_id", "text", dir)
+    Retrieval.bm25AppendAtRest(docs.filter($"doc_id" >= 28), "doc_id", "text", dir)
+    Retrieval.bm25DeleteAtRest(Seq(3L, 21L, 30L).toDF("doc_id"), "doc_id", dir)
+    val survivors = docs.filter(!$"doc_id".isin(3L, 21L, 30L))
+    val batch = Seq[(Option[Int], Option[String])](
+      (None, Some("spark")),                          // a null qid ranks as its own query
+      (Some(1), None),                                // a null term matches nothing
+      (Some(1), Some("w3")), (Some(1), Some("w3")),   // duplicate (qid, term) rows
+      (Some(1), Some("merge")), (Some(2), Some("merge")), // a term two qids share
+      (Some(2), Some("zebra")),                       // a term the store lacks
+      (Some(3), Some("yak")), (Some(3), Some("zebra")), // a qid whose every term misses
+      (Some(4), Some("v2")), (Some(4), Some("scan")))
+      .toDF("qid", "term")
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    def check(stage: String): Unit = {
+      val got = Retrieval.bm25ProbeAtRest(spark, dir, batch, k = 5)
+      val want = Retrieval.bm25TopKBatch(survivors, "doc_id", "text", batch, k = 5)
+      assert(typed(got) == typed(want), s"$stage: schema")
+      assert(got.schema("qid").dataType == org.apache.spark.sql.types.IntegerType)
+      val g = rows(got)
+      assert(g == rows(want), s"$stage: probe diverged from the surviving-corpus replay")
+      assert(g.exists(_.isNullAt(0)) && !g.exists(r => !r.isNullAt(0) && r.getInt(0) == 3),
+        s"$stage: qid coverage")
+      val empty = Retrieval.bm25ProbeAtRest(spark, dir, batch.limit(0), k = 5)
+      assert(typed(empty) == typed(got) && empty.collect().isEmpty, s"$stage: empty batch")
+    }
+    check("tombstoned")
+    Retrieval.bm25CompactAtRest(spark, dir)
+    check("compacted")
   }
 
   test("takedown faces leave no pinned RDD: ingest, delete and " +
